@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark main: every registered query against
   * $SPARK_GRAFT_SF_DIR, one JSON line on stdout. Timing notes:
@@ -26,7 +25,7 @@ import org.apache.spark.sql.SparkSession
   * The per-query record is ALSO written incrementally (one JSON line
   * per query, flushed as each finishes) to a sidecar file
   * ($SPARK_GRAFT_BENCH_OUT, default /root/repo/bench_local.json, with
-  * a continuity copy at /root/repo/bench_queries.json):
+  * the total record last):
   * the driver keeps only a bounded tail of stdout, and from round 8 the
   * 124-query detail line outgrew that window — its head (alphabetically
   * a–i) was lost two rounds running. A file the harness never truncates
@@ -34,43 +33,10 @@ import org.apache.spark.sql.SparkSession
   * driver's operative metric.
   */
 object Bench {
-
-  /** Untimed warm-up of the heavy codegen/JIT paths (shingle-set
-    * build, sorted merge intersect, 64-member signature agg) on a
-    * 64-document slice: first-touch JIT of these expressions measured
-    * ~10 s at sf0.1 and landed on whichever dedup query ran first — a
-    * session cost, same class as the q_topk warm-up's codegen +
-    * parquet-footer caches, not a property of any query. Shared with
-    * BenchOne so isolated re-measures see the same steady state.
-    */
-  def warmDedupCodegen(spark: SparkSession, sfDir: String): Unit =
-    try {
-      val tiny = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select("doc_id", "text").limit(64)
-      graft.operators.Dedup.ngramJaccardPairsOn(tiny)
-        .write.format("noop").mode("overwrite").save()
-      graft.operators.Dedup.minhashSignaturesOn(tiny)
-        .write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
-
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/tmp/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def exec(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-    try exec("q_topk") catch { case _: Throwable => () } // warm-up, untimed
-    Bench.warmDedupCodegen(spark, sfDir)
-    spark.catalog.clearCache()
+    val sfDir = LocalSession.sfDir
+    val spark = LocalSession.build()
+    LocalSession.warmUp(spark, sfDir)
     // per-query times at 3 decimals: the full line's length is what put
     // round 2's tail (23 queries AND the total) past the driver's
     // capture window; millisecond precision is noise at these runtimes.
@@ -83,21 +49,11 @@ object Bench {
     // completed query's number on disk. Failure to open it must not
     // fail the bench (e.g. read-only checkout) — stdout still carries
     // the totals.
-    // Two names for the same per-query series: bench_local.json is the
-    // canonical artifact the round verdict audits (round 11 graded only
-    // a 2,000-char stdout tail — 78 of 156 per-query numbers dropped —
-    // because the grader did not know the sidecar's old name);
-    // bench_queries.json stays for cross-round continuity of the
-    // existing series. Both get every line, flushed per query.
-    val sidecarPaths = Seq(
+    val sidecar: Option[java.io.PrintWriter] = scala.util.Try(new java.io.FileWriter(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_local.json"),
-      "/root/repo/bench_queries.json").distinct
-    val sidecar: Seq[java.io.PrintWriter] = sidecarPaths.flatMap { p =>
-      try Some(new java.io.PrintWriter(new java.io.FileWriter(p, false)))
-      catch { case _: Throwable => None }
-    }
+      false)).toOption.map(new java.io.PrintWriter(_))
     // malformed values fall back to 1 run — the bench must always
-    // complete (the sidecar writer swallows Throwable for the same
+    // complete (the sidecar open swallows its failure for the same
     // reason)
     val benchRuns = math.max(1,
       scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "1")
@@ -106,7 +62,7 @@ object Bench {
       val runs = (1 to benchRuns).map { _ =>
         val t0 = System.nanoTime()
         val okRun =
-          try { exec(name); true }
+          try { LocalSession.exec(spark, sfDir, name); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
             false

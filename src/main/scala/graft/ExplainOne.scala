@@ -8,19 +8,10 @@ import org.apache.spark.sql.SparkSession
   */
 object ExplainOne {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = LocalSession.sfDir
     val outDir = args.head
     new java.io.File(outDir).mkdirs()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/tmp/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.build()
     // checkpoint=false twins of the operators whose registered entries
     // localCheckpoint (their registered plans collapse to RDD scans —
     // these pseudo-names expose the dataflow under audit instead)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
@@ -13,7 +12,9 @@ import scala.collection.mutable
   * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.ProfOne q_x q_y"
   * Each query runs twice: pass 1 cold (JIT + any materializeOnce
   * builds land here), pass 2 warm — the printed job table labels the
-  * pass so one-time costs are attributable.
+  * pass so one-time costs are attributable. The `pass=2` total is the
+  * query's time under Bench conditions (same warm-up, noop sink, cache
+  * cleared between queries).
   */
 object ProfOne {
   private case class JobRec(id: Int, desc: String, start: Long,
@@ -22,17 +23,8 @@ object ProfOne {
       var inputB: Long = 0L)
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/tmp/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = LocalSession.sfDir
+    val spark = LocalSession.build()
     val jobs = mutable.LinkedHashMap[Int, JobRec]()
     val stageToJob = mutable.HashMap[Int, Int]()
     val listener = new SparkListener {
@@ -59,17 +51,12 @@ object ProfOne {
         }
     }
     spark.sparkContext.addSparkListener(listener)
-    def exec(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-    exec("q_topk") // warm-up
-    Bench.warmDedupCodegen(spark, sfDir)
-    spark.catalog.clearCache()
+    LocalSession.warmUp(spark, sfDir)
     args.foreach { name =>
       (1 to 2).foreach { pass =>
         jobs.synchronized { jobs.clear(); stageToJob.clear() }
         val t0 = System.nanoTime()
-        exec(name)
+        LocalSession.exec(spark, sfDir, name)
         val dt = (System.nanoTime() - t0) / 1e9
         spark.catalog.clearCache()
         Thread.sleep(300) // let the listener bus drain before reading

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool (not driver-graded): measure operator scaling under
@@ -11,18 +11,11 @@ import org.apache.spark.sql.functions._
   */
 object ScalingProbe {
   def main(args: Array[String]): Unit = {
-    // honor $SPARK_GRAFT_CPUS (default 32) so the probe can also take
+    // honor $SPARK_GRAFT_CPUS (LocalSession.cpus) so the probe can also take
     // CORE-SCALING points (round-22: the sf0.1 bench fixtures are too
     // small for any query to demonstrate parallel scaling — the
     // synthetic generators here are the right vehicle)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.build()
     import spark.implicits._
 
     val op = args.headOption.getOrElse("decontamination")

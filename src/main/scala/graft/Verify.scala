@@ -1,9 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  val Usage = "usage: graft.Verify <sfDir> <outDir> [q_a,q_b,...]"
+
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query names — dump (and emit
     // oracle entries for) just that subset. Builder-side iteration
@@ -11,17 +12,9 @@ object Verify {
     val (sfDir, outDir, only) = args match {
       case Array(a, b)    => (a, b, Option.empty[Set[String]])
       case Array(a, b, n) => (a, b, Some(n.split(",").toSet))
+      case _              => throw new IllegalArgumentException(Usage)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/tmp/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.build()
     new java.io.File(outDir).mkdirs()
     val sel: String => Boolean = only match {
       case Some(names) => names.contains _

@@ -331,7 +331,7 @@ object Dedup {
   private[graft] def materializedJaccardPairs(spark: SparkSession,
       dir: String): DataFrame = {
     val path = graft.sources.Scratch.corpusDir(spark, "jaccard_pairs", dir)
-    graft.sources.Scratch.materializeOnce(path) {
+    graft.sources.Scratch.materializeOnce(spark, path) {
       // already localCheckpoint'd inside the builder, so the write
       // reads materialized blocks, not a second PPJoin
       ngramJaccardPairsOn(Tables.documents(spark, dir))
@@ -572,7 +572,7 @@ object Dedup {
     */
   def materializedPairs(spark: SparkSession, dir: String): DataFrame = {
     val path = pairsDir(spark, dir)
-    graft.sources.Scratch.materializeOnce(path) {
+    graft.sources.Scratch.materializeOnce(spark, path) {
       // already localCheckpoint'd by minhashLshPairs, so the count and
       // the write read the checkpointed blocks, not the LSH pipeline
       val pairs = minhashLshPairs(spark, dir)
@@ -619,7 +619,7 @@ object Dedup {
     */
   private def corpusClusterLabels(spark: SparkSession, dir: String): DataFrame = {
     val path = graft.sources.Scratch.corpusDir(spark, "cc_labels", dir)
-    graft.sources.Scratch.materializeOnce(path) {
+    graft.sources.Scratch.materializeOnce(spark, path) {
       clusterLabels(materializedPairs(spark, dir)
           .select(col("id_a"), col("id_b")))
         .write.mode("overwrite").parquet(path)
@@ -1027,7 +1027,7 @@ object Dedup {
   private def baseSigTable(spark: SparkSession, dir: String,
       docs: DataFrame): DataFrame = {
     val path = graft.sources.Scratch.corpusDir(spark, "delta_sig_base", dir)
-    graft.sources.Scratch.materializeOnce(path) {
+    graft.sources.Scratch.materializeOnce(spark, path) {
       minhashSignaturesUnsorted(docs.filter(!deltaIsNew), prodHash = false)
         .write.mode("overwrite").parquet(path)
     }
@@ -1116,7 +1116,7 @@ object Dedup {
     // round-19 signature index): a daily ingest never recomputes the
     // base closure and never re-shingles the base text
     val path = graft.sources.Scratch.corpusDir(spark, "delta_base_cc_txt", dir)
-    graft.sources.Scratch.materializeOnce(path) {
+    graft.sources.Scratch.materializeOnce(spark, path) {
       baseDocLabels(docs).write.mode("overwrite").parquet(path)
     }
     deltaDupClustersFrom(
@@ -1234,7 +1234,7 @@ object Dedup {
     val docs = Tables.documents(spark, dir)
     val baseSig = baseSigTable(spark, dir, docs)
     val pairsPath = graft.sources.Scratch.corpusDir(spark, "delta_base_pairs_txt", dir)
-    graft.sources.Scratch.materializeOnce(pairsPath) {
+    graft.sources.Scratch.materializeOnce(spark, pairsPath) {
       // built from the STORED signatures (identical to the text-built
       // pairs — signatures are deterministic), not from text
       val sig = baseSig.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1243,7 +1243,7 @@ object Dedup {
       finally { sig.unpersist(); () }
     }
     val lblPath = graft.sources.Scratch.corpusDir(spark, "delta_base_cc_txt", dir)
-    graft.sources.Scratch.materializeOnce(lblPath) {
+    graft.sources.Scratch.materializeOnce(spark, lblPath) {
       baseDocLabels(docs).write.mode("overwrite").parquet(lblPath)
     }
     retractComponentLabels(
@@ -1274,7 +1274,7 @@ object Dedup {
     val docs = Tables.documents(spark, dir)
     val bucket = pmod(md5Hash32(col("text")), lit(10))
     val root = graft.sources.Scratch.corpusDir(spark, "cc_multi_txt", dir)
-    graft.sources.Scratch.materializeOnce(root) {
+    graft.sources.Scratch.materializeOnce(spark, root) {
       // ingest 0 — base: signature commit + converged labels
       val sig0 = minhashSignaturesUnsorted(docs.filter(bucket < 6),
         prodHash = false).persist(StorageLevel.MEMORY_AND_DISK)
@@ -1560,7 +1560,7 @@ object Dedup {
   private def ensureLexIndex(spark: SparkSession, dir: String,
       docs: DataFrame): String = {
     val root = graft.sources.Scratch.corpusDir(spark, "lex_index", dir)
-    graft.sources.Scratch.materializeOnce(root) {
+    graft.sources.Scratch.materializeOnce(spark, root) {
       val (tf, norms, sh, dfq) = lexStoredIndexOf(docs.filter(!deltaIsNew))
       tf.write.mode("overwrite").parquet(s"$root/tf")
       norms.write.mode("overwrite").parquet(s"$root/norms")
@@ -2078,7 +2078,7 @@ object Dedup {
   def deltaSubstringDedup(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val path = graft.sources.Scratch.corpusDir(spark, "substr_keys_base", dir)
-    graft.sources.Scratch.materializeOnce(path) {
+    graft.sources.Scratch.materializeOnce(spark, path) {
       windowGrams(docs.filter(!deltaIsNew), SubstringL)
         .select(col("h1"), col("h2")).distinct()
         .write.mode("overwrite").parquet(path)

@@ -474,7 +474,7 @@ object Multimodal {
     */
   private[graft] def ahashTable(spark: SparkSession, dir: String): DataFrame = {
     val path = graft.sources.Scratch.corpusDir(spark, "image_ahash", dir)
-    graft.sources.Scratch.materializeOnce(path) {
+    graft.sources.Scratch.materializeOnce(spark, path) {
       ahashOf(spark, Tables.documents(spark, dir))
         .write.mode("overwrite").parquet(path)
     }
@@ -900,7 +900,7 @@ object Multimodal {
   private[graft] def baseBandIndex(spark: SparkSession, name: String,
       dir: String, base: DataFrame): DataFrame = {
     val path = graft.sources.Scratch.corpusDir(spark, name, dir)
-    graft.sources.Scratch.materializeOnce(path) {
+    graft.sources.Scratch.materializeOnce(spark, path) {
       bands4(base.select(col("ahash_hi"), col("ahash_lo")).distinct())
         .write.mode("overwrite").parquet(path)
     }
@@ -1216,7 +1216,7 @@ object Multimodal {
     // converged-label discipline of Dedup.corpusClusterLabels): a
     // daily ingest READS this, it never recomputes the base closure
     val path = graft.sources.Scratch.corpusDir(spark, "delta_base_cc_img", dir)
-    graft.sources.Scratch.materializeOnce(path) {
+    graft.sources.Scratch.materializeOnce(spark, path) {
       baseHashLabels(base).write.mode("overwrite").parquet(path)
     }
     // both stored tables read back: converged labels + band index —
@@ -1247,7 +1247,7 @@ object Multimodal {
       .select(expr("shiftleft(hi_a, 32) | lo_a").as("id_a"),
         expr("shiftleft(hi_b, 32) | lo_b").as("id_b"))
     val root = graft.sources.Scratch.corpusDir(spark, "cc_multi_img", dir)
-    graft.sources.Scratch.materializeOnce(root) {
+    graft.sources.Scratch.materializeOnce(spark, root) {
       baseHashLabels(base).write.mode("overwrite").parquet(s"$root/labels_0")
       val pairs1 = packedPair(deltaBandHashPairsFromIndex(
         bands4(base.select(col("ahash_hi"), col("ahash_lo")).distinct()),
@@ -1293,7 +1293,7 @@ object Multimodal {
   def retractImageDupClusters(spark: SparkSession, dir: String): DataFrame = {
     val ah = ahashTable(spark, dir)
     val pairsPath = graft.sources.Scratch.corpusDir(spark, "img_hash_pairs", dir)
-    graft.sources.Scratch.materializeOnce(pairsPath) {
+    graft.sources.Scratch.materializeOnce(spark, pairsPath) {
       verifiedHashPairs(
           bands4(ah.select(col("ahash_hi"), col("ahash_lo")).distinct()),
           "cb", "kv")
@@ -1302,7 +1302,7 @@ object Multimodal {
         .write.mode("overwrite").parquet(pairsPath)
     }
     val lblPath = graft.sources.Scratch.corpusDir(spark, "img_hash_labels", dir)
-    graft.sources.Scratch.materializeOnce(lblPath) {
+    graft.sources.Scratch.materializeOnce(spark, lblPath) {
       graft.operators.Dedup.componentLabels(graft.sources.Scratch.readParquetOnce(spark, pairsPath))
         .write.mode("overwrite").parquet(lblPath)
     }
@@ -1455,7 +1455,7 @@ object Multimodal {
     */
   private[graft] def audioFpWideTable(spark: SparkSession, dir: String): DataFrame = {
     val path = graft.sources.Scratch.corpusDir(spark, "audio_fp_wide", dir)
-    graft.sources.Scratch.materializeOnce(path) {
+    graft.sources.Scratch.materializeOnce(spark, path) {
       audioFpWideOf(spark, Tables.documents(spark, dir).select(col("doc_id")))
         .write.mode("overwrite").parquet(path)
     }
@@ -1525,7 +1525,7 @@ object Multimodal {
     */
   private[operators] def audioChunkTable(spark: SparkSession, dir: String): DataFrame = {
     val path = graft.sources.Scratch.corpusDir(spark, "audio_fp_chunks", dir)
-    graft.sources.Scratch.materializeOnce(path) {
+    graft.sources.Scratch.materializeOnce(spark, path) {
       audioChunkFpOf(spark, Tables.documents(spark, dir).select(col("doc_id")))
         .write.mode("overwrite").parquet(path)
     }

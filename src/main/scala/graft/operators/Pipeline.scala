@@ -250,14 +250,14 @@ object Pipeline {
     val audBase = aud.filter(!isNew)
     // stored state 1: the base cascade's layout (what base ingest wrote)
     val layoutPath = Scratch.corpusDir(spark, "media_near_layout_base", dir)
-    Scratch.materializeOnce(layoutPath) {
+    Scratch.materializeOnce(spark, layoutPath) {
       mediaPipelineNearOn(imgBase, audBase)
         .write.mode("overwrite").parquet(layoutPath)
     }
     // stored state 2: the base joint-key class table (the exact stage's
     // frozen reps — the table the frozen-rep decision reads)
     val repsPath = Scratch.corpusDir(spark, "media_joint_reps_base", dir)
-    Scratch.materializeOnce(repsPath) {
+    Scratch.materializeOnce(spark, repsPath) {
       imgBase.join(audBase, Seq("doc_id"))
         .groupBy(col("ahash_hi"), col("ahash_lo"),
           col("afp_hi"), col("afp_lo"))
@@ -430,7 +430,7 @@ object Pipeline {
     val n = docs.count()
     val b = n * 8 / 10
     val root = Scratch.corpusDir(spark, "e2e_delta_base", dir)
-    Scratch.materializeOnce(root) {
+    Scratch.materializeOnce(spark, root) {
       // base ingest: ONE pass through the cascade rules, fanning out
       // to the three stored tables + the packed layout (parity with
       // curationPipelineOn is spec-pinned on the layout)

@@ -195,7 +195,7 @@ object Retrieval {
   private def ensureBm25Index(spark: SparkSession, dir: String,
       base: DataFrame): String = {
     val root = graft.sources.Scratch.corpusDir(spark, "bm25_index", dir)
-    graft.sources.Scratch.materializeOnce(root) {
+    graft.sources.Scratch.materializeOnce(spark, root) {
       // ONE base tokenization pass fans out to all four stored tables
       // — this is the prior ingests' work, paid once per corpus. The
       // postings write materializes the pinned tfB; the dl and df
@@ -339,7 +339,7 @@ object Retrieval {
   private def ensureBm25Commits(spark: SparkSession, dir: String,
       docs: DataFrame): String = {
     val root = graft.sources.Scratch.corpusDir(spark, "bm25_multi", dir)
-    graft.sources.Scratch.materializeOnce(root) {
+    graft.sources.Scratch.materializeOnce(spark, root) {
       // two ingests over DISJOINT doc splits, no dependency — build
       // them concurrently (each is a small-parallelism job chain that
       // alone leaves most cores idle; guide §2.6)
@@ -449,12 +449,12 @@ object Retrieval {
     val root = graft.sources.Scratch.corpusDir(spark, "bm25_multi", dir)
     graft.sources.Scratch.inParallel(
       () => { ensureBm25Commits(spark, dir, docs); () },
-      () => graft.sources.Scratch.materializeOnce(s"$root/c2") {
+      () => graft.sources.Scratch.materializeOnce(spark, s"$root/c2") {
         writeBm25Commit(spark, s"$root/c2",
           docs.filter(col("doc_id") % 10 >= 8))
       })
     val cpath = s"$root/compacted"
-    graft.sources.Scratch.materializeOnce(cpath) {
+    graft.sources.Scratch.materializeOnce(spark, cpath) {
       val (tf, dl, dfq, stats) =
         readBm25Commits(spark, root, Seq("c0", "c1", "c2"))
       tf.write.mode("overwrite").parquet(s"$cpath/postings")

@@ -299,7 +299,7 @@ object Similarity {
     // (queries × probes rows) so the second consumption is a local scan
     val probeCells = probeCells0.localCheckpoint()
     val layoutDir = ivfLayoutDir(spark, dir)
-    graft.sources.Scratch.materializeOnce(layoutDir) {
+    graft.sources.Scratch.materializeOnce(spark, layoutDir) {
       writeConsolidated(corpus, "cell", layoutDir)
     }
     val cells = probeCells.select(col("cell")).distinct()
@@ -415,7 +415,7 @@ object Similarity {
     // normalization pass in its lineage — materialize the tiny frame
     val probeCells = probeCells0.localCheckpoint()
     val layoutDir = graft.sources.Scratch.corpusDir(spark, "ivf_exact_layout", dir)
-    graft.sources.Scratch.materializeOnce(layoutDir) {
+    graft.sources.Scratch.materializeOnce(spark, layoutDir) {
       writeConsolidated(corpus, "cell", layoutDir)
     }
     val cells = probeCells.select(col("cell")).distinct()
@@ -541,14 +541,14 @@ object Similarity {
     val base = e.filter(col("vec_id") < b)
     val centPath = graft.sources.Scratch.corpusDir(spark, "ivf_delta_centroids", dir)
     val layoutPath = graft.sources.Scratch.corpusDir(spark, "ivf_delta_layout", dir)
-    graft.sources.Scratch.materializeOnce(centPath) {
+    graft.sources.Scratch.materializeOnce(spark, centPath) {
       val cents = ivfFitCents(spark, base)
       cents.write.mode("overwrite").parquet(centPath)
       writeConsolidated(ivfAssignTo(cents, base), "cell", layoutPath)
     }
     val cents = graft.sources.Scratch.readParquetOnce(spark, centPath)
     val deltaPath = graft.sources.Scratch.corpusDir(spark, "ivf_delta_layout_batch", dir)
-    graft.sources.Scratch.materializeOnce(deltaPath) {
+    graft.sources.Scratch.materializeOnce(spark, deltaPath) {
       writeConsolidated(ivfAssignTo(cents, e.filter(col("vec_id") >= b)),
         "cell", deltaPath)
     }
@@ -574,7 +574,7 @@ object Similarity {
     val (cents, layouts) = deltaIvfEnsure(spark, dir)
     val e = Tables.embeddings(spark, dir)
     val retractPath = graft.sources.Scratch.corpusDir(spark, "ivf_retract_layout", dir)
-    graft.sources.Scratch.materializeOnce(retractPath) {
+    graft.sources.Scratch.materializeOnce(spark, retractPath) {
       writeConsolidated(
         layouts.map(p => graft.sources.Scratch.readParquetOnce(spark, p))
           .reduce(_ unionByName _)
@@ -713,7 +713,7 @@ object Similarity {
     val layoutPath = graft.sources.Scratch.corpusDir(spark, "ivf_delta_layout", dir)
     val deltaPath = graft.sources.Scratch.corpusDir(spark, "ivf_delta_layout_batch", dir)
     val compactPath = graft.sources.Scratch.corpusDir(spark, "ivf_delta_layout_compacted", dir)
-    graft.sources.Scratch.materializeOnce(compactPath) {
+    graft.sources.Scratch.materializeOnce(spark, compactPath) {
       writeConsolidated(
         graft.sources.Scratch.readParquetOnce(spark, layoutPath)
           .unionByName(graft.sources.Scratch.readParquetOnce(spark, deltaPath)),
@@ -769,7 +769,7 @@ object Similarity {
     val (cents, layouts) = delta2IvfEnsure(spark, dir)
     val compactPath = graft.sources.Scratch.corpusDir(spark,
       "ivf_delta2_compacted", dir)
-    graft.sources.Scratch.materializeOnce(compactPath) {
+    graft.sources.Scratch.materializeOnce(spark, compactPath) {
       writeConsolidated(
         layouts.map(p => graft.sources.Scratch.readParquetOnce(spark, p))
           .reduce(_ unionByName _),
@@ -796,7 +796,7 @@ object Similarity {
     val b1 = deltaBaseCount(n) // 8/10 — the single-delta batch cut
     val centPath = graft.sources.Scratch.corpusDir(spark, "ivf_delta2_centroids", dir)
     val layoutPath = graft.sources.Scratch.corpusDir(spark, "ivf_delta2_layout", dir)
-    graft.sources.Scratch.materializeOnce(centPath) {
+    graft.sources.Scratch.materializeOnce(spark, centPath) {
       val cents = ivfFitCents(spark, e.filter(col("vec_id") < b0))
       cents.write.mode("overwrite").parquet(centPath)
       writeConsolidated(ivfAssignTo(cents, e.filter(col("vec_id") < b0)),
@@ -804,13 +804,13 @@ object Similarity {
     }
     val cents = graft.sources.Scratch.readParquetOnce(spark, centPath)
     val c1Path = graft.sources.Scratch.corpusDir(spark, "ivf_delta2_c1", dir)
-    graft.sources.Scratch.materializeOnce(c1Path) {
+    graft.sources.Scratch.materializeOnce(spark, c1Path) {
       writeConsolidated(
         ivfAssignTo(cents, e.filter(col("vec_id") >= b0 && col("vec_id") < b1)),
         "cell", c1Path)
     }
     val c2Path = graft.sources.Scratch.corpusDir(spark, "ivf_delta2_c2", dir)
-    graft.sources.Scratch.materializeOnce(c2Path) {
+    graft.sources.Scratch.materializeOnce(spark, c2Path) {
       writeConsolidated(ivfAssignTo(cents, e.filter(col("vec_id") >= b1)),
         "cell", c2Path)
     }
@@ -906,18 +906,14 @@ object Similarity {
     * family — pure driver/job overhead at any scale, since the probe's
     * answer is a property of the corpus, not the query). The fixture
     * is validated dense on the FIRST probe per corpus; the memo is
-    * in-JVM only (a fresh bench/oracle run re-counts from parquet),
-    * the [[graft.sources.Scratch.materializeOnce]] discipline applied
-    * to a scalar. On-variants over arbitrary frames keep the
+    * [[graft.sources.Scratch.once]] (per session, so a fresh bench/oracle
+    * run re-counts from parquet). On-variants over arbitrary frames keep the
     * per-call probe.
     */
   private def denseCountDir(spark: SparkSession, dir: String,
       who: String): Long =
-    countMemo.computeIfAbsent((System.identityHashCode(spark), dir),
-      _ => Long.box(denseCount(Tables.embeddings(spark, dir), who)))
-
-  private val countMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), java.lang.Long]()
+    graft.sources.Scratch.once(spark, s"count:$dir")(
+      denseCount(Tables.embeddings(spark, dir), who))
 
   /** Oracle-portable 31-bit integer mixer (xor-shift → multiply ×2,
     * the lowbias32 finalizer shape): every intermediate stays below
@@ -1078,7 +1074,7 @@ object Similarity {
   private[graft] def materializedGraphEdges(spark: SparkSession,
       dir: String, precountedN: Option[Long] = None): DataFrame = {
     val path = graft.sources.Scratch.corpusDir(spark, "graph_ann_edges", dir)
-    graft.sources.Scratch.materializeOnce(path) {
+    graft.sources.Scratch.materializeOnce(spark, path) {
       // a caller that already sized the corpus (the auto router)
       // passes n through — the "corpus counted ONCE" contract
       val e = Tables.embeddings(spark, dir)
@@ -1179,13 +1175,13 @@ object Similarity {
     val b = deltaBaseCount(n)
     val base = e.filter(col("vec_id") < b)
     val edgesPath = graft.sources.Scratch.corpusDir(spark, "graph_ann_edges_base", dir)
-    graft.sources.Scratch.materializeOnce(edgesPath) {
+    graft.sources.Scratch.materializeOnce(spark, edgesPath) {
       graphAnnEdgesFor(base, b, BlockedBuildMaxN)
         .write.mode("overwrite").parquet(edgesPath)
     }
     val stored = graft.sources.Scratch.readParquetOnce(spark, edgesPath).select(col("src"), col("dst"))
     val insertPath = graft.sources.Scratch.corpusDir(spark, "graph_ann_edges_batch", dir)
-    graft.sources.Scratch.materializeOnce(insertPath) {
+    graft.sources.Scratch.materializeOnce(spark, insertPath) {
       deltaGraphInsertEdges(base, stored, e.filter(col("vec_id") >= b))
         .write.mode("overwrite").parquet(insertPath)
     }
@@ -1210,7 +1206,7 @@ object Similarity {
     val e = Tables.embeddings(spark, dir)
     val (stored, inserted) = deltaGraphEnsureTables(spark, dir, e)
     val compactPath = graft.sources.Scratch.corpusDir(spark, "graph_ann_edges_compacted", dir)
-    graft.sources.Scratch.materializeOnce(compactPath) {
+    graft.sources.Scratch.materializeOnce(spark, compactPath) {
       stored.unionByName(inserted)
         .write.mode("overwrite").parquet(compactPath)
     }
@@ -1237,13 +1233,13 @@ object Similarity {
     val b1 = deltaBaseCount(n) // 8/10
     val base = e.filter(col("vec_id") < b0)
     val e0Path = graft.sources.Scratch.corpusDir(spark, "graph_ann_edges_base6", dir)
-    graft.sources.Scratch.materializeOnce(e0Path) {
+    graft.sources.Scratch.materializeOnce(spark, e0Path) {
       graphAnnEdgesFor(base, b0, BlockedBuildMaxN)
         .write.mode("overwrite").parquet(e0Path)
     }
     val e0 = graft.sources.Scratch.readParquetOnce(spark, e0Path).select(col("src"), col("dst"))
     val ins1Path = graft.sources.Scratch.corpusDir(spark, "graph_ann_edges_ins1", dir)
-    graft.sources.Scratch.materializeOnce(ins1Path) {
+    graft.sources.Scratch.materializeOnce(spark, ins1Path) {
       deltaGraphInsertEdges(base, e0,
           e.filter(col("vec_id") >= b0 && col("vec_id") < b1))
         .write.mode("overwrite").parquet(ins1Path)
@@ -1251,7 +1247,7 @@ object Similarity {
     val e1 = e0.unionByName(
       graft.sources.Scratch.readParquetOnce(spark, ins1Path).select(col("src"), col("dst")))
     val ins2Path = graft.sources.Scratch.corpusDir(spark, "graph_ann_edges_ins2", dir)
-    graft.sources.Scratch.materializeOnce(ins2Path) {
+    graft.sources.Scratch.materializeOnce(spark, ins2Path) {
       // insert 2 beams over the graph AS INSERT 1 LEFT IT: reachable
       // nodes now include ingest 1's vectors via their backlinks
       deltaGraphInsertEdges(e.filter(col("vec_id") < b1), e1,
@@ -1750,7 +1746,7 @@ object Similarity {
     // the ivfKnnMaterialized round-22 treatment (the packed table is a
     // pure function of the corpus; the old form re-wrote it per call)
     val layoutDir = graft.sources.Scratch.corpusDir(spark, scratch, dir)
-    graft.sources.Scratch.materializeOnce(layoutDir) {
+    graft.sources.Scratch.materializeOnce(spark, layoutDir) {
       writeConsolidated(packed, "cell", layoutDir)
     }
     // probed cells as plan-time pruning literals — queries × probes
@@ -2348,10 +2344,10 @@ object Similarity {
     // each guard covers exactly the path it writes: a future caller
     // materializing centPath alone can no longer leave basePath
     // unwritten behind a guard that reports built
-    graft.sources.Scratch.materializeOnce(centPath) {
+    graft.sources.Scratch.materializeOnce(spark, centPath) {
       kmeansCentroids(spark, base).write.mode("overwrite").parquet(centPath)
     }
-    graft.sources.Scratch.materializeOnce(basePath) {
+    graft.sources.Scratch.materializeOnce(spark, basePath) {
       writeConsolidated(
         semdedupAssign(graft.sources.Scratch.readParquetOnce(spark, centPath), base),
         "cluster", basePath)

@@ -813,7 +813,7 @@ object TextAnalysis {
   private def ensureWinnowIndex(spark: SparkSession, dir: String,
       docs: DataFrame): String = {
     val root = graft.sources.Scratch.corpusDir(spark, "winnow_index", dir)
-    graft.sources.Scratch.materializeOnce(root) {
+    graft.sources.Scratch.materializeOnce(spark, root) {
       val (fps, sizes, dfq) =
         winnowIndexOf(docs.filter(!graft.operators.Dedup.deltaIsNew))
       fps.write.mode("overwrite").parquet(s"$root/postings")
@@ -859,7 +859,7 @@ object TextAnalysis {
       docs: DataFrame): String = {
     val root = graft.sources.Scratch.corpusDir(spark, "winnow_multi", dir)
     val bucket = pmod(graft.functions.TextFunctions.md5Hash32(col("text")), lit(10))
-    graft.sources.Scratch.materializeOnce(root) {
+    graft.sources.Scratch.materializeOnce(spark, root) {
       // disjoint md5 splits, no dependency — concurrent builds
       // (guide §2.6; each commit alone under-fills the cores)
       graft.sources.Scratch.inParallel(
@@ -927,11 +927,11 @@ object TextAnalysis {
     val root = graft.sources.Scratch.corpusDir(spark, "winnow_multi", dir)
     graft.sources.Scratch.inParallel(
       () => { ensureWinnowCommits(spark, dir, docs); () },
-      () => graft.sources.Scratch.materializeOnce(s"$root/c2") {
+      () => graft.sources.Scratch.materializeOnce(spark, s"$root/c2") {
         writeWinnowCommit(spark, s"$root/c2", docs.filter(bucket >= 8))
       })
     val cpath = s"$root/compacted"
-    graft.sources.Scratch.materializeOnce(cpath) {
+    graft.sources.Scratch.materializeOnce(spark, cpath) {
       val (fps, sizes, dfq) =
         readWinnowCommits(spark, root, Seq("c0", "c1", "c2"))
       fps.write.mode("overwrite").parquet(s"$cpath/postings")

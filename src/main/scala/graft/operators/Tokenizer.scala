@@ -149,7 +149,7 @@ object Tokenizer {
     val root = graft.sources.Scratch.corpusDir(spark, "bpe_model", dir)
     val rulesPath = s"$root/rules"
     val seqsPath = s"$root/seqs"
-    graft.sources.Scratch.materializeOnce(root) {
+    graft.sources.Scratch.materializeOnce(spark, root) {
       val (rules, seqs) = learnOn(Tables.documents(spark, dir))
       // the final seq table is still persisted from the last round —
       // the write drains cached blocks, not a retrain

@@ -1,5 +1,6 @@
 package graft.tables
 
+import graft.sources.Scratch
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,7 +35,7 @@ object Tables {
     * comparisons stay exact.
     *
     * REQUIRES `spark.sql.legacy.parquet.nanosAsLong=true` at session
-    * build time (set in Bench/Verify/BenchOne and the test wrapper) —
+    * build time (set by [[graft.LocalSession.build]]) —
     * a session-wide conf flip inside a loader would silently change how
     * every later nanos-timestamp parquet in the session reads.
     */
@@ -51,8 +52,8 @@ object Tables {
           throw new IllegalArgumentException(
             "events.parquet is TIMESTAMP(NANOS): set " +
               "spark.sql.legacy.parquet.nanosAsLong=true when building " +
-              "the session (as Bench/Verify/BenchOne and the test " +
-              "wrapper do), so the nanos column reads as raw longs for " +
+              "the session (as graft.LocalSession.build does), so the " +
+              "nanos column reads as raw longs for " +
               "normalizedTs to truncate", e)
       }
     raw.withColumn("ts", normalizedTs(spark, raw.schema))
@@ -160,10 +161,6 @@ object Tables {
   private def narrowMemoized(spark: SparkSession, df: DataFrame,
       memoKey: String): Boolean = {
     val p = widenTo(spark, df)
-    widenMemo.computeIfAbsent(s"$memoKey#$p",
-      _ => Boolean.box(df.rdd.getNumPartitions < p))
+    Scratch.once(spark, s"narrow:$memoKey#$p")(df.rdd.getNumPartitions < p)
   }
-
-  private val widenMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 }

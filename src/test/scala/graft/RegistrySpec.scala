@@ -40,4 +40,11 @@ class RegistrySpec extends AnyFunSuite {
   test("query names follow the q_ convention") {
     SparkEntry.queries.keys.foreach(n => assert(n.startsWith("q_"), n))
   }
+
+  test("Verify rejects a wrong argument count with its usage, before building a session") {
+    Seq(Array.empty[String], Array("sf"), Array("sf", "out", "q_topk", "extra")).foreach { args =>
+      val e = intercept[IllegalArgumentException](Verify.main(args))
+      assert(e.getMessage === Verify.Usage)
+    }
+  }
 }

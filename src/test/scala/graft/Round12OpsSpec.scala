@@ -24,7 +24,7 @@ class Round12OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     try {
       // untimed: first-touch JIT of the shingle/signature codegen is a
       // session cost (the Bench warm-up rationale), not a family cost
-      Bench.warmDedupCodegen(spark, sfDir)
+      LocalSession.warmDedupCodegen(spark, sfDir)
       val family = Seq("q_dedup_keep_best", "q_dup_clusters",
         "q_neardup_graph", "q_pagerank", "q_recursive_reach", "q_triangles")
       val times = family.map { name =>

@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import graft.sources.Scratch
 import graft.tables.Tables
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -54,5 +60,71 @@ class SourcesSpec extends AnyFunSuite with SparkSessionTestWrapper {
       "partition F should be pruned from the scan")
     assert(pruned.count() ===
       Tables.orders(spark, sfDir).filter($"o_orderstatus" === "O").count())
+  }
+
+  // Scratch.once, the session memo behind materializeOnce / readParquetOnce
+  private def freshKey(tag: String): String = s"memo-spec-$tag-${System.nanoTime()}"
+
+  test("materializeOnce: racing first callers share one build and both return after it") {
+    val key = freshKey("race")
+    val builds = new AtomicInteger(0)
+    @volatile var finished = false
+    val inBuild, release = new CountDownLatch(1)
+    val sawFinished = new ConcurrentLinkedQueue[Boolean]()
+    def caller(): Thread = {
+      val t = new Thread(() => {
+        Scratch.materializeOnce(spark, key) {
+          builds.incrementAndGet(); inBuild.countDown(); release.await(); finished = true
+        }
+        sawFinished.add(finished)
+      })
+      t.start(); t
+    }
+    val first = caller()
+    assert(inBuild.await(30, TimeUnit.SECONDS))
+    val second = caller()
+    Thread.sleep(200)
+    assert(second.isAlive, "the second caller must wait behind the first build")
+    release.countDown()
+    first.join(); second.join()
+    assert(builds.get === 1)
+    assert(sawFinished.asScala.toList === List(true, true))
+  }
+
+  test("materializeOnce: unrelated keys do not serialise") {
+    val otherDone = new CountDownLatch(1)
+    val inBuild = new CountDownLatch(1)
+    @volatile var sawOther = false
+    val t = new Thread(() => Scratch.materializeOnce(spark, freshKey("slow")) {
+      inBuild.countDown(); sawOther = otherDone.await(30, TimeUnit.SECONDS)
+    })
+    t.start()
+    assert(inBuild.await(30, TimeUnit.SECONDS))
+    Scratch.materializeOnce(spark, freshKey("fast"))(otherDone.countDown())
+    t.join()
+    assert(sawOther)
+  }
+
+  test("materializeOnce: a build that throws runs again on the next call") {
+    val key = freshKey("throw")
+    var runs = 0
+    intercept[IllegalStateException] {
+      Scratch.materializeOnce(spark, key) { runs += 1; throw new IllegalStateException("boom") }
+    }
+    Scratch.materializeOnce(spark, key) { runs += 1 }
+    Scratch.materializeOnce(spark, key) { runs += 1 }
+    assert(runs === 2)
+  }
+
+  test("readParquetOnce: memoized per session, a new session reads its own frame") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-memo").toString + "/t"
+    spark.range(3).write.parquet(dir)
+    val parent = Scratch.readParquetOnce(spark, dir)
+    assert(Scratch.readParquetOnce(spark, dir) eq parent)
+    val child = spark.newSession()
+    val df = Scratch.readParquetOnce(child, dir)
+    assert(df.sparkSession eq child)
+    assert(Scratch.readParquetOnce(child, dir) eq df)
+    assert(df.count() === 3)
   }
 }

@@ -12,21 +12,6 @@ trait SparkSessionTestWrapper {
 }
 
 object SparkSessionTestWrapper {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // events.parquet is TIMESTAMP(NANOS); set at build time so no
-    // loader has to flip session state as a side effect
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // the production install path for the SQL function surface — by
-    // class-name STRING, exactly as a user's spark-submit --conf would;
-    // SqlFunctionsSpec proves it took effect (via newSession, which
-    // only build-time-injected functions reach)
-    .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .appName("graft-test")
-    .getOrCreate()
+  lazy val session: SparkSession = LocalSession.build(cpus = 4,
+    warehouse = java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
 }
