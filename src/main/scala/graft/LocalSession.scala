@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** The one local session shape shared by every main (Bench, Verify,
@@ -64,11 +66,13 @@ object LocalSession {
     */
   def warmDedupCodegen(spark: SparkSession, sfDir: String): Unit =
     try {
-      val tiny = spark.read.parquet(s"$sfDir/documents.parquet")
+      val tiny = graft.tables.Tables.load(spark, sfDir, "documents")
         .select("doc_id", "text").limit(64)
       graft.operators.Dedup.ngramJaccardPairsOn(tiny)
         .write.format("noop").mode("overwrite").save()
       graft.operators.Dedup.minhashSignaturesOn(tiny)
         .write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
+    } catch {
+      case NonFatal(e) => System.err.println(s"warmDedupCodegen skipped: $e")
+    }
 }

@@ -157,7 +157,8 @@ object Tokenizer {
       seqs.unpersist()
       rules.toDF().write.mode("overwrite").parquet(rulesPath)
     }
-    (spark.read.parquet(rulesPath), spark.read.parquet(seqsPath))
+    (graft.sources.Scratch.readParquetOnce(spark, rulesPath),
+      graft.sources.Scratch.readParquetOnce(spark, seqsPath))
   }
 
   /** Apply the learned merges corpus-wide: per-document word and

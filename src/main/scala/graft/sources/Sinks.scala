@@ -13,6 +13,10 @@ import org.apache.spark.sql.functions._
   * the round trip breaks the hash match). At 100 TB partitioned layout
   * IS the table format; pruning is what makes selective reads O(hit
   * partitions) instead of O(corpus).
+  *
+  * The read-backs here stay raw `spark.read.parquet` calls, not
+  * [[Scratch.readParquetOnce]]: every call overwrites its path, so a
+  * memoized schema or file listing would serve the previous write.
   */
 object Sinks {
 

@@ -57,7 +57,7 @@ object DocumentStreams {
   /** Parallelism floor for heavy STATELESS stream projections (codec
     * decodes, signature/BPE/winnow kernels): the replayed file source
     * plans one task per file, so a single-file micro-batch ran its
-    * whole decode pass on one core — the [[graft.tables.Tables.widened]]
+    * whole decode pass on one core — the [[graft.tables.Tables.documents]]
     * problem at arrival time. A round-robin repartition inside the
     * stream fans the batch across the session's cores; the consumers
     * here are pure per-row functions (no state, no watermark

@@ -113,7 +113,7 @@ object EventStreams {
   }
 
   private def normalizedEventStream(spark: SparkSession, dir: String): DataFrame = {
-    val fileSchema = spark.read.parquet(s"$dir/events.parquet").schema
+    val fileSchema = graft.tables.Tables.schemaOf(spark, s"$dir/events.parquet")
     spark.readStream.schema(fileSchema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir)

@@ -127,4 +127,96 @@ class SourcesSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(Scratch.readParquetOnce(child, dir) eq df)
     assert(df.count() === 3)
   }
+
+  // Tables.schemaOf: each source table's schema is inferred once per
+  // session and file version; every load is still a fresh scan.
+
+  /** Jobs `f` runs, counted through a job group. Listener events arrive
+    * asynchronously and in order, so a marker job in a second group is
+    * awaited before the first group is counted. */
+  private def jobsIn(s: org.apache.spark.sql.SparkSession)(f: => Unit): Int = {
+    val sc = s.sparkContext
+    val group = freshKey("jobs")
+    sc.setJobGroup(group, group)
+    try f finally sc.clearJobGroup()
+    sc.setJobGroup(s"$group-end", "marker")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(s"$group-end").isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  test("schemaOf: a query's first build infers each table it reads once; a rebuild runs no job") {
+    val s = spark.newSession()
+    assert(jobsIn(s)(SparkEntry.queries("q_tpch_q5")(s, sfDir)) === 6)
+    assert(jobsIn(s)(SparkEntry.queries("q_tpch_q5")(s, sfDir)) === 0)
+  }
+
+  test("schemaOf: a table rewritten inside the session is read with its new schema and rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rewrite")
+    val table = dir.resolve("orders.parquet")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/orders.parquet"), table)
+    val before = Tables.orders(spark, dir.toString)
+    val n = before.count()
+    val subset = dir.resolve("subset").toString
+    before.filter($"o_orderkey" % 3 === 0).withColumn("o_extra", lit(1))
+      .coalesce(1).write.parquet(subset)
+    val part = java.nio.file.Files.list(java.nio.file.Paths.get(subset)).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    java.nio.file.Files.copy(part, table, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val after = Tables.orders(spark, dir.toString)
+    assert(!before.columns.contains("o_extra"))
+    assert(after.columns.last === "o_extra")
+    assert(after.count() === Tables.orders(spark, sfDir).filter($"o_orderkey" % 3 === 0).count())
+    assert(after.count() < n)
+  }
+
+  test("events: a TIMESTAMP(NANOS) inference failure surfaces as the conf hint and is not memoized") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = java.nio.file.Files.createTempDirectory("graft-nanos").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withType(schema).build()
+    try (1 to 3).foreach(i => w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", i.toLong).append("ts", i * 1500L)))
+    finally w.close()
+    val s = spark.newSession()
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val e = intercept[IllegalArgumentException](Tables.events(s, dir))
+    assert(e.getMessage.contains("nanosAsLong"))
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val micros = Tables.events(s, dir).orderBy($"event_id")
+      .select(unix_micros($"ts")).as[Long].collect().toSeq
+    assert(micros === Seq(1L, 3L, 4L))
+  }
+
+  test("documentsNarrow: a corpus rewritten inside the session gets a new widen decision") {
+    // the floor's width is pinned, so only the rewrite can change the decision
+    val s = spark.newSession()
+    s.conf.set("spark.graft.scan.widenPartitions", "2")
+    val dir = java.nio.file.Files.createTempDirectory("graft-renarrow").toString
+    val docs = Tables.load(s, sfDir, "documents")
+    docs.coalesce(1).write.parquet(s"$dir/documents.parquet")
+    assert(Tables.documentsNarrow(s, dir), "one file plans one split: narrow")
+    docs.repartition(16).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    assert(!Tables.documentsNarrow(s, dir), "sixteen files plan several splits: not narrow")
+    assert(Tables.documents(s, dir).count() === docs.count())
+  }
+
+  test("load: two loads of one table self-join on Dataset-bound columns") {
+    val a = Tables.orders(spark, sfDir)
+    val b = Tables.orders(spark, sfDir)
+    assert(a.join(b, a("o_orderkey") === b("o_orderkey")).count() === a.count())
+    // Spark resolves a trivially-true `x === x` on one shared frame too;
+    // an order pair per customer resolves only on distinct attribute ids
+    val pairs = a.groupBy($"o_custkey").count()
+      .select(sum($"count" * ($"count" - 1) / 2).cast("long")).as[Long].head()
+    assert(pairs > 0)
+    assert(a.join(b, a("o_custkey") === b("o_custkey") &&
+      a("o_orderkey") < b("o_orderkey")).count() === pairs)
+  }
 }
