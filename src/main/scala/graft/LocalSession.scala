@@ -52,7 +52,9 @@ object LocalSession {
     * caches are session costs, not query costs), the dedup codegen
     * paths, then an empty cache. */
   def warmUp(spark: SparkSession, sfDir: String): Unit = {
-    try exec(spark, sfDir, "q_topk") catch { case _: Throwable => () }
+    try exec(spark, sfDir, "q_topk") catch {
+      case NonFatal(e) => System.err.println(s"warmUp q_topk skipped: $e")
+    }
     warmDedupCodegen(spark, sfDir)
     spark.catalog.clearCache()
   }

@@ -217,8 +217,9 @@ object Similarity {
   private def ivfAssignments(spark: SparkSession, e: DataFrame,
                              probes: Int,
                              precountedN: Option[Long] = None): (DataFrame, DataFrame) =
-    ivfExactAssignments(spark, e, probes,
-      math.min(IvfMaxCells, dedupCells(precountedN.getOrElse(e.count()))))
+    ivfExactAssignments(spark, e, probes, ivfCells(precountedN.getOrElse(e.count())))
+
+  private def ivfCells(n: Long): Int = math.min(IvfMaxCells, dedupCells(n))
 
   /** Cell-partitioned layout write with CONSOLIDATED files (guide §6
     * "aim for output files in the 128 MB–1 GB range", fixture edition:
@@ -255,33 +256,67 @@ object Similarity {
       .orderBy(col("q_id"), col("rank"))
   }
 
-  /** On-disk home of the cell-partitioned corpus — since round 22 a
-    * per-corpus [[graft.sources.Scratch.materializeOnce]] slot (the
-    * delta family's stored-layout discipline, applied to the serving
-    * layout it pioneered): the round-21 form re-wrote the whole layout
-    * on EVERY call, paying a full partitioned write per query run
-    * where "the write runs once at ingest" was already the operator's
-    * own scale story. Values identical (the Lloyd chain is a pure
-    * function of the corpus); a cold session still builds inside the
-    * first consumer's timed window.
+  /** Scratch slot of a stored ANN artifact, per corpus AND per version
+    * of its embeddings file ([[Tables.fingerprint]]): a file rewritten
+    * inside a live session gets fresh slots (and a fresh count, see
+    * [[denseCountDir]]) instead of serving the layouts and edges built
+    * from the old one.
     */
-  def ivfLayoutDir(spark: SparkSession, dir: String): String =
-    graft.sources.Scratch.corpusDir(spark, "ivf_layout", dir)
+  private def annSlot(spark: SparkSession, dir: String, slot: String): String =
+    graft.sources.Scratch.corpusDir(spark, slot, corpusVersion(spark, dir))
+
+  private def corpusVersion(spark: SparkSession, dir: String): String =
+    s"$dir#${Tables.fingerprint(spark, s"$dir/embeddings.parquet")}"
+
+  /** The write-once cell layout every stored IVF artifact is: `df`
+    * written partitioned by `cell` ([[writeConsolidated]]) into the
+    * corpus-version slot, at most once per session — at 100 TB the
+    * write runs once at ingest, never per query. Returns the layout's
+    * path.
+    */
+  private def cellLayoutOnce(spark: SparkSession, dir: String,
+      slot: String)(df: => DataFrame): String = {
+    val path = annSlot(spark, dir, slot)
+    graft.sources.Scratch.materializeOnce(spark, path) {
+      writeConsolidated(df, "cell", path)
+    }
+    path
+  }
+
+  /** The one cell-PRUNED read of stored IVF layouts: the probed cells
+    * are collected once to become plan-time `isin` literals — queries ×
+    * probes ints, probe METADATA in the same class as the density
+    * probe's scalar, never corpus data — so each layout scan carries
+    * the cell PartitionFilters (PlanAuditSpec) and only the probed
+    * cells' files are ever opened. `probeCells` must be pinned: it is
+    * consumed again by the search join.
+    */
+  private def prunedLayouts(probeCells: DataFrame,
+      layouts: Seq[DataFrame]): DataFrame = {
+    val cells = probeCells.select(col("cell")).distinct()
+      .collect().map(_.getInt(0)).sorted.toIndexedSeq.map(Int.box)
+    layouts.map(_.filter(col("cell").isin(cells: _*))).reduce(_ unionByName _)
+  }
+
+  /** IVF serving over stored layouts: the probe plan pinned (its
+    * lineage holds a corpus normalization pass, and it is consumed
+    * twice — the cell collect, then the search join), the layouts read
+    * cell-pruned, exact rerank.
+    */
+  private def prunedSearch(probeCells0: DataFrame,
+      layouts: Seq[DataFrame]): DataFrame = {
+    val probeCells = probeCells0.localCheckpoint()
+    ivfSearch(prunedLayouts(probeCells, layouts), probeCells)
+  }
 
   /** The IVF layout MATERIALIZED: the corpus is WRITTEN partitioned by
     * its fitted k-means cell, and a probe is a partition-PRUNED read —
     * only the probed cells' files are ever opened, which is the
-    * billion-scale ANN serving layout SURVEY §8 describes (at 100 TB
-    * the write runs once at ingest; every query after that touches
-    * probes/cells of the data). Same deterministic Lloyd quantizer and
-    * same search as [[ivfKnnOn]], so the result is identical to
-    * q_knn_ivf — SimilaritySpec asserts the equality, and PlanAuditSpec
-    * asserts the scan carries the cell PartitionFilters.
-    *
-    * The probed cell list is collected to the driver to become plan-time
-    * literals — that is what makes pruning static — and is bounded by
-    * queries × probes rows of one int each, probe METADATA in the same
-    * class as the density probe's scalar, never corpus data.
+    * billion-scale ANN serving layout SURVEY §8 describes. Same
+    * deterministic Lloyd quantizer and same search as [[ivfKnnOn]], so
+    * the result is identical to q_knn_ivf — SimilaritySpec asserts the
+    * equality, and PlanAuditSpec asserts the scan carries the cell
+    * PartitionFilters.
     *
     * Equality with [[ivfKnn]] is unconditional: the fixed-point Lloyd
     * quantizer is a pure function of the DATA alone (first-k init,
@@ -289,24 +324,19 @@ object Similarity {
     * independent library calls over the same table always agree, and
     * both match the DuckDB re-derivation (shared q_knn_ivf oracle).
     */
-  def ivfKnnMaterialized(spark: SparkSession, dir: String, probes: Int = 3): DataFrame = {
-    val (corpus, probeCells0) = ivfAssignments(spark,
-      Tables.embeddings(spark, dir), probes,
-      Some(denseCountDir(spark, dir, "ivf sizing")))
-    // probeCells is consumed twice (driver collect of the probed cells,
-    // then the search join) and its lineage includes the full corpus
-    // normalization pass — eagerly materialize the tiny frame
-    // (queries × probes rows) so the second consumption is a local scan
-    val probeCells = probeCells0.localCheckpoint()
-    val layoutDir = ivfLayoutDir(spark, dir)
-    graft.sources.Scratch.materializeOnce(spark, layoutDir) {
-      writeConsolidated(corpus, "cell", layoutDir)
-    }
-    val cells = probeCells.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val layout = graft.sources.Scratch.readParquetOnce(spark, layoutDir)
-      .filter(col("cell").isin(cells.map(Int.box): _*))
-    ivfSearch(layout, probeCells)
+  def ivfKnnMaterialized(spark: SparkSession, dir: String, probes: Int = 3): DataFrame =
+    ivfKnnPruned(spark, dir, ivfCells(denseCountDir(spark, dir, "ivf sizing")), probes)
+
+  /** Pruned serving over the full-fit `cells`-cell layout, shared by the
+    * √N-sized and the fixed-[[IvfExactCells]] tiers. The layout is a
+    * pure function of (corpus, cells), so its slot is named by `cells`.
+    */
+  private def ivfKnnPruned(spark: SparkSession, dir: String, cells: Int,
+      probes: Int): DataFrame = {
+    val (corpus, probeCells) = ivfExactAssignments(spark,
+      Tables.embeddings(spark, dir), probes, cells)
+    prunedSearch(probeCells, Seq(graft.sources.Scratch.readParquetOnce(spark,
+      cellLayoutOnce(spark, dir, s"ivf_k$cells")(corpus))))
   }
 
   /** Cell count for [[ivfKnnExactOn]]. Fixed (not √N) so the DuckDB
@@ -403,27 +433,11 @@ object Similarity {
     * rows to [[ivfKnnExact]] (same pure-function quantizer, same
     * search; SimilaritySpec asserts equality, PlanAuditSpec-style
     * PartitionFilters asserted in the same spec), hence it shares
-    * q_knn_ivf_exact's DuckDB oracle. The probed cell list collected
-    * to the driver is queries × probes ints — probe metadata, the
-    * materialized-IVF convention.
+    * q_knn_ivf_exact's DuckDB oracle.
     */
   def ivfKnnExactMaterialized(spark: SparkSession, dir: String,
-      probes: Int = 3): DataFrame = {
-    val (corpus, probeCells0) =
-      ivfExactAssignments(spark, Tables.embeddings(spark, dir), probes)
-    // consumed twice (cell collect + search join) with the Lloyd
-    // normalization pass in its lineage — materialize the tiny frame
-    val probeCells = probeCells0.localCheckpoint()
-    val layoutDir = graft.sources.Scratch.corpusDir(spark, "ivf_exact_layout", dir)
-    graft.sources.Scratch.materializeOnce(spark, layoutDir) {
-      writeConsolidated(corpus, "cell", layoutDir)
-    }
-    val cells = probeCells.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val layout = graft.sources.Scratch.readParquetOnce(spark, layoutDir)
-      .filter(col("cell").isin(cells.map(Int.box): _*))
-    ivfSearch(layout, probeCells)
-  }
+      probes: Int = 3): DataFrame =
+    ivfKnnPruned(spark, dir, IvfExactCells, probes)
 
   // ——— delta (incremental) ANN index maintenance ———
 
@@ -440,38 +454,6 @@ object Similarity {
     */
   private[graft] def deltaBaseCount(n: Long): Long = n * 8 / 10
 
-  /** INCREMENTAL IVF — index MAINTENANCE under ingest, the similarity
-    * family's delta form (the last family without one): prior ingests
-    * left a STORED deterministic Lloyd quantizer (the
-    * [[ivfKnnExactOn]] fit over the base, [[IvfExactCells]] cells) and
-    * the cell-partitioned base layout ([[ivfKnnExactMaterialized]]'s
-    * serving shape). A new batch is absorbed WITHOUT refitting or
-    * re-clustering anything: each new vector takes a STATELESS argmin
-    * over the stored centroids (the q_stream_kmeans kernel — one
-    * broadcast join, map-only) and lands as a delta commit NEXT TO the
-    * frozen base layout (its own cell-partitioned directory,
-    * idempotent overwrite — the [[graft.operators.Dedup.deltaShardAppend]]
-    * frozen-base discipline on the ANN layout; a compaction folds
-    * delta files into the base off the query path). Ingest cost is
-    * O(batch · cells) scoring plus a batch-sized write — NEVER a Lloyd
-    * chain over the corpus (probed flat-in-base; ScalingProbe
-    * delta_knn_ivf).
-    *
-    * Search after ingest: the probe plan scores queries against the
-    * SAME stored centroids and reads base + delta layouts partition-
-    * PRUNED to the probed cells. Because base cells were themselves
-    * assigned against these centroids at base ingest, base ∪ delta
-    * equals one assignment pass over the whole corpus vs the
-    * base-fitted quantizer — which is exactly what the DuckDB oracle
-    * re-derives (Lloyd over the id-prefix base, assignment over all),
-    * so the graded entry sits under the full rows+schema+hash gate.
-    * The DRIFT this maintenance trades away is quantizer FIT, not
-    * correctness: centroids stop tracking the distribution as batches
-    * accumulate (recall drift vs a full refit is floored in
-    * Round19OpsSpec on the clustered fixture); the production answer
-    * is periodic refits, exactly like the re-shard note on
-    * deltaShardAppend.
-    */
   /** Fit the deterministic [[IvfExactCells]]-cell Lloyd quantizer over
     * an embedding frame — the stored-centroid builder of the delta
     * family (and the probe's fixed-seed stand-in).
@@ -509,85 +491,124 @@ object Similarity {
       .select(col("q_id"), col("q_emb"), col("cid").cast("int").as("cell"))
   }
 
-  def deltaIvfKnn(spark: SparkSession, dir: String, probes: Int = 3): DataFrame = {
-    val (cents, layouts) = deltaIvfEnsure(spark, dir)
-    val e = Tables.embeddings(spark, dir)
-    // serving: probe plan vs the stored centroids, base + delta read
-    // back partition-pruned to the probed cells
-    val probeCells = ivfProbePlan(e.filter(col("vec_id") < NumQueries),
-        cents, probes)
-      .localCheckpoint() // cell collect + search join
-    val cellIds = probeCells.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val layout = layouts
-      .map(p => graft.sources.Scratch.readParquetOnce(spark, p)
-        .filter(col("cell").isin(cellIds.map(Int.box): _*)))
-      .reduce(_ unionByName _)
-    ivfSearch(layout, probeCells)
-  }
-
-  /** Materialize (once per corpus) the single-ingest delta IVF's
-    * stored state — the 8/10-base-fitted quantizer, the frozen
-    * cell-partitioned base layout, and the batch's delta commit (the
-    * INGEST: stateless assignment, the base layout never reopened) —
-    * returning (centroids, layout paths). Shared by the serving entry,
-    * its compaction, and the drift router.
+  /** The IVF family's stored state as ONE commit chain, INCREMENTAL IVF —
+    * index MAINTENANCE under ingest. `cuts` are the ingest cuts in
+    * tenths of the corpus, increasing in 1..9: with n vectors and
+    * bᵢ = n·cutᵢ/10 (integer arithmetic, the oracle's
+    * `count(*) * cut // 10`), the base is ids [0, b₀) and ingest i
+    * holds ids [bᵢ, bᵢ₊₁), the last ending at n.
+    *
+    * The base ingest FITS the deterministic Lloyd quantizer over the
+    * base ([[ivfFitCents]], [[IvfExactCells]] cells) and writes it and
+    * the base's cell-partitioned layout. Every later ingest is absorbed
+    * WITHOUT refitting or re-clustering anything: each new vector takes
+    * a STATELESS argmin over the stored centroids ([[ivfAssignTo]] —
+    * the q_stream_kmeans kernel, one broadcast join, map-only) and
+    * lands as its OWN cell-partitioned commit next to the frozen base
+    * (idempotent, batch-sized — never a refit, never a rewrite of a
+    * prior commit; the [[graft.operators.Dedup.deltaShardAppend]]
+    * frozen-base discipline on the ANN layout). Ingest cost is
+    * O(batch · cells) scoring plus a batch-sized write, flat in the
+    * base (ScalingProbe delta_knn_ivf).
+    *
+    * Because the assignment is stateless against stored centroids, any
+    * commit grouping unions to one assignment pass over the whole
+    * corpus — ingest(ingest(base, b1), b2) == full assignment — which
+    * is exactly what the DuckDB oracle re-derives (Lloyd over the
+    * id-prefix base, assignment over all), so every entry over the
+    * chain sits under the full rows+schema+hash gate. Artifacts are
+    * named from the cuts: the centroids and commits depend only on the
+    * fit cut and their own id range, so chains sharing a base share
+    * those slots. The DRIFT this trades away is quantizer FIT, not
+    * correctness: centroids stop tracking the distribution as batches
+    * accumulate (floored in Round19OpsSpec, priced by
+    * [[ivfKnnDriftRouted]]); the production answer is periodic refits.
+    *
+    * Returns (stored centroids, layout paths in ingest order).
     */
-  private def deltaIvfEnsure(spark: SparkSession,
-      dir: String): (DataFrame, Seq[String]) = {
+  private[graft] def ivfCommits(spark: SparkSession, dir: String,
+      cuts: Seq[Int]): (DataFrame, Seq[String]) = {
+    requireCuts(cuts)
     val e = Tables.embeddings(spark, dir)
     val n = denseCountDir(spark, dir, "delta IVF")
-    val b = deltaBaseCount(n)
-    val base = e.filter(col("vec_id") < b)
-    val centPath = graft.sources.Scratch.corpusDir(spark, "ivf_delta_centroids", dir)
-    val layoutPath = graft.sources.Scratch.corpusDir(spark, "ivf_delta_layout", dir)
+    def ids(lo: Int, hi: Int): DataFrame =
+      e.filter(col("vec_id") >= n * lo / 10 && col("vec_id") < n * hi / 10)
+    val fit = s"ivf_fit${cuts.head}"
+    val centPath = annSlot(spark, dir, s"${fit}_centroids")
     graft.sources.Scratch.materializeOnce(spark, centPath) {
-      val cents = ivfFitCents(spark, base)
-      cents.write.mode("overwrite").parquet(centPath)
-      writeConsolidated(ivfAssignTo(cents, base), "cell", layoutPath)
+      ivfFitCents(spark, ids(0, cuts.head)).write.mode("overwrite").parquet(centPath)
     }
     val cents = graft.sources.Scratch.readParquetOnce(spark, centPath)
-    val deltaPath = graft.sources.Scratch.corpusDir(spark, "ivf_delta_layout_batch", dir)
-    graft.sources.Scratch.materializeOnce(spark, deltaPath) {
-      writeConsolidated(ivfAssignTo(cents, e.filter(col("vec_id") >= b)),
-        "cell", deltaPath)
-    }
-    (cents, Seq(layoutPath, deltaPath))
+    val commits = (0 +: cuts :+ 10).sliding(2).map { case Seq(lo, hi) =>
+      cellLayoutOnce(spark, dir, s"${fit}_cells${lo}_$hi")(ivfAssignTo(cents, ids(lo, hi)))
+    }.toSeq
+    (cents, commits)
+  }
+
+  private def requireCuts(cuts: Seq[Int]): Unit =
+    require(cuts.nonEmpty && cuts.head > 0 && cuts.last < 10 &&
+        cuts.zip(cuts.tail).forall { case (a, b) => a < b },
+      s"ingest cuts must increase within 1..9 (tenths of the corpus): $cuts")
+
+  /** Serve the [[NumQueries]] queries over stored IVF layouts: probe
+    * plan against the STORED centroids, every layout read cell-pruned
+    * ([[prunedSearch]]).
+    */
+  private[graft] def ivfServe(spark: SparkSession, dir: String,
+      cents: DataFrame, layouts: Seq[String], probes: Int): DataFrame =
+    prunedSearch(
+      ivfProbePlan(Tables.embeddings(spark, dir).filter(col("vec_id") < NumQueries),
+        cents, probes),
+      layouts.map(graft.sources.Scratch.readParquetOnce(spark, _)))
+
+  /** Fold stored IVF layouts into one cell-partitioned layout, off the
+    * query path: the rows of `paths` that satisfy `keep`, rewritten
+    * with one file per cell. Row VALUES never change, only file layout
+    * (and the rows `keep` drops), so serving a fold of a chain equals
+    * serving the chain minus the dropped rows — which is what the
+    * compaction and retraction entries' shared oracles certify.
+    */
+  private[graft] def ivfFold(spark: SparkSession, dir: String, slot: String,
+      paths: Seq[String], keep: Column = lit(true)): String =
+    cellLayoutOnce(spark, dir, slot)(
+      paths.map(graft.sources.Scratch.readParquetOnce(spark, _))
+        .reduce(_ unionByName _).filter(keep))
+
+  /** INCREMENTAL IVF, single ingest: the [[ivfCommits]] chain cut at
+    * 8/10 ([[deltaBaseCount]]), served over base + delta commits.
+    */
+  def deltaIvfKnn(spark: SparkSession, dir: String, probes: Int = 3): DataFrame = {
+    val (cents, commits) = ivfCommits(spark, dir, Seq(8))
+    ivfServe(spark, dir, cents, commits, probes)
   }
 
   /** RETRACTION — the IVF layout under DELETION, closing the ANN
     * column of the lifecycle matrix: tombstoned vec_ids drop out of
     * the stored cell-partitioned layout by one anti-filter fold
-    * (written once, off the query path — the deletion-vector
-    * materialize of a lakehouse, cell partitioning preserved), while
-    * the stored quantizer is DELIBERATELY untouched: retraction
-    * deletes DATA, not the model — centroids keep serving until the
-    * drift router ([[ivfKnnDriftRouted]]) MEASURES that the fit
-    * itself must refresh. Serving reads the retracted layout
-    * partition-pruned; the oracle is the maintenance chain with the
-    * assignment restricted to survivors (the quantizer still fits
-    * over the ORIGINAL base — exactly the stored-model semantics).
-    * Fixture tombstones: vec_id ≡ 7 (mod 10) excluding the query ids.
+    * ([[ivfFold]] — the deletion-vector materialize of a lakehouse,
+    * cell partitioning preserved), while the stored quantizer is
+    * DELIBERATELY untouched: retraction deletes DATA, not the model —
+    * centroids keep serving until the drift router
+    * ([[ivfKnnDriftRouted]]) MEASURES that the fit itself must
+    * refresh. The oracle is the maintenance chain with the assignment
+    * restricted to survivors (the quantizer still fits over the
+    * ORIGINAL base — exactly the stored-model semantics). Fixture
+    * tombstones: vec_id ≡ 7 (mod 10) excluding the query ids.
     */
   def retractIvfKnn(spark: SparkSession, dir: String,
       probes: Int = 3): DataFrame = {
-    val (cents, layouts) = deltaIvfEnsure(spark, dir)
-    val e = Tables.embeddings(spark, dir)
-    val retractPath = graft.sources.Scratch.corpusDir(spark, "ivf_retract_layout", dir)
-    graft.sources.Scratch.materializeOnce(spark, retractPath) {
-      writeConsolidated(
-        layouts.map(p => graft.sources.Scratch.readParquetOnce(spark, p))
-          .reduce(_ unionByName _)
-          .filter(!(col("n_id") % 10 === 7 && col("n_id") >= NumQueries)),
-        "cell", retractPath)
-    }
-    val probeCells = ivfProbePlan(e.filter(col("vec_id") < NumQueries),
-      cents, probes).localCheckpoint()
-    val cellIds = probeCells.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    ivfSearch(graft.sources.Scratch.readParquetOnce(spark, retractPath)
-      .filter(col("cell").isin(cellIds.map(Int.box): _*)), probeCells)
+    val cuts = Seq(8)
+    val (cents, commits) = ivfCommits(spark, dir, cuts)
+    val survivors = ivfFold(spark, dir, foldSlot("ivf", cuts, "retract"), commits,
+      keep = !(col("n_id") % 10 === 7 && col("n_id") >= NumQueries))
+    ivfServe(spark, dir, cents, Seq(survivors), probes)
   }
+
+  /** Slot of a fold over the chain cut at `cuts` (`what` names the
+    * fold: a compaction, a retraction).
+    */
+  private def foldSlot(family: String, cuts: Seq[Int], what: String): String =
+    s"${family}_cuts${cuts.mkString("_")}_$what"
 
   /** DRIFT-MEASURED refit router, IVF edition ([[graphKnnDriftRouted]]'s
     * twin on the quantizer-fit drift trade): a deterministic sample of
@@ -601,13 +622,13 @@ object Similarity {
     */
   def ivfKnnDriftRouted(spark: SparkSession, dir: String,
       probes: Int = 3, expectArm: Option[String] = None): DataFrame = {
-    val (cents, layouts) = deltaIvfEnsure(spark, dir)
+    val (cents, commits) = ivfCommits(spark, dir, Seq(8))
     val e = Tables.embeddings(spark, dir)
     val n = denseCountDir(spark, dir, "drift-routed IVF")
     val b = deltaBaseCount(n)
     val nSample = math.min(DriftSampleQueries.toLong, n - b)
     val recall = measuredIvfRecall(spark, e, cents,
-      layouts.map(p => graft.sources.Scratch.readParquetOnce(spark, p)), b, nSample, probes)
+      commits.map(p => graft.sources.Scratch.readParquetOnce(spark, p)), b, nSample, probes)
     assertRoutedArm("IVF", recall, expectArm)
     if (recall >= DriftRecallFloor) {
       System.err.println(f"[drift-router] sampled IVF insert recall@$K = " +
@@ -693,128 +714,42 @@ object Similarity {
   }
 
   /** The delta lifecycle's CLOSING stage — COMPACTION: the batch's
-    * delta commit folded into one cell-partitioned layout (read base +
-    * delta, rewrite partitioned — off the query path, the
-    * deltaShardAppend re-shard note's IVF edition: small delta files
-    * accumulate per ingest until a compaction pass consolidates them;
-    * row VALUES never change, only file layout). The graded entry
-    * serves the same queries over the compacted layout and must equal
-    * [[deltaIvfKnn]] row-for-row — it shares the delta oracle, so the
-    * gate certifies compaction as a pure layout change. Serving stays
-    * partition-pruned; the plan now reads ONE layout instead of
+    * delta commit folded into one cell-partitioned layout
+    * ([[ivfFold]], off the query path: small delta files accumulate
+    * per ingest until a compaction pass consolidates them). The graded
+    * entry serves the same queries over the compacted layout and must
+    * equal [[deltaIvfKnn]] row-for-row — it shares the delta oracle, so
+    * the gate certifies compaction as a pure layout change. Serving
+    * stays partition-pruned; the plan now reads ONE layout instead of
     * base ∪ delta.
     */
   def deltaIvfKnnCompacted(spark: SparkSession, dir: String,
-      probes: Int = 3): DataFrame = {
-    // ensure the maintained layouts exist (shared materialization with
-    // q_delta_knn_ivf — a compaction runs AFTER ingests)
-    deltaIvfKnn(spark, dir, probes)
-    val centPath = graft.sources.Scratch.corpusDir(spark, "ivf_delta_centroids", dir)
-    val layoutPath = graft.sources.Scratch.corpusDir(spark, "ivf_delta_layout", dir)
-    val deltaPath = graft.sources.Scratch.corpusDir(spark, "ivf_delta_layout_batch", dir)
-    val compactPath = graft.sources.Scratch.corpusDir(spark, "ivf_delta_layout_compacted", dir)
-    graft.sources.Scratch.materializeOnce(spark, compactPath) {
-      writeConsolidated(
-        graft.sources.Scratch.readParquetOnce(spark, layoutPath)
-          .unionByName(graft.sources.Scratch.readParquetOnce(spark, deltaPath)),
-        "cell", compactPath)
-    }
-    val e = Tables.embeddings(spark, dir)
-    val probeCells = ivfProbePlan(e.filter(col("vec_id") < NumQueries),
-        graft.sources.Scratch.readParquetOnce(spark, centPath), probes)
-      .localCheckpoint()
-    val cellIds = probeCells.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    ivfSearch(graft.sources.Scratch.readParquetOnce(spark, compactPath)
-      .filter(col("cell").isin(cellIds.map(Int.box): _*)), probeCells)
-  }
+      probes: Int = 3): DataFrame = ivfCompacted(spark, dir, Seq(8), probes)
 
-  /** MULTI-INGEST compounding for the IVF family — TWO stored
-    * assignment commits then serving, under the gate: the quantizer
-    * fits over the 6/10 id-prefix base; ingests 1 (ids [0.6n, 0.8n))
-    * and 2 (ids [0.8n, n)) each land as their OWN cell-partitioned
-    * commit next to the frozen base layout (idempotent, batch-sized —
-    * never a refit, never a rewrite of a prior commit). Because the
-    * assignment is STATELESS against the stored centroids, any commit
-    * grouping unions to one assignment pass over the whole corpus —
-    * ingest(ingest(base, b1), b2) == full assignment — and the graded
-    * entry hash-matches the [[deltaIvfKnn]] oracle chain at the 6/10
-    * cut. Serving reads all commits partition-pruned to the probed
-    * cells.
+  /** MULTI-INGEST compounding for the IVF family: the [[ivfCommits]]
+    * chain cut at 6/10 and 8/10 — TWO stored assignment commits after
+    * the base, then serving over all three layouts partition-pruned.
+    * Hash-matches the [[deltaIvfKnn]] oracle chain at the 6/10 cut.
     */
   def delta2IvfKnn(spark: SparkSession, dir: String,
       probes: Int = 3): DataFrame = {
-    val (cents, layouts) = delta2IvfEnsure(spark, dir)
-    val e = Tables.embeddings(spark, dir)
-    val probeCells = ivfProbePlan(e.filter(col("vec_id") < NumQueries),
-      cents, probes).localCheckpoint()
-    val cellIds = probeCells.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val layout = layouts
-      .map(p => graft.sources.Scratch.readParquetOnce(spark, p)
-        .filter(col("cell").isin(cellIds.map(Int.box): _*)))
-      .reduce(_ unionByName _)
-    ivfSearch(layout, probeCells)
+    val (cents, commits) = ivfCommits(spark, dir, Seq(6, 8))
+    ivfServe(spark, dir, cents, commits, probes)
   }
 
   /** The two-commit lifecycle's N-COMMIT compaction: base + BOTH
-    * ingest commits folded into one cell-partitioned layout (off the
-    * query path; row values unchanged) — serving the fold shares the
-    * delta2 oracle row-for-row, certifying the N-way fold as a pure
-    * layout change (the single-commit [[deltaIvfKnnCompacted]]
-    * generalized to the multi-ingest history it accumulates).
+    * ingest commits folded into one layout — serving the fold shares
+    * the delta2 oracle row-for-row, certifying the N-way fold as a pure
+    * layout change.
     */
   def delta2IvfKnnCompacted(spark: SparkSession, dir: String,
-      probes: Int = 3): DataFrame = {
-    val (cents, layouts) = delta2IvfEnsure(spark, dir)
-    val compactPath = graft.sources.Scratch.corpusDir(spark,
-      "ivf_delta2_compacted", dir)
-    graft.sources.Scratch.materializeOnce(spark, compactPath) {
-      writeConsolidated(
-        layouts.map(p => graft.sources.Scratch.readParquetOnce(spark, p))
-          .reduce(_ unionByName _),
-        "cell", compactPath)
-    }
-    val e = Tables.embeddings(spark, dir)
-    val probeCells = ivfProbePlan(e.filter(col("vec_id") < NumQueries),
-      cents, probes).localCheckpoint()
-    val cellIds = probeCells.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    ivfSearch(graft.sources.Scratch.readParquetOnce(spark, compactPath)
-      .filter(col("cell").isin(cellIds.map(Int.box): _*)), probeCells)
-  }
+      probes: Int = 3): DataFrame = ivfCompacted(spark, dir, Seq(6, 8), probes)
 
-  /** Materialize (once per corpus) the delta2 IVF's stored state —
-    * 6/10-base-fitted centroids, the base layout, and the two ingest
-    * commits — and return (centroids, commit paths in ingest order).
-    */
-  private def delta2IvfEnsure(spark: SparkSession,
-      dir: String): (DataFrame, Seq[String]) = {
-    val e = Tables.embeddings(spark, dir)
-    val n = denseCountDir(spark, dir, "delta2 IVF")
-    val b0 = n * 6 / 10
-    val b1 = deltaBaseCount(n) // 8/10 — the single-delta batch cut
-    val centPath = graft.sources.Scratch.corpusDir(spark, "ivf_delta2_centroids", dir)
-    val layoutPath = graft.sources.Scratch.corpusDir(spark, "ivf_delta2_layout", dir)
-    graft.sources.Scratch.materializeOnce(spark, centPath) {
-      val cents = ivfFitCents(spark, e.filter(col("vec_id") < b0))
-      cents.write.mode("overwrite").parquet(centPath)
-      writeConsolidated(ivfAssignTo(cents, e.filter(col("vec_id") < b0)),
-        "cell", layoutPath)
-    }
-    val cents = graft.sources.Scratch.readParquetOnce(spark, centPath)
-    val c1Path = graft.sources.Scratch.corpusDir(spark, "ivf_delta2_c1", dir)
-    graft.sources.Scratch.materializeOnce(spark, c1Path) {
-      writeConsolidated(
-        ivfAssignTo(cents, e.filter(col("vec_id") >= b0 && col("vec_id") < b1)),
-        "cell", c1Path)
-    }
-    val c2Path = graft.sources.Scratch.corpusDir(spark, "ivf_delta2_c2", dir)
-    graft.sources.Scratch.materializeOnce(spark, c2Path) {
-      writeConsolidated(ivfAssignTo(cents, e.filter(col("vec_id") >= b1)),
-        "cell", c2Path)
-    }
-    (cents, Seq(layoutPath, c1Path, c2Path))
+  private def ivfCompacted(spark: SparkSession, dir: String, cuts: Seq[Int],
+      probes: Int): DataFrame = {
+    val (cents, commits) = ivfCommits(spark, dir, cuts)
+    ivfServe(spark, dir, cents,
+      Seq(ivfFold(spark, dir, foldSlot("ivf", cuts, "fold"), commits)), probes)
   }
 
   /** In-memory delta-IVF body for specs and probes (no corpus identity
@@ -841,14 +776,9 @@ object Similarity {
     * filtered scan, never a fit.
     */
   private[graft] def deltaIvfProbe(baseLayout: DataFrame, cents: DataFrame,
-      batch: DataFrame, queriesE: DataFrame, probes: Int = 3): DataFrame = {
-    val probeCells = ivfProbePlan(queriesE, cents, probes).localCheckpoint()
-    val cellIds = probeCells.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val corpus = baseLayout.unionByName(ivfAssignTo(cents, batch))
-      .filter(col("cell").isin(cellIds.map(Int.box): _*))
-    ivfSearch(corpus, probeCells)
-  }
+      batch: DataFrame, queriesE: DataFrame, probes: Int = 3): DataFrame =
+    prunedSearch(ivfProbePlan(queriesE, cents, probes),
+      Seq(baseLayout, ivfAssignTo(cents, batch)))
 
   // ——— graph ANN (NSW-style) ———
 
@@ -898,21 +828,22 @@ object Similarity {
     n
   }
 
-  /** [[denseCount]] memoized per (session, corpus dir) — the round-21
-    * verdict's "session-memoize corpus counts the way the widen
-    * decision is memoized": every dir-keyed ANN entry re-ran the same
-    * O(1)-result sizing job over the same immutable corpus file (17
-    * call sites, 1–3 sizing jobs per query across the ~27-query knn
-    * family — pure driver/job overhead at any scale, since the probe's
-    * answer is a property of the corpus, not the query). The fixture
-    * is validated dense on the FIRST probe per corpus; the memo is
-    * [[graft.sources.Scratch.once]] (per session, so a fresh bench/oracle
-    * run re-counts from parquet). On-variants over arbitrary frames keep the
+  /** [[denseCount]] memoized per (session, corpus version) — the
+    * round-21 verdict's "session-memoize corpus counts the way the
+    * widen decision is memoized": every dir-keyed ANN entry re-ran the
+    * same O(1)-result sizing job over the same corpus file (17 call
+    * sites, 1–3 sizing jobs per query across the ~27-query knn family
+    * — pure driver/job overhead at any scale, since the probe's answer
+    * is a property of the corpus, not the query). The fixture is
+    * validated dense on the FIRST probe per corpus version; the memo is
+    * [[graft.sources.Scratch.once]] keyed on [[corpusVersion]], so a
+    * fresh session, or an embeddings file rewritten inside this one,
+    * re-counts from parquet. On-variants over arbitrary frames keep the
     * per-call probe.
     */
   private def denseCountDir(spark: SparkSession, dir: String,
       who: String): Long =
-    graft.sources.Scratch.once(spark, s"count:$dir")(
+    graft.sources.Scratch.once(spark, s"count:${corpusVersion(spark, dir)}")(
       denseCount(Tables.embeddings(spark, dir), who))
 
   /** Oracle-portable 31-bit integer mixer (xor-shift → multiply ×2,
@@ -1072,18 +1003,31 @@ object Similarity {
     * SimilaritySpec proves the blocked builder refuses above it.
     */
   private[graft] def materializedGraphEdges(spark: SparkSession,
-      dir: String, precountedN: Option[Long] = None): DataFrame = {
-    val path = graft.sources.Scratch.corpusDir(spark, "graph_ann_edges", dir)
-    graft.sources.Scratch.materializeOnce(spark, path) {
+      dir: String, precountedN: Option[Long] = None): DataFrame =
+    edgesOnce(spark, dir, graphSlot(Seq(10))) {
       // a caller that already sized the corpus (the auto router)
       // passes n through — the "corpus counted ONCE" contract
-      val e = Tables.embeddings(spark, dir)
       val n = precountedN.getOrElse(denseCountDir(spark, dir, "graph ANN"))
-      graphAnnEdgesFor(e, n, BlockedBuildMaxN)
-        .write.mode("overwrite").parquet(path)
+      graphAnnEdgesFor(Tables.embeddings(spark, dir), n, BlockedBuildMaxN)
+    }
+
+  /** A stored edge table: `build` written once per session into the
+    * corpus-version slot ([[annSlot]]), read back as (src, dst).
+    */
+  private def edgesOnce(spark: SparkSession, dir: String, slot: String)(
+      build: => DataFrame): DataFrame = {
+    val path = annSlot(spark, dir, slot)
+    graft.sources.Scratch.materializeOnce(spark, path) {
+      build.write.mode("overwrite").parquet(path)
     }
     graft.sources.Scratch.readParquetOnce(spark, path).select(col("src"), col("dst"))
   }
+
+  /** Slot of the edge commit whose history is `cuts` (in tenths; the
+    * blocked base over ids below the first, then one insert up to each
+    * later cut, 10 = the whole corpus).
+    */
+  private def graphSlot(cuts: Seq[Int]): String = s"graph_to${cuts.mkString("_")}_edges"
 
   def graphKnnAuto(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
@@ -1158,34 +1102,39 @@ object Similarity {
     */
   def deltaGraphKnn(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val (stored, inserted) = deltaGraphEnsureTables(spark, dir, e)
-    graphSearch(e, stored.unionByName(inserted))
+    graphSearch(e, graphCommits(spark, dir, e, Seq(8)).reduce(_ unionByName _))
   }
 
-  /** Materialize (once per corpus) and read back the delta graph's two
-    * stored tables — the base edge table written at base ingest and
-    * the batch's beam-selected insert commit (the deltaIvfKnn
-    * discipline: the insert beam is paid once per INGEST, not once per
-    * query or per consumer; serving and compaction both read the
-    * commits back).
+  /** The graph family's stored state as ONE commit chain: `cuts` are
+    * the ingest cuts in tenths of the corpus (the [[ivfCommits]]
+    * convention — base ids [0, b₀), ingest i ids [bᵢ, bᵢ₊₁), the last
+    * ending at n). The base ingest writes the blocked build over the
+    * base; ingest i is the NSW INSERT ([[deltaGraphInsertEdges]]): its
+    * vectors beam-search the graph AS THE EARLIER COMMITS LEFT IT —
+    * corpus = ids below bᵢ, edges = the union of commits 0..i-1 — and
+    * land as their own edge commit. Each commit is written once per
+    * corpus version and never reopened: the insert beam is paid once
+    * per INGEST, not per query or per consumer. Insert i depends on
+    * every earlier commit, so its slot names its whole cut history.
+    * Returns the edge commits in ingest order.
     */
-  private def deltaGraphEnsureTables(spark: SparkSession, dir: String,
-      e: DataFrame): (DataFrame, DataFrame) = {
+  private[graft] def graphCommits(spark: SparkSession, dir: String,
+      e: DataFrame, cuts: Seq[Int]): Seq[DataFrame] = {
+    requireCuts(cuts)
     val n = denseCountDir(spark, dir, "delta graph ANN")
-    val b = deltaBaseCount(n)
-    val base = e.filter(col("vec_id") < b)
-    val edgesPath = graft.sources.Scratch.corpusDir(spark, "graph_ann_edges_base", dir)
-    graft.sources.Scratch.materializeOnce(spark, edgesPath) {
-      graphAnnEdgesFor(base, b, BlockedBuildMaxN)
-        .write.mode("overwrite").parquet(edgesPath)
+    val ends = cuts :+ 10
+    val bounds = ends.map(c => n * c / 10)
+    val base = edgesOnce(spark, dir, graphSlot(ends.take(1))) {
+      graphAnnEdgesFor(e.filter(col("vec_id") < bounds.head), bounds.head,
+        BlockedBuildMaxN)
     }
-    val stored = graft.sources.Scratch.readParquetOnce(spark, edgesPath).select(col("src"), col("dst"))
-    val insertPath = graft.sources.Scratch.corpusDir(spark, "graph_ann_edges_batch", dir)
-    graft.sources.Scratch.materializeOnce(spark, insertPath) {
-      deltaGraphInsertEdges(base, stored, e.filter(col("vec_id") >= b))
-        .write.mode("overwrite").parquet(insertPath)
+    (1 until bounds.size).foldLeft(Seq(base)) { (commits, i) =>
+      commits :+ edgesOnce(spark, dir, graphSlot(ends.take(i + 1))) {
+        deltaGraphInsertEdges(e.filter(col("vec_id") < bounds(i - 1)),
+          commits.reduce(_ unionByName _),
+          e.filter(col("vec_id") >= bounds(i - 1) && col("vec_id") < bounds(i)))
+      }
     }
-    (stored, graft.sources.Scratch.readParquetOnce(spark, insertPath).select(col("src"), col("dst")))
   }
 
   /** The graph lifecycle's CLOSING stage — COMPACTION, the
@@ -1199,18 +1148,17 @@ object Similarity {
     * beam's per-hop join hits one table instead of a union).
     */
   def deltaGraphKnnCompacted(spark: SparkSession, dir: String): DataFrame = {
-    // ensure the maintained TABLES exist (shared materialization with
-    // q_delta_knn_graph — a compaction runs AFTER ingests) without
-    // paying that entry's serving beam: the ensure helper touches
-    // only the stored/insert commits
     val e = Tables.embeddings(spark, dir)
-    val (stored, inserted) = deltaGraphEnsureTables(spark, dir, e)
-    val compactPath = graft.sources.Scratch.corpusDir(spark, "graph_ann_edges_compacted", dir)
-    graft.sources.Scratch.materializeOnce(spark, compactPath) {
-      stored.unionByName(inserted)
-        .write.mode("overwrite").parquet(compactPath)
-    }
-    graphSearch(e, graft.sources.Scratch.readParquetOnce(spark, compactPath))
+    graphSearch(e, graphFold(spark, dir, e, Seq(8)))
+  }
+
+  /** The chain cut at `cuts` compacted: the union of its edge commits
+    * written once as one stored edge table (off the query path).
+    */
+  private[graft] def graphFold(spark: SparkSession, dir: String,
+      e: DataFrame, cuts: Seq[Int]): DataFrame = {
+    val commits = graphCommits(spark, dir, e, cuts)
+    edgesOnce(spark, dir, foldSlot("graph", cuts, "fold"))(commits.reduce(_ unionByName _))
   }
 
   /** MULTI-INGEST compounding for the NSW graph — the ORDER-DEPENDENT
@@ -1219,43 +1167,13 @@ object Similarity {
     * insert 1 created (stored ∪ insert-1 backlinks), so
     * insert(insert(G0, b1), b2) is NOT trivially a union — it is a
     * genuine two-step recurrence the DuckDB twin re-derives as two
-    * chained unrolled insert beams. Base = 6/10 id-prefix (blocked
-    * build), ingest 1 = ids [0.6n, 0.8n) beamed over the base edges,
-    * ingest 2 = ids [0.8n, n) beamed over base ∪ insert-1 edges; each
-    * commit is its own edge file set, the base never reopened. Serving
-    * runs the shared beam over all three edge sets with the full
-    * corpus, under the full hash gate.
+    * chained unrolled insert beams: the [[graphCommits]] chain cut at
+    * 6/10 and 8/10. Serving runs the shared beam over all three edge
+    * commits with the full corpus, under the full hash gate.
     */
   def delta2GraphKnn(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val n = denseCountDir(spark, dir, "delta2 graph ANN")
-    val b0 = n * 6 / 10
-    val b1 = deltaBaseCount(n) // 8/10
-    val base = e.filter(col("vec_id") < b0)
-    val e0Path = graft.sources.Scratch.corpusDir(spark, "graph_ann_edges_base6", dir)
-    graft.sources.Scratch.materializeOnce(spark, e0Path) {
-      graphAnnEdgesFor(base, b0, BlockedBuildMaxN)
-        .write.mode("overwrite").parquet(e0Path)
-    }
-    val e0 = graft.sources.Scratch.readParquetOnce(spark, e0Path).select(col("src"), col("dst"))
-    val ins1Path = graft.sources.Scratch.corpusDir(spark, "graph_ann_edges_ins1", dir)
-    graft.sources.Scratch.materializeOnce(spark, ins1Path) {
-      deltaGraphInsertEdges(base, e0,
-          e.filter(col("vec_id") >= b0 && col("vec_id") < b1))
-        .write.mode("overwrite").parquet(ins1Path)
-    }
-    val e1 = e0.unionByName(
-      graft.sources.Scratch.readParquetOnce(spark, ins1Path).select(col("src"), col("dst")))
-    val ins2Path = graft.sources.Scratch.corpusDir(spark, "graph_ann_edges_ins2", dir)
-    graft.sources.Scratch.materializeOnce(spark, ins2Path) {
-      // insert 2 beams over the graph AS INSERT 1 LEFT IT: reachable
-      // nodes now include ingest 1's vectors via their backlinks
-      deltaGraphInsertEdges(e.filter(col("vec_id") < b1), e1,
-          e.filter(col("vec_id") >= b1))
-        .write.mode("overwrite").parquet(ins2Path)
-    }
-    graphSearch(e, e1.unionByName(
-      graft.sources.Scratch.readParquetOnce(spark, ins2Path).select(col("src"), col("dst"))))
+    graphSearch(e, graphCommits(spark, dir, e, Seq(6, 8)).reduce(_ unionByName _))
   }
 
   /** Sampled inserted nodes measured by the drift router, and the
@@ -1289,8 +1207,8 @@ object Similarity {
   def graphKnnDriftRouted(spark: SparkSession, dir: String,
       expectArm: Option[String] = None): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val (stored, inserted) = deltaGraphEnsureTables(spark, dir, e)
-    graphKnnDriftRoutedOn(spark, e, stored.unionByName(inserted), expectArm,
+    graphKnnDriftRoutedOn(spark, e,
+      graphCommits(spark, dir, e, Seq(8)).reduce(_ unionByName _), expectArm,
       Some(denseCountDir(spark, dir, "drift-routed graph ANN")))
   }
 
@@ -1364,9 +1282,8 @@ object Similarity {
     */
   def retractGraphKnn(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val (stored, inserted) = deltaGraphEnsureTables(spark, dir, e)
     def keep(c: Column): Column = c % 10 =!= 7 || c < NumQueries
-    graphSearch(e, stored.unionByName(inserted)
+    graphSearch(e, graphCommits(spark, dir, e, Seq(8)).reduce(_ unionByName _)
       .filter(keep(col("src")) && keep(col("dst"))))
   }
 
@@ -1713,12 +1630,9 @@ object Similarity {
     * oracle gate — the [[quantizedIvfKnnExact]] pipeline at production
     * cell sizing.
     */
-  def quantizedIvfKnn(spark: SparkSession, dir: String, probes: Int = 3): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val (corpus, probeCells0) = ivfAssignments(spark, e, probes,
-      Some(denseCountDir(spark, dir, "ivf sizing")))
-    quantizedIvfSearch(spark, dir, e, corpus, probeCells0, "ivf_quant_layout")
-  }
+  def quantizedIvfKnn(spark: SparkSession, dir: String, probes: Int = 3): DataFrame =
+    quantizedIvfSearch(spark, dir,
+      ivfCells(denseCountDir(spark, dir, "ivf sizing")), probes)
 
   /** The shared IVF-int8 serving pipeline behind [[quantizedIvfKnn]]
     * (√N Lloyd cells) and [[quantizedIvfKnnExact]] (fixed
@@ -1728,9 +1642,10 @@ object Similarity {
     * top-[[QuantRerank]] shortlist.
     */
   private def quantizedIvfSearch(spark: SparkSession, dir: String,
-      e: DataFrame, corpus: DataFrame, probeCells0: DataFrame,
-      scratch: String): DataFrame = {
+      cells: Int, probes: Int): DataFrame = {
     import graft.functions.VectorFunctions.{int8Dot, int8Pack}
+    val e = Tables.embeddings(spark, dir)
+    val (corpus, probeCells0) = ivfExactAssignments(spark, e, probes, cells)
     // tiny (queries × probes rows), consumed thrice (cell collect,
     // query pack, coarse join) with the corpus pass in its lineage
     val probeCells = probeCells0.localCheckpoint()
@@ -1742,19 +1657,9 @@ object Similarity {
       .withColumn("scale", scaleCol)
       .select(col("n_id"), int8Pack(col("embedding"), col("scale")).as("qb"),
         col("scale"), normCol.as("nrm"), col("cell"))
-    // per-corpus write-once + consolidated files + memoized listing —
-    // the ivfKnnMaterialized round-22 treatment (the packed table is a
-    // pure function of the corpus; the old form re-wrote it per call)
-    val layoutDir = graft.sources.Scratch.corpusDir(spark, scratch, dir)
-    graft.sources.Scratch.materializeOnce(spark, layoutDir) {
-      writeConsolidated(packed, "cell", layoutDir)
-    }
-    // probed cells as plan-time pruning literals — queries × probes
-    // ints, probe METADATA (the ivfKnnMaterialized convention)
-    val cells = probeCells.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val layout = graft.sources.Scratch.readParquetOnce(spark, layoutDir)
-      .filter(col("cell").isin(cells.map(Int.box): _*))
+    // the packed table is a pure function of (corpus, cells)
+    val layout = prunedLayouts(probeCells, Seq(graft.sources.Scratch.readParquetOnce(
+      spark, cellLayoutOnce(spark, dir, s"ivf_k${cells}_int8")(packed))))
     // query-side pack: the query's own scale/norm are constant per
     // q_id, so dropping them from qsim is rank-invariant (same
     // shortcut quantizedKnnOn takes)
@@ -1801,11 +1706,8 @@ object Similarity {
     * of the quantized top-[[QuantRerank]]).
     */
   def quantizedIvfKnnExact(spark: SparkSession, dir: String,
-      probes: Int = 3): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val (corpus, probeCells0) = ivfExactAssignments(spark, e, probes)
-    quantizedIvfSearch(spark, dir, e, corpus, probeCells0, "ivf_exact_quant_layout")
-  }
+      probes: Int = 3): DataFrame =
+    quantizedIvfSearch(spark, dir, IvfExactCells, probes)
 
   // ——— product quantization (PQ) ———
 

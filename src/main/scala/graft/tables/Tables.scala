@@ -57,7 +57,7 @@ object Tables {
     * path gets a constant stamp, so Spark's own read raises its usual
     * path-not-found error (and a failed inference is never memoized).
     */
-  private def fingerprint(spark: SparkSession, path: String): String = {
+  private[graft] def fingerprint(spark: SparkSession, path: String): String = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {

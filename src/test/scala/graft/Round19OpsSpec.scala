@@ -206,6 +206,55 @@ class Round19OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
       s"expected 1 cell-pruned scan after compaction, got $pruned:\n${plan.take(1500)}")
   }
 
+  test("IVF commit grouping: every ingest split serves, and folds, to the same rows") {
+    import graft.operators.Similarity
+    // the quantizer fits over the 6/10 base in every split; only the
+    // grouping of the later ids into commits differs
+    val dir = gateDir
+    def served(cuts: Seq[Int]): Seq[Seq[(Long, Long, Long, Double)]] = {
+      val (cents, commits) = Similarity.ivfCommits(spark, dir, cuts)
+      val fold = Similarity.ivfFold(spark, dir,
+        s"spec_grouping_fold_${cuts.mkString("_")}", commits)
+      Seq(commits, Seq(fold)).map(layouts =>
+        Similarity.ivfServe(spark, dir, cents, layouts, 3)
+          .as[(Long, Long, Long, Double)].collect().toSeq)
+    }
+    val splits = Seq(Seq(6), Seq(6, 8), Seq(6, 7, 9))
+    val rows = splits.map(served)
+    val reference = rows.head.head
+    assert(reference.nonEmpty && reference.exists(_._3 >= 300),
+      "no ingested vector served — the grouping is not exercised")
+    splits.zip(rows).foreach { case (cuts, Seq(chain, fold)) =>
+      assert(chain == reference, s"commit chain at cuts $cuts served different rows")
+      assert(fold == reference, s"fold of the chain at cuts $cuts served different rows")
+    }
+  }
+
+  test("delta IVF after an input rewrite in the session: re-counted and re-indexed") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import scala.jdk.CollectionConverters._
+    import graft.operators.Similarity
+    val dir = Files.createTempDirectory("graft-ann-rewrite")
+    val table = dir.resolve("embeddings.parquet")
+    Files.copy(Paths.get(gateDir, "embeddings.parquet"), table)
+    def served(s: org.apache.spark.sql.SparkSession): Seq[(Long, Long, Long, Double)] =
+      Similarity.deltaIvfKnn(s, dir.toString).as[(Long, Long, Long, Double)].collect().toSeq
+    assert(served(spark).exists(_._3 >= 400), "no id >= 400 served before the rewrite")
+    val subset = dir.resolve("subset").toString
+    graft.tables.Tables.embeddings(spark, dir.toString).filter($"vec_id" < 400)
+      .coalesce(1).write.parquet(subset)
+    val part = Files.list(Paths.get(subset)).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    Files.copy(part, table, StandardCopyOption.REPLACE_EXISTING)
+    val after = served(spark)
+    assert(after.nonEmpty && after.forall(_._3 < 400),
+      "a vector the rewrite removed was served — stale count or stale layouts")
+    // a fresh session with its own scratch root shares no memo and no slot
+    val fresh = spark.newSession()
+    fresh.conf.set("graft.scratch.dir", dir.resolve("fresh_scratch").toString)
+    assert(after == served(fresh))
+  }
+
   test("delta media cascade: absorption via every bridge kind; all-new components appended") {
     import graft.operators.{Dedup, Multimodal, Pipeline}
     // base corpus: two far-apart joint classes (reps 10, 11)
@@ -437,13 +486,9 @@ class Round19OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(compacted.nonEmpty && compacted == delta,
       "edge compaction changed served rows — it must be a pure layout change")
     // the compacted table IS base ∪ inserts, edge for edge
-    val root = graft.sources.Scratch.corpusDir _
-    val baseE = spark.read.parquet(root(spark, "graph_ann_edges_base", sfDir))
-      .select(col("src"), col("dst"))
-    val batchE = spark.read.parquet(root(spark, "graph_ann_edges_batch", sfDir))
-      .select(col("src"), col("dst"))
-    val compactE = spark.read.parquet(root(spark, "graph_ann_edges_compacted", sfDir))
-      .select(col("src"), col("dst"))
+    val e = graft.tables.Tables.embeddings(spark, sfDir)
+    val Seq(baseE, batchE) = Similarity.graphCommits(spark, sfDir, e, Seq(8))
+    val compactE = Similarity.graphFold(spark, sfDir, e, Seq(8))
     val expected = baseE.unionByName(batchE)
       .groupBy(col("src"), col("dst")).count()
     val got = compactE.groupBy(col("src"), col("dst")).count()

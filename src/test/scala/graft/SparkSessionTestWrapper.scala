@@ -9,6 +9,9 @@ trait SparkSessionTestWrapper {
   lazy val spark: SparkSession = SparkSessionTestWrapper.session
   /** Smallest fixture scale — correctness, not perf, is under test. */
   val sfDir = "/root/testdata/sf0.001"
+  /** The oracle gate's scale (500 vectors), for specs that need more
+    * than the micro fixture holds. */
+  val gateDir: String = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.01").toString
 }
 
 object SparkSessionTestWrapper {

@@ -7,8 +7,10 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-structure guard over `src/main`: sessions are built in one
-  * place ([[LocalSession.build]]) and no state is keyed by an identity
-  * hash (session state lives in [[graft.sources.Scratch.once]]).
+  * place ([[LocalSession.build]]), stored IVF layouts are read
+  * cell-pruned in one place (`Similarity.prunedLayouts`), and no state
+  * is keyed by an identity hash (session state lives in
+  * [[graft.sources.Scratch.once]]).
   */
 class StructureSpec extends AnyFunSuite {
   private lazy val sources: Seq[(Path, String)] = {
@@ -29,6 +31,11 @@ class StructureSpec extends AnyFunSuite {
 
   test("exactly one SparkSession builder call site") {
     val sites = sitesOf("""SparkSession\s*\.builder\b""")
+    assert(sites.size === 1, sites)
+  }
+
+  test("one cell-pruned IVF read in Similarity") {
+    val sites = sitesOf("""col\("cell"\)\.isin\b""").filter(_.contains("Similarity.scala"))
     assert(sites.size === 1, sites)
   }
 
