@@ -17,7 +17,7 @@ object ExplainOne {
     // these pseudo-names expose the dataflow under audit instead)
     val noCp: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
       "x_containment_nocp" -> ((s, d) => graft.operators.Dedup
-        .containmentPairsNoCheckpointForAudit(graft.tables.Tables.documents(s, d))),
+        .containmentPairsOn(graft.tables.Tables.documents(s, d), checkpoint = false)),
       "x_lexical_cosine_nocp" -> ((s, d) => graft.operators.Dedup
         .lexicalCosineOn(graft.tables.Tables.documents(s, d), checkpoint = false)),
       // one graph-ANN beam hop on the pre-checkpoint dataflow (the
@@ -38,18 +38,19 @@ object ExplainOne {
           corpus, queries, beam)
       }),
       "x_delta_lexical_nocp" -> ((s, d) => {
-        import org.apache.spark.sql.functions.col
-        val docs = graft.tables.Tables.documents(s, d)
-        // force the stored quadruple, then audit the unpinned serve
-        graft.operators.Dedup.deltaLexicalCosine(s, d)
-        val root = graft.sources.Scratch.corpusDir(s, "lex_index", d)
-        graft.operators.Dedup.deltaLexicalCosineFrom(
-          s.read.parquet(s"$root/tf"), s.read.parquet(s"$root/norms"),
-          s.read.parquet(s"$root/shingles"), s.read.parquet(s"$root/df"),
-          docs, checkpoint = false)
+        val (tf, norms, sh, dfq) = graft.operators.Dedup.lexIndex(s, d)
+        graft.operators.Dedup.deltaLexicalCosineFrom(tf, norms, sh, dfq,
+          graft.tables.Tables.documents(s, d), checkpoint = false)
       }),
-      "x_delta2_bm25_nocp" -> ((s, d) => graft.operators.Retrieval
-        .delta2Bm25NoCheckpointForAudit(s, d)))
+      "x_delta2_bm25_nocp" -> ((s, d) => {
+        import org.apache.spark.sql.functions.col
+        import graft.operators.Retrieval
+        val (tf, dl, dfq, stats) =
+          Retrieval.readBm25Commits(s, Retrieval.bm25Commits(s, d, Seq(6, 8)))
+        Retrieval.deltaBm25From(tf, dl, dfq, stats,
+          graft.tables.Tables.documents(s, d).filter(col("doc_id") % 10 >= 8),
+          checkpoint = false)
+      }))
     args.drop(1).foreach { name =>
       val plan =
         try noCp.getOrElse(name, SparkEntry.queries(name))(spark, sfDir)

@@ -419,7 +419,6 @@ object ScalingProbe {
       case "delta_bm25"      => graft.operators.Retrieval.deltaBm25From(
         docs, bm25Stored(0), bm25Stored(1), bm25Stored(2),
         corpusRange(n.toLong, n.toLong + 10000).localCheckpoint())
-      case "bm25_nopersist"  => graft.operators.Retrieval.bm25On(docs, persistPostings = false)
       // RETRACTION probes: stored index + a FIXED 10k-id tombstone
       // list — timed work is anti-joins + negative delta-applies +
       // scoring, no text ever read. Compare the `bm25` rebuild curve

@@ -330,14 +330,10 @@ object Dedup {
     */
   private[graft] def materializedJaccardPairs(spark: SparkSession,
       dir: String): DataFrame = {
-    val path = graft.sources.Scratch.corpusDir(spark, "jaccard_pairs", dir)
-    graft.sources.Scratch.materializeOnce(spark, path) {
-      // already localCheckpoint'd inside the builder, so the write
-      // reads materialized blocks, not a second PPJoin
-      ngramJaccardPairsOn(Tables.documents(spark, dir))
-        .write.mode("overwrite").parquet(path)
-    }
-    graft.sources.Scratch.readParquetOnce(spark, path)
+    // already localCheckpoint'd inside the builder, so the write
+    // reads materialized blocks, not a second PPJoin
+    graft.sources.Scratch.storedOnce(spark, dir, "documents", "jaccard_pairs")(
+        ngramJaccardPairsOn(Tables.documents(spark, dir)))
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
@@ -452,13 +448,6 @@ object Dedup {
   def containmentPairs(spark: SparkSession, dir: String): DataFrame =
     containmentPairsOn(Tables.documents(spark, dir))
 
-  /** checkpoint=false twin for plan audits/evidence only (the
-    * lexicalCosineOn convention — the registered entry's checkpointed
-    * plan is a bare RDD scan that hides the joins under audit).
-    */
-  def containmentPairsNoCheckpointForAudit(docs: DataFrame): DataFrame =
-    containmentPairsOn(docs, checkpoint = false)
-
   def containmentPairsOn(docs: DataFrame, threshold: Double = 0.8,
       checkpoint: Boolean = true): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -542,7 +531,8 @@ object Dedup {
     * session get independent pair files instead of thrashing one slot.
     */
   def pairsDir(spark: SparkSession, dir: String): String =
-    graft.sources.Scratch.corpusDir(spark, "neardup_pairs", dir)
+    graft.sources.Scratch.slot(spark, dir, "documents", PairsSlot)
+  private val PairsSlot = "neardup_pairs"
 
   /** Pair-file bucket count derived from the pair count: ~5M narrow
     * (24-byte) pair rows per bucket targets ~128 MB files, with a floor
@@ -571,8 +561,7 @@ object Dedup {
     * write→read-back itself under the oracle gate.
     */
   def materializedPairs(spark: SparkSession, dir: String): DataFrame = {
-    val path = pairsDir(spark, dir)
-    graft.sources.Scratch.materializeOnce(spark, path) {
+    val path = graft.sources.Scratch.slotOnce(spark, dir, "documents", PairsSlot) { path =>
       // already localCheckpoint'd by minhashLshPairs, so the count and
       // the write read the checkpointed blocks, not the LSH pipeline
       val pairs = minhashLshPairs(spark, dir)
@@ -618,13 +607,9 @@ object Dedup {
     * re-running the loop.
     */
   private def corpusClusterLabels(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.Scratch.corpusDir(spark, "cc_labels", dir)
-    graft.sources.Scratch.materializeOnce(spark, path) {
-      clusterLabels(materializedPairs(spark, dir)
-          .select(col("id_a"), col("id_b")))
-        .write.mode("overwrite").parquet(path)
-    }
-    graft.sources.Scratch.readParquetOnce(spark, path).select(col("id"), col("lbl"))
+    graft.sources.Scratch.storedOnce(spark, dir, "documents", "cc_labels")(
+        clusterLabels(materializedPairs(spark, dir).select(col("id_a"), col("id_b"))))
+      .select(col("id"), col("lbl"))
   }
 
   def duplicateClustersOn(docs: DataFrame): DataFrame =
@@ -1025,14 +1010,9 @@ object Dedup {
     * index, every text-delta consumer).
     */
   private def baseSigTable(spark: SparkSession, dir: String,
-      docs: DataFrame): DataFrame = {
-    val path = graft.sources.Scratch.corpusDir(spark, "delta_sig_base", dir)
-    graft.sources.Scratch.materializeOnce(spark, path) {
-      minhashSignaturesUnsorted(docs.filter(!deltaIsNew), prodHash = false)
-        .write.mode("overwrite").parquet(path)
-    }
-    graft.sources.Scratch.readParquetOnce(spark, path)
-  }
+      docs: DataFrame): DataFrame =
+    graft.sources.Scratch.storedOnce(spark, dir, "documents", "delta_sig_base")(
+      minhashSignaturesUnsorted(docs.filter(!deltaIsNew), prodHash = false))
 
   /** Batch-membership rule shared by EVERY text delta operator
     * ([[deltaDedupOn]], [[deltaDupClustersOn]] and its stored-label
@@ -1040,8 +1020,13 @@ object Dedup {
     * definition — the probe entry and the closure-maintenance entry
     * must never disagree on what "the batch" is.
     */
-  private[graft] def deltaIsNew: Column =
-    pmod(md5Hash32(col("text")), lit(10)) >= 8
+  private[graft] def deltaIsNew: Column = md5Bucket >= 8
+
+  /** The md5 bucket (0–9) of a document's text — the content-hash
+    * split of every text delta rule and of the winnow and lexical
+    * commit chains.
+    */
+  private[graft] def md5Bucket: Column = pmod(md5Hash32(col("text")), lit(10))
 
   /** Verify threshold shared by the delta probe's two consumers. */
   private val DeltaVerifyMinEst = 0.5
@@ -1115,12 +1100,7 @@ object Dedup {
     // BOTH stored tables read back (the converged label table + the
     // round-19 signature index): a daily ingest never recomputes the
     // base closure and never re-shingles the base text
-    val path = graft.sources.Scratch.corpusDir(spark, "delta_base_cc_txt", dir)
-    graft.sources.Scratch.materializeOnce(spark, path) {
-      baseDocLabels(docs).write.mode("overwrite").parquet(path)
-    }
-    deltaDupClustersFrom(
-      graft.sources.Scratch.readParquetOnce(spark, path).select(col("id"), col("lbl")),
+    deltaDupClustersFrom(baseLabelTable(spark, dir, docs),
       baseSigTable(spark, dir, docs), docs)
   }
 
@@ -1128,6 +1108,14 @@ object Dedup {
     deltaDupClustersFrom(baseDocLabels(docs),
       minhashSignaturesUnsorted(docs.filter(!deltaIsNew), prodHash = false),
       docs)
+
+  /** [[baseDocLabels]] stored once per corpus version — shared by
+    * [[deltaDupClusters]] and [[retractDupClusters]].
+    */
+  private def baseLabelTable(spark: SparkSession, dir: String,
+      docs: DataFrame): DataFrame =
+    graft.sources.Scratch.storedOnce(spark, dir, "documents", "delta_base_cc_txt")(
+      baseDocLabels(docs)).select(col("id"), col("lbl"))
 
   /** Stored state: converged labels over the BASE split's own pair
     * graph (deterministic, so the graded entry materializes it once
@@ -1233,21 +1221,16 @@ object Dedup {
   def retractDupClusters(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val baseSig = baseSigTable(spark, dir, docs)
-    val pairsPath = graft.sources.Scratch.corpusDir(spark, "delta_base_pairs_txt", dir)
-    graft.sources.Scratch.materializeOnce(spark, pairsPath) {
+    val pairsPath = graft.sources.Scratch.slotOnce(spark, dir, "documents",
+        "delta_base_pairs_txt") { path =>
       // built from the STORED signatures (identical to the text-built
       // pairs — signatures are deterministic), not from text
       val sig = baseSig.persist(StorageLevel.MEMORY_AND_DISK)
       try lshPairsFromSignatures(sig).select(col("id_a"), col("id_b"))
-        .write.mode("overwrite").parquet(pairsPath)
+        .write.mode("overwrite").parquet(path)
       finally { sig.unpersist(); () }
     }
-    val lblPath = graft.sources.Scratch.corpusDir(spark, "delta_base_cc_txt", dir)
-    graft.sources.Scratch.materializeOnce(spark, lblPath) {
-      baseDocLabels(docs).write.mode("overwrite").parquet(lblPath)
-    }
-    retractComponentLabels(
-        graft.sources.Scratch.readParquetOnce(spark, lblPath).select(col("id"), col("lbl")),
+    retractComponentLabels(baseLabelTable(spark, dir, docs),
         graft.sources.Scratch.readParquetOnce(spark, pairsPath),
         baseSig.filter(col("doc_id") % 10 === 7).select(col("doc_id")))
       .groupBy(col("lbl").as("cluster_rep"))
@@ -1272,9 +1255,9 @@ object Dedup {
     */
   def delta2DupClusters(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val bucket = pmod(md5Hash32(col("text")), lit(10))
-    val root = graft.sources.Scratch.corpusDir(spark, "cc_multi_txt", dir)
-    graft.sources.Scratch.materializeOnce(spark, root) {
+    val bucket = md5Bucket
+    val root = graft.sources.Scratch.slotOnce(spark, dir, "documents",
+        "cc_multi_txt") { root =>
       // ingest 0 — base: signature commit + converged labels
       val sig0 = minhashSignaturesUnsorted(docs.filter(bucket < 6),
         prodHash = false).persist(StorageLevel.MEMORY_AND_DISK)
@@ -1497,12 +1480,8 @@ object Dedup {
     * q_lexical_cosine's oracle restricted to them.
     */
   def retractLexicalCosine(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val root = ensureLexIndex(spark, dir, docs)
-    val norms = graft.sources.Scratch.readParquetOnce(spark, s"$root/norms")
-    retractLexicalCosineFrom(graft.sources.Scratch.readParquetOnce(spark, s"$root/tf"), norms,
-      graft.sources.Scratch.readParquetOnce(spark, s"$root/shingles"),
-      graft.sources.Scratch.readParquetOnce(spark, s"$root/df"),
+    val (tf, norms, sh, dfq) = lexIndex(spark, dir)
+    retractLexicalCosineFrom(tf, norms, sh, dfq,
       norms.filter(col("doc_id") % 10 === 7).select(col("doc_id")))
   }
 
@@ -1545,29 +1524,34 @@ object Dedup {
     * the batch vocabulary and the candidate ids).
     */
   def deltaLexicalCosine(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val root = ensureLexIndex(spark, dir, docs)
-    deltaLexicalCosineFrom(graft.sources.Scratch.readParquetOnce(spark, s"$root/tf"),
-      graft.sources.Scratch.readParquetOnce(spark, s"$root/norms"),
-      graft.sources.Scratch.readParquetOnce(spark, s"$root/shingles"),
-      graft.sources.Scratch.readParquetOnce(spark, s"$root/df"), docs)
+    val (tf, norms, sh, dfq) = lexIndex(spark, dir)
+    deltaLexicalCosineFrom(tf, norms, sh, dfq, Tables.documents(spark, dir))
   }
 
-  /** Materialize (once per corpus) the stored lexical quadruple over
-    * the md5-rule base — shared by the ingest ([[deltaLexicalCosine]])
-    * and retraction ([[retractLexicalCosine]]) lifecycle stages.
+  /** The stored lexical quadruple as the commit chain
+    * ([[graft.sources.Commits.chain]]) cut at 8/10 over md5 buckets —
+    * one base commit over buckets [0, 8), shared by the ingest
+    * ([[deltaLexicalCosine]]) and retraction ([[retractLexicalCosine]])
+    * lifecycle stages. Returns the commit paths.
     */
-  private def ensureLexIndex(spark: SparkSession, dir: String,
-      docs: DataFrame): String = {
-    val root = graft.sources.Scratch.corpusDir(spark, "lex_index", dir)
-    graft.sources.Scratch.materializeOnce(spark, root) {
-      val (tf, norms, sh, dfq) = lexStoredIndexOf(docs.filter(!deltaIsNew))
-      tf.write.mode("overwrite").parquet(s"$root/tf")
-      norms.write.mode("overwrite").parquet(s"$root/norms")
-      sh.write.mode("overwrite").parquet(s"$root/shingles")
-      dfq.write.mode("overwrite").parquet(s"$root/df")
+  private[graft] def lexCommits(spark: SparkSession, dir: String): Seq[String] = {
+    val docs = Tables.documents(spark, dir)
+    graft.sources.Commits.chain(spark, dir, "documents", "lex", Seq(8)) { (lo, hi, path) =>
+      val (tf, norms, sh, dfq) =
+        lexStoredIndexOf(docs.filter(md5Bucket >= lo && md5Bucket < hi))
+      tf.write.mode("overwrite").parquet(s"$path/tf")
+      norms.write.mode("overwrite").parquet(s"$path/norms")
+      sh.write.mode("overwrite").parquet(s"$path/shingles")
+      dfq.write.mode("overwrite").parquet(s"$path/df")
     }
-    root
+  }
+
+  /** The stored (tf, norms, shingles, df) tables of the base commit. */
+  private[graft] def lexIndex(spark: SparkSession,
+      dir: String): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val Seq(base) = lexCommits(spark, dir)
+    def u(sub: String): DataFrame = graft.sources.Scratch.readParquetOnce(spark, s"$base/$sub")
+    (u("tf"), u("norms"), u("shingles"), u("df"))
   }
 
   /** Recompute-index form — value-identical to the stored path. */
@@ -2077,13 +2061,11 @@ object Dedup {
     */
   def deltaSubstringDedup(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val path = graft.sources.Scratch.corpusDir(spark, "substr_keys_base", dir)
-    graft.sources.Scratch.materializeOnce(spark, path) {
-      windowGrams(docs.filter(!deltaIsNew), SubstringL)
-        .select(col("h1"), col("h2")).distinct()
-        .write.mode("overwrite").parquet(path)
-    }
-    deltaSubstringFrom(graft.sources.Scratch.readParquetOnce(spark, path), docs)
+    deltaSubstringFrom(
+      graft.sources.Scratch.storedOnce(spark, dir, "documents", "substr_keys_base")(
+        windowGrams(docs.filter(!deltaIsNew), SubstringL)
+          .select(col("h1"), col("h2")).distinct()),
+      docs)
   }
 
   /** Recompute-index form (specs, probes): derives the base key set

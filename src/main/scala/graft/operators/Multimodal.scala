@@ -473,12 +473,8 @@ object Multimodal {
     * both graded entries stay on the same DuckDB oracle.
     */
   private[graft] def ahashTable(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.Scratch.corpusDir(spark, "image_ahash", dir)
-    graft.sources.Scratch.materializeOnce(spark, path) {
-      ahashOf(spark, Tables.documents(spark, dir))
-        .write.mode("overwrite").parquet(path)
-    }
-    graft.sources.Scratch.readParquetOnce(spark, path)
+    graft.sources.Scratch.storedOnce(spark, dir, "documents", "image_ahash")(
+        ahashOf(spark, Tables.documents(spark, dir)))
       .select(col("doc_id"), col("ahash_hi"), col("ahash_lo"))
   }
 
@@ -890,7 +886,7 @@ object Multimodal {
     * projection of the base's distinct hashes, the table a production
     * ingest WRITES ONCE per corpus and every later delta probes. The
     * graded delta entries materialize it per (session, corpus) via
-    * [[graft.sources.Scratch.materializeOnce]] (the corpusClusterLabels
+    * [[graft.sources.Scratch.storedOnce]] (the corpusClusterLabels
     * discipline) so "the index is a stored table written at prior
     * ingests" is the EXECUTED path, not a docstring promise: the
     * probe's plan reads this parquet back — the base's hashes are
@@ -899,12 +895,8 @@ object Multimodal {
     */
   private[graft] def baseBandIndex(spark: SparkSession, name: String,
       dir: String, base: DataFrame): DataFrame = {
-    val path = graft.sources.Scratch.corpusDir(spark, name, dir)
-    graft.sources.Scratch.materializeOnce(spark, path) {
-      bands4(base.select(col("ahash_hi"), col("ahash_lo")).distinct())
-        .write.mode("overwrite").parquet(path)
-    }
-    graft.sources.Scratch.readParquetOnce(spark, path)
+    graft.sources.Scratch.storedOnce(spark, dir, "documents", name)(
+        bands4(base.select(col("ahash_hi"), col("ahash_lo")).distinct()))
       .select(col("ahash_hi"), col("ahash_lo"), col("cb"), col("kv"))
   }
 
@@ -1215,14 +1207,11 @@ object Multimodal {
     // the stored label table, materialized once per corpus (the
     // converged-label discipline of Dedup.corpusClusterLabels): a
     // daily ingest READS this, it never recomputes the base closure
-    val path = graft.sources.Scratch.corpusDir(spark, "delta_base_cc_img", dir)
-    graft.sources.Scratch.materializeOnce(spark, path) {
-      baseHashLabels(base).write.mode("overwrite").parquet(path)
-    }
+    val labels = graft.sources.Scratch.storedOnce(spark, dir, "documents",
+      "delta_base_cc_img")(baseHashLabels(base))
     // both stored tables read back: converged labels + band index —
     // the only base-derived inputs a production ingest touches
-    deltaImageDupClustersFrom(
-      graft.sources.Scratch.readParquetOnce(spark, path).select(col("id"), col("lbl")),
+    deltaImageDupClustersFrom(labels.select(col("id"), col("lbl")),
       base, ah.filter(col("doc_id") % 10 >= 8),
       Some(baseBandIndex(spark, "delta_band_index_img", dir, base)))
   }
@@ -1246,8 +1235,8 @@ object Multimodal {
     val packedPair = (df: DataFrame) => df
       .select(expr("shiftleft(hi_a, 32) | lo_a").as("id_a"),
         expr("shiftleft(hi_b, 32) | lo_b").as("id_b"))
-    val root = graft.sources.Scratch.corpusDir(spark, "cc_multi_img", dir)
-    graft.sources.Scratch.materializeOnce(spark, root) {
+    val root = graft.sources.Scratch.slotOnce(spark, dir, "documents",
+        "cc_multi_img") { root =>
       baseHashLabels(base).write.mode("overwrite").parquet(s"$root/labels_0")
       val pairs1 = packedPair(deltaBandHashPairsFromIndex(
         bands4(base.select(col("ahash_hi"), col("ahash_lo")).distinct()),
@@ -1292,20 +1281,14 @@ object Multimodal {
     */
   def retractImageDupClusters(spark: SparkSession, dir: String): DataFrame = {
     val ah = ahashTable(spark, dir)
-    val pairsPath = graft.sources.Scratch.corpusDir(spark, "img_hash_pairs", dir)
-    graft.sources.Scratch.materializeOnce(spark, pairsPath) {
+    val pairs = graft.sources.Scratch.storedOnce(spark, dir, "documents", "img_hash_pairs")(
       verifiedHashPairs(
           bands4(ah.select(col("ahash_hi"), col("ahash_lo")).distinct()),
           "cb", "kv")
         .select(expr("shiftleft(hi_a, 32) | lo_a").as("id_a"),
-          expr("shiftleft(hi_b, 32) | lo_b").as("id_b"))
-        .write.mode("overwrite").parquet(pairsPath)
-    }
-    val lblPath = graft.sources.Scratch.corpusDir(spark, "img_hash_labels", dir)
-    graft.sources.Scratch.materializeOnce(spark, lblPath) {
-      graft.operators.Dedup.componentLabels(graft.sources.Scratch.readParquetOnce(spark, pairsPath))
-        .write.mode("overwrite").parquet(lblPath)
-    }
+          expr("shiftleft(hi_b, 32) | lo_b").as("id_b")))
+    val storedLabels = graft.sources.Scratch.storedOnce(spark, dir, "documents",
+      "img_hash_labels")(graft.operators.Dedup.componentLabels(pairs))
     val packed = expr("shiftleft(ahash_hi, 32) | ahash_lo")
     val surviving = ah.filter(col("doc_id") % 10 =!= 7)
       .select(col("doc_id"), packed.as("hid"))
@@ -1315,8 +1298,7 @@ object Multimodal {
       .join(surviving.select(col("hid")), Seq("hid"), "left_anti")
       .select(col("hid").as("doc_id")) // retractComponentLabels' id column
     val labels = graft.operators.Dedup.retractComponentLabels(
-      graft.sources.Scratch.readParquetOnce(spark, lblPath).select(col("id"), col("lbl")),
-      graft.sources.Scratch.readParquetOnce(spark, pairsPath), deadHashes)
+      storedLabels.select(col("id"), col("lbl")), pairs, deadHashes)
     surviving
       .join(labels.withColumnRenamed("id", "hid"), Seq("hid"), "left")
       .select(col("doc_id"), coalesce(col("lbl"), col("hid")).as("comp"))
@@ -1454,12 +1436,8 @@ object Multimodal {
     * 4-long read-back.
     */
   private[graft] def audioFpWideTable(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.Scratch.corpusDir(spark, "audio_fp_wide", dir)
-    graft.sources.Scratch.materializeOnce(spark, path) {
-      audioFpWideOf(spark, Tables.documents(spark, dir).select(col("doc_id")))
-        .write.mode("overwrite").parquet(path)
-    }
-    graft.sources.Scratch.readParquetOnce(spark, path)
+    graft.sources.Scratch.storedOnce(spark, dir, "documents", "audio_fp_wide")(
+        audioFpWideOf(spark, Tables.documents(spark, dir).select(col("doc_id"))))
       .select(col("doc_id"), col("n_samples"), col("afp_hi"), col("afp_lo"))
   }
 
@@ -1524,12 +1502,8 @@ object Multimodal {
     * posting-join sides) plan over the narrow 4-long read-back.
     */
   private[operators] def audioChunkTable(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.Scratch.corpusDir(spark, "audio_fp_chunks", dir)
-    graft.sources.Scratch.materializeOnce(spark, path) {
-      audioChunkFpOf(spark, Tables.documents(spark, dir).select(col("doc_id")))
-        .write.mode("overwrite").parquet(path)
-    }
-    graft.sources.Scratch.readParquetOnce(spark, path)
+    graft.sources.Scratch.storedOnce(spark, dir, "documents", "audio_fp_chunks")(
+        audioChunkFpOf(spark, Tables.documents(spark, dir).select(col("doc_id"))))
       .select(col("doc_id"), col("chunk"), col("n_samples"), col("afp"))
   }
 

@@ -249,21 +249,15 @@ object Pipeline {
     val imgBase = img.filter(!isNew)
     val audBase = aud.filter(!isNew)
     // stored state 1: the base cascade's layout (what base ingest wrote)
-    val layoutPath = Scratch.corpusDir(spark, "media_near_layout_base", dir)
-    Scratch.materializeOnce(spark, layoutPath) {
-      mediaPipelineNearOn(imgBase, audBase)
-        .write.mode("overwrite").parquet(layoutPath)
-    }
+    val layout = Scratch.storedOnce(spark, dir, "documents", "media_near_layout_base")(
+      mediaPipelineNearOn(imgBase, audBase))
     // stored state 2: the base joint-key class table (the exact stage's
     // frozen reps — the table the frozen-rep decision reads)
-    val repsPath = Scratch.corpusDir(spark, "media_joint_reps_base", dir)
-    Scratch.materializeOnce(spark, repsPath) {
+    val reps = Scratch.storedOnce(spark, dir, "documents", "media_joint_reps_base")(
       imgBase.join(audBase, Seq("doc_id"))
         .groupBy(col("ahash_hi"), col("ahash_lo"),
           col("afp_hi"), col("afp_lo"))
-        .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("n_class"))
-        .write.mode("overwrite").parquet(repsPath)
-    }
+        .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("n_class")))
     // stored state 3+4: the per-modality band indexes — the SAME slots
     // the delta near-dup entries probe (artifact sharing: one stored
     // index serves every delta consumer)
@@ -272,10 +266,7 @@ object Pipeline {
     val audIdx = Multimodal.baseBandIndex(spark, "delta_band_index_aud",
       dir, audBase.select(col("doc_id"), col("afp_hi").as("ahash_hi"),
         col("afp_lo").as("ahash_lo")))
-    deltaMediaPipelineOn(
-      graft.sources.Scratch.readParquetOnce(spark, layoutPath),
-      graft.sources.Scratch.readParquetOnce(spark, repsPath),
-      imgIdx, audIdx,
+    deltaMediaPipelineOn(layout, reps, imgIdx, audIdx,
       img.filter(isNew), aud.filter(isNew))
   }
 
@@ -429,8 +420,7 @@ object Pipeline {
     val docs = Tables.documents(spark, dir)
     val n = docs.count()
     val b = n * 8 / 10
-    val root = Scratch.corpusDir(spark, "e2e_delta_base", dir)
-    Scratch.materializeOnce(spark, root) {
+    val root = Scratch.slotOnce(spark, dir, "documents", "e2e_delta_base") { root =>
       // base ingest: ONE pass through the cascade rules, fanning out
       // to the three stored tables + the packed layout (parity with
       // curationPipelineOn is spec-pinned on the layout)

@@ -77,21 +77,18 @@ object Retrieval {
   /** checkpoint=false exists for plan audits only (the snapshot hides
     * the joins under audit); the default path eagerly materializes the
     * query-bounded result via localCheckpoint so the postings cache
-    * can be released before the frame is consumed.
+    * can be released before the frame is consumed. The postings are
+    * persisted: three consumers read them (the round-12 A/B kept the
+    * persist over recomputing the shuffle per consumer).
     */
-  def bm25On(docs: DataFrame, checkpoint: Boolean = true,
-      persistPostings: Boolean = true): DataFrame = {
-    // persistPostings=false is the A/B arm (ScalingProbe bm25_nopersist):
-    // recompute the postings shuffle per consumer instead of caching it.
-    // Round-12 A/B kept the persist — see BASELINE.md round-12 notes.
-    val tf0 = postings(docs)
-    val tf = if (persistPostings) tf0.persist(StorageLevel.MEMORY_AND_DISK) else tf0
+  def bm25On(docs: DataFrame, checkpoint: Boolean = true): DataFrame = {
+    val tf = postings(docs).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
       val dfreq = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
       val stats = dl.agg(sum(col("dl")).as("tot_dl"), count(lit(1)).as("n_docs"))
       bm25ScoreAll(tf, dl, dfreq, stats, checkpoint)
-    } finally { if (checkpoint && persistPostings) { tf.unpersist(); () } }
+    } finally { if (checkpoint) { tf.unpersist(); () } }
   }
 
   /** The shared BM25 scoring tail over explicit index relations —
@@ -175,48 +172,18 @@ object Retrieval {
     * bucketed by word so the query probe prunes to the probe
     * vocabulary's buckets; here the probe join streams the read-back.
     */
-  def deltaBm25(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val root = ensureBm25Index(spark, dir,
-      docs.filter(col("doc_id") % 10 < 8))
-    deltaBm25From(
-      graft.sources.Scratch.readParquetOnce(spark, s"$root/postings"),
-      graft.sources.Scratch.readParquetOnce(spark, s"$root/dl"),
-      graft.sources.Scratch.readParquetOnce(spark, s"$root/df"),
-      graft.sources.Scratch.readParquetOnce(spark, s"$root/stats"),
-      docs.filter(col("doc_id") % 10 >= 8))
-  }
+  def deltaBm25(spark: SparkSession, dir: String): DataFrame =
+    deltaBm25Over(spark, dir, Seq(8))
 
-  /** Materialize (once per corpus) the four-table stored index over the
-    * doc_id%10<8 base split — shared by the ingest ([[deltaBm25]]) and
-    * retraction ([[retractBm25]]) entries: one index, every lifecycle
-    * stage.
+  /** Serve the chain stored at `cuts` ([[bm25Commits]]) with the live
+    * batch — the docs whose doc_id mod 10 is at or past the last cut —
+    * delta-applied on top.
     */
-  private def ensureBm25Index(spark: SparkSession, dir: String,
-      base: DataFrame): String = {
-    val root = graft.sources.Scratch.corpusDir(spark, "bm25_index", dir)
-    graft.sources.Scratch.materializeOnce(spark, root) {
-      // ONE base tokenization pass fans out to all four stored tables
-      // — this is the prior ingests' work, paid once per corpus. The
-      // postings write materializes the pinned tfB; the dl and df
-      // rollups then read the cache with no dependency on each other —
-      // run them concurrently (guide §2.6, the writeBm25Commit
-      // treatment this builder predates); stats reads the dl files
-      // last.
-      val tfB = postings(base).persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        tfB.write.mode("overwrite").parquet(s"$root/postings")
-        graft.sources.Scratch.inParallel(
-          () => tfB.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-            .write.mode("overwrite").parquet(s"$root/dl"),
-          () => tfB.groupBy(col("word")).agg(count(lit(1)).as("df"))
-            .write.mode("overwrite").parquet(s"$root/df"))
-        graft.sources.Scratch.readParquetOnce(spark, s"$root/dl")
-          .agg(sum(col("dl")).as("tot_dl"), count(lit(1)).as("n_docs"))
-          .write.mode("overwrite").parquet(s"$root/stats")
-      } finally { tfB.unpersist(); () }
-    }
-    root
+  private[graft] def deltaBm25Over(spark: SparkSession, dir: String,
+      cuts: Seq[Int]): DataFrame = {
+    val (tf, dl, dfq, stats) = readBm25Commits(spark, bm25Commits(spark, dir, cuts))
+    deltaBm25From(tf, dl, dfq, stats,
+      Tables.documents(spark, dir).filter(col("doc_id") % 10 >= cuts.last))
   }
 
   /** RETRACTION — BM25 index maintenance under DELETION, the missing
@@ -246,16 +213,9 @@ object Retrieval {
     * an id rule, the way production takedown lists arrive.
     */
   def retractBm25(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val root = ensureBm25Index(spark, dir,
-      docs.filter(col("doc_id") % 10 < 8))
-    val storedDl = graft.sources.Scratch.readParquetOnce(spark, s"$root/dl")
-    retractBm25From(
-      graft.sources.Scratch.readParquetOnce(spark, s"$root/postings"),
-      storedDl,
-      graft.sources.Scratch.readParquetOnce(spark, s"$root/df"),
-      graft.sources.Scratch.readParquetOnce(spark, s"$root/stats"),
-      storedDl.filter(col("doc_id") % 10 === 7).select(col("doc_id")))
+    val (tf, dl, dfq, stats) = readBm25Commits(spark, bm25Commits(spark, dir, Seq(8)))
+    retractBm25From(tf, dl, dfq, stats,
+      dl.filter(col("doc_id") % 10 === 7).select(col("doc_id")))
   }
 
   /** The retraction body on explicit stored tables — exposed so the
@@ -321,35 +281,28 @@ object Retrieval {
 
   // ——— multi-ingest commit layout (compounding + compaction) ———
 
-  /** MULTI-INGEST commit layout for the BM25 index — the LSM-style
-    * append discipline the single-ingest [[deltaBm25]] gestures at,
-    * made literal: every ingest lands as its OWN commit directory
-    * holding batch-sized postings/dl plus PARTIAL df/stats
-    * contributions; prior commits are never rewritten. The query path
-    * unions commit postings/lengths and SUMS the df/stats partials by
-    * word — every maintained field is an associative long sum over
-    * disjoint doc sets, so ANY commit grouping scores identically:
-    * delta(delta(base, b1), b2) == full(base ∪ b1 ∪ b2), which is what
-    * lets the two-commit chained entry ([[delta2Bm25]]) and the
-    * N-commit fold ([[compactBm25]]) share q_bm25's whole-corpus
-    * oracle VERBATIM. Fixture commits: c0 = doc_id%10 ∈ [0,6) (the
-    * base ingest), c1 = buckets {6,7} (first delta ingest); buckets
-    * {8,9} arrive as the live second ingest.
+  /** The BM25 index as ONE commit chain ([[graft.sources.Commits.chain]])
+    * — the LSM-style append discipline: every ingest lands as its OWN
+    * commit holding batch-sized postings/dl plus PARTIAL df/stats
+    * contributions; prior commits are never rewritten. Commit
+    * `[lo, hi)` holds the docs with doc_id mod 10 in that range (an
+    * id-derived split — a retrieval index ingests by id, not by
+    * content hash). Every maintained field is an associative long sum
+    * over disjoint doc sets, so ANY commit grouping scores
+    * identically: delta(delta(base, b1), b2) == full(base ∪ b1 ∪ b2),
+    * which is what lets the single-ingest ([[deltaBm25]], cuts
+    * `Seq(8)`), two-commit ([[delta2Bm25]], `Seq(6, 8)`) and folded
+    * ([[compactBm25]], `Seq(6, 8, 10)`) entries share q_bm25's
+    * whole-corpus oracle VERBATIM. Chains sharing a prefix share its
+    * commits.
     */
-  private def ensureBm25Commits(spark: SparkSession, dir: String,
-      docs: DataFrame): String = {
-    val root = graft.sources.Scratch.corpusDir(spark, "bm25_multi", dir)
-    graft.sources.Scratch.materializeOnce(spark, root) {
-      // two ingests over DISJOINT doc splits, no dependency — build
-      // them concurrently (each is a small-parallelism job chain that
-      // alone leaves most cores idle; guide §2.6)
-      graft.sources.Scratch.inParallel(
-        () => writeBm25Commit(spark, s"$root/c0",
-          docs.filter(col("doc_id") % 10 < 6)),
-        () => writeBm25Commit(spark, s"$root/c1",
-          docs.filter(col("doc_id") % 10 >= 6 && col("doc_id") % 10 < 8)))
+  private[graft] def bm25Commits(spark: SparkSession, dir: String,
+      cuts: Seq[Int]): Seq[String] = {
+    val docs = Tables.documents(spark, dir)
+    graft.sources.Commits.chain(spark, dir, "documents", "bm25", cuts) { (lo, hi, path) =>
+      writeBm25Commit(spark, path,
+        docs.filter(col("doc_id") % 10 >= lo && col("doc_id") % 10 < hi))
     }
-    root
   }
 
   /** ONE ingest's append-only commit: the batch's postings and doc
@@ -377,62 +330,42 @@ object Retrieval {
     } finally { tfB.unpersist(); () }
   }
 
-  /** Union the commit list back into one logical four-table index:
+  /** Read a commit list back as one logical four-table index:
     * postings/lengths append, df/stats partials sum (word-keyed long
     * addition — the [[deltaBm25From]] merge, generalized to N sides).
+    * A single commit (or a fold) is read as stored, with no summing
+    * stage.
     */
-  private[graft] def readBm25Commits(spark: SparkSession, root: String,
+  private[graft] def readBm25Commits(spark: SparkSession,
       commits: Seq[String]): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    // ONE multi-path scan per table kind (guide §6; round-22 — the
-    // round-21 form planned a separate FileScan + union branch PER
-    // COMMIT, so serving re-listed and re-planned N scans of
-    // identically-shaped files per query): every commit writes the
-    // same schema, so the N commit directories are one parquet
-    // relation; column pruning and filter pushdown then apply to a
-    // single scan node. Commit grouping was already proven
-    // value-irrelevant (associative long sums over disjoint doc sets),
-    // and no downstream consumer depends on input order — the scoring
+    // ONE multi-path scan per table kind (guide §6; round-22 — a
+    // separate FileScan + union branch PER COMMIT re-listed and
+    // re-planned N scans of identically-shaped files per query):
+    // every commit writes the same schema, so the N commit directories
+    // are one parquet relation. Commit grouping is value-irrelevant
+    // (associative long sums over disjoint doc sets), and the scoring
     // tail is joins + aggregations with total-order tie-breaks.
-    // Listing is memoized per (session, path set) via the write-once
-    // read memo.
     def u(sub: String): DataFrame =
-      graft.sources.Scratch.readParquetMultiOnce(spark,
-        commits.map(c => s"$root/$c/$sub"))
-    (u("postings"), u("dl"),
+      graft.sources.Scratch.readParquetMultiOnce(spark, commits.map(c => s"$c/$sub"))
+    if (commits.size == 1) (u("postings"), u("dl"), u("df"), u("stats"))
+    else (u("postings"), u("dl"),
       u("df").groupBy(col("word")).agg(sum(col("df")).as("df")),
       u("stats").agg(sum(col("tot_dl")).as("tot_dl"),
         sum(col("n_docs")).as("n_docs")))
   }
 
   /** COMPOUNDING under the gate — the index after TWO stored ingests
-    * plus a live third: commits c0 (base) and c1 (first delta) are
-    * read back merged and the final batch delta-applies on top, so the
-    * graded entry proves delta(delta(base, b1), b2) == full rebuild —
-    * associativity as a hash-matched result, not an argument. Shares
-    * q_bm25's whole-corpus oracle verbatim.
+    * plus a live third: the chain cut at 6/10 and 8/10 is read back
+    * merged and the final batch (doc_id mod 10 in {8, 9})
+    * delta-applies on top, so the graded entry proves
+    * delta(delta(base, b1), b2) == full rebuild — associativity as a
+    * hash-matched result, not an argument. Shares q_bm25's
+    * whole-corpus oracle verbatim.
     */
-  /** checkpoint=false twin for plan audits/evidence only (the
-    * containmentPairs convention): the registered entry's scoring tail
-    * localCheckpoints, which collapses its plan to an RDD scan — this
-    * exposes the commit-read + merge dataflow under audit.
-    */
-  def delta2Bm25NoCheckpointForAudit(spark: SparkSession,
-      dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val root = ensureBm25Commits(spark, dir, docs)
-    val (tf, dl, dfq, stats) = readBm25Commits(spark, root, Seq("c0", "c1"))
-    deltaBm25From(tf, dl, dfq, stats,
-      docs.filter(col("doc_id") % 10 >= 8), checkpoint = false)
-  }
+  def delta2Bm25(spark: SparkSession, dir: String): DataFrame =
+    deltaBm25Over(spark, dir, Seq(6, 8))
 
-  def delta2Bm25(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val root = ensureBm25Commits(spark, dir, docs)
-    val (tf, dl, dfq, stats) = readBm25Commits(spark, root, Seq("c0", "c1"))
-    deltaBm25From(tf, dl, dfq, stats, docs.filter(col("doc_id") % 10 >= 8))
-  }
-
-  /** COMPACTION — the closing lifecycle stage of the commit layout:
+  /** COMPACTION — the closing lifecycle stage of the commit chain:
     * per-ingest commits accumulate small files until a fold (off the
     * query path) consolidates all N into ONE four-table index; values
     * never change, only layout, so serving over the compacted tables
@@ -440,32 +373,23 @@ object Retrieval {
     * row-for-row. The fold itself is the summed read-back written
     * once — index-sized, no text.
     */
-  def compactBm25(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    // ensureBm25Commits returns this same corpus-keyed root; name it
-    // first so c2 — whose doc split is disjoint from c0/c1 — can build
-    // CONCURRENTLY with them on a cold session (the per-key memo locks
-    // keep a concurrently-running delta2Bm25 coherent)
-    val root = graft.sources.Scratch.corpusDir(spark, "bm25_multi", dir)
-    graft.sources.Scratch.inParallel(
-      () => { ensureBm25Commits(spark, dir, docs); () },
-      () => graft.sources.Scratch.materializeOnce(spark, s"$root/c2") {
-        writeBm25Commit(spark, s"$root/c2",
-          docs.filter(col("doc_id") % 10 >= 8))
-      })
-    val cpath = s"$root/compacted"
-    graft.sources.Scratch.materializeOnce(spark, cpath) {
-      val (tf, dl, dfq, stats) =
-        readBm25Commits(spark, root, Seq("c0", "c1", "c2"))
-      tf.write.mode("overwrite").parquet(s"$cpath/postings")
-      dl.write.mode("overwrite").parquet(s"$cpath/dl")
-      dfq.write.mode("overwrite").parquet(s"$cpath/df")
-      stats.write.mode("overwrite").parquet(s"$cpath/stats")
+  def compactBm25(spark: SparkSession, dir: String): DataFrame =
+    compactBm25Over(spark, dir, Seq(6, 8, 10))
+
+  /** Serve the fold of the chain stored at `cuts` (ending at 10). */
+  private[graft] def compactBm25Over(spark: SparkSession, dir: String,
+      cuts: Seq[Int]): DataFrame = {
+    val commits = bm25Commits(spark, dir, cuts)
+    val fold = graft.sources.Scratch.slotOnce(spark, dir, "documents",
+        graft.sources.Commits.foldSlot("bm25", cuts, "fold")) { path =>
+      val (tf, dl, dfq, stats) = readBm25Commits(spark, commits)
+      tf.write.mode("overwrite").parquet(s"$path/postings")
+      dl.write.mode("overwrite").parquet(s"$path/dl")
+      dfq.write.mode("overwrite").parquet(s"$path/df")
+      stats.write.mode("overwrite").parquet(s"$path/stats")
     }
-    bm25ScoreAll(graft.sources.Scratch.readParquetOnce(spark, s"$cpath/postings"),
-      graft.sources.Scratch.readParquetOnce(spark, s"$cpath/dl"),
-      graft.sources.Scratch.readParquetOnce(spark, s"$cpath/df"),
-      graft.sources.Scratch.readParquetOnce(spark, s"$cpath/stats"), checkpoint = true)
+    val (tf, dl, dfq, stats) = readBm25Commits(spark, Seq(fold))
+    bm25ScoreAll(tf, dl, dfq, stats, checkpoint = true)
   }
 
   /** Default phrase for the graded [[phraseSearch]] entry — present in

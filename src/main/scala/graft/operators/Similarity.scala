@@ -256,32 +256,16 @@ object Similarity {
       .orderBy(col("q_id"), col("rank"))
   }
 
-  /** Scratch slot of a stored ANN artifact, per corpus AND per version
-    * of its embeddings file ([[Tables.fingerprint]]): a file rewritten
-    * inside a live session gets fresh slots (and a fresh count, see
-    * [[denseCountDir]]) instead of serving the layouts and edges built
-    * from the old one.
-    */
-  private def annSlot(spark: SparkSession, dir: String, slot: String): String =
-    graft.sources.Scratch.corpusDir(spark, slot, corpusVersion(spark, dir))
-
-  private def corpusVersion(spark: SparkSession, dir: String): String =
-    s"$dir#${Tables.fingerprint(spark, s"$dir/embeddings.parquet")}"
-
   /** The write-once cell layout every stored IVF artifact is: `df`
-    * written partitioned by `cell` ([[writeConsolidated]]) into the
-    * corpus-version slot, at most once per session — at 100 TB the
-    * write runs once at ingest, never per query. Returns the layout's
-    * path.
+    * written partitioned by `cell` ([[writeConsolidated]]) into its
+    * embeddings-keyed slot ([[graft.sources.Scratch.slotOnce]]), at
+    * most once per session — at 100 TB the write runs once at ingest,
+    * never per query. Returns the layout's path.
     */
   private def cellLayoutOnce(spark: SparkSession, dir: String,
-      slot: String)(df: => DataFrame): String = {
-    val path = annSlot(spark, dir, slot)
-    graft.sources.Scratch.materializeOnce(spark, path) {
-      writeConsolidated(df, "cell", path)
-    }
-    path
-  }
+      slot: String)(df: => DataFrame): String =
+    graft.sources.Scratch.slotOnce(spark, dir, "embeddings", slot)(
+      writeConsolidated(df, "cell", _))
 
   /** The one cell-PRUNED read of stored IVF layouts: the probed cells
     * are collected once to become plan-time `isin` literals — queries ×
@@ -528,27 +512,19 @@ object Similarity {
     */
   private[graft] def ivfCommits(spark: SparkSession, dir: String,
       cuts: Seq[Int]): (DataFrame, Seq[String]) = {
-    requireCuts(cuts)
+    val ends = cuts :+ 10
     val e = Tables.embeddings(spark, dir)
     val n = denseCountDir(spark, dir, "delta IVF")
     def ids(lo: Int, hi: Int): DataFrame =
       e.filter(col("vec_id") >= n * lo / 10 && col("vec_id") < n * hi / 10)
-    val fit = s"ivf_fit${cuts.head}"
-    val centPath = annSlot(spark, dir, s"${fit}_centroids")
-    graft.sources.Scratch.materializeOnce(spark, centPath) {
-      ivfFitCents(spark, ids(0, cuts.head)).write.mode("overwrite").parquet(centPath)
-    }
-    val cents = graft.sources.Scratch.readParquetOnce(spark, centPath)
-    val commits = (0 +: cuts :+ 10).sliding(2).map { case Seq(lo, hi) =>
-      cellLayoutOnce(spark, dir, s"${fit}_cells${lo}_$hi")(ivfAssignTo(cents, ids(lo, hi)))
-    }.toSeq
-    (cents, commits)
+    val fit = s"ivf_fit${ends.head}"
+    val cents = graft.sources.Scratch.storedOnce(spark, dir, "embeddings",
+      s"${fit}_centroids")(ivfFitCents(spark, ids(0, ends.head)))
+    (cents, graft.sources.Commits.chain(spark, dir, "embeddings", s"${fit}_cells",
+      ends) { (lo, hi, path) =>
+      writeConsolidated(ivfAssignTo(cents, ids(lo, hi)), "cell", path)
+    })
   }
-
-  private def requireCuts(cuts: Seq[Int]): Unit =
-    require(cuts.nonEmpty && cuts.head > 0 && cuts.last < 10 &&
-        cuts.zip(cuts.tail).forall { case (a, b) => a < b },
-      s"ingest cuts must increase within 1..9 (tenths of the corpus): $cuts")
 
   /** Serve the [[NumQueries]] queries over stored IVF layouts: probe
     * plan against the STORED centroids, every layout read cell-pruned
@@ -599,16 +575,11 @@ object Similarity {
       probes: Int = 3): DataFrame = {
     val cuts = Seq(8)
     val (cents, commits) = ivfCommits(spark, dir, cuts)
-    val survivors = ivfFold(spark, dir, foldSlot("ivf", cuts, "retract"), commits,
+    val survivors = ivfFold(spark, dir,
+      graft.sources.Commits.foldSlot("ivf", cuts, "retract"), commits,
       keep = !(col("n_id") % 10 === 7 && col("n_id") >= NumQueries))
     ivfServe(spark, dir, cents, Seq(survivors), probes)
   }
-
-  /** Slot of a fold over the chain cut at `cuts` (`what` names the
-    * fold: a compaction, a retraction).
-    */
-  private def foldSlot(family: String, cuts: Seq[Int], what: String): String =
-    s"${family}_cuts${cuts.mkString("_")}_$what"
 
   /** DRIFT-MEASURED refit router, IVF edition ([[graphKnnDriftRouted]]'s
     * twin on the quantizer-fit drift trade): a deterministic sample of
@@ -749,7 +720,8 @@ object Similarity {
       probes: Int): DataFrame = {
     val (cents, commits) = ivfCommits(spark, dir, cuts)
     ivfServe(spark, dir, cents,
-      Seq(ivfFold(spark, dir, foldSlot("ivf", cuts, "fold"), commits)), probes)
+      Seq(ivfFold(spark, dir, graft.sources.Commits.foldSlot("ivf", cuts, "fold"),
+        commits)), probes)
   }
 
   /** In-memory delta-IVF body for specs and probes (no corpus identity
@@ -836,14 +808,16 @@ object Similarity {
     * — pure driver/job overhead at any scale, since the probe's answer
     * is a property of the corpus, not the query). The fixture is
     * validated dense on the FIRST probe per corpus version; the memo is
-    * [[graft.sources.Scratch.once]] keyed on [[corpusVersion]], so a
+    * [[graft.sources.Scratch.once]] keyed on the embeddings slot key
+    * ([[graft.sources.Scratch.slot]]), so a
     * fresh session, or an embeddings file rewritten inside this one,
     * re-counts from parquet. On-variants over arbitrary frames keep the
     * per-call probe.
     */
   private def denseCountDir(spark: SparkSession, dir: String,
       who: String): Long =
-    graft.sources.Scratch.once(spark, s"count:${corpusVersion(spark, dir)}")(
+    graft.sources.Scratch.once(spark,
+        s"count:${graft.sources.Scratch.slot(spark, dir, "embeddings", "count")}")(
       denseCount(Tables.embeddings(spark, dir), who))
 
   /** Oracle-portable 31-bit integer mixer (xor-shift → multiply ×2,
@@ -1011,17 +985,13 @@ object Similarity {
       graphAnnEdgesFor(Tables.embeddings(spark, dir), n, BlockedBuildMaxN)
     }
 
-  /** A stored edge table: `build` written once per session into the
-    * corpus-version slot ([[annSlot]]), read back as (src, dst).
+  /** A stored edge table: `build` written once per session into its
+    * embeddings-keyed slot, read back as (src, dst).
     */
   private def edgesOnce(spark: SparkSession, dir: String, slot: String)(
-      build: => DataFrame): DataFrame = {
-    val path = annSlot(spark, dir, slot)
-    graft.sources.Scratch.materializeOnce(spark, path) {
-      build.write.mode("overwrite").parquet(path)
-    }
-    graft.sources.Scratch.readParquetOnce(spark, path).select(col("src"), col("dst"))
-  }
+      build: => DataFrame): DataFrame =
+    graft.sources.Scratch.storedOnce(spark, dir, "embeddings", slot)(build)
+      .select(col("src"), col("dst"))
 
   /** Slot of the edge commit whose history is `cuts` (in tenths; the
     * blocked base over ids below the first, then one insert up to each
@@ -1120,9 +1090,9 @@ object Similarity {
     */
   private[graft] def graphCommits(spark: SparkSession, dir: String,
       e: DataFrame, cuts: Seq[Int]): Seq[DataFrame] = {
-    requireCuts(cuts)
-    val n = denseCountDir(spark, dir, "delta graph ANN")
     val ends = cuts :+ 10
+    graft.sources.Commits.requireCuts(ends)
+    val n = denseCountDir(spark, dir, "delta graph ANN")
     val bounds = ends.map(c => n * c / 10)
     val base = edgesOnce(spark, dir, graphSlot(ends.take(1))) {
       graphAnnEdgesFor(e.filter(col("vec_id") < bounds.head), bounds.head,
@@ -1158,7 +1128,8 @@ object Similarity {
   private[graft] def graphFold(spark: SparkSession, dir: String,
       e: DataFrame, cuts: Seq[Int]): DataFrame = {
     val commits = graphCommits(spark, dir, e, cuts)
-    edgesOnce(spark, dir, foldSlot("graph", cuts, "fold"))(commits.reduce(_ unionByName _))
+    edgesOnce(spark, dir, graft.sources.Commits.foldSlot("graph", cuts, "fold"))(
+      commits.reduce(_ unionByName _))
   }
 
   /** MULTI-INGEST compounding for the NSW graph — the ORDER-DEPENDENT
@@ -2241,21 +2212,12 @@ object Similarity {
     val n = denseCountDir(spark, dir, "delta semdedup")
     val b = deltaBaseCount(n)
     val base = e.filter(col("vec_id") < b)
-    val centPath = graft.sources.Scratch.corpusDir(spark, "semdedup_delta_cents", dir)
-    val basePath = graft.sources.Scratch.corpusDir(spark, "semdedup_delta_base", dir)
-    // each guard covers exactly the path it writes: a future caller
-    // materializing centPath alone can no longer leave basePath
-    // unwritten behind a guard that reports built
-    graft.sources.Scratch.materializeOnce(spark, centPath) {
-      kmeansCentroids(spark, base).write.mode("overwrite").parquet(centPath)
-    }
-    graft.sources.Scratch.materializeOnce(spark, basePath) {
-      writeConsolidated(
-        semdedupAssign(graft.sources.Scratch.readParquetOnce(spark, centPath), base),
-        "cluster", basePath)
-    }
-    (graft.sources.Scratch.readParquetOnce(spark, centPath),
-      graft.sources.Scratch.readParquetOnce(spark, basePath), b)
+    // each slot's guard covers exactly the path it writes
+    val cents = graft.sources.Scratch.storedOnce(spark, dir, "embeddings",
+      "semdedup_delta_cents")(kmeansCentroids(spark, base))
+    val basePath = graft.sources.Scratch.slotOnce(spark, dir, "embeddings",
+      "semdedup_delta_base")(writeConsolidated(semdedupAssign(cents, base), "cluster", _))
+    (cents, graft.sources.Scratch.readParquetOnce(spark, basePath), b)
   }
 
   /** Recompute-state form (specs, probes): fits the base model and

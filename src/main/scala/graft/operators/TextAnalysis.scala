@@ -737,11 +737,8 @@ object TextAnalysis {
     * tombstones: stored doc_ids ≡ 7 (mod 10).
     */
   def retractWinnowPairs(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val root = ensureWinnowIndex(spark, dir, docs)
-    val sizes = graft.sources.Scratch.readParquetOnce(spark, s"$root/sizes")
-    retractWinnowPairsFrom(graft.sources.Scratch.readParquetOnce(spark, s"$root/postings"),
-      sizes, graft.sources.Scratch.readParquetOnce(spark, s"$root/df"),
+    val (fps, sizes, dfq) = readWinnowCommits(spark, winnowCommits(spark, dir, Seq(8)))
+    retractWinnowPairsFrom(fps, sizes, dfq,
       sizes.filter(col("doc_id") % 10 === 7).select(col("doc_id")))
   }
 
@@ -797,30 +794,16 @@ object TextAnalysis {
     * ≤ [[WinnowMaxDf]] posting lists. The stored tables enter through
     * narrow column scans only; batch text is the only text read.
     */
-  def deltaWinnowPairs(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val root = ensureWinnowIndex(spark, dir, docs)
-    deltaWinnowPairsFrom(graft.sources.Scratch.readParquetOnce(spark, s"$root/postings"),
-      graft.sources.Scratch.readParquetOnce(spark, s"$root/sizes"),
-      graft.sources.Scratch.readParquetOnce(spark, s"$root/df"), docs)
-  }
+  def deltaWinnowPairs(spark: SparkSession, dir: String): DataFrame =
+    deltaWinnowOver(spark, dir, Seq(8))
 
-  /** Materialize (once per corpus) the stored winnow index triple over
-    * the md5-rule base split — ONE stored index shared by the ingest
-    * ([[deltaWinnowPairs]]) and retraction ([[retractWinnowPairs]])
-    * lifecycle stages.
+  /** Probe the chain stored at `cuts` ([[winnowCommits]]) with every
+    * document it does not hold as the live batch.
     */
-  private def ensureWinnowIndex(spark: SparkSession, dir: String,
-      docs: DataFrame): String = {
-    val root = graft.sources.Scratch.corpusDir(spark, "winnow_index", dir)
-    graft.sources.Scratch.materializeOnce(spark, root) {
-      val (fps, sizes, dfq) =
-        winnowIndexOf(docs.filter(!graft.operators.Dedup.deltaIsNew))
-      fps.write.mode("overwrite").parquet(s"$root/postings")
-      sizes.write.mode("overwrite").parquet(s"$root/sizes")
-      dfq.write.mode("overwrite").parquet(s"$root/df")
-    }
-    root
+  private[graft] def deltaWinnowOver(spark: SparkSession, dir: String,
+      cuts: Seq[Int]): DataFrame = {
+    val (fps, sizes, dfq) = readWinnowCommits(spark, winnowCommits(spark, dir, cuts))
+    deltaWinnowPairsFrom(fps, sizes, dfq, Tables.documents(spark, dir))
   }
 
   /** Recompute-index form (specs, probes): derives the stored tables
@@ -848,53 +831,50 @@ object TextAnalysis {
       fps.groupBy(col("fp")).agg(count(lit(1)).as("df")))
   }
 
-  /** MULTI-INGEST commit layout for the winnow index — the
-    * [[graft.operators.Retrieval.delta2Bm25]] discipline on the
-    * fingerprint triple: each ingest lands as its own commit directory
-    * (batch postings + sizes whole-row, df as PARTIAL counts summed at
-    * read); prior commits never rewritten. Fixture commits: c0 = md5
-    * buckets [0,6), c1 = buckets {6,7}; buckets {8,9} arrive live.
+  /** The winnow index as ONE commit chain
+    * ([[graft.sources.Commits.chain]]) — the
+    * [[graft.operators.Retrieval.bm25Commits]] discipline on the
+    * fingerprint triple: each ingest lands as its own commit (batch
+    * postings + sizes whole-row, df as PARTIAL counts summed at read);
+    * prior commits never rewritten. Commit `[lo, hi)` holds the docs
+    * whose md5 bucket ([[graft.operators.Dedup.md5Bucket]]) is in
+    * that range; cuts `Seq(8)` store the delta entries' base, buckets
+    * {8,9} arriving live.
     */
-  private def ensureWinnowCommits(spark: SparkSession, dir: String,
-      docs: DataFrame): String = {
-    val root = graft.sources.Scratch.corpusDir(spark, "winnow_multi", dir)
-    val bucket = pmod(graft.functions.TextFunctions.md5Hash32(col("text")), lit(10))
-    graft.sources.Scratch.materializeOnce(spark, root) {
-      // disjoint md5 splits, no dependency — concurrent builds
-      // (guide §2.6; each commit alone under-fills the cores)
-      graft.sources.Scratch.inParallel(
-        () => writeWinnowCommit(spark, s"$root/c0", docs.filter(bucket < 6)),
-        () => writeWinnowCommit(spark, s"$root/c1",
-          docs.filter(bucket >= 6 && bucket < 8)))
+  private[graft] def winnowCommits(spark: SparkSession, dir: String,
+      cuts: Seq[Int]): Seq[String] = {
+    val docs = Tables.documents(spark, dir)
+    val bucket = graft.operators.Dedup.md5Bucket
+    graft.sources.Commits.chain(spark, dir, "documents", "winnow", cuts) { (lo, hi, path) =>
+      writeWinnowIndex(winnowIndexOf(docs.filter(bucket >= lo && bucket < hi)), path)
     }
-    root
   }
 
-  private def writeWinnowCommit(spark: SparkSession, cdir: String,
-      batch: DataFrame): Unit = {
-    val (fps, sizes, dfq) = winnowIndexOf(batch)
-    fps.write.mode("overwrite").parquet(s"$cdir/postings")
-    sizes.write.mode("overwrite").parquet(s"$cdir/sizes")
-    dfq.write.mode("overwrite").parquet(s"$cdir/df")
+  private def writeWinnowIndex(index: (DataFrame, DataFrame, DataFrame),
+      path: String): Unit = {
+    val (fps, sizes, dfq) = index
+    fps.write.mode("overwrite").parquet(s"$path/postings")
+    sizes.write.mode("overwrite").parquet(s"$path/sizes")
+    dfq.write.mode("overwrite").parquet(s"$path/df")
   }
 
-  /** Union a commit list into one logical index triple (df partials
+  /** Read a commit list back as one logical index triple (df partials
     * sum by fingerprint — docs are disjoint across commits, so each
-    * partial counts distinct docs).
+    * partial counts distinct docs). A single commit (or a fold) is
+    * read as stored.
     */
-  private def readWinnowCommits(spark: SparkSession, root: String,
+  private[graft] def readWinnowCommits(spark: SparkSession,
       commits: Seq[String]): (DataFrame, DataFrame, DataFrame) = {
-    // ONE multi-path scan per table kind (the round-22 readBm25Commits
-    // treatment: a FileScan + union branch per commit re-listed and
-    // re-planned N identically-shaped scans per query); commit grouping
-    // is value-irrelevant (df partials are associative sums over
-    // disjoint doc sets) and the probe/verify tail is join+agg with
-    // total-order tie-breaks, so scan order never shows in results
+    // ONE multi-path scan per table kind (the readBm25Commits
+    // treatment); commit grouping is value-irrelevant (df partials are
+    // associative sums over disjoint doc sets) and the probe/verify
+    // tail is join+agg with total-order tie-breaks, so scan order
+    // never shows in results
     def u(sub: String): DataFrame =
-      graft.sources.Scratch.readParquetMultiOnce(spark,
-        commits.map(c => s"$root/$c/$sub"))
+      graft.sources.Scratch.readParquetMultiOnce(spark, commits.map(c => s"$c/$sub"))
     (u("postings"), u("sizes"),
-      u("df").groupBy(col("fp")).agg(sum(col("df")).as("df")))
+      if (commits.size == 1) u("df")
+      else u("df").groupBy(col("fp")).agg(sum(col("df")).as("df")))
   }
 
   /** COMPOUNDING — the winnow probe after TWO stored ingests plus a
@@ -902,14 +882,10 @@ object TextAnalysis {
     * chain's batch-touching pairs, so the graded entry shares
     * q_delta_winnow_pairs' oracle verbatim (stored side covers md5
     * buckets 0–7 either way; what changed is that it now arrives as
-    * two merged commits instead of one monolith).
+    * two merged commits instead of one).
     */
-  def delta2WinnowPairs(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val root = ensureWinnowCommits(spark, dir, docs)
-    val (fps, sizes, dfq) = readWinnowCommits(spark, root, Seq("c0", "c1"))
-    deltaWinnowPairsFrom(fps, sizes, dfq, docs)
-  }
+  def delta2WinnowPairs(spark: SparkSession, dir: String): DataFrame =
+    deltaWinnowOver(spark, dir, Seq(6, 8))
 
   /** COMPACTION — all N winnow commits folded into ONE stored triple
     * (off the query path; values never change, only layout), then the
@@ -917,30 +893,18 @@ object TextAnalysis {
     * whole-corpus q_winnow_pairs result, whose oracle it shares
     * verbatim — the gate certifies the fold end-to-end.
     */
-  def compactWinnowPairs(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val bucket = pmod(graft.functions.TextFunctions.md5Hash32(col("text")), lit(10))
-    // c2's md5 split is disjoint from c0/c1 — build concurrently with
-    // them on a cold session (corpusDir is the same root
-    // ensureWinnowCommits returns; per-key memo locks keep a
-    // concurrently-running delta2 coherent)
-    val root = graft.sources.Scratch.corpusDir(spark, "winnow_multi", dir)
-    graft.sources.Scratch.inParallel(
-      () => { ensureWinnowCommits(spark, dir, docs); () },
-      () => graft.sources.Scratch.materializeOnce(spark, s"$root/c2") {
-        writeWinnowCommit(spark, s"$root/c2", docs.filter(bucket >= 8))
-      })
-    val cpath = s"$root/compacted"
-    graft.sources.Scratch.materializeOnce(spark, cpath) {
-      val (fps, sizes, dfq) =
-        readWinnowCommits(spark, root, Seq("c0", "c1", "c2"))
-      fps.write.mode("overwrite").parquet(s"$cpath/postings")
-      sizes.write.mode("overwrite").parquet(s"$cpath/sizes")
-      dfq.write.mode("overwrite").parquet(s"$cpath/df")
-    }
-    winnowPairsFromIndex(graft.sources.Scratch.readParquetOnce(spark, s"$cpath/postings"),
-      graft.sources.Scratch.readParquetOnce(spark, s"$cpath/sizes"),
-      graft.sources.Scratch.readParquetOnce(spark, s"$cpath/df"))
+  def compactWinnowPairs(spark: SparkSession, dir: String): DataFrame =
+    compactWinnowOver(spark, dir, Seq(6, 8, 10))
+
+  /** Serve the fold of the chain stored at `cuts` (ending at 10). */
+  private[graft] def compactWinnowOver(spark: SparkSession, dir: String,
+      cuts: Seq[Int]): DataFrame = {
+    val commits = winnowCommits(spark, dir, cuts)
+    val fold = graft.sources.Scratch.slotOnce(spark, dir, "documents",
+        graft.sources.Commits.foldSlot("winnow", cuts, "fold"))(
+      writeWinnowIndex(readWinnowCommits(spark, commits), _))
+    val (fps, sizes, dfq) = readWinnowCommits(spark, Seq(fold))
+    winnowPairsFromIndex(fps, sizes, dfq)
   }
 
   /** The stored-index probe: batch membership = docs absent from the

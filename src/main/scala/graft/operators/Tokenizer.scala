@@ -146,19 +146,17 @@ object Tokenizer {
   private[graft] def materializedBpeModel(spark: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
     import spark.implicits._
-    val root = graft.sources.Scratch.corpusDir(spark, "bpe_model", dir)
-    val rulesPath = s"$root/rules"
-    val seqsPath = s"$root/seqs"
-    graft.sources.Scratch.materializeOnce(spark, root) {
+    val root = graft.sources.Scratch.slotOnce(spark, dir, "documents",
+        "bpe_model") { root =>
       val (rules, seqs) = learnOn(Tables.documents(spark, dir))
       // the final seq table is still persisted from the last round —
       // the write drains cached blocks, not a retrain
-      seqs.write.mode("overwrite").parquet(seqsPath)
+      seqs.write.mode("overwrite").parquet(s"$root/seqs")
       seqs.unpersist()
-      rules.toDF().write.mode("overwrite").parquet(rulesPath)
+      rules.toDF().write.mode("overwrite").parquet(s"$root/rules")
     }
-    (graft.sources.Scratch.readParquetOnce(spark, rulesPath),
-      graft.sources.Scratch.readParquetOnce(spark, seqsPath))
+    (graft.sources.Scratch.readParquetOnce(spark, s"$root/rules"),
+      graft.sources.Scratch.readParquetOnce(spark, s"$root/seqs"))
   }
 
   /** Apply the learned merges corpus-wide: per-document word and

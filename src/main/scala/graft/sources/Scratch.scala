@@ -2,19 +2,28 @@ package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.tables.Tables
 
 /** Cluster-safe scratch roots for materialized layouts and sink
-  * round-trips ([[Sinks]], [[graft.operators.Dedup.materializedPairs]],
-  * [[graft.operators.Similarity.ivfKnnMaterialized]]).
+  * round-trips, and the one slot policy of every stored artifact.
   *
-  * Rounds 1-8 pinned these under the repo's target/ directory — fine in
-  * a single-host sandbox, wrong on any real cluster where the driver's
-  * local filesystem is not the shared store. Paths now derive from
-  * session conf: `graft.scratch.dir` when set (point it at a shared
-  * filesystem or object-store prefix in production), otherwise a
-  * `graft_scratch` prefix under `spark.sql.warehouse.dir` — the one
-  * location a deployment already has to make durable and shared.
+  * Paths derive from session conf: `graft.scratch.dir` when set (point
+  * it at a shared filesystem or object-store prefix in production),
+  * otherwise a `graft_scratch` prefix under `spark.sql.warehouse.dir`
+  * — the one location a deployment already has to make durable and
+  * shared.
+  *
+  * Slot policy: every artifact derived from an input table (pair
+  * graphs, label tables, ANN layouts and edges, BM25/winnow/lexical
+  * index commits, BPE models) lives in a write-once [[slot]] keyed on
+  * the input's directory AND its file fingerprint, written at most
+  * once per session ([[slotOnce]], [[storedOnce]]). A rewritten input
+  * therefore gets fresh slots, and a slot's content is always a
+  * deterministic rebuild of the input version its path names — the
+  * paper's write-once task output. Chained indexes build their commits
+  * through [[Commits.chain]] on top of these slots.
   */
 object Scratch {
   def dir(spark: SparkSession, name: String): String = {
@@ -24,16 +33,42 @@ object Scratch {
     s"$root/$name"
   }
 
-  /** Per-corpus scratch slot `<name>/<md5(sourceDir)>`: the full
-    * 128-bit key keeps two corpora touched by one session from
-    * thrashing a single slot.
+  /** The slot policy of every stored artifact:
+    * `<name>/<md5(dir#fingerprint(dir/<table>.parquet))>`, the input
+    * table the artifact is derived from named by `table` ("documents",
+    * "embeddings"). The 128-bit key keeps two corpora touched by one
+    * session apart, and the input's fingerprint ([[Tables.fingerprint]])
+    * makes a table rewritten inside a live session land in fresh slots
+    * instead of serving artifacts built from the old file. A slot is
+    * written at most once per session ([[slotOnce]]) and never
+    * reopened, so a stored artifact is always a deterministic function
+    * of the input version its path names.
     */
-  def corpusDir(spark: SparkSession, name: String,
-      sourceDir: String): String = {
+  def slot(spark: SparkSession, dir: String, table: String,
+      name: String): String = {
+    val key = s"$dir#${Tables.fingerprint(spark, s"$dir/$table.parquet")}"
     val md5 = java.security.MessageDigest.getInstance("MD5")
-      .digest(sourceDir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    dir(spark, s"$name/$md5")
+      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    this.dir(spark, s"$name/$md5")
   }
+
+  /** Write the [[slot]] at most once per session (`write` receives its
+    * path; [[materializeOnce]] semantics) and return its path.
+    */
+  def slotOnce(spark: SparkSession, dir: String, table: String,
+      name: String)(write: String => Unit): String = {
+    val path = slot(spark, dir, table, name)
+    materializeOnce(spark, path)(write(path))
+    path
+  }
+
+  /** A single-table artifact: `df` written once as plain parquet into
+    * its [[slot]] and read back through [[readParquetOnce]].
+    */
+  def storedOnce(spark: SparkSession, dir: String, table: String,
+      name: String)(df: => DataFrame): DataFrame =
+    readParquetOnce(spark, slotOnce(spark, dir, table, name)(
+      df.write.mode("overwrite").parquet(_)))
 
   /** The session's memo, the one place session-scoped state lives:
     * `f` runs at most once per (session, key) and its value is returned
@@ -64,10 +99,10 @@ object Scratch {
   private val memo =
     new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Cell]]()
 
-  /** Write-once artifact build shared by every materialized artifact
-    * (pair graphs, ANN edges, aHash tables, BPE models): `build` must
-    * write its output(s) under `key`; it runs at most once per
-    * (session, key) — [[once]]'s semantics.
+  /** The write-once guard under [[slotOnce]]: `build` must write its
+    * output(s) under `key`; it runs at most once per (session, key) —
+    * [[once]]'s semantics. Operators reach it only through the slot
+    * policy, so the key always carries the input's fingerprint.
     */
   def materializeOnce(spark: SparkSession, key: String)(build: => Unit): Unit =
     once(spark, s"built:$key")(build)
@@ -75,7 +110,8 @@ object Scratch {
   /** Run independent build closures CONCURRENTLY from driver threads
     * (guide §2.6 — Spark happily schedules several jobs at once; the
     * builds here are small-parallelism stages that leave most cores
-    * idle when run back to back). Blocks until all complete; the first
+    * idle when run back to back). Blocks until all complete and
+    * returns their results in task order; the first
     * failure is rethrown after every thread finishes — with every
     * sibling failure attached as a suppressed throwable, so a shared
     * root cause manifesting differently per thread keeps all its
@@ -83,10 +119,12 @@ object Scratch {
     * half-observed. Use ONLY for builds with no data dependency on
     * each other (e.g. two ingest commits over disjoint doc splits).
     */
-  def inParallel(tasks: (() => Unit)*): Unit = {
+  def inParallel[T](tasks: (() => T)*): Seq[T] = {
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val threads = tasks.map { t =>
-      val th = new Thread(() => try t() catch { case e: Throwable => errs.add(e); () })
+    val out = new Array[Any](tasks.size)
+    val threads = tasks.zipWithIndex.map { case (t, i) =>
+      val th = new Thread(() =>
+        try out(i) = t() catch { case e: Throwable => errs.add(e); () })
       th.setDaemon(true)
       th.start()
       th
@@ -98,6 +136,7 @@ object Scratch {
       while (it.hasNext) first.addSuppressed(it.next())
       throw first
     }
+    out.toSeq.asInstanceOf[Seq[T]]
   }
 
   /** Read-back of a [[materializeOnce]] artifact with the FILE LISTING
@@ -115,8 +154,7 @@ object Scratch {
     * The DATA is still scanned from parquet on every execution — this
     * caches planning metadata, never rows.
     */
-  def readParquetOnce(spark: SparkSession,
-      path: String): org.apache.spark.sql.DataFrame =
+  def readParquetOnce(spark: SparkSession, path: String): DataFrame =
     readParquetMultiOnce(spark, Seq(path))
 
   /** [[readParquetOnce]] over a path LIST — one parquet relation (one
@@ -125,7 +163,6 @@ object Scratch {
     * postings/dl/df directories), instead of one scan + union branch
     * per commit.
     */
-  def readParquetMultiOnce(spark: SparkSession,
-      paths: Seq[String]): org.apache.spark.sql.DataFrame =
+  def readParquetMultiOnce(spark: SparkSession, paths: Seq[String]): DataFrame =
     once(spark, s"parquet:${paths.mkString("\u0000")}")(spark.read.parquet(paths: _*))
 }

@@ -921,7 +921,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // the graded entry pins its output; audit the output-unpinned
     // form (checkpoint=false) so the verify stage's dataflow shows
     assert(SparkEntry.queries("q_delta_lexical_cosine")(spark, sfDir).count() > 0)
-    val root = graft.sources.Scratch.corpusDir(spark, "lex_index", sfDir)
+    val Seq(root) = graft.operators.Dedup.lexCommits(spark, sfDir)
     val plan = graft.operators.Dedup.deltaLexicalCosineFrom(
         spark.read.parquet(s"$root/tf"),
         spark.read.parquet(s"$root/norms"),

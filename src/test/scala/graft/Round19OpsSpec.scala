@@ -111,7 +111,7 @@ class Round19OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     import graft.operators.Retrieval
     // graded entry once: materializes the stored four-table index
     assert(Retrieval.deltaBm25(spark, sfDir).count() > 0)
-    val root = graft.sources.Scratch.corpusDir(spark, "bm25_index", sfDir)
+    val Seq(root) = Retrieval.bm25Commits(spark, sfDir, Seq(8))
     val docs = graft.tables.Tables.documents(spark, sfDir)
     val plan = Retrieval.deltaBm25From(
         spark.read.parquet(s"$root/postings"),
@@ -230,29 +230,65 @@ class Round19OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     }
   }
 
-  test("delta IVF after an input rewrite in the session: re-counted and re-indexed") {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    import graft.operators.Similarity
-    val dir = Files.createTempDirectory("graft-ann-rewrite")
-    val table = dir.resolve("embeddings.parquet")
-    Files.copy(Paths.get(gateDir, "embeddings.parquet"), table)
-    def served(s: org.apache.spark.sql.SparkSession): Seq[(Long, Long, Long, Double)] =
-      Similarity.deltaIvfKnn(s, dir.toString).as[(Long, Long, Long, Double)].collect().toSeq
-    assert(served(spark).exists(_._3 >= 400), "no id >= 400 served before the rewrite")
-    val subset = dir.resolve("subset").toString
-    graft.tables.Tables.embeddings(spark, dir.toString).filter($"vec_id" < 400)
-      .coalesce(1).write.parquet(subset)
-    val part = Files.list(Paths.get(subset)).iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet")).get
-    Files.copy(part, table, StandardCopyOption.REPLACE_EXISTING)
-    val after = served(spark)
-    assert(after.nonEmpty && after.forall(_._3 < 400),
-      "a vector the rewrite removed was served — stale count or stale layouts")
-    // a fresh session with its own scratch root shares no memo and no slot
-    val fresh = spark.newSession()
-    fresh.conf.set("graft.scratch.dir", dir.resolve("fresh_scratch").toString)
-    assert(after == served(fresh))
+  test("BM25 and winnow commit grouping: every stored split serves, and folds, to the same rows") {
+    import graft.operators.{Retrieval, TextAnalysis}
+    val dir = gateDir
+    // the live batch is md5 bucket / doc_id mod 10 in {8, 9} under
+    // every split; only the grouping of the stored buckets differs
+    val stored = Seq(Seq(8), Seq(6, 8), Seq(3, 6, 8))
+    val folds = Seq(Seq(6, 8, 10), Seq(3, 6, 8, 10))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+    for ((family, serve, fold, whole) <- Seq(
+        ("BM25", Retrieval.deltaBm25Over _, Retrieval.compactBm25Over _,
+          SparkEntry.queries("q_bm25")),
+        ("winnow", TextAnalysis.deltaWinnowOver _, TextAnalysis.compactWinnowOver _,
+          SparkEntry.queries("q_winnow_pairs")))) {
+      val served = stored.map(cuts => rows(serve(spark, dir, cuts)))
+      assert(served.head.nonEmpty, s"$family: nothing served — weak fixture")
+      stored.zip(served).foreach { case (cuts, r) =>
+        assert(r == served.head, s"$family: stored cuts $cuts served different rows")
+      }
+      val full = rows(whole(spark, dir))
+      assert(full.nonEmpty, s"$family: whole-corpus result is empty — weak fixture")
+      folds.foreach { cuts =>
+        assert(rows(fold(spark, dir, cuts)) == full,
+          s"$family: the fold over cuts $cuts differs from the whole-corpus result")
+      }
+    }
+  }
+
+  // A table rewritten inside a live session must never be served from
+  // the stored state of its old version: each entry builds, the table
+  // is overwritten by its first 400 ids, and the entry builds again.
+  // (entry, input table, id column of the output, id column of the table)
+  for ((label, query, table, outId, inId) <- Seq(
+      ("delta IVF", "q_delta_knn_ivf", "embeddings", "n_id", "vec_id"),
+      ("delta SemDeDup", "q_delta_semdedup", "embeddings", "vec_id", "vec_id"),
+      ("delta BM25", "q_delta_bm25", "documents", "doc_id", "doc_id"))) {
+    test(s"$label after an input rewrite in the session: re-counted and re-indexed") {
+      import java.nio.file.{Files, Paths, StandardCopyOption}
+      import scala.jdk.CollectionConverters._
+      val dir = Files.createTempDirectory("graft-rewrite")
+      val file = dir.resolve(s"$table.parquet")
+      Files.copy(Paths.get(gateDir, s"$table.parquet"), file)
+      def served(s: org.apache.spark.sql.SparkSession) =
+        SparkEntry.queries(query)(s, dir.toString).collect().toSeq
+      def ids(rows: Seq[org.apache.spark.sql.Row]) = rows.map(_.getAs[Long](outId))
+      assert(ids(served(spark)).exists(_ >= 400), "no id >= 400 served before the rewrite")
+      val subset = dir.resolve("subset").toString
+      graft.tables.Tables.load(spark, dir.toString, table).filter(col(inId) < 400)
+        .coalesce(1).write.parquet(subset)
+      val part = Files.list(Paths.get(subset)).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      Files.copy(part, file, StandardCopyOption.REPLACE_EXISTING)
+      val after = served(spark)
+      assert(after.nonEmpty && ids(after).forall(_ < 400),
+        "an id the rewrite removed was served — stale count or stale stored state")
+      // a fresh session with its own scratch root shares no memo and no slot
+      val fresh = spark.newSession()
+      fresh.conf.set("graft.scratch.dir", dir.resolve("fresh_scratch").toString)
+      assert(after == served(fresh), "the rebuilt result differs from a fresh session's")
+    }
   }
 
   test("delta media cascade: absorption via every bridge kind; all-new components appended") {
@@ -340,7 +376,7 @@ class Round19OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val baseLayout = Pipeline
       .curationPipelineOn(docs.filter(col("doc_id") < b))
       .as[(Long, Long, Long, Long, Long)].collect().toSeq
-    val root = graft.sources.Scratch.corpusDir(spark, "e2e_delta_base", sfDir)
+    val root = graft.sources.Scratch.slot(spark, sfDir, "documents", "e2e_delta_base")
     val stored = spark.read.parquet(s"$root/packing")
       .select(col("shard"), col("seq_id"), col("n_docs"),
         col("total_tokens"), col("first_doc"))

@@ -244,7 +244,7 @@ class Round20OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     import graft.operators.Retrieval
     // graded entry once: materializes the stored four-table index
     assert(Retrieval.retractBm25(spark, sfDir).count() > 0)
-    val root = graft.sources.Scratch.corpusDir(spark, "bm25_index", sfDir)
+    val Seq(root) = Retrieval.bm25Commits(spark, sfDir, Seq(8))
     val storedDl = spark.read.parquet(s"$root/dl")
     val plan = Retrieval.retractBm25From(
         spark.read.parquet(s"$root/postings"),

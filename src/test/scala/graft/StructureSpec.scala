@@ -8,9 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-structure guard over `src/main`: sessions are built in one
   * place ([[LocalSession.build]]), stored IVF layouts are read
-  * cell-pruned in one place (`Similarity.prunedLayouts`), and no state
-  * is keyed by an identity hash (session state lives in
-  * [[graft.sources.Scratch.once]]).
+  * cell-pruned in one place (`Similarity.prunedLayouts`), no state is
+  * keyed by an identity hash (session state lives in
+  * [[graft.sources.Scratch.once]]), and operators store artifacts only
+  * through the slot policy and the commit chain
+  * ([[graft.sources.Scratch.slotOnce]], [[graft.sources.Commits.chain]]).
   */
 class StructureSpec extends AnyFunSuite {
   private lazy val sources: Seq[(Path, String)] = {
@@ -42,5 +44,20 @@ class StructureSpec extends AnyFunSuite {
   test("no state keyed by an identity hash") {
     val sites = sitesOf("""System\s*\.identityHashCode\b""")
     assert(sites.isEmpty, sites)
+  }
+
+  test("operators store artifacts only through input-keyed slots and the commit chain") {
+    def inOperators(pattern: String) =
+      sitesOf(pattern).filter(_.contains("graft/operators/"))
+    // a raw write-once guard or a directory-only slot key bypasses the
+    // input fingerprint
+    val rawOnce = inOperators("""materializeOnce\(""")
+    assert(rawOnce.isEmpty, rawOnce)
+    val dirKeyed = inOperators("""corpusDir\(""")
+    assert(dirKeyed.isEmpty, dirKeyed)
+    // hand-named commit and compaction directories belong to Commits.chain
+    // and Commits.foldSlot
+    val commitPaths = inOperators("""\$root/(?:c\d|compacted)""")
+    assert(commitPaths.isEmpty, commitPaths)
   }
 }
