@@ -3,8 +3,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print `.explain("formatted")` for named queries to files
   * under an output dir (arg 0), one `<query>.txt` each — the plan
-  * evidence the optimization rounds commit under plans/rNN/. Bench
-  * session shape (same confs), so the plans match what the bench runs.
+  * evidence the optimization rounds commit under plans/rNN/: the
+  * initial plan, then the final adaptive plan after one execution
+  * (what adaptive re-planning chose, e.g. the one-task output sort).
+  * Bench session shape (same confs), so the plans match what the bench
+  * runs.
   */
 object ExplainOne {
   def main(args: Array[String]): Unit = {
@@ -53,10 +56,15 @@ object ExplainOne {
       }))
     args.drop(1).foreach { name =>
       val plan =
-        try noCp.getOrElse(name, SparkEntry.queries(name))(spark, sfDir)
-          .queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-        catch { case e: Throwable => s"EXPLAIN FAILED: ${e.getMessage}" }
+        try {
+          val qe = noCp.getOrElse(name, SparkEntry.queries(name))(spark, sfDir).queryExecution
+          val formatted = org.apache.spark.sql.execution.FormattedMode
+          val initial = qe.explainString(formatted)
+          // one execution with every row discarded (the noop sink's
+          // work) fixes the final adaptive plan
+          qe.toRdd.foreach(_ => ())
+          s"$initial\n== Final adaptive plan (after one execution) ==\n${qe.explainString(formatted)}"
+        } catch { case e: Throwable => s"EXPLAIN FAILED: ${e.getMessage}" }
       val w = new java.io.PrintWriter(s"$outDir/$name.txt")
       try w.println(plan) finally w.close()
       println(s"explained $name -> $outDir/$name.txt")

@@ -2,6 +2,7 @@ package graft
 
 import graft.mapreduce.MapReduceJob
 import graft.operators._
+import graft.plan.OutputSort
 import graft.tables.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -19,7 +20,17 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.pricingSummary(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** The registered queries by name. Every builder first installs the
+    * output-sort strategy ([[graft.plan.OutputSort]]) on the session it
+    * is given, so sessions this library did not build sort measured-small
+    * outputs in one task too.
+    */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    builders.map { case (name, build) =>
+      name -> ((s: SparkSession, dir: String) => { OutputSort.install(s); build(s, dir) })
+    }
+
+  private lazy val builders: Map[String, (SparkSession, String) => DataFrame] = Map(
     // — core relational (SURVEY.md §2.2 scans/filter/agg/join/sort/set) —
     "q_pricing_summary" -> (Relational.pricingSummary _),
     "q_filter_project"  -> (Relational.filterProject _),

@@ -587,28 +587,34 @@ object Similarity {
     * layouts AND an exact broadcast scan; sampled recall@[[K]] ≥
     * [[DriftRecallFloor]] serves the maintained index (the
     * gate-certified [[deltaIvfKnn]] result), below it the router
-    * loudly escalates to a full refit ([[ivfKnnExactOn]] — new Lloyd
-    * fit over everything). The decision prices quantizer staleness by
-    * MEASUREMENT instead of refitting on a calendar.
+    * loudly escalates to a full refit over everything, served from its
+    * stored layout ([[ivfKnnExactMaterialized]], the same rows as
+    * [[ivfKnnExactOn]]). The decision prices quantizer staleness by
+    * MEASUREMENT instead of refitting on a calendar. The recall is
+    * measured once per session and chain: the memo is keyed on the
+    * chain's commit slots, which name the corpus version, so a
+    * rewritten embeddings file is measured again.
     */
   def ivfKnnDriftRouted(spark: SparkSession, dir: String,
       probes: Int = 3, expectArm: Option[String] = None): DataFrame = {
     val (cents, commits) = ivfCommits(spark, dir, Seq(8))
-    val e = Tables.embeddings(spark, dir)
-    val n = denseCountDir(spark, dir, "drift-routed IVF")
-    val b = deltaBaseCount(n)
-    val nSample = math.min(DriftSampleQueries.toLong, n - b)
-    val recall = measuredIvfRecall(spark, e, cents,
-      commits.map(p => graft.sources.Scratch.readParquetOnce(spark, p)), b, nSample, probes)
+    val recall = graft.sources.Scratch.once(spark,
+        s"ivf-recall:$probes:${commits.mkString(",")}") {
+      val n = denseCountDir(spark, dir, "drift-routed IVF")
+      val b = deltaBaseCount(n)
+      measuredIvfRecall(spark, Tables.embeddings(spark, dir), cents,
+        commits.map(graft.sources.Scratch.readParquetOnce(spark, _)), b,
+        math.min(DriftSampleQueries.toLong, n - b), probes)
+    }
     assertRoutedArm("IVF", recall, expectArm)
     if (recall >= DriftRecallFloor) {
       System.err.println(f"[drift-router] sampled IVF insert recall@$K = " +
         f"$recall%.3f >= $DriftRecallFloor — serving the maintained index")
-      deltaIvfKnn(spark, dir, probes)
+      ivfServe(spark, dir, cents, commits, probes)
     } else {
       System.err.println(f"[drift-router] sampled IVF insert recall@$K = " +
         f"$recall%.3f < $DriftRecallFloor — ESCALATING to a full refit")
-      ivfKnnExactOn(spark, e)
+      ivfKnnExactMaterialized(spark, dir, probes)
     }
   }
 
@@ -1178,23 +1184,34 @@ object Similarity {
   def graphKnnDriftRouted(spark: SparkSession, dir: String,
       expectArm: Option[String] = None): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    graphKnnDriftRoutedOn(spark, e,
-      graphCommits(spark, dir, e, Seq(8)).reduce(_ unionByName _), expectArm,
-      Some(denseCountDir(spark, dir, "drift-routed graph ANN")))
+    val cuts = Seq(8)
+    val edges = graphCommits(spark, dir, e, cuts).reduce(_ unionByName _)
+    // measured once per session and chain: the last commit's slot names
+    // the corpus version and the whole cut history
+    val recall = graft.sources.Scratch.once(spark, "graph-recall:" +
+        graft.sources.Scratch.slot(spark, dir, "embeddings", graphSlot(cuts :+ 10)))(
+      insertRecall(e, edges, denseCountDir(spark, dir, "drift-routed graph ANN")))
+    routedGraph(spark, e, edges, recall, expectArm)
   }
 
   /** Router body over an explicit maintained edge table — the spec's
-    * entry point for the drifted fixture.
+    * entry point for the drifted fixture (pinned, measured per call).
     */
   private[graft] def graphKnnDriftRoutedOn(spark: SparkSession,
       e: DataFrame, maintainedEdges: DataFrame,
-      expectArm: Option[String] = None,
-      precountedN: Option[Long] = None): DataFrame = {
+      expectArm: Option[String] = None): DataFrame = {
     val edges = maintainedEdges.localCheckpoint()
-    val n = precountedN.getOrElse(denseCount(e, "drift-routed graph ANN"))
+    routedGraph(spark, e, edges,
+      insertRecall(e, edges, denseCount(e, "drift-routed graph ANN")), expectArm)
+  }
+
+  private def insertRecall(e: DataFrame, edges: DataFrame, n: Long): Double = {
     val b = deltaBaseCount(n)
-    val recall = measuredInsertRecall(e, edges, b,
-      math.min(DriftSampleQueries.toLong, n - b))
+    measuredInsertRecall(e, edges, b, math.min(DriftSampleQueries.toLong, n - b))
+  }
+
+  private def routedGraph(spark: SparkSession, e: DataFrame, edges: DataFrame,
+      recall: Double, expectArm: Option[String]): DataFrame = {
     assertRoutedArm("graph", recall, expectArm)
     if (recall >= DriftRecallFloor) {
       System.err.println(f"[drift-router] sampled insert recall@$K = " +

@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-structure guard over `src/main`: sessions are built in one
-  * place ([[LocalSession.build]]), stored IVF layouts are read
+  * place ([[LocalSession.build]]), planner strategies are installed in
+  * one place ([[graft.plan.OutputSort.install]]), stored IVF layouts are read
   * cell-pruned in one place (`Similarity.prunedLayouts`), no state is
   * keyed by an identity hash (session state lives in
   * [[graft.sources.Scratch.once]]), and operators store artifacts only
@@ -38,6 +39,11 @@ class StructureSpec extends AnyFunSuite {
 
   test("one cell-pruned IVF read in Similarity") {
     val sites = sitesOf("""col\("cell"\)\.isin\b""").filter(_.contains("Similarity.scala"))
+    assert(sites.size === 1, sites)
+  }
+
+  test("exactly one planner-strategy install site") {
+    val sites = sitesOf("""experimental\s*\.\s*extraStrategies\s*=(?!=)""")
     assert(sites.size === 1, sites)
   }
 
