@@ -359,7 +359,7 @@ object ScalingProbe {
       // whole corpus every run.
       case "delta_knn_ivf" => {
         val cents = graft.operators.Similarity
-          .ivfFitCents(spark, embRange(0, 4096))
+          .ivfFitCents(spark, embRange(0, 4096), graft.operators.Similarity.IvfExactCells)
         graft.operators.Similarity.deltaIvfProbe(docs, cents,
           embRange(n.toLong, n.toLong + 100000).localCheckpoint(),
           embRange(0, 10))
@@ -510,7 +510,8 @@ object ScalingProbe {
       // base layout (ivf) / the base edge table (graph)
       else if (op == "delta_knn_ivf")
         (n => graft.operators.Similarity.ivfAssignTo(
-          graft.operators.Similarity.ivfFitCents(spark, embRange(0, 4096)),
+          graft.operators.Similarity.ivfFitCents(spark, embRange(0, 4096),
+            graft.operators.Similarity.IvfExactCells),
           embRange(0, n.toLong)))
       else if (op == "delta_knn_graph")
         (n => (0 until graft.operators.Similarity.GraphM).map { s =>

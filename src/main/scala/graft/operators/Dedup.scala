@@ -362,8 +362,7 @@ object Dedup {
       .select(col("doc_id"), col("h"), col("pos"), col("sz"))
       // both sides of the candidate self-join — pinned EAGERLY so the
       // two join branches cannot recompute the df-window subtree while
-      // racing a lazy cache (the lexicalCosineOn hazard); the operator
-      // always checkpoints its output, so there is no audit mode here
+      // racing a lazy cache (the lexicalCosineOn hazard)
       .localCheckpoint()
     try {
     // Candidate enumeration with the published prune conditions: shared
@@ -448,8 +447,7 @@ object Dedup {
   def containmentPairs(spark: SparkSession, dir: String): DataFrame =
     containmentPairsOn(Tables.documents(spark, dir))
 
-  def containmentPairsOn(docs: DataFrame, threshold: Double = 0.8,
-      checkpoint: Boolean = true): DataFrame = {
+  def containmentPairsOn(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.graft.TextShingleExpressions.{shingleHashSetCol, sortedIntersectSizeCol}
     val docSets = docs
@@ -470,16 +468,13 @@ object Dedup {
       // verified 9.8M candidates at sf0.1 — nearly half of all ordered
       // pairs — because matches on hot shingles deep in B's order all
       // survived to verification; the pos_b cut removes exactly those).
-      val positions0 = exploded.join(dfreq, "h")
+      // Pinned eagerly: the A-prefix side and the B probe side of the
+      // candidate self-join would race a lazy persist and recompute the
+      // positions window per branch (the lexicalCosineOn hazard).
+      val positions = exploded.join(dfreq, "h")
         .withColumn("pos", row_number().over(
           Window.partitionBy(col("doc_id")).orderBy(col("df"), col("h"))))
-      // A-prefix side + B probe side: the candidate self-join's two
-      // branches race a lazy persist and recompute the positions
-      // window per branch (the lexicalCosineOn hazard) — pin eagerly
-      // in the graded mode, keep the lazy persist under audit
-      val positions = if (checkpoint) positions0.localCheckpoint()
-        else positions0.persist(StorageLevel.MEMORY_AND_DISK)
-      try {
+        .localCheckpoint()
       val prefixes = positions
         .filter(col("pos") <= col("sz") - ceilConservative(col("sz") * threshold) + 1)
         .select(col("doc_id").as("id_a"), col("sz").as("sz_a"), col("h"))
@@ -518,9 +513,7 @@ object Dedup {
         .select(col("id_a"), col("id_b"), nCommon.cast("long").as("n_common"),
           (nCommon.cast("double") / col("sz_a")).as("containment"))
         .filter(col("containment") >= threshold)
-      (if (checkpoint) verified.localCheckpoint() else verified)
-        .orderBy(col("id_a"), col("id_b"))
-      } finally { positions.unpersist(); () }
+      verified.localCheckpoint().orderBy(col("id_a"), col("id_b"))
     } finally { docSets.unpersist(); () }
   }
 
@@ -1381,10 +1374,7 @@ object Dedup {
   def lexicalCosine(spark: SparkSession, dir: String): DataFrame =
     lexicalCosineOn(Tables.documents(spark, dir))
 
-  /** checkpoint=false exists for plan audits only: the checkpointed
-    * plan is a bare RDD scan + sort that hides the joins under audit.
-    */
-  def lexicalCosineOn(docs: DataFrame, checkpoint: Boolean = true): DataFrame = {
+  def lexicalCosineOn(docs: DataFrame): DataFrame = {
     // (doc_id, tok, tf): three consumers (norms + both dot sides) —
     // persist like the LSH signature table rather than re-tokenizing;
     // distinct (doc_id, 4-gram) postings: two consumers (df + rare)
@@ -1395,18 +1385,13 @@ object Dedup {
     // both recomputed the tokenize/explode subtree before any cache
     // block landed (profiled as duplicate 32-task stages with
     // identical shuffle-write sizes). localCheckpoint computes each
-    // frame exactly once; the audit mode keeps the lazy persist so the
-    // plan stays visible.
-    val tf = if (checkpoint) tf0.localCheckpoint()
-      else tf0.persist(StorageLevel.MEMORY_AND_DISK)
-    val sh = if (checkpoint) sh0.localCheckpoint()
-      else sh0.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val norms = tf.groupBy(col("doc_id"))
-        .agg(sum(col("tf") * col("tf")).as("norm2"))
-      val dfq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-      lexicalPairsFromIndex(tf, norms, sh, dfq, checkpoint)
-    } finally { tf.unpersist(); sh.unpersist(); () }
+    // frame exactly once.
+    val tf = tf0.localCheckpoint()
+    val sh = sh0.localCheckpoint()
+    val norms = tf.groupBy(col("doc_id"))
+      .agg(sum(col("tf") * col("tf")).as("norm2"))
+    val dfq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
+    lexicalPairsFromIndex(tf, norms, sh, dfq)
   }
 
   /** The blocked + verified pair chain over an EXPLICIT index
@@ -1416,14 +1401,14 @@ object Dedup {
     * retraction entry shares the full entry's oracle over survivors.
     */
   private def lexicalPairsFromIndex(tf: DataFrame, norms: DataFrame,
-      sh: DataFrame, dfq: DataFrame, checkpoint: Boolean): DataFrame = {
+      sh: DataFrame, dfq: DataFrame): DataFrame = {
     val rareKeys = dfq.filter(col("df") <= LexMaxDf)
     val rare = sh.join(rareKeys.select("shingle"), "shingle")
-    val cand0 = rare.select(col("shingle"), col("doc_id").as("id_a"))
+    val cand = rare.select(col("shingle"), col("doc_id").as("id_a"))
       .join(rare.select(col("shingle"), col("doc_id").as("id_b")), "shingle")
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b")).distinct()
-    val cand = if (checkpoint) cand0.localCheckpoint() else cand0
+      .localCheckpoint()
     // Verified dot through the MERGE-WALK kernel, not a pair×token
     // join: the previous shape fanned every candidate out to its
     // tokens (|pairs|·tokens-per-doc string-keyed rows through two
@@ -1441,13 +1426,13 @@ object Dedup {
     // duplicate-heavy corpora the candidate list is NOT small (the
     // 1M-doc probe measured it past the driver's result cap), so the
     // planner decides from measured sizes; tiny sides still broadcast.
-    val tfArr0 = tf
+    // both dot sides read it — materialize the pack once
+    val tfArr = tf
       .groupBy(col("doc_id"))
       .agg(flatten(transform(
         sort_array(collect_list(struct(xxhash64(col("tok")).as("h"), col("tf")))),
         s => array(s.getField("h"), s.getField("tf")))).as("tfv"))
-    // both dot sides read it — materialize the pack once
-    val tfArr = if (checkpoint) tfArr0.localCheckpoint() else tfArr0
+      .localCheckpoint()
     val dots = cand
       .join(tfArr.select(col("doc_id").as("id_a"), col("tfv").as("tfv_a")), "id_a")
       .join(tfArr.select(col("doc_id").as("id_b"), col("tfv").as("tfv_b")), "id_b")
@@ -1463,8 +1448,7 @@ object Dedup {
       .join(norms.select(col("doc_id").as("id_b"), col("norm2").as("norm2_b")), "id_b")
       .select(col("id_a"), col("id_b"), col("dot"), cosine.as("cosine"))
       .filter(col("cosine") >= LexCosineMin)
-    (if (checkpoint) out.localCheckpoint() else out)
-      .orderBy(col("id_a"), col("id_b"))
+    out.localCheckpoint().orderBy(col("id_a"), col("id_b"))
   }
 
   /** RETRACTION — lexical-cosine index maintenance under DELETION,
@@ -1498,7 +1482,7 @@ object Dedup {
         .agg((-count(lit(1))).as("df")))
       .groupBy(col("shingle")).agg(sum(col("df")).as("df"))
       .filter(col("df") > 0)
-    lexicalPairsFromIndex(tf, norms, sh, dfq, checkpoint = true)
+    lexicalPairsFromIndex(tf, norms, sh, dfq)
   }
 
   /** INCREMENTAL lexical cosine — [[lexicalCosineOn]]'s daily-ingest
@@ -1598,12 +1582,9 @@ object Dedup {
     (tf, sh)
   }
 
-  /** checkpoint=false exists for plan audits only (the lexicalCosineOn
-    * convention): pinned frames otherwise hide the ingest dataflow.
-    */
   private[graft] def deltaLexicalCosineFrom(baseTf: DataFrame,
       baseNorms: DataFrame, baseSh: DataFrame, baseDf: DataFrame,
-      docs: DataFrame, checkpoint: Boolean = true): DataFrame = {
+      docs: DataFrame): DataFrame = {
     // batch membership from the stored index's doc ids (production's
     // "not yet ingested"; equals the fixture's md5 rule). DEGENERATE-
     // DOC CAVEAT: a base doc that tokenizes to NOTHING has no norms
@@ -1614,85 +1595,75 @@ object Dedup {
     val batchDocs = docs.join(baseNorms.select(col("doc_id")),
       Seq("doc_id"), "left_anti")
     val (btf0, bsh0) = lexIndexOf(batchDocs)
-    // eager pin when checkpointing — the candidate stage references
-    // keptB (← bsh) through THREE join branches, which recomputed the
-    // batch tokenize per branch under the lazy persist (the
-    // lexicalCosineOn hazard, profiled here as 3-4 duplicate 32-task
-    // stages); audit mode keeps the lazy persist for plan visibility
-    val btf = if (checkpoint) btf0.localCheckpoint()
-      else btf0.persist(StorageLevel.MEMORY_AND_DISK)
-    val bsh = if (checkpoint) bsh0.localCheckpoint()
-      else bsh0.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // union df for the batch's shingles only: stored df delta-applied
-      val keep = bsh.groupBy(col("shingle")).agg(count(lit(1)).as("dfb"))
-        .join(baseDf.withColumnRenamed("df", "dfa"), Seq("shingle"), "left")
-        .filter(coalesce(col("dfa"), lit(0L)) + col("dfb") <= LexMaxDf)
-        .select(col("shingle"))
-      val keptB = bsh.join(keep, Seq("shingle"), "left_semi")
-      // candidates: the batch's kept shingles probe the stored postings
-      // through a SIZE-DRIVEN join — with the md5 rule the batch is
-      // corpus-proportional (~20%), so forcing `keep` to broadcast
-      // would re-create the driver-collect abort the full operator's
-      // 1M probe exposed; the stored side (parquet, accurate stats) is
-      // never a build side, and a small probe set still broadcasts
-      val basePruned = baseSh.join(keep, Seq("shingle"), "left_semi")
-      val ne = keptB.select(col("shingle"), col("doc_id").as("bid"))
-        .join(basePruned.select(col("shingle"), col("doc_id").as("aid")), "shingle")
-        .select(least(col("aid"), col("bid")).as("id_a"),
-          greatest(col("aid"), col("bid")).as("id_b"),
-          lit("new_existing").as("pair_type"))
-      val nn = keptB.select(col("shingle"), col("doc_id").as("a"))
-        .join(keptB.select(col("shingle"), col("doc_id").as("b")), "shingle")
-        .filter(col("a") < col("b"))
-        .select(col("a").as("id_a"), col("b").as("id_b"),
-          lit("new_new").as("pair_type"))
-      // cand stays pinned in BOTH modes (it is consumed by two join
-      // sides); checkpoint=false unpins only the OUTPUT so the audit
-      // sees the verify stage's stored-table read-backs
-      val cand = ne.unionByName(nn).distinct().localCheckpoint()
-      // Verified dot through the MERGE-WALK kernel (round 22 — the
-      // round-21 lexicalPairsFromIndex treatment this delta path
-      // missed): the old shape fanned every candidate pair out to its
-      // tokens (pair×token string-keyed rows through two exchanges and
-      // a re-aggregation — profiled as this query's dominant CPU, four
-      // 32-task stages of 4–10 s task time at sf0.1). Each doc's tf
-      // vector is packed ONCE into a hash-sorted interleaved
-      // [h, tf, …] long array (corpus-sized, one aggregation, pinned —
-      // both pair sides read it) and each pair pays one stride-2 merge
-      // walk. Same xxhash64 cross-token collision class as the full
-      // operator (≈|vocab|²/2^65, oracle-checked end to end); pairs
-      // with NO shared token produce dot=0 and fall to the same
-      // cosine-floor filter that dropped them when the inner token
-      // join produced no group.
-      val tfAll = baseTf.unionByName(btf)
-      val tfvAll0 = tfAll
-        .groupBy(col("doc_id"))
-        .agg(flatten(transform(
-          sort_array(collect_list(struct(xxhash64(col("tok")).as("h"), col("tf")))),
-          x => array(x.getField("h"), x.getField("tf")))).as("tfv"))
-      // checkpoint-gated so the audit's checkpoint=false form still
-      // shows the stored tf parquet scan under the pack
-      val tfvAll = if (checkpoint) tfvAll0.localCheckpoint() else tfvAll0
-      val dots = cand
-        .join(tfvAll.select(col("doc_id").as("id_a"), col("tfv").as("tfv_a")), "id_a")
-        .join(tfvAll.select(col("doc_id").as("id_b"), col("tfv").as("tfv_b")), "id_b")
-        .select(col("id_a"), col("id_b"), col("pair_type"),
-          org.apache.spark.sql.graft.TextShingleExpressions
-            .sortedTfDotCol(col("tfv_a"), col("tfv_b")).as("dot"))
-      val normsAll = baseNorms.unionByName(
-        btf.groupBy(col("doc_id")).agg(sum(col("tf") * col("tf")).as("norm2")))
-      val cosine = col("dot").cast("double") /
-        sqrt((col("norm2_a") * col("norm2_b")).cast("double"))
-      val res = dots
-        .join(normsAll.select(col("doc_id").as("id_a"), col("norm2").as("norm2_a")), "id_a")
-        .join(normsAll.select(col("doc_id").as("id_b"), col("norm2").as("norm2_b")), "id_b")
-        .select(col("id_a"), col("id_b"), col("dot"), cosine.as("cosine"),
-          col("pair_type"))
-        .filter(col("cosine") >= LexCosineMin)
-      (if (checkpoint) res.localCheckpoint() else res)
-        .orderBy(col("id_a"), col("id_b"))
-    } finally { btf.unpersist(); bsh.unpersist(); () }
+    // eager pin — the candidate stage references keptB (← bsh) through
+    // THREE join branches, which recomputed the batch tokenize per
+    // branch under a lazy persist (the lexicalCosineOn hazard,
+    // profiled here as 3-4 duplicate 32-task stages)
+    val btf = btf0.localCheckpoint()
+    val bsh = bsh0.localCheckpoint()
+    // union df for the batch's shingles only: stored df delta-applied
+    val keep = bsh.groupBy(col("shingle")).agg(count(lit(1)).as("dfb"))
+      .join(baseDf.withColumnRenamed("df", "dfa"), Seq("shingle"), "left")
+      .filter(coalesce(col("dfa"), lit(0L)) + col("dfb") <= LexMaxDf)
+      .select(col("shingle"))
+    val keptB = bsh.join(keep, Seq("shingle"), "left_semi")
+    // candidates: the batch's kept shingles probe the stored postings
+    // through a SIZE-DRIVEN join — with the md5 rule the batch is
+    // corpus-proportional (~20%), so forcing `keep` to broadcast
+    // would re-create the driver-collect abort the full operator's
+    // 1M probe exposed; the stored side (parquet, accurate stats) is
+    // never a build side, and a small probe set still broadcasts
+    val basePruned = baseSh.join(keep, Seq("shingle"), "left_semi")
+    val ne = keptB.select(col("shingle"), col("doc_id").as("bid"))
+      .join(basePruned.select(col("shingle"), col("doc_id").as("aid")), "shingle")
+      .select(least(col("aid"), col("bid")).as("id_a"),
+        greatest(col("aid"), col("bid")).as("id_b"),
+        lit("new_existing").as("pair_type"))
+    val nn = keptB.select(col("shingle"), col("doc_id").as("a"))
+      .join(keptB.select(col("shingle"), col("doc_id").as("b")), "shingle")
+      .filter(col("a") < col("b"))
+      .select(col("a").as("id_a"), col("b").as("id_b"),
+        lit("new_new").as("pair_type"))
+    // cand is pinned: two join sides consume it
+    val cand = ne.unionByName(nn).distinct().localCheckpoint()
+    // Verified dot through the MERGE-WALK kernel (round 22 — the
+    // round-21 lexicalPairsFromIndex treatment this delta path
+    // missed): the old shape fanned every candidate pair out to its
+    // tokens (pair×token string-keyed rows through two exchanges and
+    // a re-aggregation — profiled as this query's dominant CPU, four
+    // 32-task stages of 4–10 s task time at sf0.1). Each doc's tf
+    // vector is packed ONCE into a hash-sorted interleaved
+    // [h, tf, …] long array (corpus-sized, one aggregation, pinned —
+    // both pair sides read it) and each pair pays one stride-2 merge
+    // walk. Same xxhash64 cross-token collision class as the full
+    // operator (≈|vocab|²/2^65, oracle-checked end to end); pairs
+    // with NO shared token produce dot=0 and fall to the same
+    // cosine-floor filter that dropped them when the inner token
+    // join produced no group.
+    val tfAll = baseTf.unionByName(btf)
+    val tfvAll = tfAll
+      .groupBy(col("doc_id"))
+      .agg(flatten(transform(
+        sort_array(collect_list(struct(xxhash64(col("tok")).as("h"), col("tf")))),
+        x => array(x.getField("h"), x.getField("tf")))).as("tfv"))
+      .localCheckpoint()
+    val dots = cand
+      .join(tfvAll.select(col("doc_id").as("id_a"), col("tfv").as("tfv_a")), "id_a")
+      .join(tfvAll.select(col("doc_id").as("id_b"), col("tfv").as("tfv_b")), "id_b")
+      .select(col("id_a"), col("id_b"), col("pair_type"),
+        org.apache.spark.sql.graft.TextShingleExpressions
+          .sortedTfDotCol(col("tfv_a"), col("tfv_b")).as("dot"))
+    val normsAll = baseNorms.unionByName(
+      btf.groupBy(col("doc_id")).agg(sum(col("tf") * col("tf")).as("norm2")))
+    val cosine = col("dot").cast("double") /
+      sqrt((col("norm2_a") * col("norm2_b")).cast("double"))
+    val res = dots
+      .join(normsAll.select(col("doc_id").as("id_a"), col("norm2").as("norm2_a")), "id_a")
+      .join(normsAll.select(col("doc_id").as("id_b"), col("norm2").as("norm2_b")), "id_b")
+      .select(col("id_a"), col("id_b"), col("dot"), cosine.as("cosine"),
+        col("pair_type"))
+      .filter(col("cosine") >= LexCosineMin)
+    res.localCheckpoint().orderBy(col("id_a"), col("id_b"))
   }
 
   /** The delta-probed band-bucket candidate join, factored out so the
@@ -1833,11 +1804,10 @@ object Dedup {
   def decontaminationBloomOn(docs: DataFrame): DataFrame =
     decontaminationWith(docs, bloomPrefilter)
 
-  /** The Bloom screen itself, exposed for the plan audit (the operator
-    * localCheckpoints its result, so the probe must be asserted on the
-    * pre-checkpoint dataflow).
+  /** The Bloom screen itself: the train side filtered by a sketch of
+    * the eval side's shingle hashes.
     */
-  private[graft] val bloomPrefilter: (DataFrame, DataFrame) => DataFrame =
+  private val bloomPrefilter: (DataFrame, DataFrame) => DataFrame =
     (trainSide, evalSide) => {
       import org.apache.spark.sql.graft.BloomExpressions
       // eval row count is an upper bound on distinct eval shingles —
@@ -1869,9 +1839,8 @@ object Dedup {
       trainSide.filter(BloomExpressions.mightContain(bloomBytes, col("hh")))
     }
 
-  private[graft] def decontaminationWith(docs: DataFrame,
-      prefilter: (DataFrame, DataFrame) => DataFrame,
-      checkpoint: Boolean = true): DataFrame = {
+  private def decontaminationWith(docs: DataFrame,
+      prefilter: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val bucket = pmod(md5Hash32(col("text")), lit(10))
     // NOT persisted, deliberately: both branches consume this narrow
     // scan → shingle-explode → hash pipeline, and recomputing it per
@@ -1901,11 +1870,8 @@ object Dedup {
       .withColumn("contamination",
         col("n_overlap").cast("double") / col("n_shingles"))
     // materialize the (tiny) per-doc result so downstream consumers
-    // don't re-run the scan (checkpoint=false exists for plan audits
-    // only — the checkpointed plan is a bare RDD scan that hides the
-    // dataflow under audit)
-    (if (checkpoint) agg.localCheckpoint() else agg)
-      .orderBy(col("doc_id"))
+    // don't re-run the scan
+    agg.localCheckpoint().orderBy(col("doc_id"))
   }
 
   /** Chunk-level exact dedup: the end-to-end training-data flow —

@@ -565,8 +565,7 @@ object Pipeline {
 
   def curationPipelineOn(docs: DataFrame,
                          budget: Int = 2048, shards: Int = 8,
-                         maxContamination: Double = 0.05,
-                         checkpoint: Boolean = true): DataFrame = {
+                         maxContamination: Double = 0.05): DataFrame = {
     // Decision pass FIRST, as a narrow (doc_id, reason) table that is
     // checkpointed BEFORE filtering. Filtering corpusReasons directly
     // looks natural but is a 60× trap: predicate pushdown substitutes
@@ -620,19 +619,10 @@ object Pipeline {
           .select(col("doc_id"))
         val cleanTrain = deduped.join(cleanTrainIds, Seq("doc_id"), "left_semi")
         val packed = TextAnalysis.packSequencesOn(cleanTrain, budget, shards)
-        // materialize so the persists release at exit (checkpoint=false
-        // exists for the plan audit only — the checkpointed plan is a
-        // bare RDD scan that hides the dataflow under audit)
-        // checkpoint=true: the localCheckpoint materializes NOW, while
-        // the three persists are live, and the finally blocks release
-        // them. checkpoint=false (plan-audit form): the frame stays
-        // lazy, so the persists must OUTLIVE this call for the audit
-        // to see the shared-scan plan — the caller clears the cache.
-        (if (checkpoint) packed.localCheckpoint() else packed)
-          .orderBy(col("shard"), col("seq_id"))
-      } finally { if (checkpoint) { tagged.unpersist(); () } }
-    } finally {
-      if (checkpoint) { kept.unpersist(); deduped.unpersist(); () }
-    }
+        // the localCheckpoint materializes NOW, while the three
+        // persists are live, and the finally blocks release them
+        packed.localCheckpoint().orderBy(col("shard"), col("seq_id"))
+      } finally { tagged.unpersist(); () }
+    } finally { kept.unpersist(); deduped.unpersist(); () }
   }
 }

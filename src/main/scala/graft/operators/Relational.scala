@@ -1281,13 +1281,11 @@ object Relational {
     * conf, which would silently drop the injected filter (both Bench's
     * noop write and Verify's parquet write are such consumers), so
     * lazy-returning the frame would mean the audited plan never
-    * actually runs. checkpoint=false exists for plan audits only: it
-    * returns the un-executed frame whose CACHED QueryExecution (forced
-    * inside the window) carries the bloom_filter_agg/might_contain
-    * nodes to assert on.
+    * actually runs. The pin's executed plan
+    * ([[graft.plan.PinPlans]]) carries the
+    * bloom_filter_agg/might_contain nodes the plan audit asserts on.
     */
-  def bloomFilteredJoin(spark: SparkSession, dir: String,
-      checkpoint: Boolean = true): DataFrame = {
+  def bloomFilteredJoin(spark: SparkSession, dir: String): DataFrame = {
     // Injection preconditions, scaled down to fixture size: the scan
     // threshold (default 10 GB) targets real fact tables, and
     // InjectRuntimeFilter refuses joins it considers broadcastable —
@@ -1318,12 +1316,7 @@ object Relational {
       // checkpoint BEFORE the closing sort (the bm25On pattern): the
       // join+agg EXECUTE here, under the overrides; the 3-row sort
       // re-plans later under the restored conf, which is fine
-      if (checkpoint) df.localCheckpoint().orderBy(col("l_returnflag"))
-      else { // audit path: un-executed, cached QueryExecution has the bloom nodes
-        val full = df.orderBy(col("l_returnflag"))
-        full.queryExecution.executedPlan
-        full
-      }
+      df.localCheckpoint().orderBy(col("l_returnflag"))
     } finally {
       saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
@@ -1464,11 +1457,10 @@ object Relational {
     * Executes under the conf window via eager localCheckpoint (the
     * [[bloomFilteredJoin]] contract: a consumer's later write would
     * re-plan under the restored session conf and silently lose the
-    * CBO plan); checkpoint=false is the audit path whose forced
-    * QueryExecution carries the reordered plan to assert on.
+    * CBO plan); the pin's executed plan carries the reordered joins
+    * the plan audit asserts on.
     */
-  def cboStarJoin(spark: SparkSession, dir: String,
-      checkpoint: Boolean = true): DataFrame = {
+  def cboStarJoin(spark: SparkSession, dir: String): DataFrame = {
     val Seq(tOrders, tCust, tNat) =
       Seq("orders", "customer", "nation").map(analyzedTable(spark, dir, _))
     val overrides = Seq(
@@ -1484,12 +1476,7 @@ object Relational {
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_orders"),
           round(sum(col("o_totalprice")), 2).as("revenue"))
-      if (checkpoint) df.localCheckpoint().orderBy(col("c_mktsegment"))
-      else {
-        val full = df.orderBy(col("c_mktsegment"))
-        full.queryExecution.executedPlan // force planning inside the window
-        full
-      }
+      df.localCheckpoint().orderBy(col("c_mktsegment"))
     } finally {
       saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
@@ -1521,8 +1508,7 @@ object Relational {
     * replaces every hand-written broadcast() hint in this repo's
     * pinned-shape entries.
     */
-  def cboStarJoin4(spark: SparkSession, dir: String,
-      checkpoint: Boolean = true): DataFrame = {
+  def cboStarJoin4(spark: SparkSession, dir: String): DataFrame = {
     val Seq(tOrders, tCust, tNat, tReg) =
       Seq("orders", "customer", "nation", "region")
         .map(analyzedTable(spark, dir, _))
@@ -1540,12 +1526,7 @@ object Relational {
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_orders"),
           round(sum(col("o_totalprice")), 2).as("revenue"))
-      if (checkpoint) df.localCheckpoint().orderBy(col("c_mktsegment"))
-      else {
-        val full = df.orderBy(col("c_mktsegment"))
-        full.queryExecution.executedPlan // force planning inside the window
-        full
-      }
+      df.localCheckpoint().orderBy(col("c_mktsegment"))
     } finally {
       saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)

@@ -74,21 +74,20 @@ object Retrieval {
   def bm25(spark: SparkSession, dir: String): DataFrame =
     bm25On(Tables.documents(spark, dir))
 
-  /** checkpoint=false exists for plan audits only (the snapshot hides
-    * the joins under audit); the default path eagerly materializes the
-    * query-bounded result via localCheckpoint so the postings cache
-    * can be released before the frame is consumed. The postings are
-    * persisted: three consumers read them (the round-12 A/B kept the
-    * persist over recomputing the shuffle per consumer).
+  /** Eagerly materializes the query-bounded result via
+    * localCheckpoint so the postings cache can be released before the
+    * frame is consumed. The postings are persisted: three consumers
+    * read them (the round-12 A/B kept the persist over recomputing the
+    * shuffle per consumer).
     */
-  def bm25On(docs: DataFrame, checkpoint: Boolean = true): DataFrame = {
+  def bm25On(docs: DataFrame): DataFrame = {
     val tf = postings(docs).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
       val dfreq = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
       val stats = dl.agg(sum(col("dl")).as("tot_dl"), count(lit(1)).as("n_docs"))
-      bm25ScoreAll(tf, dl, dfreq, stats, checkpoint)
-    } finally { if (checkpoint) { tf.unpersist(); () } }
+      bm25ScoreAll(tf, dl, dfreq, stats)
+    } finally { tf.unpersist(); () }
   }
 
   /** The shared BM25 scoring tail over explicit index relations —
@@ -102,7 +101,7 @@ object Retrieval {
     * two entries share one oracle.
     */
   private def bm25ScoreAll(tf: DataFrame, dl: DataFrame, dfreq: DataFrame,
-      statsRaw: DataFrame, checkpoint: Boolean): DataFrame = {
+      statsRaw: DataFrame): DataFrame = {
     import tf.sparkSession.implicits._
     import graft.functions.TypedAggregators.{TopK => TopKAgg}
     // long total / long count: avgdl is ONE exact-input division
@@ -143,8 +142,7 @@ object Retrieval {
       .select(col("query_id"), posexplode(col("top")))
       .select(col("query_id"), (col("pos") + 1).cast("long").as("rank"),
         col("col._2").as("doc_id"), (col("col._1") / lit(Fp)).as("score"))
-    (if (checkpoint) out.localCheckpoint() else out)
-      .orderBy(col("query_id"), col("rank"))
+    out.localCheckpoint().orderBy(col("query_id"), col("rank"))
   }
 
   /** INCREMENTAL BM25 — postings-index MAINTENANCE under ingest, the
@@ -219,16 +217,14 @@ object Retrieval {
   }
 
   /** The retraction body on explicit stored tables — exposed so the
-    * spec can prove retracted == rebuilt on arbitrary tombstone sets
-    * and the plan audit can pin "no text ever scanned".
+    * spec can prove retracted == rebuilt on arbitrary tombstone sets.
     */
   private[graft] def retractBm25From(storedTf: DataFrame, storedDl: DataFrame,
       storedDf: DataFrame, storedStats: DataFrame,
-      tombstones: DataFrame, checkpoint: Boolean = true): DataFrame = {
+      tombstones: DataFrame): DataFrame = {
     // the tombstone id list: four consumers (two anti-joins, two
     // semi-joins) — pin it
-    val tomb0 = tombstones.toDF("doc_id")
-    val tomb = if (checkpoint) tomb0.localCheckpoint() else tomb0
+    val tomb = tombstones.toDF("doc_id").localCheckpoint()
     // the deleted docs' own index rows are the ONLY delta source —
     // retraction never touches text
     val deadTf = storedTf.join(tomb, Seq("doc_id"), "left_semi")
@@ -248,16 +244,15 @@ object Retrieval {
       .unionByName(deadDl.agg((-sum(col("dl"))).as("tot_dl"),
         (-count(lit(1))).as("n_docs")))
       .agg(sum(col("tot_dl")).as("tot_dl"), sum(col("n_docs")).as("n_docs"))
-    bm25ScoreAll(tf, dl, dfreq, stats, checkpoint)
+    bm25ScoreAll(tf, dl, dfreq, stats)
   }
 
   /** The merge body on explicit stored tables — exposed so the spec
-    * can prove maintained == rebuilt on arbitrary splits and the plan
-    * audit can pin "base text never tokenized" on the un-pinned frame.
+    * can prove maintained == rebuilt on arbitrary splits.
     */
   private[graft] def deltaBm25From(storedTf: DataFrame, storedDl: DataFrame,
       storedDf: DataFrame, storedStats: DataFrame,
-      batch: DataFrame, checkpoint: Boolean = true): DataFrame = {
+      batch: DataFrame): DataFrame = {
     // the ingest's only wide work: one tokenization pass over the
     // batch text (three consumers — postings append, df delta, dl
     // delta — so pin it)
@@ -275,7 +270,7 @@ object Retrieval {
         .unionByName(batchDl.agg(sum(col("dl")).as("tot_dl"),
           count(lit(1)).as("n_docs")))
         .agg(sum(col("tot_dl")).as("tot_dl"), sum(col("n_docs")).as("n_docs"))
-      bm25ScoreAll(tf, dl, dfreq, stats, checkpoint)
+      bm25ScoreAll(tf, dl, dfreq, stats)
     } finally { batchTf.unpersist(); () }
   }
 
@@ -389,7 +384,7 @@ object Retrieval {
       stats.write.mode("overwrite").parquet(s"$path/stats")
     }
     val (tf, dl, dfq, stats) = readBm25Commits(spark, Seq(fold))
-    bm25ScoreAll(tf, dl, dfq, stats, checkpoint = true)
+    bm25ScoreAll(tf, dl, dfq, stats)
   }
 
   /** Default phrase for the graded [[phraseSearch]] entry — present in
@@ -768,8 +763,7 @@ object Retrieval {
   def dsirWeights(spark: SparkSession, dir: String): DataFrame =
     dsirWeightsOn(Tables.documents(spark, dir))
 
-  /** checkpoint=false for plan audits, as in [[bm25On]]. */
-  def dsirWeightsOn(docs: DataFrame, checkpoint: Boolean = true): DataFrame = {
+  def dsirWeightsOn(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val isTarget = col("source").isInCollection(DsirTargetSources)
     val tagged = docs.select(col("doc_id"), isTarget.as("is_target"))
@@ -805,9 +799,8 @@ object Retrieval {
           .withColumn("rank", row_number().over(w).cast("long"))
           .select(col("rank"), col("doc_id"), col("dl"), col("score_fp"),
             (col("score_fp").cast("double") / (col("dl").cast("double") * lit(Fp))).as("avg_lr"))
-        (if (checkpoint) out.localCheckpoint() else out)
-          .orderBy(col("rank"))
-      } finally { if (checkpoint) { counts.unpersist(); () } }
-    } finally { if (checkpoint) { tfTagged.unpersist(); () } }
+        out.localCheckpoint().orderBy(col("rank"))
+      } finally { counts.unpersist(); () }
+    } finally { tfTagged.unpersist(); () }
   }
 }

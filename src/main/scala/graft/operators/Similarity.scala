@@ -312,15 +312,20 @@ object Similarity {
     ivfKnnPruned(spark, dir, ivfCells(denseCountDir(spark, dir, "ivf sizing")), probes)
 
   /** Pruned serving over the full-fit `cells`-cell layout, shared by the
-    * √N-sized and the fixed-[[IvfExactCells]] tiers. The layout is a
-    * pure function of (corpus, cells), so its slot is named by `cells`.
+    * √N-sized and the fixed-[[IvfExactCells]] tiers. The centroids and
+    * the layout are pure functions of (corpus, cells), so their slots
+    * are named by `cells`: both are written once per corpus version
+    * and served ([[ivfServe]]) without refitting — the same rows as
+    * the in-memory fit ([[ivfExactAssignments]]), whose quantizer,
+    * assignment and probe plan they store.
     */
   private def ivfKnnPruned(spark: SparkSession, dir: String, cells: Int,
       probes: Int): DataFrame = {
-    val (corpus, probeCells) = ivfExactAssignments(spark,
-      Tables.embeddings(spark, dir), probes, cells)
-    prunedSearch(probeCells, Seq(graft.sources.Scratch.readParquetOnce(spark,
-      cellLayoutOnce(spark, dir, s"ivf_k$cells")(corpus))))
+    val e = Tables.embeddings(spark, dir)
+    val cents = graft.sources.Scratch.storedOnce(spark, dir, "embeddings",
+      s"ivf_k${cells}_centroids")(ivfFitCents(spark, e, cells))
+    ivfServe(spark, dir, cents,
+      Seq(cellLayoutOnce(spark, dir, s"ivf_k$cells")(ivfAssignTo(cents, e))), probes)
   }
 
   /** Cell count for [[ivfKnnExactOn]]. Fixed (not √N) so the DuckDB
@@ -438,14 +443,15 @@ object Similarity {
     */
   private[graft] def deltaBaseCount(n: Long): Long = n * 8 / 10
 
-  /** Fit the deterministic [[IvfExactCells]]-cell Lloyd quantizer over
-    * an embedding frame — the stored-centroid builder of the delta
-    * family (and the probe's fixed-seed stand-in).
+  /** Fit the deterministic `cells`-cell Lloyd quantizer over an
+    * embedding frame — the stored-centroid builder of every stored IVF
+    * layout (and the probe's fixed-seed stand-in).
     */
-  private[graft] def ivfFitCents(spark: SparkSession, e: DataFrame): DataFrame = {
+  private[graft] def ivfFitCents(spark: SparkSession, e: DataFrame,
+      cells: Int): DataFrame = {
     val q = quantizedX(unitized(e))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try lloydRounds(spark, q, IvfExactCells).localCheckpoint()
+    try lloydRounds(spark, q, cells).localCheckpoint()
     finally { q.unpersist(); () }
   }
 
@@ -519,7 +525,7 @@ object Similarity {
       e.filter(col("vec_id") >= n * lo / 10 && col("vec_id") < n * hi / 10)
     val fit = s"ivf_fit${ends.head}"
     val cents = graft.sources.Scratch.storedOnce(spark, dir, "embeddings",
-      s"${fit}_centroids")(ivfFitCents(spark, ids(0, ends.head)))
+      s"${fit}_centroids")(ivfFitCents(spark, ids(0, ends.head), IvfExactCells))
     (cents, graft.sources.Commits.chain(spark, dir, "embeddings", s"${fit}_cells",
       ends) { (lo, hi, path) =>
       writeConsolidated(ivfAssignTo(cents, ids(lo, hi)), "cell", path)
@@ -739,7 +745,7 @@ object Similarity {
       probes: Int = 3): DataFrame = {
     val n = denseCount(e, "delta IVF")
     val b = deltaBaseCount(n)
-    val cents = ivfFitCents(spark, e.filter(col("vec_id") < b))
+    val cents = ivfFitCents(spark, e.filter(col("vec_id") < b), IvfExactCells)
     val corpus = ivfAssignTo(cents, e.filter(col("vec_id") < b))
       .unionByName(ivfAssignTo(cents, e.filter(col("vec_id") >= b)))
     val probeCells = ivfProbePlan(e.filter(col("vec_id") < NumQueries),

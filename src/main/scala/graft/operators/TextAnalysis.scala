@@ -335,11 +335,8 @@ object TextAnalysis {
   def lmTypicality(spark: SparkSession, dir: String): DataFrame =
     lmTypicalityOn(Tables.documents(spark, dir))
 
-  /** Operator form over any (doc_id, text) relation. checkpoint=false
-    * exists for plan audits only (the checkpointed plan is a bare RDD
-    * scan that hides the dataflow under audit).
-    */
-  def lmTypicalityOn(docs: DataFrame, checkpoint: Boolean = true): DataFrame = {
+  /** Operator form over any (doc_id, text) relation. */
+  def lmTypicalityOn(docs: DataFrame): DataFrame = {
     val positions = when(size(col("toks")) >= 2,
       sequence(lit(1), size(col("toks")) - 1))
       .otherwise(array().cast("array<int>"))
@@ -366,8 +363,7 @@ object TextAnalysis {
             .as("avg_freq"))
       // materialize the tiny per-doc result so downstream consumers
       // don't re-run the corpus passes
-      (if (checkpoint) scored.localCheckpoint() else scored)
-        .orderBy(col("doc_id"))
+      scored.localCheckpoint().orderBy(col("doc_id"))
     }
   }
 
@@ -910,15 +906,9 @@ object TextAnalysis {
   /** The stored-index probe: batch membership = docs absent from the
     * stored sizes table (production's "not yet ingested" — equals the
     * fixture's md5 rule because the index was built from it).
-    * checkpoint=false exists for plan audits only (the lexicalCosineOn
-    * convention): the pinned frames otherwise hide the ingest dataflow
-    * behind RDD scans.
     */
   private[graft] def deltaWinnowPairsFrom(basePost: DataFrame,
-      baseSizes: DataFrame, baseDf: DataFrame, docs: DataFrame,
-      checkpoint: Boolean = true): DataFrame = {
-    def pin(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint() else df
+      baseSizes: DataFrame, baseDf: DataFrame, docs: DataFrame): DataFrame = {
     // DEGENERATE-DOC CAVEAT on "absent == not yet ingested": a base
     // doc too short to yield ANY fingerprint has no sizes row, so this
     // anti-join reclassifies it as batch on every ingest. Harmless for
@@ -930,8 +920,8 @@ object TextAnalysis {
     val batchDocs = docs.join(baseSizes.select(col("doc_id")),
       Seq("doc_id"), "left_anti")
     // the only text pass: the batch's map-only winnow selection
-    val bfps = pin(winnowSelect(batchDocs)
-      .select(col("doc_id"), col("fp")).distinct())
+    val bfps = winnowSelect(batchDocs)
+      .select(col("doc_id"), col("fp")).distinct().localCheckpoint()
     val bSizes = bfps.groupBy(col("doc_id")).agg(count(lit(1)).as("n_fps"))
     // union df for the batch's fingerprints only (a batch-touching
     // pair can't share anything else): stored df delta-applied
@@ -941,7 +931,7 @@ object TextAnalysis {
         (coalesce(col("dfa"), lit(0L)) + col("dfb")).as("df"))
       .filter(col("df") >= 2 && col("df") <= WinnowMaxDf)
       .select(col("fp"))
-    val keptB = pin(bfps.join(keep, Seq("fp"), "left_semi"))
+    val keptB = bfps.join(keep, Seq("fp"), "left_semi").localCheckpoint()
     // size-driven probe of the stored postings: with the md5 rule the
     // batch is corpus-PROPORTIONAL (~20%), so a forced broadcast of
     // `keep` re-creates the driver-collect abort the lexicalCosine

@@ -111,25 +111,41 @@ object Scratch {
     * (guide §2.6 — Spark happily schedules several jobs at once; the
     * builds here are small-parallelism stages that leave most cores
     * idle when run back to back). Blocks until all complete and
-    * returns their results in task order; the first
-    * failure is rethrown after every thread finishes — with every
-    * sibling failure attached as a suppressed throwable, so a shared
-    * root cause manifesting differently per thread keeps all its
-    * diagnostics — and a failed sibling cannot leave another build
+    * returns their results in task order. The first failure cancels
+    * the siblings' Spark jobs — each thread tags its jobs with a tag
+    * unique to this call, and every job still running under a tag, or
+    * started under one later, is cancelled until its thread ends (tags,
+    * not job groups: the caller's group stays on every job) — and is
+    * rethrown once every thread has finished, with every sibling
+    * failure attached as a suppressed throwable, so a shared root
+    * cause manifesting differently per thread keeps all its
+    * diagnostics, and a failed sibling cannot leave another build
     * half-observed. Use ONLY for builds with no data dependency on
     * each other (e.g. two ingest commits over disjoint doc splits).
     */
   def inParallel[T](tasks: (() => T)*): Seq[T] = {
+    val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext)
+    val call = s"graft-inParallel-${java.util.UUID.randomUUID()}"
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val out = new Array[Any](tasks.size)
     val threads = tasks.zipWithIndex.map { case (t, i) =>
       val th = new Thread(() =>
-        try out(i) = t() catch { case e: Throwable => errs.add(e); () })
+        try {
+          sc.foreach(_.addJobTag(s"$call-$i"))
+          out(i) = t()
+        } catch { case e: Throwable => errs.add(e); () })
       th.setDaemon(true)
       th.start()
       th
     }
-    threads.foreach(_.join())
+    threads.foreach { th =>
+      while (th.isAlive) {
+        th.join(100)
+        if (!errs.isEmpty)
+          for (c <- sc; i <- tasks.indices) c.cancelJobsWithTag(s"$call-$i")
+      }
+    }
     if (!errs.isEmpty) {
       val it = errs.iterator()
       val first = it.next()

@@ -36,21 +36,6 @@ class OutputSortSpec extends AnyFunSuite with SparkSessionTestWrapper {
     (rows, plan.toString)
   }
 
-  /** Jobs `f` runs, counted through a job group (SourcesSpec's pattern:
-    * a marker job in a second group is awaited before counting). */
-  private def jobsIn(s: SparkSession)(f: => Unit): Int = {
-    val sc = s.sparkContext
-    val group = s"output-sort-${System.nanoTime()}"
-    sc.setJobGroup(group, group)
-    try f finally sc.clearJobGroup()
-    sc.setJobGroup(s"$group-end", "marker")
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (sc.statusTracker.getJobIdsForGroup(s"$group-end").isEmpty &&
-        System.nanoTime() < deadline) Thread.sleep(10)
-    sc.statusTracker.getJobIdsForGroup(group).length
-  }
-
   for (q <- Seq("q_wordcount", "q_tpch_q5"))
     test(s"$q: the executed final plan sorts without a range exchange, same rows") {
       val (rows, plan) = run(session(rewrite = true), q)

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan audits: the properties that decide whether a plan
@@ -12,12 +14,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * asserted on the EXECUTED plans of the graded queries so a regression
   * fails loudly here instead of surfacing as a 10× slowdown at scale.
   */
-class PlanAuditSpec extends AnyFunSuite with SparkSessionTestWrapper {
+class PlanAuditSpec extends AnyFunSuite with SparkSessionTestWrapper
+    with AdaptiveSparkPlanHelper {
 
   private def planOf(q: String): String = {
     val df = SparkEntry.queries(q)(spark, sfDir)
     df.queryExecution.executedPlan.toString
   }
+
+  /** What adaptive execution ran: a pin's final plan, as a string. */
+  private def ran(pin: SparkPlan): String = stripAQEPlan(pin).toString
 
   test("q_filter_project: predicate pushed into the parquet scan, columns pruned") {
     val plan = planOf("q_filter_project")
@@ -197,13 +203,11 @@ class PlanAuditSpec extends AnyFunSuite with SparkSessionTestWrapper {
   }
 
   test("q_bloom_join: runtime bloom filter planted on the fact side, session conf restored") {
-    // audit path (checkpoint=false): the un-executed frame whose cached
-    // QueryExecution was forced inside the conf window — the graded
-    // default path executes this same plan eagerly, then checkpoints,
-    // so its own executed plan shows only the checkpoint scan
-    val plan = graft.operators.Relational
-      .bloomFilteredJoin(spark, sfDir, checkpoint = false)
-      .queryExecution.executedPlan.toString
+    // the graded operator executes the join inside its conf window
+    // through one pin; the graded frame itself shows only the
+    // checkpoint scan, so the audit reads the pin's executed plan
+    val plan = ran(pinsOf(graft.operators.Relational
+      .bloomFilteredJoin(spark, sfDir)).last)
     assert(plan.contains("bloom_filter_agg"),
       s"no bloom filter built from the filtered orders side:\n${plan.take(1500)}")
     assert(plan.contains("might_contain"),
@@ -218,20 +222,21 @@ class PlanAuditSpec extends AnyFunSuite with SparkSessionTestWrapper {
   }
 
   test("q_cbo_join: ANALYZE stats reorder the bad syntactic join order; CBO off keeps it") {
-    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.functions.{col, count, lit}
-    // innermost Join (exactly one Join in its own subtree = itself):
+    // innermost join (exactly one join in its own subtree = itself):
     // with CBO + stats it must hold customer⋈nation (no o_ columns);
     // orders — written FIRST — must have been pushed to the top join
-    def innerJoinCols(df: org.apache.spark.sql.DataFrame): Seq[String] = {
-      val joins = df.queryExecution.optimizedPlan
-        .collect { case j: Join => j }
+    def innerJoinCols(plan: SparkPlan): Seq[String] = {
+      val joins = collect(plan) { case j: BaseJoinExec => j }
       assert(joins.size === 2, s"expected 2 joins, got ${joins.size}")
-      joins.filter(_.collect { case x: Join => x }.size == 1)
+      joins.filter(j => collect(j) { case x: BaseJoinExec => x }.size == 1)
         .head.output.map(_.name)
     }
-    val cboCols = innerJoinCols(graft.operators.Relational
-      .cboStarJoin(spark, sfDir, checkpoint = false))
+    // the graded operator runs the join under its conf window through
+    // one pin: audit the join that pin executed
+    val cboCols = innerJoinCols(
+      pinsOf(graft.operators.Relational.cboStarJoin(spark, sfDir)).last)
     assert(!cboCols.exists(_.startsWith("o_")) &&
       cboCols.exists(_.startsWith("c_")) && cboCols.exists(_.startsWith("n_")),
       s"CBO did not reorder the selective dimension inward: $cboCols")
@@ -259,7 +264,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkSessionTestWrapper {
       .filter(col("n_name") === "NATION_7")
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_orders"))
-    val ctrlCols = innerJoinCols(ctrl)
+    val ctrlCols = innerJoinCols(ctrl.queryExecution.executedPlan)
     assert(ctrlCols.exists(_.startsWith("o_")),
       s"control without CBO unexpectedly reordered: $ctrlCols")
   }
@@ -299,12 +304,18 @@ class PlanAuditSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val saved = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh.toString)
     try {
-      def ordersJoinLines(df: org.apache.spark.sql.DataFrame): Seq[String] = {
-        df.queryExecution.sparkPlan.toString.linesIterator
+      // the static plan (before adaptive re-planning): the join choice
+      // the planner made from the statistics
+      def ordersJoinLines(plan: SparkPlan): Seq[String] = {
+        plan.toString.linesIterator
           .filter(l => l.contains("Join") && l.contains("o_custkey")).toSeq
       }
-      val cboLines = ordersJoinLines(graft.operators.Relational
-        .cboStarJoin4(spark, sfDir, checkpoint = false))
+      // the graded operator's pin ran its plan under the threshold
+      val cboLines = ordersJoinLines(pinsOf(graft.operators.Relational
+          .cboStarJoin4(spark, sfDir)).last match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      })
       assert(cboLines.exists(_.contains("BroadcastHashJoin")),
         s"CBO stats did not broadcast the dim composite into orders: $cboLines")
       // CONTROL — same tables, same threshold, CBO off: the composite's
@@ -319,7 +330,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkSessionTestWrapper {
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_orders"),
           round(sum(col("o_totalprice")), 2).as("revenue"))
-      val ctrlLines = ordersJoinLines(ctrl)
+      val ctrlLines = ordersJoinLines(ctrl.queryExecution.sparkPlan)
       assert(ctrlLines.nonEmpty && ctrlLines.forall(!_.contains("BroadcastHashJoin")),
         s"size-only control still broadcast the orders join: $ctrlLines")
     } finally {
@@ -413,11 +424,10 @@ class PlanAuditSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // on the train branch — if it silently drops out of the plan the
     // query still hash-matches (lossless!) but the 100 TB scan benefit
     // is gone, which only this audit would catch. Audited on the
-    // pre-checkpoint dataflow (the operator checkpoints its result).
+    // executed plan of the operator's result pin.
     import graft.operators.Dedup
     val docs = graft.tables.Tables.documents(spark, sfDir)
-    val plan = Dedup.decontaminationWith(docs, Dedup.bloomPrefilter, checkpoint = false)
-      .queryExecution.executedPlan.toString
+    val plan = ran(pinsOf(Dedup.decontaminationBloomOn(docs)).last)
     assert(plan.contains("might_contain"),
       s"bloom probe missing from plan:\n${plan.take(1500)}")
   }
@@ -425,9 +435,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkSessionTestWrapper {
   test("q_lm_typicality: vocabulary aggregation has a map-side partial phase") {
     import graft.operators.TextAnalysis
     val docs = graft.tables.Tables.documents(spark, sfDir)
-    val df = TextAnalysis.lmTypicalityOn(docs, checkpoint = false)
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = ran(pinsOf(TextAnalysis.lmTypicalityOn(docs)).last)
     // partial_count before the exchange = map-side combine on the
     // bigram vocabulary groupBy
     assert(plan.contains("partial_count") || plan.contains("partial count"),
@@ -496,20 +504,23 @@ class PlanAuditSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // table — see the pushdown note in Pipeline); after it, corpus
     // access goes through the in-memory stage frames, whose single
     // backing scan (the semi join carrying survivors' text) runs once.
-    // The audit runs the pre-checkpoint dataflow (checkpoint=false
-    // keeps the persists live) and asserts NO direct parquet scan
-    // survives in the final plan.
+    // The audit reads every pin after the decision pass and asserts NO
+    // parquet scan ran outside a persisted frame's cached plan.
     import graft.operators.Pipeline
     import org.apache.spark.sql.execution.FileSourceScanExec
     spark.catalog.clearCache()
     try {
       val docs = graft.tables.Tables.documents(spark, sfDir)
-      val df = Pipeline.curationPipelineOn(docs, checkpoint = false)
-      val direct = df.queryExecution.executedPlan.collect {
-        case f: FileSourceScanExec => f
+      val decision +: stages = pinsOf(Pipeline.curationPipelineOn(docs))
+      assert(stages.nonEmpty, "no pin after the decision pass")
+      // the decision pass is the one pin that reads the corpus files
+      assert(collect(decision) { case f: FileSourceScanExec => f }.nonEmpty,
+        s"the decision pass scan is not in its pin's plan:\n$decision")
+      for (pin <- stages) {
+        val direct = collect(pin) { case f: FileSourceScanExec => f }
+        assert(direct.isEmpty,
+          s"stage re-scans the corpus directly: ${direct.map(_.nodeName)}\n$pin")
       }
-      assert(direct.isEmpty,
-        s"stage re-scans the corpus directly: ${direct.map(_.nodeName)}")
     } finally { spark.catalog.clearCache(); () }
   }
 
@@ -629,21 +640,19 @@ class PlanAuditSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // the candidate/dot side is output-bounded; the corpus-sized tf
     // and norms relations must stream past broadcast build sides
     // (cand → both tf joins, dots → both norm joins); audit the
-    // un-checkpointed plan — checkpoints hide the joins
+    // executed plan of the output pin, where those joins run
     val docs = graft.tables.Tables.documents(spark, sfDir)
-    val plan = graft.operators.Dedup.lexicalCosineOn(docs, checkpoint = false)
-      .queryExecution.executedPlan.toString
+    val plan = ran(pinsOf(graft.operators.Dedup.lexicalCosineOn(docs)).last)
     val bhj = "BroadcastHashJoin".r.findAllIn(plan).size
     assert(bhj >= 4, s"expected pair-side broadcasts on dot+norm joins, got $bhj")
   }
 
   test("q_bm25: query terms broadcast into the postings probe; postings reused") {
-    // audit the un-checkpointed dataflow — the snapshot hides the joins
+    // audit the executed plan of the result pin — the snapshot hides
+    // the joins
     val docs = graft.tables.Tables.documents(spark, sfDir)
-    val df = graft.operators.Retrieval.bm25On(docs, checkpoint = false)
     try {
-      df.collect()
-      val plan = df.queryExecution.executedPlan.toString
+      val plan = ran(pinsOf(graft.operators.Retrieval.bm25On(docs)).last)
       assert(plan.contains("BroadcastHashJoin"), plan.take(1200))
       // the persisted postings table serves dl/df/probe without re-scan
       assert(plan.contains("InMemoryTableScan"),
@@ -653,9 +662,8 @@ class PlanAuditSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   test("q_dsir: top-N selection is TakeOrderedAndProject, not a global window") {
     val docs = graft.tables.Tables.documents(spark, sfDir)
-    val df = graft.operators.Retrieval.dsirWeightsOn(docs, checkpoint = false)
     try {
-      val plan = df.queryExecution.executedPlan.toString
+      val plan = ran(pinsOf(graft.operators.Retrieval.dsirWeightsOn(docs)).last)
       assert(plan.contains("TakeOrderedAndProject"),
         s"corpus-wide rank should be a distributed top-N:\n${plan.take(1200)}")
     } finally spark.catalog.clearCache()
@@ -930,17 +938,12 @@ class PlanAuditSpec extends AnyFunSuite with SparkSessionTestWrapper {
   }
 
   test("q_delta_lexical_cosine: stored index read back as parquet; no all-pairs degeneration") {
-    // the graded entry pins its output; audit the output-unpinned
-    // form (checkpoint=false) so the verify stage's dataflow shows
+    // the graded entry pins its stages and output; a warm build (the
+    // stored index already written) is audited on every pin's executed
+    // plan, where the verify stage's dataflow shows
     assert(SparkEntry.queries("q_delta_lexical_cosine")(spark, sfDir).count() > 0)
-    val Seq(root) = graft.operators.Dedup.lexCommits(spark, sfDir)
-    val plan = graft.operators.Dedup.deltaLexicalCosineFrom(
-        spark.read.parquet(s"$root/tf"),
-        spark.read.parquet(s"$root/norms"),
-        spark.read.parquet(s"$root/shingles"),
-        spark.read.parquet(s"$root/df"),
-        graft.tables.Tables.documents(spark, sfDir), checkpoint = false)
-      .queryExecution.executedPlan.toString
+    val plan = pinsOf(SparkEntry.queries("q_delta_lexical_cosine")(spark, sfDir))
+      .map(ran).mkString("\n")
     assert(plan.linesIterator.exists(l =>
         l.contains("FileScan parquet") && l.contains("norm2")),
       s"stored norms not read from parquet:\n${plan.take(1500)}")

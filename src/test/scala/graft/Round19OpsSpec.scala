@@ -109,17 +109,10 @@ class Round19OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   test("delta BM25 plan: batch is the only tokenization; stored tables read back") {
     import graft.operators.Retrieval
-    // graded entry once: materializes the stored four-table index
+    // graded entry once: materializes the stored four-table index; the
+    // warm build's pins then hold the whole query-time dataflow
     assert(Retrieval.deltaBm25(spark, sfDir).count() > 0)
-    val Seq(root) = Retrieval.bm25Commits(spark, sfDir, Seq(8))
-    val docs = graft.tables.Tables.documents(spark, sfDir)
-    val plan = Retrieval.deltaBm25From(
-        spark.read.parquet(s"$root/postings"),
-        spark.read.parquet(s"$root/dl"),
-        spark.read.parquet(s"$root/df"),
-        spark.read.parquet(s"$root/stats"),
-        docs.filter(col("doc_id") % 10 >= 8), checkpoint = false)
-      .queryExecution.executedPlan.toString
+    val plan = pinsOf(Retrieval.deltaBm25(spark, sfDir)).mkString("\n")
     // the ONLY tokenization lineage is the batch's: every explode in
     // the plan sits above the batch-split filter (the persisted batch
     // postings print once per consumer, so a count would overstate;

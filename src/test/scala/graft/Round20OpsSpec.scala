@@ -212,7 +212,8 @@ class Round20OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
       (i.toLong, c.map(x => x + 0.3f * rnd.nextGaussian().toFloat))
     }.toDF("vec_id", "embedding").localCheckpoint()
     val b = 600L * 8 / 10
-    val cents = Similarity.ivfFitCents(spark, fresh.filter(col("vec_id") < b))
+    val cents = Similarity.ivfFitCents(spark, fresh.filter(col("vec_id") < b),
+      Similarity.IvfExactCells)
     val layout = Similarity.ivfAssignTo(cents, fresh).localCheckpoint()
     val freshRecall = Similarity.measuredIvfRecall(spark, fresh, cents,
       Seq(layout), b, 16, probes = 3)
@@ -231,7 +232,8 @@ class Round20OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
       (i.toLong, Array.fill(64)(drnd.nextGaussian().toFloat))
     }.toDF("vec_id", "embedding").localCheckpoint()
     val db = 600L * 8 / 10
-    val dCents = Similarity.ivfFitCents(spark, de.filter(col("vec_id") < db))
+    val dCents = Similarity.ivfFitCents(spark, de.filter(col("vec_id") < db),
+      Similarity.IvfExactCells)
     val dLayout = Similarity.ivfAssignTo(dCents, de).localCheckpoint()
     val driftRecall = Similarity.measuredIvfRecall(spark, de, dCents,
       Seq(dLayout), db, 16, probes = 3)
@@ -242,18 +244,10 @@ class Round20OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   test("retraction plan: index-only — no corpus scan, no tokenization anywhere") {
     import graft.operators.Retrieval
-    // graded entry once: materializes the stored four-table index
+    // graded entry once: materializes the stored four-table index; the
+    // warm build's pins then hold the whole query-time dataflow
     assert(Retrieval.retractBm25(spark, sfDir).count() > 0)
-    val Seq(root) = Retrieval.bm25Commits(spark, sfDir, Seq(8))
-    val storedDl = spark.read.parquet(s"$root/dl")
-    val plan = Retrieval.retractBm25From(
-        spark.read.parquet(s"$root/postings"),
-        storedDl,
-        spark.read.parquet(s"$root/df"),
-        spark.read.parquet(s"$root/stats"),
-        storedDl.filter(col("doc_id") % 10 === 7).select(col("doc_id")),
-        checkpoint = false)
-      .queryExecution.executedPlan.toString
+    val plan = pinsOf(Retrieval.retractBm25(spark, sfDir)).mkString("\n")
     // the retraction's whole dataflow is stored-table scans + joins +
     // delta-applies: the corpus parquet is NEVER opened and no
     // tokenization explode exists anywhere in the plan (the only

@@ -122,6 +122,23 @@ class SimilaritySpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(pf.contains("cell"), s"partition filter does not prune cell: $pf")
   }
 
+  test("ivfKnnExactMaterialized: a warm build serves stored centroids, no Lloyd refit") {
+    // q_delta_knn_ivf already serves its stored centroids; a refit would
+    // add one collect per Lloyd round on every warm build. The session
+    // writes slots of its own: rewriting the shared session's would
+    // change files under its memoized read-backs.
+    val s = spark.newSession()
+    s.conf.set("graft.scratch.dir",
+      java.nio.file.Files.createTempDirectory("graft-ivf-warm").toString)
+    def warmJobs(q: String): Int = {
+      SparkEntry.queries(q)(s, sfDir)
+      jobsIn(s)(SparkEntry.queries(q)(s, sfDir))
+    }
+    val delta = warmJobs("q_delta_knn_ivf")
+    val exact = warmJobs("q_knn_ivf_exact_pruned")
+    assert(exact <= delta, s"warm exact-pruned build ran $exact jobs, delta IVF $delta")
+  }
+
   test("pqKnn: recall@5 on clustered data (codebook quality) and determinism") {
     // the planted-cluster corpus of the other quantizer-quality tests:
     // 8×16 codebooks + ADC + rerank must recover most true neighbors

@@ -116,6 +116,21 @@ class SourcesSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(runs === 2)
   }
 
+  test("inParallel: the first failure cancels a sibling's running Spark job") {
+    val sc = spark.sparkContext
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException] {
+      Scratch.inParallel(
+        () => throw new IllegalStateException("boom"),
+        // 4 tasks of 200 rows at 50 ms a row: 10 s uncancelled
+        () => sc.parallelize(1 to 800, 4).map { i => Thread.sleep(50); i }.count())
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(e.getMessage === "boom")
+    assert(secs < 5, f"rethrown after $secs%.1f s: the sibling's job ran on")
+    assert(sc.parallelize(1 to 4, 2).count() === 4)
+  }
+
   test("readParquetOnce: memoized per session, a new session reads its own frame") {
     val dir = java.nio.file.Files.createTempDirectory("graft-memo").toString + "/t"
     spark.range(3).write.parquet(dir)
@@ -130,22 +145,6 @@ class SourcesSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   // Tables.schemaOf: each source table's schema is inferred once per
   // session and file version; every load is still a fresh scan.
-
-  /** Jobs `f` runs, counted through a job group. Listener events arrive
-    * asynchronously and in order, so a marker job in a second group is
-    * awaited before the first group is counted. */
-  private def jobsIn(s: org.apache.spark.sql.SparkSession)(f: => Unit): Int = {
-    val sc = s.sparkContext
-    val group = freshKey("jobs")
-    sc.setJobGroup(group, group)
-    try f finally sc.clearJobGroup()
-    sc.setJobGroup(s"$group-end", "marker")
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (sc.statusTracker.getJobIdsForGroup(s"$group-end").isEmpty &&
-        System.nanoTime() < deadline) Thread.sleep(10)
-    sc.statusTracker.getJobIdsForGroup(group).length
-  }
 
   test("schemaOf: a query's first build infers each table it reads once; a rebuild runs no job") {
     val s = spark.newSession()

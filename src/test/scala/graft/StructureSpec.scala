@@ -13,7 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * keyed by an identity hash (session state lives in
   * [[graft.sources.Scratch.once]]), and operators store artifacts only
   * through the slot policy and the commit chain
-  * ([[graft.sources.Scratch.slotOnce]], [[graft.sources.Commits.chain]]).
+  * ([[graft.sources.Scratch.slotOnce]], [[graft.sources.Commits.chain]]),
+  * and every operator has one code path: no switch turns its pins off
+  * (plan audits read the pins' executed plans, [[graft.plan.PinPlans]]).
   */
 class StructureSpec extends AnyFunSuite {
   private lazy val sources: Seq[(Path, String)] = {
@@ -45,6 +47,13 @@ class StructureSpec extends AnyFunSuite {
   test("exactly one planner-strategy install site") {
     val sites = sitesOf("""experimental\s*\.\s*extraStrategies\s*=(?!=)""")
     assert(sites.size === 1, sites)
+  }
+
+  test("no pin-off switch: one code path per operator, no unpinned twin queries") {
+    val switches = sitesOf("""checkpoint\s*:\s*Boolean|if\s*\(\s*checkpoint\s*\)""")
+    assert(switches.isEmpty, switches)
+    val twins = sitesOf(""""x_\w+"""").filter(_.contains("ExplainOne.scala"))
+    assert(twins.isEmpty, twins)
   }
 
   test("no state keyed by an identity hash") {
