@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.graft.ListenerBus
 import scala.collection.mutable
 
 /** Dev profiling tool (guide §1/§7, UI-less sandbox twin): run named
@@ -59,7 +60,7 @@ object ProfOne {
         LocalSession.exec(spark, sfDir, name)
         val dt = (System.nanoTime() - t0) / 1e9
         spark.catalog.clearCache()
-        Thread.sleep(300) // let the listener bus drain before reading
+        ListenerBus.drain(spark.sparkContext)
         println(f"\n=== PROF $name pass=$pass total=$dt%.2f s ===")
         val snap = jobs.synchronized { jobs.values.toSeq }
         val nJobs = snap.size

@@ -26,695 +26,23 @@ object SparkEntry {
     * outputs in one task too.
     */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    builders.map { case (name, build) =>
-      name -> ((s: SparkSession, dir: String) => { OutputSort.install(s); build(s, dir) })
+    registry.map { case (name, q) =>
+      name -> ((s: SparkSession, dir: String) => { OutputSort.install(s); q.build(s, dir) })
     }
 
-  private lazy val builders: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // — core relational (SURVEY.md §2.2 scans/filter/agg/join/sort/set) —
-    "q_pricing_summary" -> (Relational.pricingSummary _),
-    "q_filter_project"  -> (Relational.filterProject _),
-    "q_join_agg"        -> (Relational.joinAgg _),
-    "q_join_broadcast"  -> (Relational.joinBroadcast _),
-    "q_semi_join"       -> (Relational.semiJoin _),
-    "q_anti_join"       -> (Relational.antiJoin _),
-    "q_outer_join"      -> (Relational.outerJoin _),
-    "q_full_outer"      -> (Relational.fullOuterJoin _),
-    "q_cross_join"      -> (Relational.crossJoinSmall _),
-    "q_typed_topk"      -> (Relational.typedTopK _),
-    "q_range_join"      -> (Relational.rangeJoin _),
-    "q_topk"            -> (Relational.topK _),
-    "q_sort"            -> (Relational.distributedSort _),
-    "q_intersect"       -> (Relational.intersectCustomers _),
-    "q_except"          -> (Relational.exceptCustomers _),
-    "q_union_distinct"  -> (Relational.unionDistinct _),
-    "q_distinct_agg"    -> (Relational.distinctAgg _),
-    "q_approx_distinct" -> (Relational.approxDistinctAgg _),
-    "q_hll_sketch"      -> (Relational.hllSketchRollup _),
-    "q_rollup"          -> (Relational.rollupAgg _),
-    "q_grouping_sets"   -> (Relational.groupingSetsAgg _),
-    "q_unpivot"         -> (Relational.unpivotMeasures _),
-    // VARIANT (Spark 4.x): parse_json once, typed variant_get access
-    "q_variant"         -> (Scalars.variantFuncs _),
-    "q_exists_subquery" -> (Relational.existsSubquery _),
-    "q_cube"            -> (Relational.cubeAgg _),
-    "q_case_when"       -> (Relational.caseWhenAgg _),
-    "q_argmax"          -> (Relational.argMaxAgg _),
-    "q_embedding_stats" -> (Similarity.embeddingStats _),
-    "q_asof_join"       -> (Relational.asofJoin _),
-    "q_pivot"           -> (Relational.pivotAgg _),
-    "q_percentile"      -> (Relational.percentileAgg _),
-    // single-pass co-moment family: stddev/var/corr/covar/regr_slope
-    "q_stats_agg"       -> (Relational.statsAgg _),
-    // Deequ-style constraint report: one scan pass + one FK anti-join
-    "q_data_quality"    -> (Relational.dataQuality _),
-    // Z-order (Morton) clustering key for multi-column data skipping
-    "q_zorder"          -> (Relational.zorderKey _),
-    // the GK-sketch twin of q_percentile (mergeable, sort-free — the
-    // 100 TB form; approximate -> rows-only, bounds pinned in spec)
-    "q_approx_percentile" -> (Relational.approxPercentileAgg _),
-    // — window functions —
-    "q_window_rank"     -> (Windows.windowRank _),
-    "q_window_distribution" -> (Windows.windowDistribution _),
-    "q_window_running"  -> (Windows.windowRunning _),
-    "q_window_range"    -> (Windows.windowRange _),
-    "q_group_topk"      -> (Windows.groupTopK _),
-    "q_gap_fill"        -> (Windows.gapFill _),
-    "q_salted_wordcount" -> (Skew.saltedWordCount _),
-    "q_salted_join"      -> (Skew.saltedJoinBrand _),
-    // — scalar function groups —
-    "q_string_funcs"    -> (Scalars.stringFuncs _),
-    // Levenshtein top-3 fuzzy entity matching (integer distances)
-    "q_fuzzy_match"     -> (Scalars.fuzzyMatch _),
-    "q_date_funcs"      -> (Scalars.dateFuncs _),
-    "q_math_funcs"      -> (Scalars.mathFuncs _),
-    "q_json"            -> (Scalars.jsonFuncs _),
-    "q_map_funcs"       -> (Scalars.mapFuncs _),
-    "q_null_safe_join"  -> (Scalars.nullSafeJoin _),
-    "q_grep"            -> (Scalars.grep _),
-    "q_profile"         -> (Scalars.profile _),
-    "q_histogram"       -> (Scalars.histogram _),
-    // — text analysis / word count (the reference application) —
-    "q_wordcount"       -> (TextAnalysis.wordCount _),
-    "q_mapreduce_wordcount" -> ((s: SparkSession, dir: String) => {
-      import s.implicits._
-      val texts = Tables.documents(s, dir).select(col("text")).as[String]
-      MapReduceJob.wordCount(s, texts).toDF("word", "cnt").orderBy(col("word"))
-    }),
-    "q_inverted_index"  -> (TextAnalysis.invertedIndex _),
-    // the reference's literal text-dir input surface (S1/S2), graded:
-    "q_text_wordcount"  -> (TextAnalysis.textDirWordCount _),
-    "q_text_stats"      -> (TextAnalysis.textDirStats _),
-    // partitioned sink round-trip (K1 generalization), graded:
-    "q_sink_roundtrip"  -> (graft.sources.Sinks.partitionedRoundTrip _),
-    // bucketed (co-located join) storage round-trip, graded:
-    "q_bucketed_join"   -> (graft.sources.Sinks.bucketedJoinRoundTrip _),
-    // dynamic-partition-pruned star join over a partitioned landing:
-    "q_dpp_join"        -> (graft.sources.Sinks.dppJoinRoundTrip _),
-    // small-file compaction (storage maintenance), losslessness graded:
-    "q_compaction"      -> ((s: SparkSession, d: String) =>
-      graft.sources.Sinks.compactionRoundTrip(s, d)),
-    // runtime Bloom-filter shuffle reduction (merge-hinted fact join);
-    // the default path executes the filtered plan under the conf
-    // window via eager checkpoint (a write would re-plan without it)
-    "q_bloom_join"      -> ((s: SparkSession, d: String) => Relational.bloomFilteredJoin(s, d)),
-    // cost-based join reorder driven by ANALYZE TABLE statistics (the
-    // stats/CBO surface: no hints — the optimizer re-orders a
-    // deliberately bad syntactic join order from column stats)
-    "q_cbo_join"        -> ((s: SparkSession, d: String) => Relational.cboStarJoin(s, d)),
-    // the second CBO lever: stats-driven BROADCAST of the dimension
-    // composite (4-relation star, no hints — PlanAuditSpec asserts
-    // BHJ-with-stats vs SMJ-without on the orders join)
-    "q_cbo_broadcast"   -> ((s: SparkSession, d: String) => Relational.cboStarJoin4(s, d)),
-    // text-format (CSV) sink/source round-trip, graded:
-    "q_json_roundtrip"  -> (graft.sources.Sinks.jsonRoundTrip _),
-    "q_orc_roundtrip"   -> (graft.sources.Sinks.orcRoundTrip _),
-    "q_csv_roundtrip"   -> (graft.sources.Sinks.csvRoundTrip _),
-    // multiset set-ops (the ALL variants keep duplicates):
-    "q_intersect_all"   -> (Relational.intersectAllParts _),
-    "q_except_all"      -> (Relational.exceptAllParts _),
-    "q_tfidf"           -> (TextAnalysis.tfidf _),
-    "q_bigrams"         -> (TextAnalysis.wordBigrams _),
-    // distributed BPE tokenizer training: vocabulary-bounded merge
-    // rounds over exact word counts; rules are O(1) model state
-    "q_bpe_merges"      -> (Tokenizer.bpeMerges _),
-    // the learned merges applied corpus-wide (per-doc token counts)
-    "q_bpe_tokenize"    -> (Tokenizer.bpeTokenize _),
-    // PMI lift of count>=3 bigrams — phrase-vocabulary induction
-    "q_pmi"             -> (TextAnalysis.pmiCollocations _),
-    "q_heavy_hitters"   -> (TextAnalysis.heavyHitters _),
-    "q_token_count"     -> (TextAnalysis.tokenCount _),
-    "q_text_quality"    -> (TextAnalysis.textQuality _),
-    "q_lang_id"         -> (TextAnalysis.langId _),
-    // PII scrub (emails/phones/IPs -> typed tokens + audit counts);
-    // synthetic PII injected deterministically from doc_id on BOTH
-    // sides, so the hash match grades the redaction regexes themselves
-    "q_redact_pii"      -> (TextAnalysis.redactPii _),
-    "q_fingerprint"     -> (TextAnalysis.fingerprint _),
-    // robust winnowing (MOSS): rightmost-min fingerprint per hash
-    // window — the sublinear near-dup index (density ~2/(W+1))
-    "q_winnow"          -> (TextAnalysis.winnowFingerprints _),
-    // the MOSS decision layer: df-capped posting-list pair join over
-    // the winnowed index, containment >= half the smaller side
-    "q_winnow_pairs"    -> (TextAnalysis.winnowPairs _),
-    // INCREMENTAL winnow near-dup: batch fingerprints probe the stored
-    // postings with delta-applied union df; existing-vs-existing never
-    // enumerated (== the full pair set restricted to touching batch)
-    "q_delta_winnow_pairs" -> (TextAnalysis.deltaWinnowPairs _),
-    // RETRACTION: tombstoned ids removed from the stored winnow triple
-    // by anti-joins + negative df delta-applies — no text read; the
-    // retracted index re-runs the full MOSS chain and equals the
-    // rebuild over the surviving docs
-    "q_retract_winnow_pairs" -> (TextAnalysis.retractWinnowPairs _),
-    // MULTI-INGEST: two stored winnow commits + a live third —
-    // delta(delta(base,b1),b2) finds exactly the full chain's
-    // batch-touching pairs (shares the single-delta oracle)
-    "q_delta2_winnow_pairs" -> (TextAnalysis.delta2WinnowPairs _),
-    // COMPACTION: N commits folded to one stored triple, full MOSS
-    // chain served from the fold — shares q_winnow_pairs' oracle
-    "q_compact_winnow_pairs" -> (TextAnalysis.compactWinnowPairs _),
-    // the same selection as a STATELESS streaming projection (per-doc
-    // pure function -> no state, no shuffle); shares q_winnow's oracle
-    "q_stream_winnow"   -> (graft.streaming.DocumentStreams.streamedWinnow _),
-    "q_repetition"      -> (TextAnalysis.repetitionScore _),
-    // C4-style corpus-wide boilerplate strip + document REASSEMBLY
-    // (the cleaned corpus as output, not a flag report)
-    "q_boilerplate"     -> (TextAnalysis.removeBoilerplate _),
-    // bigram-LM typicality: the statistical quality screen (mean corpus
-    // frequency of a doc's bigrams — integer-exact under the gate)
-    "q_lm_typicality"   -> (TextAnalysis.lmTypicality _),
-    "q_pack_sequences"  -> ((s: SparkSession, dir: String) => TextAnalysis.packSequences(s, dir)),
-    // — retrieval / data selection —
-    // BM25 ranked retrieval over the term-partitioned postings table
-    "q_bm25"            -> (Retrieval.bm25 _),
-    // INCREMENTAL BM25: stored four-table index + one batch
-    // tokenization pass, merged by long delta-applies — equals the
-    // full rebuild, so it shares q_bm25's oracle verbatim
-    "q_delta_bm25"      -> (Retrieval.deltaBm25 _),
-    // RETRACTION: tombstoned doc_ids removed from the stored four-table
-    // index by anti-joins + negative delta-applies — no text read;
-    // retracted == rebuilt, so the oracle is q_bm25's chain over the
-    // surviving docs
-    "q_retract_bm25"    -> (Retrieval.retractBm25 _),
-    // MULTI-INGEST compounding: commits c0+c1 read back merged, the
-    // final batch delta-applied live — delta(delta(base,b1),b2) ==
-    // full rebuild, hash-matched against q_bm25's oracle verbatim
-    "q_delta2_bm25"     -> (Retrieval.delta2Bm25 _),
-    // COMPACTION: all commits folded into ONE four-table index off
-    // the query path; serving the fold shares q_bm25's oracle
-    "q_compact_bm25"    -> (Retrieval.compactBm25 _),
-    // hybrid search: RRF fusion of embedding-cosine + lexical-cosine
-    "q_rrf_fusion"      -> (Retrieval.rrfFusion _),
-    // DSIR importance resampling: unigram-LM log-likelihood-ratio
-    // selection of background docs that look like the target domain
-    "q_dsir"            -> (Retrieval.dsirWeights _),
-    // exact phrase lookup over positional postings (attribution):
-    // only phrase-term postings ever shuffle, never the corpus
-    "q_phrase_search"   -> (Retrieval.phraseSearch _),
-    // the batch restatement (N phrases, ONE corpus scan + slot-count
-    // join) and the NEAR/k ordered-proximity variant of the same
-    // postings build
-    "q_phrase_batch"    -> (Retrieval.phraseBatch _),
-    "q_proximity_search" -> (Retrieval.proximitySearch _),
-    // batch NEAR/k: N proximity probes through ONE pruned postings
-    // build, frontier-advanced one slot per round (band-join chains)
-    "q_proximity_batch" -> (Retrieval.proximityBatch _),
-    // the graded stages composed end-to-end, the way a training-data
-    // pipeline runs them: quality filter → exact dedup → train-side
-    // decontamination → sequence packing, one dataflow, one corpus scan
-    "q_pipeline_e2e"    -> (Pipeline.curationPipeline _),
-    // the MULTIMODAL cascade: image decode+aHash + audio decode+wide
-    // fingerprint (both materialized once) → joint-key dedup decision
-    // → deterministic shard layout of the survivors
-    "q_pipeline_media"  -> (Pipeline.mediaPipeline _),
-    // the media cascade with the NEAR-dup decision folded in: routed
-    // banded pairs per modality → class-contracted CC → keep-rep →
-    // layout (the production daily shape; exact-key sibling above)
-    "q_pipeline_media_near" -> (Pipeline.mediaPipelineNear _),
-    // the INCREMENTAL media cascade: frozen-rep exact dedup against
-    // the stored joint-class table, delta band probes for near-dup
-    // bridges, batch-local CC + base-touch absorption, newly-born
-    // components appended to the stored layout (deltaShardAppend)
-    "q_delta_pipeline_media" -> (Pipeline.deltaMediaPipeline _),
-    // the TEXT cascade's incremental form: batch-only text passes,
-    // three stored tables (survivor norms, eval vocabulary, packed
-    // layout), frozen semantics, packing append under the id-prefix
-    // split
-    "q_delta_pipeline_e2e" -> (Pipeline.deltaCurationPipeline _),
-    // — dedup family —
-    "q_dedup_exact"     -> (Dedup.exactDedup _),
-    "q_dedup_hash"      -> (Dedup.exactDedupByHash _),
-    "q_minhash_signatures" -> ((s: SparkSession, dir: String) => Dedup.minhashSignatures(s, dir)),
-    "q_minhash_lsh_pairs"  -> ((s: SparkSession, dir: String) => Dedup.minhashLshPairs(s, dir)),
-    // production-hash twins (xxhash64; no DuckDB analog → rows-only):
-    // same dataflow, benchmarked against the md5 oracle path
-    "q_minhash_signatures_xx" -> ((s: SparkSession, dir: String) => Dedup.minhashSignatures(s, dir, prodHash = true)),
-    "q_minhash_lsh_pairs_xx"  -> ((s: SparkSession, dir: String) => Dedup.minhashLshPairs(s, dir, prodHash = true)),
-    // leave-one-out multi-probe banding: recall below the S-curve knee
-    "q_lsh_multiprobe"  -> ((s: SparkSession, dir: String) => Dedup.minhashLshPairsMultiProbe(s, dir)),
-    // near-dup pair graph computed ONCE per session/corpus, landed as
-    // partitioned parquet, read back — the graph family's shared input
-    "q_neardup_graph"   -> ((s: SparkSession, dir: String) =>
-      Dedup.materializedPairs(s, dir).orderBy(col("id_a"), col("id_b"))),
-    "q_dup_clusters"    -> (Dedup.duplicateClusters _),
-    // cluster dedup with keep-longest keeper selection (production
-    // pipelines keep the best duplicate, not the lowest doc_id)
-    "q_dedup_keep_best" -> (Dedup.dedupKeepBest _),
-    // WITH RECURSIVE (Spark 4.x): bounded BFS over the near-dup graph
-    "q_recursive_reach" -> (Dedup.recursiveReach _),
-    "q_pagerank"        -> (Dedup.nearDupPageRank _),
-    "q_ngram_jaccard"   -> (Dedup.ngramJaccardPairs _),
-    // density-routed near-dup: on this (diverse) corpus the probe picks
-    // the exact PPJoin path, so the exact-Jaccard oracle grades it; a
-    // duplicate-heavy corpus would route to LSH (DedupRoutingSpec)
-    "q_neardup_auto"    -> ((s: SparkSession, dir: String) => Dedup.nearDupPairsAuto(s, dir)),
-    "q_simhash"         -> (Dedup.simhash _),
-    "q_hash_split"      -> (Dedup.hashSplit _),
-    // incremental ingest: near-dup pairs touching the NEW batch only
-    // (delta-probed LSH join — existing-vs-existing never enumerated)
-    "q_delta_dedup"     -> (Dedup.deltaDedup _),
-    // RETRACTION: tombstoned ids anti-joined out of the stored
-    // signature index; banded pairs over the retracted index equal the
-    // rebuild over surviving docs (pair logic is pairwise) — no text
-    "q_retract_dedup"   -> (Dedup.retractDedup _),
-    // CC maintenance for the text family: stored base labels + batch
-    // bridges through the contracted mini-CC (the shared engine)
-    "q_delta_dup_clusters" -> (Dedup.deltaDupClusters _),
-    // RETRACTION closure: deletion can split components and delete the
-    // min-id a component is labeled by — touched components relabel
-    // over their surviving stored edges, untouched ride through
-    "q_retract_dup_clusters" -> (Dedup.retractDupClusters _),
-    // MULTI-INGEST closure: maintain(maintain(L0,p1),p2) over two
-    // stored signature commits + a live third — equals one CC over
-    // the whole corpus, q_dup_clusters' oracle verbatim
-    "q_delta2_dup_clusters" -> (Dedup.delta2DupClusters _),
-    // near-dup pairs straddling the train/val/test boundary — the
-    // eval-integrity audit (LSH pairs × hashSplit membership)
-    "q_split_leakage"   -> (Dedup.splitLeakage _),
-    // sparse lexical tf-cosine pairs via df-cut posting lists — the
-    // third similarity family (set / dense / SPARSE-LEXICAL)
-    "q_lexical_cosine"  -> (Dedup.lexicalCosine _),
-    // INCREMENTAL lexical cosine: batch shingles probe the stored
-    // rare-gram/tf index with delta-applied union df (== the full
-    // verified pair set restricted to touching batch)
-    "q_delta_lexical_cosine" -> (Dedup.deltaLexicalCosine _),
-    // RETRACTION: tombstones anti-join the stored quadruple, df
-    // subtracts the dead docs' own shingle rows — no text read; a
-    // shingle whose df falls back under the cap resumes blocking
-    "q_retract_lexical_cosine" -> (Dedup.retractLexicalCosine _),
-    "q_mixture_sample"  -> (Dedup.mixtureSample _),
-    // K smallest content-hashes per language via the bounded typed
-    // top-K aggregator — the few-huge-strata group sample (no window)
-    "q_stratified_sample" -> (Dedup.stratifiedSample _),
-    // rates FROM corpus stats: p(s) ∝ n^α flattening (α=1/2) as a
-    // deterministic static downsample — the actual data-mixing math
-    "q_temperature_mixture" -> (Dedup.temperatureMixture _),
-    // deterministic global shuffle → N shard files with stable
-    // positions (the training writer's last stage; mix31-keyed so the
-    // whole layout has a DuckDB twin, per-shard rank = one reducer
-    // per output file)
-    "q_shard_assign"    -> (Dedup.shardAssign _),
-    // incremental layout: new batch appended after each shard's
-    // existing max position — old rows byte-identical, cost ∝ batch
-    "q_delta_shard_assign" -> (Dedup.deltaShardAssign _),
-    // benchmark-contamination scan: eval-split shingle overlap vs train
-    "q_decontamination" -> (Dedup.decontamination _),
-    // Bloom-prefiltered twin: eval-shingle sketch screens the train
-    // side at the scan; exact join verifies — same oracle proves it
-    "q_decontamination_bloom" -> (Dedup.decontaminationBloom _),
-    // the same scan written as ONE spark.sql(...) TEXT driving the
-    // SQL-registered codegen functions (char_shingles / rolling_hash /
-    // md5_hash32) — same oracle proves the SQL surface end-to-end
-    "q_sql_decontamination" -> (Dedup.decontaminationSqlForm _),
-    // fixed-window chunking with stride (context-window prep)
-    "q_chunk_documents" -> ((s: SparkSession, dir: String) => TextAnalysis.chunkDocuments(s, dir)),
-    // chunking -> exact dedup over chunk hashes (cross-doc repeated spans)
-    "q_chunk_dedup"     -> (Dedup.chunkDedup _),
-    // suffix-array-family exact substring dedup (Lee et al. 2022):
-    // stride-1 Rabin-Karp window keys + per-doc interval merge emit the
-    // exact >=L repeated-substring character ranges, no suffix sort
-    "q_substring_dedup" -> (Dedup.substringDedup _),
-    // the >=1e9-window escalation: identical plan keyed on THREE
-    // polynomials (~2^89 composite space; +1 long per window row)
-    "q_substring_dedup_p3" -> (Dedup.substringDedupP3 _),
-    // INCREMENTAL substring dedup: batch windows probe the stored
-    // distinct-key index; base text never re-hashed (== the full run
-    // restricted to batch docs)
-    "q_delta_substring_dedup" -> (Dedup.deltaSubstringDedup _),
-    // the spans applied: flagged docs re-emitted with repeated spans
-    // excised (ordered segment reassembly, one corpus scan)
-    "q_substring_clip"  -> (Dedup.substringClip _),
-    // position-exact eval-vs-train contamination: eval windows semi-
-    // joined against the train key set, merged into contaminated spans
-    "q_substring_decontamination" -> (Dedup.substringDecontamination _),
-    // — similarity search over embeddings —
-    "q_knn_bruteforce"  -> (Similarity.bruteForceKnn _),
-    // contrastive hard-negative mining: per anchor, top-K most-similar
-    // vectors with a DIFFERENT label, via the bounded top-K aggregator
-    "q_hard_negatives"  -> (Similarity.hardNegatives _),
-    // greedy k-center (farthest-point) coreset selection: shuffle-free
-    // scan per round, selected set = O(k·dim) model state
-    "q_kcenter_select"  -> (Similarity.kCenterSelect _),
-    // production IVF: the gated fixed-point Lloyd quantizer at the √N
-    // cell sizing — deterministic end-to-end, fully oracle-graded
-    "q_knn_ivf"         -> ((s: SparkSession, dir: String) => Similarity.ivfKnn(s, dir)),
-    // the IVF serving layout made executable: corpus WRITTEN partitioned
-    // by its Lloyd cell, probe = partition-pruned read-back (plan-
-    // asserted); same quantizer/search as q_knn_ivf → identical rows
-    "q_knn_ivf_pruned"  -> ((s: SparkSession, dir: String) => Similarity.ivfKnnMaterialized(s, dir)),
-    // IVF over graft's OWN fixed-point Lloyd quantizer: the whole tier
-    // (normalize → quantize → Lloyd cells → multi-probe plan → cosine
-    // rerank) is a deterministic pure function, so this ANN tier is
-    // graded end-to-end by the DuckDB oracle — closing the rows-only
-    // gap of the fitted-model tiers
-    "q_knn_ivf_exact"   -> ((s: SparkSession, dir: String) => Similarity.ivfKnnExact(s, dir)),
-    // the graded tier's serving layout: corpus written partitioned by
-    // the deterministic Lloyd cell, probes partition-pruned — identical
-    // rows to q_knn_ivf_exact, so it shares the full oracle
-    "q_knn_ivf_exact_pruned" -> ((s: SparkSession, dir: String) =>
-      Similarity.ivfKnnExactMaterialized(s, dir)),
-    // INCREMENTAL IVF: stored Lloyd quantizer + frozen cell-partitioned
-    // base layout; the batch lands via stateless argmin as a delta
-    // commit, search reads base + delta partition-pruned
-    "q_delta_knn_ivf"   -> ((s: SparkSession, dir: String) =>
-      Similarity.deltaIvfKnn(s, dir)),
-    // the lifecycle's closing stage: the delta commit COMPACTED into
-    // one cell-partitioned layout — a pure layout change, so it shares
-    // the delta oracle and the gate certifies value identity
-    "q_delta_knn_ivf_compacted" -> ((s: SparkSession, dir: String) =>
-      Similarity.deltaIvfKnnCompacted(s, dir)),
-    // MULTI-INGEST IVF: 6/10-fitted quantizer, TWO stored stateless
-    // assignment commits — ingest(ingest(base,b1),b2) == one full
-    // assignment pass, hash-matched at the 6/10-cut oracle
-    "q_delta2_knn_ivf"  -> ((s: SparkSession, dir: String) =>
-      Similarity.delta2IvfKnn(s, dir)),
-    // N-commit compaction: base + both ingest commits folded into ONE
-    // layout — pure layout change, shares the delta2 oracle
-    "q_delta2_knn_ivf_compacted" -> ((s: SparkSession, dir: String) =>
-      Similarity.delta2IvfKnnCompacted(s, dir)),
-    // DRIFT-MEASURED refit router, IVF edition: sampled insert recall
-    // through the maintained index's own serving plan decides
-    // serve-delta vs full Lloyd refit; the fixture MEASURES drift
-    // (0.46) and exercises the ESCALATE arm — the graph router serves
-    // its delta arm, so both router arms sit under the gate
-    // expectArm pins the oracle's arm IN the entry: a fixture/sampling
-    // drift across the recall floor now fails loudly as a routing
-    // assertion instead of an opaque hash mismatch (round-20 advice)
-    "q_knn_ivf_drift_routed" -> ((s: SparkSession, dir: String) =>
-      Similarity.ivfKnnDriftRouted(s, dir, expectArm = Some("refit"))),
-    // RETRACTION, ANN edition: tombstoned ids fold out of the stored
-    // cell-partitioned layout (one anti-filter write, model untouched
-    // — the drift router decides when the FIT must refresh)
-    "q_retract_knn_ivf" -> ((s: SparkSession, dir: String) =>
-      Similarity.retractIvfKnn(s, dir)),
-    // RETRACTION, graph edition: serving over the stored ∪ inserted
-    // edges with every tombstone-touching edge filtered — deleted
-    // nodes neither returned nor traversable; the drift router prices
-    // the eventual rebuild as connectivity erodes
-    "q_retract_knn_graph" -> (Similarity.retractGraphKnn _),
-    // the IVF-PQ composition under the gate: int8 coarse dot inside
-    // the deterministic Lloyd cells of a partition-pruned packed
-    // layout, exact rerank — fully oracle-graded
-    "q_knn_quantized_ivf_exact" -> ((s: SparkSession, dir: String) =>
-      Similarity.quantizedIvfKnnExact(s, dir)),
-    // product quantization: per-subspace gated-Lloyd codebooks, m-code
-    // encoding, ADC shortlist + exact rerank — fully oracle-graded
-    "q_knn_pq" -> ((s: SparkSession, dir: String) => Similarity.pqKnn(s, dir)),
-    // NSW-style graph ANN: navigable neighbor graph (blocked proximity
-    // links + hash-ring shortcuts) searched by batch beam expansion;
-    // recall floors in SimilaritySpec, and since round 15 the whole
-    // build+search is mix31-deterministic -> full DuckDB oracle
-    "q_knn_graph"       -> (Similarity.graphKnn _),
-    // INCREMENTAL NSW: batch vectors beam-search the STORED edge table
-    // for their top-M links (insert = search cost, never a rebuild);
-    // serving runs over stored ∪ inserted edges
-    "q_delta_knn_graph" -> (Similarity.deltaGraphKnn _),
-    // the graph lifecycle's closing stage: base + insert commits folded
-    // into ONE edge table (pure layout change — shares the delta-graph
-    // oracle, the gate certifies value identity)
-    "q_delta_knn_graph_compacted" -> (Similarity.deltaGraphKnnCompacted _),
-    // MULTI-INGEST graph: the ORDER-DEPENDENT chained insert — ingest
-    // 2 beams over the edges ingest 1 appended; two unrolled insert
-    // beams in the oracle re-derive insert(insert(G0,b1),b2)
-    "q_delta2_knn_graph" -> (Similarity.delta2GraphKnn _),
-    // DRIFT-MEASURED refit router: sampled insert recall over the
-    // maintained edges vs an exact scan decides serve-delta vs refit
-    // (the routeWide discipline on ANN maintenance); the fixture
-    // measures ~1.0 → serves the delta graph, sharing its oracle
-    "q_knn_graph_drift_routed" -> ((s: SparkSession, dir: String) =>
-      Similarity.graphKnnDriftRouted(s, dir, expectArm = Some("serve"))),
-    // the routed production entry (blocked <=200k, NN-descent above):
-    // at gate scale the router picks the blocked build, so this shares
-    // q_knn_graph's oracle — the gate certifies the routing decision
-    "q_knn_graph_auto"  -> (Similarity.graphKnnAuto _),
-    "q_embedding_dedup" -> ((s: SparkSession, dir: String) => Similarity.embeddingDedup(s, dir)),
-    // int8 scalar quantization: 4x vector compression with measured
-    // reconstruction error (per-row codegen arithmetic, gate-exact)
-    "q_embedding_quantize" -> (Similarity.embeddingQuantize _),
-    // chunk→doc mean pooling; float parity by explicit fold ORDER
-    // (first member seeds, like DuckDB list_reduce), never tolerance
-    "q_embedding_pool"  -> (Similarity.embeddingPool _),
-    // declarative Lloyd's k-means (fixed seeds, 3 rounds, fixed-point
-    // centroid sums) — deterministic, so the full clustering sits
-    // under the DuckDB gate; the same chain is the IVF coarse quantizer
-    "q_kmeans"          -> (Similarity.kmeansAssign _),
-    // the SAME assignment executed by the streaming engine: batch-fitted
-    // centroid model as plan literals, stateless per-row argmin, APPEND
-    // mode with zero state rows (the serving shape); shares the Lloyd
-    // chain oracle minus the batch-side size aggregate
-    "q_stream_kmeans"   -> (graft.streaming.EmbeddingStreams.streamedKmeansAssign _),
-    // the delta-SemDeDup SERVING twin: arrivals assigned via centroid
-    // literals, adjudicated against the frozen stored decision table
-    // through one stream-static join — zero state rows
-    "q_stream_semdedup_delta" ->
-      ((s: SparkSession, dir: String) =>
-        graft.streaming.EmbeddingStreams.streamedDeltaSemDedup(s, dir)),
-    // kNN majority-vote classification over the labeled fixture — the
-    // label-propagation primitive; vote = groupBy over the exact top-k
-    "q_knn_classify"    -> (Similarity.knnClassify _),
-    // temperature flattening over SEMANTIC clusters (kmeans assignment
-    // instead of language tags) — the DataComp-style topic rebalance
-    "q_cluster_mixture" -> (Similarity.clusterMixture _),
-    // SemDeDup-style semantic dedup: k-means blocks, within-cluster
-    // cosine pairs, rank-based keep policy (keep the outlier, prune
-    // the dense duplicated core) — a curation DECISION per vector
-    "q_semdedup"        -> ((s: SparkSession, dir: String) => Similarity.semanticDedup(s, dir)),
-    // INCREMENTAL SemDeDup: stored base-fitted quantizer + frozen
-    // cluster-partitioned decision table; batch assigned statelessly,
-    // decision = one pruned join vs stored members + batch-internal
-    // pass (== the full recompute restricted to batch vec_ids)
-    "q_delta_semdedup"  -> ((s: SparkSession, dir: String) => Similarity.deltaSemDedup(s, dir)),
-    // the quantized serving path: int8-dot coarse pass over the packed
-    // table + exact rerank of the short list (approximate -> rows-only)
-    "q_knn_quantized"   -> (Similarity.quantizedKnn _),
-    // the same beam search over an NN-descent-built graph — the
-    // O(N·M²)-per-round build whose round cost scales linearly with
-    // the corpus; mix31-deterministic since round 15 -> full oracle
-    "q_knn_graph_nnd"   -> ((s: SparkSession, dir: String) => Similarity.graphKnnNnd(s, dir)),
-    // IVF-PQ-style composition: the int8 coarse pass confined to the
-    // probed √N Lloyd cells of a partition-pruned packed layout — the
-    // sublinear form of q_knn_quantized, fully oracle-graded
-    "q_knn_quantized_ivf" -> ((s: SparkSession, dir: String) => Similarity.quantizedIvfKnn(s, dir)),
-    // — time-windowed event analytics (streaming-shaped, batch oracle) —
-    "q_tumbling"        -> (EventAnalytics.tumbling _),
-    // the SAME aggregation executed as a real StreamingQuery (streaming
-    // file source -> AvailableNow -> memory sink); shares the oracle
-    "q_stream_tumbling" -> (graft.streaming.EventStreams.streamedTumbling _),
-    "q_sliding"         -> (EventAnalytics.sliding _),
-    "q_sessions"        -> (EventAnalytics.sessions _),
-    // SCD-2 dimension build: per-user event_type validity intervals
-    "q_scd2"            -> (EventAnalytics.scd2 _),
-    "q_retention"       -> (EventAnalytics.retention _),
-    "q_funnel"          -> (EventAnalytics.funnel _),
-    // order-sensitive list aggregation: per-user first-10 event paths
-    "q_event_paths"     -> (EventAnalytics.eventPaths _),
-    // time-weighted average value (irregular time-series aggregation)
-    "q_twap"            -> (EventAnalytics.twap _),
-    "q_new_users"       -> (EventAnalytics.newUsers _),
-    // α=1/2 EWMA smoother: power-of-two weights → exact long sums
-    "q_ewma"            -> (EventAnalytics.ewma _),
-    // fastText-style linear quality model (map-only scan; exact-long
-    // score via per-feature fixed-point quantization)
-    "q_quality_model"   -> (TextAnalysis.qualityModel _),
-    // median/MAD robust outliers (exact percentiles + broadcast flags)
-    "q_anomaly_mad"     -> (EventAnalytics.madAnomalies _),
-    // batch backfill twin of the streaming 3σ detector (shared oracle)
-    "q_anomaly_running" -> (EventAnalytics.runningAnomalies _),
-    // — multimodal columns —
-    // REAL codec round trips (JDK ImageIO PNG, RIFF/PCM WAV): payloads
-    // synthesized deterministically, decoded by actual format code, and
-    // the features must match DuckDB's closed-form pixel/sample math
-    "q_image_decode"    -> (Multimodal.imageDecode _),
-    // perceptual average-hash fingerprint over the real decoded raster
-    "q_image_ahash"     -> (Multimodal.imageAhash _),
-    // visual near-dup DECISION pairs: 4×16-bit aHash bands bucket the
-    // candidates (Manku banding — complete recall at Hamming ≤ 3),
-    // integer popcount verifies; joins the multimodal + dedup families
-    "q_image_neardup"   -> (Multimodal.imageNeardup _),
-    // RETRACTION, media edition: tombstones anti-join the stored
-    // doc→aHash table; pairs re-derive at distinct-hash granularity —
-    // the decode never re-runs, and a hash class leaves the band join
-    // exactly when its last member dies
-    "q_retract_image_neardup" -> (Multimodal.retractImageNeardup _),
-    // Manku multi-table widening of the same contract (C(6,3)=20
-    // three-block ~11-bit band tables, same pigeonhole completeness):
-    // the d ≫ 10^6 diverse-hash escalation, value-identical output
-    "q_image_neardup_wide" -> (Multimodal.imageNeardupWide _),
-    // routed production entry: distinct-hash count picks the tier
-    "q_image_neardup_auto" -> (Multimodal.imageNeardupAuto _),
-    // connected components over the visual pair graph (near-dup at a
-    // Hamming ball is not transitive — group dedup needs the closure)
-    "q_image_dup_clusters" -> (Multimodal.imageDupClusters _),
-    // CC MAINTENANCE under ingest: stored hash-label table + batch
-    // bridges through a contracted mini-CC — batch-sized closure work,
-    // value-identical to the full recompute (shared oracle)
-    "q_delta_image_dup_clusters" -> (Multimodal.deltaImageDupClusters _),
-    // MULTI-INGEST visual closure: maintain(maintain(L0,p1),p2) at
-    // hash granularity over two stored ingests + a live third ==
-    // one CC over the whole corpus — q_image_dup_clusters' oracle
-    "q_delta2_image_dup_clusters" -> (Multimodal.delta2ImageDupClusters _),
-    // RETRACTION closure, media edition: doc tombstones touch the
-    // hash graph only through dead hashes (refcounts from the stored
-    // doc→hash table); touched components relabel over surviving
-    // stored pairs — no decode, no re-banding
-    "q_retract_image_dup_clusters" -> (Multimodal.retractImageDupClusters _),
-    // exact visual dedup: one row per image → its aHash-class
-    // representative + class size (the linear-output decision the
-    // pair contract above audits)
-    "q_image_dedup"     -> (Multimodal.imageDedup _),
-    // INCREMENTAL media ingest (the q_delta_dedup discipline on the
-    // hash tables): batch band keys probe the stored index, existing
-    // vs existing never enumerated
-    "q_delta_image_neardup" -> (Multimodal.deltaImageNeardup _),
-    "q_delta_audio_neardup" -> (Multimodal.deltaAudioNeardup _),
-    // delta dedup DECISION: one row per new record → frozen stored
-    // rep (or elects one), class size after ingest
-    "q_delta_image_dedup" -> (Multimodal.deltaImageDedup _),
-    "q_delta_audio_dedup" -> (Multimodal.deltaAudioDedup _),
-    "q_image_resize"    -> (Multimodal.imageResize _),
-    "q_audio_decode"    -> (Multimodal.audioDecode _),
-    // 16-frame energy fingerprint over the REAL RIFF decode — the
-    // audio blocking key (1-D aHash twin; bands into the same
-    // Hamming-ball consumer shape as the image family)
-    "q_audio_fingerprint" -> (Multimodal.audioFingerprint _),
-    // exact acoustic dedup: fingerprint-class representative + size,
-    // one row per clip (the q_image_dedup decision on the audio key)
-    "q_audio_dedup"     -> (Multimodal.audioDedup _),
-    // WIDE 64-frame fingerprint as two 32-bit halves — the bandable
-    // acoustic key (the image-aHash convention on audio)
-    "q_audio_fingerprint_wide" -> (Multimodal.audioFingerprintWide _),
-    // acoustic near-dup pairs: the image banding engine verbatim on
-    // the wide fingerprint (completes the audio triple: blocking key →
-    // near-dup pairs → dedup decision)
-    "q_audio_neardup"   -> (Multimodal.audioNeardup _),
-    // chunked long-clip fingerprints: one row per (clip, chunk), each
-    // chunk against its own mean — lifts the 2^24-sample clip bound
-    "q_audio_fingerprint_chunks" -> (Multimodal.audioFingerprintChunks _),
-    // chunk-level acoustic near-dup: df-capped posting join on chunk
-    // fingerprints, verified by offset-consistent aligned-run counting
-    // — partial-overlap detection whole-clip keys cannot see
-    "q_audio_chunk_neardup" -> (Multimodal.audioChunkNeardup _),
-    // OVERLAPPING-window fingerprints (stride = chunk/2): lifts the
-    // chunker's boundary-alignment sensitivity — stride-aligned copies
-    // fingerprint identically wherever they land
-    "q_audio_fingerprint_windows" -> (Multimodal.audioFingerprintWindows _),
-    // stub-decoded plumbing (formats with no JVM codec):
-    "q_media_features"  -> (Multimodal.mediaFeatures _),
-    "q_media_stats"     -> (Multimodal.mediaStats _),
-    "q_frame_features"  -> ((s: SparkSession, dir: String) => Multimodal.frameFeatures(s, dir)),
-    // — TPC-H-shaped multi-join analytics (join-order/broadcast bench) —
-    "q_tpch_q3"         -> (Relational.tpchQ3 _),
-    "q_tpch_q5"         -> (Relational.tpchQ5 _),
-    "q_tpch_q6"         -> (Relational.tpchQ6 _),
-    "q_tpch_q10"        -> (Relational.tpchQ10 _),
-    "q_tpch_q12"        -> (Relational.tpchQ12 _),
-    "q_tpch_q14"        -> (Relational.tpchQ14 _),
-    "q_tpch_q19"        -> (Relational.tpchQ19 _),
-    // aggregate-HAVING subquery drives the join (big-order selection
-    // broadcast by AQE), top-100 via TakeOrderedAndProject
-    "q_tpch_q18"        -> (Relational.tpchQ18 _),
-    // scalar-agg-max equality filter (the decorrelated Q15 view)
-    "q_tpch_q15"        -> (Relational.tpchQ15 _),
-    // correlated scalar-AVG subquery (per-part average gates the fact)
-    "q_tpch_q17"        -> (Relational.tpchQ17 _),
-    // nested semi-join chain + correlated availability scalar
-    "q_tpch_q20"        -> (Relational.tpchQ20 _),
-    // multi-EXISTS/NOT-EXISTS lineitem self-joins (semi + anti)
-    "q_tpch_q21"        -> (Relational.tpchQ21 _),
-    // — the remaining 9 stock shapes: full TPC-H 22/22 coverage —
-    // correlated scalar-MIN over the derived supply relation
-    "q_tpch_q2"         -> (Relational.tpchQ2 _),
-    // EXISTS correlated on key + outer date column (semi join)
-    "q_tpch_q4"         -> (Relational.tpchQ4 _),
-    // bidirectional two-nation trade (nation dim joined twice)
-    "q_tpch_q7"         -> (Relational.tpchQ7 _),
-    // 7-relation tree + conditional market-share aggregate
-    "q_tpch_q8"         -> (Relational.tpchQ8 _),
-    // name-sliced profit by nation/year
-    "q_tpch_q9"         -> (Relational.tpchQ9 _),
-    // grouped agg with scalar-subquery HAVING threshold
-    "q_tpch_q11"        -> (Relational.tpchQ11 _),
-    // outer-join histogram (filter on the join condition)
-    "q_tpch_q13"        -> (Relational.tpchQ13 _),
-    // distinct-count groups behind a null-aware NOT IN anti join
-    "q_tpch_q16"        -> (Relational.tpchQ16 _),
-    // scalar-AVG threshold + NOT EXISTS anti join finale
-    "q_tpch_q22"        -> (Relational.tpchQ22 _),
-    // SQL LATERAL correlated subquery (Catalyst decorrelates to a join)
-    "q_lateral_join"    -> (Relational.lateralTopNations _),
-    // MERGE-style incremental snapshot upsert (full-outer merge dataflow)
-    "q_merge_upsert"    -> (Relational.mergeUpsert _),
-    // materialized-view maintenance: monthly pre-agg + batch delta
-    // merged by the same full-outer dataflow; == full recompute (spec)
-    "q_incremental_agg" -> (Relational.incrementalAgg _),
-    // degree-oriented triangle counting over the near-dup graph
-    "q_triangles"       -> (Dedup.triangleCounts _),
-    // asymmetric containment join (sub-document duplication)
-    "q_containment"     -> ((s: SparkSession, dir: String) => Dedup.containmentPairs(s, dir)),
-    // composite curation cascade (first-failing-rule classification)
-    "q_corpus_filter"   -> (TextAnalysis.corpusFilter _),
-    // streaming DISTINCT executed by the real engine in APPEND mode
-    "q_stream_distinct" -> (graft.streaming.EventStreams.streamedDistinct _),
-    // APPEND-mode closed sessions (flatMapGroupsWithState) under the gate
-    "q_stream_sessions" -> (graft.streaming.EventStreams.streamedSessions _),
-    // the same sessionizer under the replay clock (no timeout, whole
-    // history in the single AvailableNow batch): every session closes
-    // inline, so the stream shares q_sessions' batch oracle exactly
-    "q_stream_sessions_gated" ->
-      ((s: SparkSession, dir: String) =>
-        graft.streaming.EventStreams.streamedSessionsGated(s, dir)),
-    // per-user running-moments 3σ outlier flags, all-long arithmetic
-    "q_stream_anomaly"  -> (graft.streaming.EventStreams.streamedAnomaly _),
-    // the EWMA smoother as per-key O(K) stream state; finite replay
-    // reproduces the batch lag() window exactly → shares its oracle
-    "q_stream_ewma"     -> (graft.streaming.EventStreams.streamedEwma _),
-    // incremental MinHash ingest: signatures computed as documents
-    // arrive; shares the batch signature oracle (bit-identical result)
-    "q_stream_minhash"  -> (graft.streaming.DocumentStreams.streamedMinhashSignatures _),
-    // the streaming near-dup DECISION join (band-bucket state store);
-    // emissions depend only on the document set, so a finite replay
-    // reproduces the batch pair set and shares its full-hash oracle
-    "q_stream_neardup"  -> (graft.streaming.DocumentStreams.streamedNearDupPairs _),
-    // the TTL-bounded variant GRADED: deterministic replay clock
-    // (ts = base + doc_id s, one micro-batch per 100-id chunk) makes
-    // the watermark-relative horizon pure doc_id arithmetic the oracle
-    // re-derives — the production memory bound, driver-graded
-    "q_stream_neardup_ttl" -> (graft.streaming.DocumentStreams.streamedNearDupPairsTtl _),
-    // stream-stream interval join under the gate (inner-join emission
-    // is not watermark-gated, so finite replay = the batch join)
-    "q_stream_attribution" -> (graft.streaming.EventStreams.streamedAttribution _),
-    // stream-STATIC join under the gate: eval docs stream against the
-    // static train vocabulary (stateless join + Complete-mode per-doc
-    // agg, so finite replay = the batch decontamination scan)
-    "q_stream_decontamination" -> (graft.streaming.DocumentStreams.streamedDecontamination _),
-    // deployed-tokenizer stream: rules trained batch-side, applied as a
-    // stateless per-doc projection (no state, no shuffle); shares
-    // q_bpe_tokenize's oracle
-    "q_stream_bpe_tokenize" -> (graft.streaming.DocumentStreams.streamedBpeTokenize _),
-    // deployed-decoder stream: REAL ImageIO decode + perceptual hash as
-    // a stateless streaming projection; shares q_image_ahash's oracle
-    "q_stream_image_ahash" -> (graft.streaming.DocumentStreams.streamedImageAhash _),
-    // stateless streaming acoustic fingerprint (shares the batch
-    // entry's oracle — replay == batch, real RIFF parse on the stream)
-    "q_stream_audio_fingerprint" ->
-      (graft.streaming.DocumentStreams.streamedAudioFingerprint _),
-    // the WIDE bandable key at arrival time (shares the wide batch
-    // oracle — what a streaming near-dup index would actually ingest)
-    "q_stream_audio_fingerprint_wide" ->
-      (graft.streaming.DocumentStreams.streamedAudioFingerprintWide _),
-    // the SERVING shape of the delta media family: new images stream
-    // in, probe the STORED band index (stream-static join, zero state,
-    // micro-batch-invariant), near-dups vs the corpus emitted on
-    // arrival; oracle = the full pair list cut to new-vs-existing
-    "q_stream_image_neardup_delta" ->
-      (graft.streaming.DocumentStreams.streamedDeltaImageNeardup _),
-    // the acoustic serving twin: same stream-static band-probe engine
-    // on the wide fingerprint computed at arrival time
-    "q_stream_audio_neardup_delta" ->
-      (graft.streaming.DocumentStreams.streamedDeltaAudioNeardup _),
-    // MERGE landed on storage: partitioned overwrite + pruned read-back
-    "q_merge_roundtrip" -> (graft.sources.Sinks.mergeRoundTrip _),
-  )
+  /** The DuckDB SQL each graded query's rows must hash-match. */
+  lazy val oracleSql: Map[String, String] =
+    registry.collect { case (name, Query(_, Some(sql))) => name -> sql }
+
+  private type Build = (SparkSession, String) => DataFrame
+
+  /** A registered query: its builder and its DuckDB oracle, or `None`
+    * for a query registered rows-only (approximate or non-portable-hash
+    * output).
+    */
+  private final case class Query(build: Build, oracle: Option[String])
+  private def graded(build: Build, oracle: String) = Query(build, Some(oracle))
+  private def rowsOnly(build: Build) = Query(build, None)
 
   // ——— shared oracle SQL fragments ———
 
@@ -1243,7 +571,7 @@ object SparkEntry {
       ", greatest(4, CAST(floor(sqrt(count(*))) AS BIGINT))) FROM embeddings)"
 
   /** The unit-normalize + 2^20 fixed-point CTE pair every IVF oracle
-    * chain starts from (the Spark side's ivfExactAssignments quantize).
+    * chain starts from (the Spark side's `quantizedX(unitized(e))`).
     */
   private val ivfUnitQSql: String =
     """un AS (SELECT vec_id, embedding,
@@ -2175,6 +1503,18 @@ object SparkEntry {
        |) ORDER BY query_id, doc_id, pos""".stripMargin
   }
 
+  /** q_join_broadcast; the salted-join plan must reproduce it byte-for-byte. */
+  private val brandRevenueSql =
+    """SELECT p_brand, round(sum(l_extendedprice),2) AS brand_revenue, count(*) AS n_items
+      |FROM lineitem JOIN part ON l_partkey=p_partkey
+      |GROUP BY p_brand ORDER BY p_brand""".stripMargin
+
+  /** q_tumbling; its streaming twin executes the same aggregation. */
+  private val hourlyEventsSql =
+    """SELECT strftime(time_bucket(INTERVAL '1 hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
+      |event_type, count(*) AS n, round(sum(value),2) AS total_value
+      |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin
+
   private val sessionsSql: String =
     """WITH flagged AS (SELECT user_id, ts, value,
       |  CASE WHEN lag(ts) OVER w IS NULL
@@ -2187,8 +1527,10 @@ object SparkEntry {
       |count(*) AS n_events, round(sum(value),2) AS session_value
       |FROM sess GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
-    "q_pricing_summary" ->
+  /** Every query, named once, with its builder and its oracle. */
+  private lazy val registry: Map[String, Query] = Map(
+    // — core relational (SURVEY.md §2.2 scans/filter/agg/join/sort/set) —
+    "q_pricing_summary" -> graded(Relational.pricingSummary _,
       """SELECT l_returnflag, l_linestatus, round(sum(l_quantity),2) AS sum_qty,
         |round(sum(l_extendedprice),2) AS sum_base_price,
         |round(sum(l_extendedprice*(1-l_discount)),2) AS sum_disc_price,
@@ -2198,48 +1540,151 @@ object SparkEntry {
         |round(avg(l_discount),4) AS avg_disc,
         |count(*) AS count_order
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
+        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin),
 
-    "q_filter_project" ->
+    "q_filter_project" -> graded(Relational.filterProject _,
       """SELECT l_orderkey, l_linenumber,
         |l_extendedprice*(1-l_discount) AS net_price,
         |CAST(l_quantity AS BIGINT) AS qty
         |FROM lineitem WHERE l_returnflag='R' AND l_quantity>45
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
-    "q_join_agg" ->
+    "q_join_agg" -> graded(Relational.joinAgg _,
       """SELECT r_name, n_name, round(sum(o_totalprice),2) AS revenue, count(*) AS n_orders
         |FROM orders JOIN customer ON o_custkey=c_custkey
         |JOIN nation ON c_nationkey=n_nationkey JOIN region ON n_regionkey=r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
+        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin),
 
-    "q_join_broadcast" ->
-      """SELECT p_brand, round(sum(l_extendedprice),2) AS brand_revenue, count(*) AS n_items
-        |FROM lineitem JOIN part ON l_partkey=p_partkey
-        |GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-    // the salted-join plan must reproduce the plain join byte-for-byte
-    "q_salted_join" ->
-      """SELECT p_brand, round(sum(l_extendedprice),2) AS brand_revenue, count(*) AS n_items
-        |FROM lineitem JOIN part ON l_partkey=p_partkey
-        |GROUP BY p_brand ORDER BY p_brand""".stripMargin,
+    "q_join_broadcast" -> graded(Relational.joinBroadcast _, brandRevenueSql),
 
-    "q_semi_join" ->
+    "q_semi_join" -> graded(Relational.semiJoin _,
       """SELECT c_custkey, c_name, c_mktsegment FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey=c_custkey AND o_totalprice>400000)
-        |ORDER BY c_custkey""".stripMargin,
+        |ORDER BY c_custkey""".stripMargin),
 
-    "q_anti_join" ->
+    "q_anti_join" -> graded(Relational.antiJoin _,
       """SELECT c_custkey, c_name FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey=c_custkey AND o_totalprice>400000)
-        |ORDER BY c_custkey""".stripMargin,
+        |ORDER BY c_custkey""".stripMargin),
 
-    "q_outer_join" ->
+    "q_outer_join" -> graded(Relational.outerJoin _,
       """SELECT c_custkey, coalesce(cnt,0) AS n_orders, round(coalesce(tot,0),2) AS total_spent
         |FROM customer LEFT JOIN
         |(SELECT o_custkey, count(*) AS cnt, sum(o_totalprice) AS tot FROM orders GROUP BY o_custkey) o
-        |ON c_custkey=o.o_custkey ORDER BY c_custkey""".stripMargin,
+        |ON c_custkey=o.o_custkey ORDER BY c_custkey""".stripMargin),
 
-    "q_argmax" ->
+    "q_full_outer" -> graded(Relational.fullOuterJoin _,
+      """WITH p AS (SELECT o_custkey, count(*) AS n_p FROM orders WHERE o_orderstatus='P' GROUP BY 1),
+        |f AS (SELECT o_custkey, count(*) AS n_f FROM orders WHERE o_orderstatus='F' GROUP BY 1)
+        |SELECT coalesce(p.o_custkey, f.o_custkey) AS custkey,
+        |coalesce(n_p, 0) AS n_p, coalesce(n_f, 0) AS n_f
+        |FROM p FULL OUTER JOIN f ON p.o_custkey=f.o_custkey ORDER BY custkey""".stripMargin),
+
+    "q_cross_join" -> graded(Relational.crossJoinSmall _,
+      """SELECT r_name, n_name FROM region CROSS JOIN nation
+        |ORDER BY r_name, n_name""".stripMargin),
+
+    "q_typed_topk" -> graded(Relational.typedTopK _,
+      """SELECT o_orderstatus, rn, price, o_orderkey FROM (
+        |SELECT o_orderstatus,
+        |row_number() OVER (PARTITION BY o_orderstatus ORDER BY o_totalprice DESC, o_orderkey) AS rn,
+        |round(o_totalprice, 2) AS price, o_orderkey FROM orders)
+        |WHERE rn <= 3 ORDER BY o_orderstatus, rn""".stripMargin),
+
+    "q_range_join" -> graded(Relational.rangeJoin _,
+      """SELECT o_orderpriority, count(*) AS n_shipped_90d
+        |FROM lineitem JOIN orders ON l_orderkey=o_orderkey
+        |AND l_shipdate>=o_orderdate AND l_shipdate <= o_orderdate + INTERVAL 90 DAY
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+
+    "q_topk" -> graded(Relational.topK _,
+      """SELECT o_orderkey, o_custkey, round(o_totalprice,2) AS price
+        |FROM orders ORDER BY price DESC, o_orderkey LIMIT 10""".stripMargin),
+
+    "q_sort" -> graded(Relational.distributedSort _,
+      """SELECT l_orderkey, l_linenumber, l_shipdate, l_returnflag
+        |FROM lineitem ORDER BY l_shipdate, l_orderkey, l_linenumber""".stripMargin),
+
+    "q_intersect" -> graded(Relational.intersectCustomers _,
+      """SELECT o_custkey FROM orders WHERE o_orderstatus='O'
+        |INTERSECT SELECT o_custkey FROM orders WHERE o_orderstatus='F'
+        |ORDER BY o_custkey""".stripMargin),
+
+    "q_except" -> graded(Relational.exceptCustomers _,
+      """SELECT o_custkey FROM orders WHERE o_orderstatus='O'
+        |EXCEPT SELECT o_custkey FROM orders WHERE o_orderstatus='P'
+        |ORDER BY o_custkey""".stripMargin),
+
+    "q_union_distinct" -> graded(Relational.unionDistinct _,
+      """SELECT DISTINCT nationkey FROM (
+        |SELECT CAST(c_nationkey AS INT) AS nationkey FROM customer
+        |UNION ALL SELECT CAST(s_nationkey AS INT) FROM supplier)
+        |ORDER BY nationkey""".stripMargin),
+
+    "q_distinct_agg" -> graded(Relational.distinctAgg _,
+      """SELECT l_returnflag, count(DISTINCT l_suppkey) AS n_supps,
+        |count(DISTINCT l_partkey) AS n_parts, count(*) AS n_rows
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+
+    "q_approx_distinct" -> rowsOnly(Relational.approxDistinctAgg _),
+    "q_hll_sketch" -> rowsOnly(Relational.hllSketchRollup _),
+
+    "q_rollup" -> graded(Relational.rollupAgg _,
+      """SELECT l_returnflag, l_linestatus, round(sum(l_quantity),2) AS sum_qty,
+        |count(*) AS n_rows,
+        |CAST(grouping(l_returnflag)*2 + grouping(l_linestatus) AS BIGINT) AS gid
+        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
+        |ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
+
+    "q_grouping_sets" -> graded(Relational.groupingSetsAgg _,
+      """SELECT o_orderstatus, o_orderpriority,
+        |count(*) AS n_orders, round(sum(o_totalprice), 2) AS revenue,
+        |CAST(grouping(o_orderstatus)*2 + grouping(o_orderpriority) AS BIGINT) AS gid
+        |FROM orders
+        |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
+        |ORDER BY gid, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin),
+
+    "q_unpivot" -> graded(Relational.unpivotMeasures _,
+      """SELECT l_returnflag, measure, count(*) AS n, round(sum(val), 2) AS total
+        |FROM (
+        |  SELECT l_returnflag, 'l_quantity' AS measure, l_quantity AS val FROM lineitem
+        |  UNION ALL
+        |  SELECT l_returnflag, 'l_extendedprice', l_extendedprice FROM lineitem
+        |  UNION ALL
+        |  SELECT l_returnflag, 'l_discount', l_discount FROM lineitem)
+        |GROUP BY 1, 2 ORDER BY l_returnflag, measure""".stripMargin),
+
+    // VARIANT (Spark 4.x): parse_json once, typed variant_get access
+    "q_variant" -> graded(Scalars.variantFuncs _,
+      """SELECT k % 5 AS k_bucket, count(*) AS n_events,
+        |CAST(sum(k) AS BIGINT) AS sum_k, round(sum(value), 2) AS sum_value
+        |FROM (SELECT CAST(json_extract_string(props,'$.k') AS BIGINT) AS k, value FROM events)
+        |GROUP BY 1 ORDER BY k_bucket""".stripMargin),
+
+    "q_exists_subquery" -> graded(Relational.existsSubquery _,
+      """SELECT c_mktsegment, count(*) AS n_customers
+        |FROM customer c
+        |WHERE EXISTS (
+        |  SELECT 1 FROM orders o
+        |  WHERE o.o_custkey = c.c_custkey
+        |    AND o.o_totalprice > (SELECT avg(o_totalprice) FROM orders))
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+
+    "q_cube" -> graded(Relational.cubeAgg _,
+      """SELECT o_orderstatus, o_orderpriority, round(sum(o_totalprice),2) AS sum_price,
+        |count(*) AS n_orders,
+        |CAST(grouping(o_orderstatus)*2 + grouping(o_orderpriority) AS BIGINT) AS gid
+        |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
+        |ORDER BY gid, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin),
+
+    "q_case_when" -> graded(Relational.caseWhenAgg _,
+      """SELECT o_orderstatus,
+        |CAST(sum(CASE WHEN o_totalprice>200000 THEN 1 ELSE 0 END) AS BIGINT) AS n_high,
+        |CAST(sum(CASE WHEN o_totalprice<=200000 THEN 1 ELSE 0 END) AS BIGINT) AS n_low,
+        |round(avg(CASE WHEN o_orderpriority='1-URGENT' THEN o_totalprice END),2) AS avg_urgent
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+
+    "q_argmax" -> graded(Relational.argMaxAgg _,
       """WITH ranked AS (SELECT o_orderstatus, o_orderkey, o_totalprice,
         |  row_number() OVER (PARTITION BY o_orderstatus ORDER BY o_totalprice DESC, o_orderkey DESC) AS rd,
         |  row_number() OVER (PARTITION BY o_orderstatus ORDER BY o_totalprice ASC, o_orderkey ASC) AS ra
@@ -2248,347 +1693,48 @@ object SparkEntry {
         |max(CASE WHEN rd=1 THEN o_orderkey END) AS top_orderkey,
         |round(max(o_totalprice), 2) AS top_price,
         |max(CASE WHEN ra=1 THEN o_orderkey END) AS bottom_orderkey
-        |FROM ranked GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+        |FROM ranked GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
 
-    "q_embedding_stats" ->
+    "q_embedding_stats" -> graded(Similarity.embeddingStats _,
       """SELECT vec_id, CAST(len(embedding) AS BIGINT) AS dim,
         |round(embedding[1]::DOUBLE, 6) AS first_val,
         |round(list_sum(list_transform(embedding[1:8], x -> x::DOUBLE)), 6) AS head8_sum,
         |round(list_max(embedding)::DOUBLE, 6) AS max_val,
         |round(list_min(embedding)::DOUBLE, 6) AS min_val
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
+        |FROM embeddings ORDER BY vec_id""".stripMargin),
 
-    // int8 quantization: all-double IEEE arithmetic both engines
-    // reproduce exactly; the error sum is an IN-ORDER left fold on both
-    // sides (Spark aggregate / DuckDB list_reduce) — float sums must
-    // never ride an order-free aggregate. (x - q*scale) is squared by
-    // multiplication, not pow(), to keep the op identical.
-    "q_embedding_quantize" ->
-      """WITH e AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        |  FROM embeddings),
-        |s AS (SELECT vec_id, emb,
-        |    list_max(list_transform(emb, x -> abs(x))) / 127.0 AS scale FROM e),
-        |q AS (SELECT vec_id, emb, scale,
-        |    CASE WHEN scale = 0.0 THEN list_transform(emb, x -> CAST(0 AS BIGINT))
-        |         ELSE list_transform(emb, x -> CAST(round(x / scale) AS BIGINT)) END AS qvec
-        |  FROM s)
-        |SELECT vec_id, scale, CAST(len(emb) AS BIGINT) AS dim,
-        |  array_to_string(list_transform(qvec[1:8], v -> CAST(v AS VARCHAR)), ',') AS q_head8_csv,
-        |  sqrt(list_reduce(
-        |    list_prepend(0.0, list_transform(generate_series(1, len(emb)),
-        |      i -> (emb[i] - qvec[i] * scale) * (emb[i] - qvec[i] * scale))),
-        |    (a, b) -> a + b)) AS recon_err
-        |FROM q ORDER BY vec_id""".stripMargin,
-
-    // mean pooling: members fold in vec_id order with the FIRST member
-    // as init on BOTH sides (list_reduce's seeding; a zero-vector init
-    // would differ on ±0.0 inputs) — bit-identical running sums, so
-    // the exploded doubles sit directly under the hash
-    "q_embedding_pool" ->
-      s"""WITH m AS (
-         |  SELECT vec_id // ${graft.operators.Similarity.PoolGroup} AS group_id,
-         |    array_agg(list_transform(embedding, x -> x::DOUBLE) ORDER BY vec_id) AS embs,
-         |    count(*) AS n
-         |  FROM embeddings GROUP BY 1),
-         |pooled AS (
-         |  SELECT group_id, n,
-         |    list_reduce(embs,
-         |      (acc, e) -> list_transform(generate_series(1, len(acc)), i -> acc[i] + e[i])) AS vec
-         |  FROM m)
-         |SELECT group_id, CAST(unnest(generate_series(1, len(vec))) AS BIGINT) AS pos,
-         |  unnest(vec) / n AS val
-         |FROM pooled ORDER BY group_id, pos""".stripMargin,
-
-    // full Lloyd's clustering under the exact gate: fixed-point
-    // centroid sums make every float deterministic (see kmeansChainSql)
-    "q_kmeans" ->
-      s"""WITH $kmeansChainSql,
-         |sz AS (SELECT cluster, count(*) AS n_cluster FROM kmf GROUP BY 1)
-         |SELECT kmf.vec_id, kmf.cluster, kmf.dist, sz.n_cluster
-         |FROM kmf JOIN sz USING (cluster) ORDER BY vec_id""".stripMargin,
-
-    // the streaming twin: same Lloyd chain, assignment columns only
-    "q_stream_kmeans" ->
-      s"""WITH $kmeansChainSql
-         |SELECT vec_id, cluster, dist FROM kmf ORDER BY vec_id""".stripMargin,
-
-    // kNN majority vote: extend the gated brute-force top-k with the
-    // label join + (n_votes DESC, label) argmax
-    "q_knn_classify" ->
-      s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < ${graft.operators.Similarity.NumQueries}),
-         |sims AS (SELECT q_id, e.vec_id AS n_id,
-         |  round(${cosSql("q_emb", "e.embedding")}, 6) AS sim
-         |  FROM embeddings e, q WHERE q_id <> e.vec_id),
-         |ranked AS (SELECT q_id, n_id,
-         |  row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) AS rank FROM sims),
-         |votes AS (SELECT t.q_id, CAST(e.label AS BIGINT) AS label, count(*) AS n_votes
-         |  FROM ranked t JOIN embeddings e ON t.n_id = e.vec_id
-         |  WHERE t.rank <= ${graft.operators.Similarity.K} GROUP BY 1, 2),
-         |best AS (SELECT q_id, label, n_votes,
-         |  row_number() OVER (PARTITION BY q_id ORDER BY n_votes DESC, label) AS rn FROM votes)
-         |SELECT b.q_id, b.label AS pred_label, b.n_votes,
-         |  CAST(e2.label AS BIGINT) AS true_label
-         |FROM best b JOIN embeddings e2 ON b.q_id = e2.vec_id
-         |WHERE b.rn = 1 ORDER BY b.q_id""".stripMargin,
-
-    // temperature flattening over the Lloyd-chain clusters; same
-    // IEEE-exact sqrt/divide rate math as q_temperature_mixture
-    "q_cluster_mixture" ->
-      s"""WITH $kmeansChainSql,
-         |sz AS (SELECT cluster, count(*) AS n_cluster FROM kmf GROUP BY 1),
-         |sw AS (SELECT cluster, n_cluster, 1.0/sqrt(n_cluster) AS w FROM sz),
-         |rates AS (SELECT cluster, n_cluster,
-         |    w / (SELECT max(w) FROM sw) AS rate FROM sw)
-         |SELECT r.cluster, r.n_cluster, r.rate, count(*) AS n_sampled,
-         |  min(kmf.vec_id) AS first_vec
-         |FROM kmf JOIN rates r USING (cluster)
-         |WHERE ${h32("CAST(kmf.vec_id AS VARCHAR) || '#cmix'")} % 1000000 < r.rate * 1000000
-         |GROUP BY 1, 2, 3 ORDER BY r.cluster""".stripMargin,
-
-    // SemDeDup decision: rank within cluster by centroid distance DESC
-    // (vec_id tie-break), drop any vector with a higher-ranked
-    // within-cluster neighbor at cosine >= 0.4
-    "q_semdedup" ->
-      s"""WITH $kmeansChainSql,
-         |r AS (SELECT vec_id, cluster,
-         |    row_number() OVER (PARTITION BY cluster ORDER BY dist DESC, vec_id) AS rnk
-         |  FROM kmf),
-         |re AS (SELECT r.vec_id, r.cluster, r.rnk, e.embedding
-         |  FROM r JOIN embeddings e USING (vec_id)),
-         |dropped AS (SELECT DISTINCT b.vec_id
-         |  FROM re a JOIN re b ON a.cluster = b.cluster AND a.rnk < b.rnk
-         |  WHERE round(${cosSql("a.embedding", "b.embedding")}, 6) >= 0.4)
-         |SELECT r.vec_id, r.cluster, CAST(r.rnk AS BIGINT) AS "rank",
-         |  CAST(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS kept
-         |FROM r LEFT JOIN dropped d ON r.vec_id = d.vec_id ORDER BY r.vec_id""".stripMargin,
-
-    // the incremental decision: Lloyd over the id-prefix base,
-    // assignment + rank + drop over the union, batch rows out — the
-    // frozen-base delta operator must emit exactly these
-    "q_delta_semdedup" -> deltaSemdedupSql,
-    // the serving twin: the same chain with the comparison side
-    // restricted to base (batch-internal terms vanish at batch size 1)
-    "q_stream_semdedup_delta" -> deltaSemdedupServeSql,
-
-    "q_cross_join" ->
-      """SELECT r_name, n_name FROM region CROSS JOIN nation
-        |ORDER BY r_name, n_name""".stripMargin,
-
-    "q_frame_features" ->
-      """SELECT frame_idx, count(*) AS n_frames, CAST(sum(chunk_bytes) AS BIGINT) AS total_bytes FROM (
-        |SELECT doc_id, i AS frame_idx,
-        |  least(step, greatest(n_bytes - i*step, 0)) AS chunk_bytes
-        |FROM (SELECT doc_id, n_bytes, greatest(n_bytes//4, 1) AS step
-        |      FROM (SELECT doc_id, least(octet_length(encode(text)), 4096) AS n_bytes FROM documents)),
-        |  (SELECT unnest(generate_series(0, 3)) AS i)
-        |WHERE i < least(4, n_bytes))
-        |GROUP BY frame_idx ORDER BY frame_idx""".stripMargin,
-
-    "q_full_outer" ->
-      """WITH p AS (SELECT o_custkey, count(*) AS n_p FROM orders WHERE o_orderstatus='P' GROUP BY 1),
-        |f AS (SELECT o_custkey, count(*) AS n_f FROM orders WHERE o_orderstatus='F' GROUP BY 1)
-        |SELECT coalesce(p.o_custkey, f.o_custkey) AS custkey,
-        |coalesce(n_p, 0) AS n_p, coalesce(n_f, 0) AS n_f
-        |FROM p FULL OUTER JOIN f ON p.o_custkey=f.o_custkey ORDER BY custkey""".stripMargin,
-
-    "q_typed_topk" ->
-      """SELECT o_orderstatus, rn, price, o_orderkey FROM (
-        |SELECT o_orderstatus,
-        |row_number() OVER (PARTITION BY o_orderstatus ORDER BY o_totalprice DESC, o_orderkey) AS rn,
-        |round(o_totalprice, 2) AS price, o_orderkey FROM orders)
-        |WHERE rn <= 3 ORDER BY o_orderstatus, rn""".stripMargin,
-
-    "q_range_join" ->
-      """SELECT o_orderpriority, count(*) AS n_shipped_90d
-        |FROM lineitem JOIN orders ON l_orderkey=o_orderkey
-        |AND l_shipdate>=o_orderdate AND l_shipdate <= o_orderdate + INTERVAL 90 DAY
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q_topk" ->
-      """SELECT o_orderkey, o_custkey, round(o_totalprice,2) AS price
-        |FROM orders ORDER BY price DESC, o_orderkey LIMIT 10""".stripMargin,
-
-    "q_sort" ->
-      """SELECT l_orderkey, l_linenumber, l_shipdate, l_returnflag
-        |FROM lineitem ORDER BY l_shipdate, l_orderkey, l_linenumber""".stripMargin,
-
-    "q_intersect" ->
-      """SELECT o_custkey FROM orders WHERE o_orderstatus='O'
-        |INTERSECT SELECT o_custkey FROM orders WHERE o_orderstatus='F'
-        |ORDER BY o_custkey""".stripMargin,
-
-    "q_except" ->
-      """SELECT o_custkey FROM orders WHERE o_orderstatus='O'
-        |EXCEPT SELECT o_custkey FROM orders WHERE o_orderstatus='P'
-        |ORDER BY o_custkey""".stripMargin,
-
-    "q_intersect_all" ->
-      """SELECT l_partkey, count(*) AS copies FROM (
-        |SELECT l_partkey FROM lineitem WHERE l_returnflag='R'
-        |INTERSECT ALL SELECT l_partkey FROM lineitem WHERE l_returnflag='A')
-        |GROUP BY l_partkey ORDER BY l_partkey""".stripMargin,
-
-    "q_except_all" ->
-      """SELECT l_partkey, count(*) AS copies FROM (
-        |SELECT l_partkey FROM lineitem WHERE l_returnflag='R'
-        |EXCEPT ALL SELECT l_partkey FROM lineitem WHERE l_returnflag='A')
-        |GROUP BY l_partkey ORDER BY l_partkey""".stripMargin,
-
-    "q_bucketed_join" ->
-      """SELECT c_mktsegment, count(*) AS n_orders,
-        |round(sum(o_totalprice), 2) AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q_compaction" ->
-      """SELECT o_orderstatus, count(*) AS n_orders,
-        |round(sum(o_totalprice), 2) AS revenue,
-        |count(DISTINCT o_orderkey) AS n_keys
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "q_dpp_join" ->
-      """SELECT ship_year, count(*) AS n_items, round(sum(l_extendedprice), 2) AS revenue
-        |FROM (SELECT CAST(year(l_shipdate) AS INTEGER) AS ship_year, l_extendedprice
-        |      FROM lineitem) f
-        |WHERE ship_year IN (SELECT DISTINCT CAST(year(o_orderdate) AS INTEGER)
-        |                    FROM orders
-        |                    WHERE o_orderpriority = '1-URGENT'
-        |                      AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |                      AND o_orderdate < TIMESTAMP '1998-01-01')
-        |GROUP BY ship_year ORDER BY ship_year""".stripMargin,
-
-    "q_bloom_join" ->
-      """SELECT l_returnflag, count(*) AS n_items,
-        |       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 400000.0
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    // join order is semantics-free, so the oracle states the query in
-    // the natural order; the Spark side's CBO reorder is graded by
-    // PlanAuditSpec, the values by this hash
-    "q_cbo_join" ->
-      """SELECT c_mktsegment, count(*) AS n_orders,
-        |       round(sum(o_totalprice), 2) AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE n_name = 'NATION_7'
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    // like q_cbo_join: the oracle grades the VALUES (order-invariant);
-    // the stats-driven broadcast itself is graded by PlanAuditSpec
-    "q_cbo_broadcast" ->
-      """SELECT c_mktsegment, count(*) AS n_orders,
-        |       round(sum(o_totalprice), 2) AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q_csv_roundtrip" ->
-      """SELECT o_orderstatus, count(*) AS n_orders,
-        |round(sum(o_totalprice), 2) AS revenue
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "q_json_roundtrip" ->
-      """SELECT o_orderpriority, count(*) AS n_orders,
-        |round(sum(o_totalprice), 2) AS revenue
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q_orc_roundtrip" ->
-      """SELECT o_custkey % 10 AS bucket, count(*) AS n_orders,
-        |round(sum(o_totalprice), 2) AS revenue
-        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin,
-
-    "q_union_distinct" ->
-      """SELECT DISTINCT nationkey FROM (
-        |SELECT CAST(c_nationkey AS INT) AS nationkey FROM customer
-        |UNION ALL SELECT CAST(s_nationkey AS INT) FROM supplier)
-        |ORDER BY nationkey""".stripMargin,
-
-    "q_distinct_agg" ->
-      """SELECT l_returnflag, count(DISTINCT l_suppkey) AS n_supps,
-        |count(DISTINCT l_partkey) AS n_parts, count(*) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q_rollup" ->
-      """SELECT l_returnflag, l_linestatus, round(sum(l_quantity),2) AS sum_qty,
-        |count(*) AS n_rows,
-        |CAST(grouping(l_returnflag)*2 + grouping(l_linestatus) AS BIGINT) AS gid
-        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-
-    "q_unpivot" ->
-      """SELECT l_returnflag, measure, count(*) AS n, round(sum(val), 2) AS total
-        |FROM (
-        |  SELECT l_returnflag, 'l_quantity' AS measure, l_quantity AS val FROM lineitem
-        |  UNION ALL
-        |  SELECT l_returnflag, 'l_extendedprice', l_extendedprice FROM lineitem
-        |  UNION ALL
-        |  SELECT l_returnflag, 'l_discount', l_discount FROM lineitem)
-        |GROUP BY 1, 2 ORDER BY l_returnflag, measure""".stripMargin,
-
-    "q_exists_subquery" ->
-      """SELECT c_mktsegment, count(*) AS n_customers
-        |FROM customer c
-        |WHERE EXISTS (
-        |  SELECT 1 FROM orders o
-        |  WHERE o.o_custkey = c.c_custkey
-        |    AND o.o_totalprice > (SELECT avg(o_totalprice) FROM orders))
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q_grouping_sets" ->
-      """SELECT o_orderstatus, o_orderpriority,
-        |count(*) AS n_orders, round(sum(o_totalprice), 2) AS revenue,
-        |CAST(grouping(o_orderstatus)*2 + grouping(o_orderpriority) AS BIGINT) AS gid
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
-        |ORDER BY gid, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-
-    "q_cube" ->
-      """SELECT o_orderstatus, o_orderpriority, round(sum(o_totalprice),2) AS sum_price,
-        |count(*) AS n_orders,
-        |CAST(grouping(o_orderstatus)*2 + grouping(o_orderpriority) AS BIGINT) AS gid
-        |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-        |ORDER BY gid, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-
-    "q_case_when" ->
-      """SELECT o_orderstatus,
-        |CAST(sum(CASE WHEN o_totalprice>200000 THEN 1 ELSE 0 END) AS BIGINT) AS n_high,
-        |CAST(sum(CASE WHEN o_totalprice<=200000 THEN 1 ELSE 0 END) AS BIGINT) AS n_low,
-        |round(avg(CASE WHEN o_orderpriority='1-URGENT' THEN o_totalprice END),2) AS avg_urgent
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "q_asof_join" ->
+    "q_asof_join" -> graded(Relational.asofJoin _,
       """WITH od AS (SELECT o_custkey, o_orderdate, max(o_orderkey) AS last_orderkey,
         |  arg_max(o_totalprice, o_orderkey) AS last_price FROM orders GROUP BY 1, 2)
         |SELECT e.event_id, e.user_id, od.last_orderkey, od.last_price
         |FROM events e ASOF JOIN od ON e.user_id = od.o_custkey AND e.ts >= od.o_orderdate
-        |ORDER BY e.event_id""".stripMargin,
+        |ORDER BY e.event_id""".stripMargin),
 
-    "q_pivot" ->
+    "q_pivot" -> graded(Relational.pivotAgg _,
       """SELECT o_orderpriority,
         |round(sum(o_totalprice) FILTER (o_orderstatus='F'),2) AS "F",
         |round(sum(o_totalprice) FILTER (o_orderstatus='O'),2) AS "O",
         |round(sum(o_totalprice) FILTER (o_orderstatus='P'),2) AS "P"
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
 
-    "q_percentile" ->
+    "q_percentile" -> graded(Relational.percentileAgg _,
       """SELECT l_returnflag,
         |quantile_cont(l_quantity, 0.25) AS p25, quantile_cont(l_quantity, 0.5) AS p50,
         |quantile_cont(l_quantity, 0.75) AS p75, quantile_cont(l_quantity, 0.95) AS p95
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
-    "q_zorder" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
-        |CAST(list_sum(list_transform(generate_series(0, 19), i ->
-        |  (((l_partkey >> i) & 1) << (2*i)) + (((l_suppkey >> i) & 1) << (2*i + 1)))) AS BIGINT) AS zkey
-        |FROM lineitem
-        |ORDER BY zkey, l_orderkey, l_linenumber LIMIT 2000""".stripMargin,
+    // single-pass co-moment family: stddev/var/corr/covar/regr_slope
+    "q_stats_agg" -> graded(Relational.statsAgg _,
+      """SELECT l_returnflag,
+        |round(stddev_samp(l_quantity), 6) AS qty_sd,
+        |round(var_samp(l_quantity), 6) AS qty_var,
+        |round(corr(l_quantity, l_extendedprice), 6) AS qty_price_corr,
+        |round(covar_samp(l_quantity, l_discount), 6) AS qty_disc_cov,
+        |round(regr_slope(l_extendedprice, l_quantity), 6) AS price_per_qty
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
-    "q_data_quality" ->
+    // Deequ-style constraint report: one scan pass + one FK anti-join
+    "q_data_quality" -> graded(Relational.dataQuality _,
       """WITH m AS (SELECT CAST(count(*) AS BIGINT) AS row_count,
         |  CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_custkey,
         |  CAST(count(*) - count(DISTINCT o_orderkey) AS BIGINT) AS dup_orderkey,
@@ -2602,18 +1748,286 @@ object SparkEntry {
         |  UNION ALL SELECT 'dup_orderkey', dup_orderkey FROM m
         |  UNION ALL SELECT 'nonpositive_totalprice', nonpositive_totalprice FROM m
         |  UNION ALL SELECT 'fk_orphans', fk_orphans FROM f
-        |) ORDER BY chk""".stripMargin,
+        |) ORDER BY chk""".stripMargin),
 
-    "q_stats_agg" ->
-      """SELECT l_returnflag,
-        |round(stddev_samp(l_quantity), 6) AS qty_sd,
-        |round(var_samp(l_quantity), 6) AS qty_var,
-        |round(corr(l_quantity, l_extendedprice), 6) AS qty_price_corr,
-        |round(covar_samp(l_quantity, l_discount), 6) AS qty_disc_cov,
-        |round(regr_slope(l_extendedprice, l_quantity), 6) AS price_per_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+    // Z-order (Morton) clustering key for multi-column data skipping
+    "q_zorder" -> graded(Relational.zorderKey _,
+      """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
+        |CAST(list_sum(list_transform(generate_series(0, 19), i ->
+        |  (((l_partkey >> i) & 1) << (2*i)) + (((l_suppkey >> i) & 1) << (2*i + 1)))) AS BIGINT) AS zkey
+        |FROM lineitem
+        |ORDER BY zkey, l_orderkey, l_linenumber LIMIT 2000""".stripMargin),
 
-    "q_tfidf" ->
+    // the GK-sketch twin of q_percentile (mergeable, sort-free — the
+    // 100 TB form; approximate -> rows-only, bounds pinned in spec)
+    "q_approx_percentile" -> rowsOnly(Relational.approxPercentileAgg _),
+
+    // — window functions —
+    "q_window_rank" -> graded(Windows.windowRank _,
+      """SELECT o_custkey, o_orderkey, price, rn FROM (
+        |SELECT o_custkey, o_orderkey, round(o_totalprice,2) AS price,
+        |row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
+        |FROM orders) WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin),
+
+    "q_window_distribution" -> graded(Windows.windowDistribution _,
+      """SELECT o_orderstatus, o_orderkey,
+        |CAST(ntile(4) OVER w AS BIGINT) AS quartile,
+        |percent_rank() OVER w AS pct_rank,
+        |cume_dist() OVER w AS cume
+        |FROM orders
+        |WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey)
+        |ORDER BY o_orderstatus, o_orderkey""".stripMargin),
+
+    "q_window_running" -> graded(Windows.windowRunning _,
+      """SELECT o_custkey, o_orderkey,
+        |round(sum(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),2) AS running_total,
+        |round(coalesce(lag(o_totalprice,1) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),0),2) AS prev_price
+        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin),
+
+    "q_window_range" -> graded(Windows.windowRange _,
+      """SELECT o_custkey, o_orderkey,
+        |round(sum(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate
+        |  RANGE BETWEEN INTERVAL 90 DAYS PRECEDING AND CURRENT ROW), 2) AS trailing_90d
+        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin),
+
+    "q_group_topk" -> graded(Windows.groupTopK _,
+      """SELECT c_mktsegment, o_orderkey, price, rn FROM (
+        |SELECT c_mktsegment, o_orderkey, round(o_totalprice,2) AS price,
+        |row_number() OVER (PARTITION BY c_mktsegment ORDER BY o_totalprice DESC, o_orderkey) AS rn
+        |FROM orders JOIN customer ON o_custkey=c_custkey)
+        |WHERE rn <= 2 ORDER BY c_mktsegment, rn""".stripMargin),
+
+    "q_gap_fill" -> graded(Windows.gapFill _,
+      """WITH hourly AS (SELECT event_type, time_bucket(INTERVAL '1 hour', ts) AS h,
+        |  count(*) AS n, round(sum(value), 2) AS total FROM events GROUP BY 1, 2),
+        |bounds AS (SELECT event_type, min(h) AS h0, max(h) AS h1 FROM hourly GROUP BY 1),
+        |spine AS (SELECT event_type, unnest(generate_series(h0, h1, INTERVAL '1 hour')) AS h FROM bounds),
+        |j AS (SELECT s.event_type, s.h, coalesce(n, 0) AS n_filled, total
+        |  FROM spine s LEFT JOIN hourly USING (event_type, h))
+        |SELECT event_type, strftime(h, '%Y-%m-%d %H:%M:%S') AS hour, n_filled,
+        |last_value(total IGNORE NULLS) OVER (PARTITION BY event_type ORDER BY h
+        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS carried
+        |FROM j ORDER BY event_type, hour""".stripMargin),
+
+    // the salted two-phase plan must produce byte-identical results to
+    // the plain plan — same oracle proves the rewrite is lossless
+    "q_salted_wordcount" -> graded(Skew.saltedWordCount _, wordcountSql),
+    // the salted-join plan must reproduce the plain join byte-for-byte
+    "q_salted_join" -> graded(Skew.saltedJoinBrand _, brandRevenueSql),
+
+    // — scalar function groups —
+    "q_string_funcs" -> graded(Scalars.stringFuncs _,
+      """SELECT p_partkey, upper(p_name) AS name_upper,
+        |CAST(length(p_name) AS BIGINT) AS name_len,
+        |substr(p_name,1,5) AS name_pre,
+        |regexp_extract(p_name, '^([a-z]+)', 1) AS first_word,
+        |p_brand||'|'||p_type AS brand_type,
+        |lpad(CAST(p_size AS VARCHAR), 4, '0') AS size_pad
+        |FROM part ORDER BY p_partkey""".stripMargin),
+
+    // Levenshtein top-3 fuzzy entity matching (integer distances)
+    "q_fuzzy_match" -> graded(Scalars.fuzzyMatch _,
+      """WITH probes AS (SELECT p_partkey AS probe_id,
+        |  substr(p_name,1,1)||substr(p_name,3) AS probe FROM part WHERE p_partkey < 5),
+        |d AS (SELECT probe_id, p.p_partkey, p.p_name,
+        |  CAST(levenshtein(probe, p.p_name) AS BIGINT) AS dist FROM part p, probes),
+        |r AS (SELECT probe_id, p_partkey, p_name, dist,
+        |  row_number() OVER (PARTITION BY probe_id ORDER BY dist, p_partkey) AS rank FROM d)
+        |SELECT probe_id, rank, p_partkey, p_name, dist FROM r WHERE rank <= 3
+        |ORDER BY probe_id, rank""".stripMargin),
+
+    "q_date_funcs" -> graded(Scalars.dateFuncs _,
+      """SELECT strftime(o_orderdate, '%Y-%m') AS month, count(*) AS n_orders,
+        |CAST(min(day(o_orderdate)) AS BIGINT) AS min_dom,
+        |CAST(max(isodow(o_orderdate)-1) AS BIGINT) AS max_dow,
+        |round(sum(o_totalprice),2) AS month_revenue
+        |FROM orders GROUP BY 1 ORDER BY month""".stripMargin),
+
+    "q_math_funcs" -> graded(Scalars.mathFuncs _,
+      """SELECT l_returnflag, round(sqrt(sum(l_quantity)),4) AS sqrt_qty,
+        |round(ln(sum(l_extendedprice)),4) AS ln_price,
+        |round(pow(avg(l_discount),2),6) AS disc_sq,
+        |CAST(ceil(max(l_tax)*100) AS BIGINT) AS max_tax_pct,
+        |CAST(floor(min(l_extendedprice)) AS BIGINT) AS min_price_fl,
+        |round(abs(min(l_quantity-25)),2) AS abs_qty_dev
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+
+    "q_json" -> graded(Scalars.jsonFuncs _,
+      """SELECT event_type, count(*) AS n_events, CAST(sum(k) AS BIGINT) AS sum_k,
+        |min(k) AS min_k, max(k) AS max_k FROM (
+        |SELECT event_type, CAST(json_extract_string(props,'$.k') AS BIGINT) AS k FROM events)
+        |GROUP BY event_type ORDER BY event_type""".stripMargin),
+
+    "q_map_funcs" -> graded(Scalars.mapFuncs _,
+      s"""SELECT doc_id, count(*) AS n_distinct_words,
+         |coalesce(max(CASE WHEN word = 'THE' THEN cnt END), 0) AS n_the,
+         |CAST(sum(CASE WHEN cnt >= 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_frequent
+         |FROM (SELECT doc_id, word, count(*) AS cnt FROM ($tokSql) GROUP BY 1, 2)
+         |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+
+    "q_null_safe_join" -> graded(Scalars.nullSafeJoin _,
+      """WITH base AS (SELECT event_type,
+        |  nullif(CAST(json_extract_string(props, '$.k') AS BIGINT) % 7, 0) AS bucket
+        |  FROM events),
+        |c AS (SELECT bucket, count(*) AS n_click FROM base WHERE event_type='click' GROUP BY 1),
+        |v AS (SELECT bucket, count(*) AS n_view FROM base WHERE event_type='view' GROUP BY 1)
+        |SELECT c.bucket, n_click, n_view FROM c
+        |JOIN v ON c.bucket IS NOT DISTINCT FROM v.bucket
+        |ORDER BY c.bucket NULLS FIRST""".stripMargin),
+
+    "q_grep" -> graded(Scalars.grep _,
+      """SELECT doc_id, source, lang FROM documents
+        |WHERE regexp_matches(text, 'window.*join|join.*window') ORDER BY doc_id""".stripMargin),
+
+    "q_profile" -> graded(Scalars.profile _, {
+      val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
+      cols.map { c =>
+        s"""SELECT '$c' AS "column", count(*) AS n_rows,
+           |CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
+           |count(DISTINCT $c) AS n_distinct,
+           |round(min($c), 4) AS min_val, round(max($c), 4) AS max_val,
+           |round(avg($c), 4) AS avg_val FROM lineitem""".stripMargin
+      }.mkString("", " UNION ALL ", " ORDER BY \"column\"")
+    }),
+
+    "q_histogram" -> graded(Scalars.histogram _,
+      """SELECT CAST(floor(o_totalprice / 50000) AS BIGINT) AS bucket,
+        |count(*) AS n, round(sum(o_totalprice), 2) AS bucket_total
+        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin),
+
+    // — text analysis / word count (the reference application) —
+    "q_wordcount" -> graded(TextAnalysis.wordCount _, wordcountSql),
+
+    "q_mapreduce_wordcount" -> graded((s: SparkSession, dir: String) => {
+      import s.implicits._
+      val texts = Tables.documents(s, dir).select(col("text")).as[String]
+      MapReduceJob.wordCount(s, texts).toDF("word", "cnt").orderBy(col("word"))
+    }, wordcountSql),
+
+    "q_inverted_index" -> graded(TextAnalysis.invertedIndex _,
+      s"SELECT DISTINCT word, doc_id FROM ($tokSql) ORDER BY word, doc_id"),
+
+    // the reference's literal text-dir input surface (S1/S2), graded:
+    // text-dir source surface: DuckDB reads the same files via read_text
+    "q_text_wordcount" -> graded(TextAnalysis.textDirWordCount _,
+      s"""SELECT upper(w) AS word, count(*) AS cnt FROM (
+        |SELECT unnest(string_split_regex(content, '[^a-zA-Z]')) AS w
+        |FROM read_text('${TextAnalysis.ReferenceCorpusDir}/*.txt'))
+        |WHERE w <> '' GROUP BY word ORDER BY word""".stripMargin),
+
+    "q_text_stats" -> graded(TextAnalysis.textDirStats _,
+      s"""SELECT fname, count(*) AS n_tokens, count(DISTINCT word) AS n_distinct,
+        |CAST(max(length(word)) AS BIGINT) AS max_word_len FROM (
+        |SELECT regexp_extract(filename, '([^/]+)$$', 1) AS fname, upper(w) AS word FROM (
+        |  SELECT filename, unnest(string_split_regex(content, '[^a-zA-Z]')) AS w
+        |  FROM read_text('${TextAnalysis.ReferenceCorpusDir}/*.txt'))
+        |WHERE w <> '')
+        |GROUP BY fname ORDER BY fname""".stripMargin),
+
+    // partitioned sink round-trip (K1 generalization), graded:
+    // sink round-trip: the oracle aggregates the ORIGINAL table — the
+    // Spark side must survive write→partition→pruned-read unchanged
+    "q_sink_roundtrip" -> graded(graft.sources.Sinks.partitionedRoundTrip _,
+      """SELECT o_orderpriority, count(*) AS n_orders,
+        |round(sum(o_totalprice), 2) AS revenue
+        |FROM orders WHERE o_orderstatus = 'F'
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+
+    // bucketed (co-located join) storage round-trip, graded:
+    "q_bucketed_join" -> graded(graft.sources.Sinks.bucketedJoinRoundTrip _,
+      """SELECT c_mktsegment, count(*) AS n_orders,
+        |round(sum(o_totalprice), 2) AS revenue
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+
+    // dynamic-partition-pruned star join over a partitioned landing:
+    "q_dpp_join" -> graded(graft.sources.Sinks.dppJoinRoundTrip _,
+      """SELECT ship_year, count(*) AS n_items, round(sum(l_extendedprice), 2) AS revenue
+        |FROM (SELECT CAST(year(l_shipdate) AS INTEGER) AS ship_year, l_extendedprice
+        |      FROM lineitem) f
+        |WHERE ship_year IN (SELECT DISTINCT CAST(year(o_orderdate) AS INTEGER)
+        |                    FROM orders
+        |                    WHERE o_orderpriority = '1-URGENT'
+        |                      AND o_orderdate >= TIMESTAMP '1996-01-01'
+        |                      AND o_orderdate < TIMESTAMP '1998-01-01')
+        |GROUP BY ship_year ORDER BY ship_year""".stripMargin),
+
+    // small-file compaction (storage maintenance), losslessness graded:
+    "q_compaction" -> graded(graft.sources.Sinks.compactionRoundTrip(_, _),
+      """SELECT o_orderstatus, count(*) AS n_orders,
+        |round(sum(o_totalprice), 2) AS revenue,
+        |count(DISTINCT o_orderkey) AS n_keys
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+
+    // runtime Bloom-filter shuffle reduction (merge-hinted fact join);
+    // the default path executes the filtered plan under the conf
+    // window via eager checkpoint (a write would re-plan without it)
+    "q_bloom_join" -> graded(Relational.bloomFilteredJoin(_, _),
+      """SELECT l_returnflag, count(*) AS n_items,
+        |       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 400000.0
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+
+    // cost-based join reorder driven by ANALYZE TABLE statistics (the
+    // stats/CBO surface: no hints — the optimizer re-orders a
+    // deliberately bad syntactic join order from column stats)
+    // join order is semantics-free, so the oracle states the query in
+    // the natural order; the Spark side's CBO reorder is graded by
+    // PlanAuditSpec, the values by this hash
+    "q_cbo_join" -> graded(Relational.cboStarJoin(_, _),
+      """SELECT c_mktsegment, count(*) AS n_orders,
+        |       round(sum(o_totalprice), 2) AS revenue
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |WHERE n_name = 'NATION_7'
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+
+    // the second CBO lever: stats-driven BROADCAST of the dimension
+    // composite (4-relation star, no hints — PlanAuditSpec asserts
+    // BHJ-with-stats vs SMJ-without on the orders join)
+    // like q_cbo_join: the oracle grades the VALUES (order-invariant);
+    // the stats-driven broadcast itself is graded by PlanAuditSpec
+    "q_cbo_broadcast" -> graded(Relational.cboStarJoin4(_, _),
+      """SELECT c_mktsegment, count(*) AS n_orders,
+        |       round(sum(o_totalprice), 2) AS revenue
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |WHERE r_name = 'ASIA'
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+
+    // text-format (CSV) sink/source round-trip, graded:
+    "q_json_roundtrip" -> graded(graft.sources.Sinks.jsonRoundTrip _,
+      """SELECT o_orderpriority, count(*) AS n_orders,
+        |round(sum(o_totalprice), 2) AS revenue
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+
+    "q_orc_roundtrip" -> graded(graft.sources.Sinks.orcRoundTrip _,
+      """SELECT o_custkey % 10 AS bucket, count(*) AS n_orders,
+        |round(sum(o_totalprice), 2) AS revenue
+        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin),
+
+    "q_csv_roundtrip" -> graded(graft.sources.Sinks.csvRoundTrip _,
+      """SELECT o_orderstatus, count(*) AS n_orders,
+        |round(sum(o_totalprice), 2) AS revenue
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+
+    // multiset set-ops (the ALL variants keep duplicates):
+    "q_intersect_all" -> graded(Relational.intersectAllParts _,
+      """SELECT l_partkey, count(*) AS copies FROM (
+        |SELECT l_partkey FROM lineitem WHERE l_returnflag='R'
+        |INTERSECT ALL SELECT l_partkey FROM lineitem WHERE l_returnflag='A')
+        |GROUP BY l_partkey ORDER BY l_partkey""".stripMargin),
+
+    "q_except_all" -> graded(Relational.exceptAllParts _,
+      """SELECT l_partkey, count(*) AS copies FROM (
+        |SELECT l_partkey FROM lineitem WHERE l_returnflag='R'
+        |EXCEPT ALL SELECT l_partkey FROM lineitem WHERE l_returnflag='A')
+        |GROUP BY l_partkey ORDER BY l_partkey""".stripMargin),
+
+    "q_tfidf" -> graded(TextAnalysis.tfidf _,
       """WITH tok AS (SELECT doc_id, lower(w) AS word FROM
         |  (SELECT doc_id, unnest(string_split_regex(text,'[^a-zA-Z]')) AS w FROM documents) WHERE w<>''),
         |tf AS (SELECT doc_id, word, count(*) AS cnt FROM tok GROUP BY 1, 2),
@@ -2625,26 +2039,26 @@ object SparkEntry {
         |  row_number() OVER (PARTITION BY doc_id
         |    ORDER BY round((cnt::DOUBLE/tot) * ln(n_docs::DOUBLE/df), 6) DESC, word) AS rn
         |  FROM tf JOIN dl USING(doc_id) JOIN dfreq USING(word), nd)
-        |WHERE rn <= 3 ORDER BY doc_id, rn""".stripMargin,
+        |WHERE rn <= 3 ORDER BY doc_id, rn""".stripMargin),
 
-    "q_bigrams" ->
+    "q_bigrams" -> graded(TextAnalysis.wordBigrams _,
       """SELECT bigram, count(*) AS cnt FROM (
         |SELECT unnest(list_transform(generate_series(1, greatest(len(toks)-1, 0)),
         |  i -> toks[i]||' '||toks[i+1])) AS bigram FROM (
         |SELECT list_transform(list_filter(string_split_regex(text,'[^a-zA-Z]'), x -> x<>''),
         |  x -> lower(x)) AS toks FROM documents))
-        |GROUP BY bigram HAVING count(*) >= 3 ORDER BY bigram""".stripMargin,
+        |GROUP BY bigram HAVING count(*) >= 3 ORDER BY bigram""".stripMargin),
 
-    "q_bpe_merges"   -> bpeMergesSql,
-    "q_bpe_tokenize" -> bpeTokenizeSql,
-    // stateless streaming application of the same trained rules —
-    // identical per-doc counts, same oracle
-    "q_stream_bpe_tokenize" -> bpeTokenizeSql,
-    "q_kcenter_select" -> kcenterSql,
+    // distributed BPE tokenizer training: vocabulary-bounded merge
+    // rounds over exact word counts; rules are O(1) model state
+    "q_bpe_merges" -> graded(Tokenizer.bpeMerges _, bpeMergesSql),
+    // the learned merges applied corpus-wide (per-doc token counts)
+    "q_bpe_tokenize" -> graded(Tokenizer.bpeTokenize _, bpeTokenizeSql),
 
+    // PMI lift of count>=3 bigrams — phrase-vocabulary induction
     // shares q_bigrams' tokenizer; all-long products + ONE division
     // keep the lift double engine-portable (no log-PMI libm risk)
-    "q_pmi" ->
+    "q_pmi" -> graded(TextAnalysis.pmiCollocations _,
       """WITH toks AS (
         |SELECT list_transform(list_filter(string_split_regex(text,'[^a-zA-Z]'), x -> x<>''),
         |  x -> lower(x)) AS toks FROM documents),
@@ -2659,194 +2073,15 @@ object SparkEntry {
         |  CAST(pair_cnt * n_uni * n_uni AS DOUBLE) /
         |  CAST(n_big * u1.cnt * u2.cnt AS DOUBLE) AS lift
         |FROM pcnt JOIN ucnt u1 ON w1 = u1.tok JOIN ucnt u2 ON w2 = u2.tok, tot
-        |WHERE pair_cnt >= 3 ORDER BY bigram""".stripMargin,
+        |WHERE pair_cnt >= 3 ORDER BY bigram""".stripMargin),
 
-    // shares q_bigrams' tokenizer; integer sums + one exactly-rounded
-    // division keep the score engine-portable
-    "q_lm_typicality" ->
-      """WITH db AS (
-        |  SELECT doc_id, unnest(list_transform(generate_series(1, greatest(len(toks)-1, 0)),
-        |    i -> toks[i]||' '||toks[i+1])) AS bigram
-        |  FROM (SELECT doc_id, list_transform(list_filter(string_split_regex(text,'[^a-zA-Z]'), x -> x<>''),
-        |    x -> lower(x)) AS toks FROM documents)),
-        |cnts AS (SELECT bigram, count(*) AS cnt FROM db GROUP BY bigram)
-        |SELECT doc_id, count(*) AS n_bigrams,
-        |  CAST(sum(cnt) AS BIGINT) AS freq_sum,
-        |  CAST(sum(cnt) AS BIGINT)::DOUBLE / count(*)::DOUBLE AS avg_freq
-        |FROM db JOIN cnts USING(bigram)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q_window_rank" ->
-      """SELECT o_custkey, o_orderkey, price, rn FROM (
-        |SELECT o_custkey, o_orderkey, round(o_totalprice,2) AS price,
-        |row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |FROM orders) WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin,
-
-    "q_window_distribution" ->
-      """SELECT o_orderstatus, o_orderkey,
-        |CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-        |percent_rank() OVER w AS pct_rank,
-        |cume_dist() OVER w AS cume
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey)
-        |ORDER BY o_orderstatus, o_orderkey""".stripMargin,
-
-    "q_window_running" ->
-      """SELECT o_custkey, o_orderkey,
-        |round(sum(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),2) AS running_total,
-        |round(coalesce(lag(o_totalprice,1) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),0),2) AS prev_price
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "q_group_topk" ->
-      """SELECT c_mktsegment, o_orderkey, price, rn FROM (
-        |SELECT c_mktsegment, o_orderkey, round(o_totalprice,2) AS price,
-        |row_number() OVER (PARTITION BY c_mktsegment ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |FROM orders JOIN customer ON o_custkey=c_custkey)
-        |WHERE rn <= 2 ORDER BY c_mktsegment, rn""".stripMargin,
-
-    "q_gap_fill" ->
-      """WITH hourly AS (SELECT event_type, time_bucket(INTERVAL '1 hour', ts) AS h,
-        |  count(*) AS n, round(sum(value), 2) AS total FROM events GROUP BY 1, 2),
-        |bounds AS (SELECT event_type, min(h) AS h0, max(h) AS h1 FROM hourly GROUP BY 1),
-        |spine AS (SELECT event_type, unnest(generate_series(h0, h1, INTERVAL '1 hour')) AS h FROM bounds),
-        |j AS (SELECT s.event_type, s.h, coalesce(n, 0) AS n_filled, total
-        |  FROM spine s LEFT JOIN hourly USING (event_type, h))
-        |SELECT event_type, strftime(h, '%Y-%m-%d %H:%M:%S') AS hour, n_filled,
-        |last_value(total IGNORE NULLS) OVER (PARTITION BY event_type ORDER BY h
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS carried
-        |FROM j ORDER BY event_type, hour""".stripMargin,
-
-    "q_string_funcs" ->
-      """SELECT p_partkey, upper(p_name) AS name_upper,
-        |CAST(length(p_name) AS BIGINT) AS name_len,
-        |substr(p_name,1,5) AS name_pre,
-        |regexp_extract(p_name, '^([a-z]+)', 1) AS first_word,
-        |p_brand||'|'||p_type AS brand_type,
-        |lpad(CAST(p_size AS VARCHAR), 4, '0') AS size_pad
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "q_fuzzy_match" ->
-      """WITH probes AS (SELECT p_partkey AS probe_id,
-        |  substr(p_name,1,1)||substr(p_name,3) AS probe FROM part WHERE p_partkey < 5),
-        |d AS (SELECT probe_id, p.p_partkey, p.p_name,
-        |  CAST(levenshtein(probe, p.p_name) AS BIGINT) AS dist FROM part p, probes),
-        |r AS (SELECT probe_id, p_partkey, p_name, dist,
-        |  row_number() OVER (PARTITION BY probe_id ORDER BY dist, p_partkey) AS rank FROM d)
-        |SELECT probe_id, rank, p_partkey, p_name, dist FROM r WHERE rank <= 3
-        |ORDER BY probe_id, rank""".stripMargin,
-
-    "q_date_funcs" ->
-      """SELECT strftime(o_orderdate, '%Y-%m') AS month, count(*) AS n_orders,
-        |CAST(min(day(o_orderdate)) AS BIGINT) AS min_dom,
-        |CAST(max(isodow(o_orderdate)-1) AS BIGINT) AS max_dow,
-        |round(sum(o_totalprice),2) AS month_revenue
-        |FROM orders GROUP BY 1 ORDER BY month""".stripMargin,
-
-    "q_math_funcs" ->
-      """SELECT l_returnflag, round(sqrt(sum(l_quantity)),4) AS sqrt_qty,
-        |round(ln(sum(l_extendedprice)),4) AS ln_price,
-        |round(pow(avg(l_discount),2),6) AS disc_sq,
-        |CAST(ceil(max(l_tax)*100) AS BIGINT) AS max_tax_pct,
-        |CAST(floor(min(l_extendedprice)) AS BIGINT) AS min_price_fl,
-        |round(abs(min(l_quantity-25)),2) AS abs_qty_dev
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q_json" ->
-      """SELECT event_type, count(*) AS n_events, CAST(sum(k) AS BIGINT) AS sum_k,
-        |min(k) AS min_k, max(k) AS max_k FROM (
-        |SELECT event_type, CAST(json_extract_string(props,'$.k') AS BIGINT) AS k FROM events)
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q_variant" ->
-      """SELECT k % 5 AS k_bucket, count(*) AS n_events,
-        |CAST(sum(k) AS BIGINT) AS sum_k, round(sum(value), 2) AS sum_value
-        |FROM (SELECT CAST(json_extract_string(props,'$.k') AS BIGINT) AS k, value FROM events)
-        |GROUP BY 1 ORDER BY k_bucket""".stripMargin,
-
-    "q_map_funcs" ->
-      s"""SELECT doc_id, count(*) AS n_distinct_words,
-         |coalesce(max(CASE WHEN word = 'THE' THEN cnt END), 0) AS n_the,
-         |CAST(sum(CASE WHEN cnt >= 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_frequent
-         |FROM (SELECT doc_id, word, count(*) AS cnt FROM ($tokSql) GROUP BY 1, 2)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q_null_safe_join" ->
-      """WITH base AS (SELECT event_type,
-        |  nullif(CAST(json_extract_string(props, '$.k') AS BIGINT) % 7, 0) AS bucket
-        |  FROM events),
-        |c AS (SELECT bucket, count(*) AS n_click FROM base WHERE event_type='click' GROUP BY 1),
-        |v AS (SELECT bucket, count(*) AS n_view FROM base WHERE event_type='view' GROUP BY 1)
-        |SELECT c.bucket, n_click, n_view FROM c
-        |JOIN v ON c.bucket IS NOT DISTINCT FROM v.bucket
-        |ORDER BY c.bucket NULLS FIRST""".stripMargin,
-
-    "q_profile" -> {
-      val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-      cols.map { c =>
-        s"""SELECT '$c' AS "column", count(*) AS n_rows,
-           |CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-           |count(DISTINCT $c) AS n_distinct,
-           |round(min($c), 4) AS min_val, round(max($c), 4) AS max_val,
-           |round(avg($c), 4) AS avg_val FROM lineitem""".stripMargin
-      }.mkString("", " UNION ALL ", " ORDER BY \"column\"")
-    },
-
-    "q_histogram" ->
-      """SELECT CAST(floor(o_totalprice / 50000) AS BIGINT) AS bucket,
-        |count(*) AS n, round(sum(o_totalprice), 2) AS bucket_total
-        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin,
-
-    "q_grep" ->
-      """SELECT doc_id, source, lang FROM documents
-        |WHERE regexp_matches(text, 'window.*join|join.*window') ORDER BY doc_id""".stripMargin,
-
-    "q_wordcount" -> wordcountSql,
-    "q_mapreduce_wordcount" -> wordcountSql,
-    // the salted two-phase plan must produce byte-identical results to
-    // the plain plan — same oracle proves the rewrite is lossless
-    "q_salted_wordcount" -> wordcountSql,
-
-    "q_window_range" ->
-      """SELECT o_custkey, o_orderkey,
-        |round(sum(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate
-        |  RANGE BETWEEN INTERVAL 90 DAYS PRECEDING AND CURRENT ROW), 2) AS trailing_90d
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "q_inverted_index" ->
-      s"SELECT DISTINCT word, doc_id FROM ($tokSql) ORDER BY word, doc_id",
-
-    // text-dir source surface: DuckDB reads the same files via read_text
-    "q_text_wordcount" ->
-      """SELECT upper(w) AS word, count(*) AS cnt FROM (
-        |SELECT unnest(string_split_regex(content, '[^a-zA-Z]')) AS w
-        |FROM read_text('/root/reference/priv/resources/*.txt'))
-        |WHERE w <> '' GROUP BY word ORDER BY word""".stripMargin,
-
-    "q_text_stats" ->
-      """SELECT fname, count(*) AS n_tokens, count(DISTINCT word) AS n_distinct,
-        |CAST(max(length(word)) AS BIGINT) AS max_word_len FROM (
-        |SELECT regexp_extract(filename, '([^/]+)$', 1) AS fname, upper(w) AS word FROM (
-        |  SELECT filename, unnest(string_split_regex(content, '[^a-zA-Z]')) AS w
-        |  FROM read_text('/root/reference/priv/resources/*.txt'))
-        |WHERE w <> '')
-        |GROUP BY fname ORDER BY fname""".stripMargin,
-
-    // sink round-trip: the oracle aggregates the ORIGINAL table — the
-    // Spark side must survive write→partition→pruned-read unchanged
-    "q_sink_roundtrip" ->
-      """SELECT o_orderpriority, count(*) AS n_orders,
-        |round(sum(o_totalprice), 2) AS revenue
-        |FROM orders WHERE o_orderstatus = 'F'
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q_heavy_hitters" ->
+    "q_heavy_hitters" -> graded(TextAnalysis.heavyHitters _,
       s"""SELECT word, count(*) AS cnt FROM ($tokSql)
          |GROUP BY word
          |HAVING count(*)::DOUBLE >= 0.01 * (SELECT count(*) FROM ($tokSql))
-         |ORDER BY word""".stripMargin,
+         |ORDER BY word""".stripMargin),
 
-    "q_token_count" ->
+    "q_token_count" -> graded(TextAnalysis.tokenCount _,
       """SELECT source, CAST(sum(n_words) AS BIGINT) AS total_words,
         |CAST(sum(n_ws) AS BIGINT) AS total_ws_tokens,
         |CAST(sum(n_bpe) AS BIGINT) AS total_bpe_tokens,
@@ -2855,9 +2090,9 @@ object SparkEntry {
         |len(list_filter(string_split_regex(text,'[^a-zA-Z]'), x -> x<>'')) AS n_words,
         |len(list_filter(string_split_regex(text,'\s+'), x -> x<>'')) AS n_ws,
         |len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS n_bpe
-        |FROM documents) GROUP BY source ORDER BY source""".stripMargin,
+        |FROM documents) GROUP BY source ORDER BY source""".stripMargin),
 
-    "q_text_quality" ->
+    "q_text_quality" -> graded(TextAnalysis.textQuality _,
       """SELECT doc_id, CAST(length(text) AS BIGINT) AS text_len,
         |CAST(len(toks) AS BIGINT) AS n_words,
         |round(len(list_filter(toks, x -> lower(x) IN ('the','a','of','and','to','in','is','it')))::DOUBLE
@@ -2866,9 +2101,9 @@ object SparkEntry {
         |  / greatest(length(text),1), 4) AS alpha_ratio
         |FROM (SELECT doc_id, text,
         |  list_filter(string_split_regex(text,'[^a-zA-Z]'), x -> x<>'') AS toks
-        |FROM documents) ORDER BY doc_id""".stripMargin,
+        |FROM documents) ORDER BY doc_id""".stripMargin),
 
-    "q_lang_id" ->
+    "q_lang_id" -> graded(TextAnalysis.langId _,
       """SELECT doc_id,
         |CASE WHEN hits_fr >= greatest(hits_es, hits_en, hits_de) THEN 'fr'
         |     WHEN hits_es >= greatest(hits_en, hits_de) THEN 'es'
@@ -2880,12 +2115,15 @@ object SparkEntry {
         |len(list_filter(toks, x -> x IN ('el','la','de','y','es','un'))) AS hits_es,
         |len(list_filter(toks, x -> x IN ('le','la','de','et','est','un'))) AS hits_fr
         |FROM (SELECT doc_id, list_transform(list_filter(string_split_regex(text,'[^a-zA-Z]'), x -> x<>''), x -> lower(x)) AS toks
-        |FROM documents)) ORDER BY doc_id""".stripMargin,
+        |FROM documents)) ORDER BY doc_id""".stripMargin),
 
+    // PII scrub (emails/phones/IPs -> typed tokens + audit counts);
+    // synthetic PII injected deterministically from doc_id on BOTH
+    // sides, so the hash match grades the redaction regexes themselves
     // identical injection, then RE2 forms of the same PII regexes (no
     // backreferences/lookaround, so Java and RE2 agree); DuckDB
     // regexp_replace needs the explicit 'g' flag Spark applies always
-    "q_redact_pii" ->
+    "q_redact_pii" -> graded(TextAnalysis.redactPii _,
       """WITH raw AS (SELECT doc_id, text
         |  || ' contact user' || doc_id::VARCHAR || '@example.com'
         |  || CASE WHEN doc_id % 3 = 0 THEN ' call (555) 010-' || lpad((doc_id % 10000)::VARCHAR, 4, '0') ELSE '' END
@@ -2899,35 +2137,37 @@ object SparkEntry {
         |CAST(len(regexp_extract_all(raw, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
         |CAST(len(regexp_extract_all(raw, '\(\d{3}\) \d{3}-\d{4}')) AS BIGINT) AS n_phones,
         |CAST(len(regexp_extract_all(raw, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT) AS n_ips
-        |FROM raw ORDER BY doc_id""".stripMargin,
+        |FROM raw ORDER BY doc_id""".stripMargin),
 
-    "q_fingerprint" ->
+    "q_fingerprint" -> graded(TextAnalysis.fingerprint _,
       s"""SELECT doc_id, ${h32("lower(trim(text))")} AS fp_md5,
          |list_reduce(list_prepend(CAST(0 AS BIGINT),
          |  list_transform(generate_series(1, length(text)), i -> CAST(ord(substr(text,i,1)) AS BIGINT))),
          |  (acc,c) -> (acc*31+c)%1000000007) AS fp_rolling
-         |FROM documents ORDER BY doc_id""".stripMargin,
+         |FROM documents ORDER BY doc_id""".stripMargin),
 
+    // robust winnowing (MOSS): rightmost-min fingerprint per hash
+    // window — the sublinear near-dup index (density ~2/(W+1))
     // robust winnowing re-derived: per-position k-gram fold, rightmost
     // window minimum via min over {'h', 'np': -pos} structs, full
     // windows only, distinct selections
-    "q_winnow" ->
+    "q_winnow" -> graded(TextAnalysis.winnowFingerprints _,
       s"""WITH $winnowCtes
-         |SELECT doc_id, pos, fp FROM wfp ORDER BY doc_id, pos""".stripMargin,
-    // the stateless streaming projection reproduces the selection
-    // bit-for-bit on finite replay -> same oracle
-    "q_stream_winnow" ->
-      s"""WITH $winnowCtes
-         |SELECT doc_id, pos, fp FROM wfp ORDER BY doc_id, pos""".stripMargin,
+         |SELECT doc_id, pos, fp FROM wfp ORDER BY doc_id, pos""".stripMargin),
 
+    // the MOSS decision layer: df-capped posting-list pair join over
+    // the winnowed index, containment >= half the smaller side
     // the MOSS decision layer: df-capped posting lists, within-key
     // pair enumeration, containment vs the smaller fingerprint set
-    "q_winnow_pairs" -> s"$winnowPairsSql\nORDER BY id_a, id_b",
+    "q_winnow_pairs" -> graded(TextAnalysis.winnowPairs _, s"$winnowPairsSql\nORDER BY id_a, id_b"),
 
+    // INCREMENTAL winnow near-dup: batch fingerprints probe the stored
+    // postings with delta-applied union df; existing-vs-existing never
+    // enumerated (== the full pair set restricted to touching batch)
     // the incremental form: the SAME pair chain restricted to pairs
     // touching the md5 batch and type-tagged — the stored-index probe
     // with its delta-applied union df must find exactly these
-    "q_delta_winnow_pairs" ->
+    "q_delta_winnow_pairs" -> graded(TextAnalysis.deltaWinnowPairs _,
       s"""WITH pairs AS ($winnowPairsSql),
          |tag AS (SELECT doc_id, ${h32("text")} % 10 >= 8 AS is_new FROM documents)
          |SELECT id_a, id_b, n_shared, containment,
@@ -2936,19 +2176,26 @@ object SparkEntry {
          |FROM pairs JOIN tag ta ON id_a = ta.doc_id
          |JOIN tag tb ON id_b = tb.doc_id
          |WHERE ta.is_new OR tb.is_new
-         |ORDER BY id_a, id_b""".stripMargin,
+         |ORDER BY id_a, id_b""".stripMargin),
 
+    // RETRACTION: tombstoned ids removed from the stored winnow triple
+    // by anti-joins + negative df delta-applies — no text read; the
+    // retracted index re-runs the full MOSS chain and equals the
+    // rebuild over the surviving docs
     // retraction: the full MOSS chain over the surviving base docs —
     // the retracted winnow triple equals the rebuild (negative df
     // delta-applies; a fingerprint can re-enter the kept range when
     // deletions drop its df back to ≤ maxDf)
-    "q_retract_winnow_pairs" ->
-      overRetainedDocs(textRetainSql, winnowPairsSql, "id_a, id_b"),
+    "q_retract_winnow_pairs" -> graded(TextAnalysis.retractWinnowPairs _,
+      overRetainedDocs(textRetainSql, winnowPairsSql, "id_a, id_b")),
 
+    // MULTI-INGEST: two stored winnow commits + a live third —
+    // delta(delta(base,b1),b2) finds exactly the full chain's
+    // batch-touching pairs (shares the single-delta oracle)
     // compounding: the stored side covers md5 buckets 0–7 whether it
     // arrived as one monolith or two commits — same probe result,
     // same oracle shape as the single-delta entry
-    "q_delta2_winnow_pairs" ->
+    "q_delta2_winnow_pairs" -> graded(TextAnalysis.delta2WinnowPairs _,
       s"""WITH pairs AS ($winnowPairsSql),
          |tag AS (SELECT doc_id, ${h32("text")} % 10 >= 8 AS is_new FROM documents)
          |SELECT id_a, id_b, n_shared, containment,
@@ -2957,13 +2204,24 @@ object SparkEntry {
          |FROM pairs JOIN tag ta ON id_a = ta.doc_id
          |JOIN tag tb ON id_b = tb.doc_id
          |WHERE ta.is_new OR tb.is_new
-         |ORDER BY id_a, id_b""".stripMargin,
+         |ORDER BY id_a, id_b""".stripMargin),
 
+    // COMPACTION: N commits folded to one stored triple, full MOSS
+    // chain served from the fold — shares q_winnow_pairs' oracle
     // compaction: the folded triple serves the FULL chain — the
     // whole-corpus oracle verbatim
-    "q_compact_winnow_pairs" -> s"$winnowPairsSql\nORDER BY id_a, id_b",
+    "q_compact_winnow_pairs" -> graded(TextAnalysis.compactWinnowPairs _,
+      s"$winnowPairsSql\nORDER BY id_a, id_b"),
 
-    "q_repetition" ->
+    // the same selection as a STATELESS streaming projection (per-doc
+    // pure function -> no state, no shuffle); shares q_winnow's oracle
+    // the stateless streaming projection reproduces the selection
+    // bit-for-bit on finite replay -> same oracle
+    "q_stream_winnow" -> graded(graft.streaming.DocumentStreams.streamedWinnow _,
+      s"""WITH $winnowCtes
+         |SELECT doc_id, pos, fp FROM wfp ORDER BY doc_id, pos""".stripMargin),
+
+    "q_repetition" -> graded(TextAnalysis.repetitionScore _,
       """SELECT doc_id, CAST(len(grams) AS BIGINT) AS n_grams,
         |CAST(len(list_distinct(grams)) AS BIGINT) AS n_distinct,
         |(len(grams) - len(list_distinct(grams)))::DOUBLE / greatest(len(grams), 1) AS dup_frac
@@ -2972,11 +2230,13 @@ object SparkEntry {
         |  FROM (SELECT doc_id,
         |    list_transform(list_filter(string_split_regex(text,'[^a-zA-Z]'), x -> x<>''), x -> lower(x)) AS toks
         |  FROM documents))
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
 
+    // C4-style corpus-wide boilerplate strip + document REASSEMBLY
+    // (the cleaned corpus as output, not a flag report)
     // boilerplate strip: segment (non-overlapping 4-word windows),
     // count corpus-wide, drop common segments, reassemble in seg order
-    "q_boilerplate" ->
+    "q_boilerplate" -> graded(TextAnalysis.removeBoilerplate _,
       s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
          |e AS (SELECT doc_id, tk, unnest(generate_series(0,
          |    CAST(ceil(len(tk) / ${graft.operators.TextAnalysis.BoilerplateWindow}.0) AS BIGINT) - 1)) AS i
@@ -2995,9 +2255,26 @@ object SparkEntry {
          |  coalesce(t.n_segs, 0) - coalesce(r.n_kept, 0) AS n_removed,
          |  coalesce(r.clean_text, '') AS clean_text
          |FROM documents d LEFT JOIN totals t ON d.doc_id = t.doc_id
-         |LEFT JOIN rebuilt r ON d.doc_id = r.doc_id ORDER BY d.doc_id""".stripMargin,
+         |LEFT JOIN rebuilt r ON d.doc_id = r.doc_id ORDER BY d.doc_id""".stripMargin),
 
-    "q_pack_sequences" ->
+    // bigram-LM typicality: the statistical quality screen (mean corpus
+    // frequency of a doc's bigrams — integer-exact under the gate)
+    // shares q_bigrams' tokenizer; integer sums + one exactly-rounded
+    // division keep the score engine-portable
+    "q_lm_typicality" -> graded(TextAnalysis.lmTypicality _,
+      """WITH db AS (
+        |  SELECT doc_id, unnest(list_transform(generate_series(1, greatest(len(toks)-1, 0)),
+        |    i -> toks[i]||' '||toks[i+1])) AS bigram
+        |  FROM (SELECT doc_id, list_transform(list_filter(string_split_regex(text,'[^a-zA-Z]'), x -> x<>''),
+        |    x -> lower(x)) AS toks FROM documents)),
+        |cnts AS (SELECT bigram, count(*) AS cnt FROM db GROUP BY bigram)
+        |SELECT doc_id, count(*) AS n_bigrams,
+        |  CAST(sum(cnt) AS BIGINT) AS freq_sum,
+        |  CAST(sum(cnt) AS BIGINT)::DOUBLE / count(*)::DOUBLE AS avg_freq
+        |FROM db JOIN cnts USING(bigram)
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+
+    "q_pack_sequences" -> graded(TextAnalysis.packSequences(_, _),
       """SELECT shard, seq_id, count(*) AS n_docs,
         |CAST(sum(n_tok) AS BIGINT) AS total_tokens, min(doc_id) AS first_doc
         |FROM (SELECT doc_id, shard, n_tok,
@@ -3006,45 +2283,52 @@ object SparkEntry {
         |FROM (SELECT doc_id, doc_id % 8 AS shard,
         |  len(list_filter(string_split_regex(text,'[^a-zA-Z]'), x -> x<>'')) AS n_tok
         |  FROM documents))
-        |GROUP BY shard, seq_id ORDER BY shard, seq_id""".stripMargin,
+        |GROUP BY shard, seq_id ORDER BY shard, seq_id""".stripMargin),
 
+    // — retrieval / data selection —
+    // BM25 ranked retrieval over the term-partitioned postings table
     // per-term BM25 contributions quantize to 2^20 fixed-point longs
     // BEFORE the per-(query,doc) sum (the q_kmeans pattern), so the
     // gate compares exact integers; ln() ulp exposure is one rounding
     // per (term,doc) — the q_tfidf-precedented class
-    "q_bm25" -> bm25Sql,
+    "q_bm25" -> graded(Retrieval.bm25 _, bm25Sql),
+    // INCREMENTAL BM25: stored four-table index + one batch
+    // tokenization pass, merged by long delta-applies — equals the
+    // full rebuild, so it shares q_bm25's oracle verbatim
     // the incremental index equals the full rebuild (every maintained
     // field is an associative long sum over disjoint doc sets), so the
     // delta entry is graded against the SAME whole-corpus oracle — the
     // maintenance changes work, never results
-    "q_delta_bm25" -> bm25Sql,
+    "q_delta_bm25" -> graded(Retrieval.deltaBm25 _, bm25Sql),
+
+    // RETRACTION: tombstoned doc_ids removed from the stored four-table
+    // index by anti-joins + negative delta-applies — no text read;
+    // retracted == rebuilt, so the oracle is q_bm25's chain over the
+    // surviving docs
     // retraction: the SAME chain over the surviving docs — the
     // retracted index equals the rebuild (negative long delta-applies
     // are as associative as positive ones)
-    "q_retract_bm25" ->
-      overRetainedDocs(bm25RetainSql, bm25Sql, "query_id, rank"),
+    "q_retract_bm25" -> graded(Retrieval.retractBm25 _,
+      overRetainedDocs(bm25RetainSql, bm25Sql, "query_id, rank")),
+
+    // MULTI-INGEST compounding: commits c0+c1 read back merged, the
+    // final batch delta-applied live — delta(delta(base,b1),b2) ==
+    // full rebuild, hash-matched against q_bm25's oracle verbatim
     // compounding: two stored commits + live third == full rebuild —
     // every maintained field is an associative long sum, so ANY commit
     // grouping shares the whole-corpus oracle
-    "q_delta2_bm25" -> bm25Sql,
+    "q_delta2_bm25" -> graded(Retrieval.delta2Bm25 _, bm25Sql),
+    // COMPACTION: all commits folded into ONE four-table index off
+    // the query path; serving the fold shares q_bm25's oracle
     // compaction: a pure layout fold — values unchanged, same oracle
-    "q_compact_bm25" -> bm25Sql,
+    "q_compact_bm25" -> graded(Retrieval.compactBm25 _, bm25Sql),
 
-    // positional postings re-derived with a 1-based LATERAL subscript
-    // walk (generate_series over len(arr)); adjacency joins on the
-    // pruned posting set mirror the Spark fold, with the terms and
-    // offsets INTERPOLATED from Retrieval.PhraseQuery so an edited
-    // phrase cannot desynchronize the gate
-    "q_phrase_search" -> phraseSearchSql,
-    "q_phrase_batch" -> phraseBatchSql,
-    "q_proximity_search" -> proximitySearchSql,
-    "q_proximity_batch" -> proximityBatchSql,
-
+    // hybrid search: RRF fusion of embedding-cosine + lexical-cosine
     // both source rankings re-derived exactly (embedding side =
     // q_knn_bruteforce's rounded cosine; lexical side = long-dot /
     // sqrt(long·long), all ops on exact inputs); each 1/(60+rank)
     // quantizes to 2^20 fixed-point so fused scores sum as longs
-    "q_rrf_fusion" ->
+    "q_rrf_fusion" -> graded(Retrieval.rrfFusion _,
       s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
          |  WHERE vec_id < ${graft.operators.Similarity.NumQueries}),
          |esims AS (SELECT q_id, e.vec_id AS doc_id,
@@ -3080,12 +2364,14 @@ object SparkEntry {
          |  row_number() OVER (PARTITION BY q_id ORDER BY rrf_fp DESC, doc_id) AS rank FROM agg)
          |SELECT q_id, rank, doc_id, n_lists, rrf_fp::DOUBLE / 1048576.0 AS rrf
          |FROM r WHERE rank <= ${graft.operators.Retrieval.TopK}
-         |ORDER BY q_id, rank""".stripMargin,
+         |ORDER BY q_id, rank""".stripMargin),
 
+    // DSIR importance resampling: unigram-LM log-likelihood-ratio
+    // selection of background docs that look like the target domain
     // per-WORD log-likelihood ratios quantize once to 2^20 fixed-point
     // (corpus-level model → one ln rounding per vocab word), then doc
     // scores are exact long dot-products and ONE exact-input division
-    "q_dsir" -> {
+    "q_dsir" -> graded(Retrieval.dsirWeights _, {
       val targets = graft.operators.Retrieval.DsirTargetSources
         .map(s => s"'$s'").mkString(",")
       s"""WITH tok AS (SELECT doc_id, lower(w) AS word FROM
@@ -3112,1327 +2398,29 @@ object SparkEntry {
          |  score_fp::DOUBLE / (dl::DOUBLE * 1048576.0) AS avg_lr
          |FROM r WHERE rank <= ${graft.operators.Retrieval.DsirTopN}
          |ORDER BY rank""".stripMargin
-    },
-
-    "q_dedup_exact" ->
-      """SELECT min(doc_id) AS keep_id, count(*) AS n_copies FROM documents
-        |GROUP BY lower(trim(text)) ORDER BY keep_id""".stripMargin,
-
-    "q_dedup_hash" ->
-      """SELECT min(doc_id) AS keep_id, count(*) AS n_copies FROM documents
-        |GROUP BY sha256(text) ORDER BY keep_id""".stripMargin,
-
-    "q_hash_split" ->
-      s"""SELECT lang, CASE WHEN b < 8 THEN 'train' WHEN b = 8 THEN 'val' ELSE 'test' END AS split,
-         |count(*) AS n_docs, min(doc_id) AS first_doc
-         |FROM (SELECT doc_id, lang, ${h32("text")} % 10 AS b FROM documents)
-         |GROUP BY 1, 2 ORDER BY lang, split""".stripMargin,
-
-    // the window form is the oracle's job; the Spark side must produce
-    // the identical draw through the bounded aggregator
-    "q_stratified_sample" ->
-      s"""SELECT lang, rn, doc_id FROM (
-         |  SELECT lang, doc_id,
-         |    row_number() OVER (PARTITION BY lang
-         |      ORDER BY ${h32("text || '#strat'")}, doc_id) AS rn
-         |  FROM documents)
-         |WHERE rn <= ${Dedup.StratK} ORDER BY lang, rn""".stripMargin,
-
-    "q_decontamination" -> decontaminationSql,
-    // the stream-static twin emits exactly the batch scan's rows
-    // (stateless join, Complete-mode agg) — same oracle proves it
-    "q_stream_decontamination" -> decontaminationSql,
-    // the Bloom prefilter is lossless (no false negatives + exact
-    // verify join), so the same oracle grades it — the hash match IS
-    // the losslessness proof
-    "q_decontamination_bloom" -> decontaminationSql,
-    // the spark.sql(...) TEXT form computes the identical scan through
-    // the SQL-registered expressions, so the same oracle grades it —
-    // the hash match proves registration + binding + codegen, not just
-    // that the functions evaluate (SqlFunctionsSpec covers that)
-    "q_sql_decontamination" -> decontaminationSql,
-
-    "q_chunk_documents" -> s"$chunkSql ORDER BY doc_id, chunk_idx",
-
-    "q_chunk_dedup" ->
-      s"""SELECT chunk_hash, chunk_hash2, CAST(n_copies AS BIGINT) AS n_copies,
-         |  CAST(n_docs AS BIGINT) AS n_docs,
-         |  CAST(k // 1000000 AS BIGINT) AS keep_doc,
-         |  CAST(k % 1000000 AS BIGINT) AS keep_idx
-         |FROM (SELECT chunk_hash, chunk_hash2, count(*) AS n_copies,
-         |    count(DISTINCT doc_id) AS n_docs,
-         |    min(doc_id * 1000000 + chunk_idx) AS k
-         |  FROM ($chunkSql) GROUP BY 1, 2 HAVING count(*) > 1)
-         |ORDER BY chunk_hash, chunk_hash2""".stripMargin,
-
-    // stride-1 window hashes re-derived with the O(n·L) per-substring
-    // fold (the Spark side slides in O(n) — same values), then the
-    // identical count-over-key and gaps-and-islands merge
-    "q_substring_dedup" ->
-      s"""WITH $substringSpanCtes
-         |SELECT doc_id, span_start, span_end, span_len, n_windows
-         |FROM spans ORDER BY doc_id, span_start""".stripMargin,
-
-    // the incremental form: the SAME span chain restricted to the
-    // mod-10 ingest batch — the stored-key probe must find exactly
-    // these spans (incremental joins change WORK, never results)
-    "q_delta_substring_dedup" ->
-      s"""WITH $substringSpanCtes,
-         |tag AS (SELECT doc_id, ${h32("text")} % 10 >= 8 AS is_new FROM documents)
-         |SELECT doc_id, span_start, span_end, span_len, n_windows
-         |FROM spans JOIN tag USING (doc_id)
-         |WHERE is_new ORDER BY doc_id, span_start""".stripMargin,
-
-    // the paranoid tier: the same chain keyed on three polynomials
-    "q_substring_dedup_p3" ->
-      s"""WITH ${substringSpanCtesFor(paranoid = true)}
-         |SELECT doc_id, span_start, span_end, span_len, n_windows
-         |FROM spans ORDER BY doc_id, span_start""".stripMargin,
-
-    // the same window-hash chain with a split tag: eval windows left-
-    // joined against the DISTINCT train key set, per-doc totals plus
-    // the islands-merged contaminated spans (count + longest)
-    "q_substring_decontamination" -> {
-      val L = graft.operators.Dedup.SubstringL
-      s"""WITH p AS (SELECT doc_id, text,
-         |    CASE WHEN ${h32("text")} % 10 < 8 THEN 'train'
-         |         WHEN ${h32("text")} % 10 = 8 THEN 'val' ELSE 'test' END AS split,
-         |    CAST(unnest(generate_series(1, length(text) - ${L - 1})) AS BIGINT) AS pos
-         |  FROM documents WHERE length(text) >= $L),
-         |g AS (SELECT doc_id, split, pos,
-         |    ${rollSql(s"substr(text, pos, $L)")} AS h1,
-         |    ${rollSql2(s"substr(text, pos, $L)")} AS h2 FROM p),
-         |tr AS (SELECT DISTINCT h1 AS t1, h2 AS t2 FROM g WHERE split = 'train'),
-         |ev AS (SELECT g.doc_id, g.split, g.pos,
-         |    CASE WHEN t1 IS NOT NULL THEN 1 ELSE 0 END AS hit
-         |  FROM g LEFT JOIN tr ON g.h1 = t1 AND g.h2 = t2
-         |  WHERE g.split <> 'train'),
-         |summ AS (SELECT doc_id, split, count(*) AS n_windows, sum(hit) AS n_cont
-         |  FROM ev GROUP BY 1, 2),
-         |hits AS (SELECT doc_id, pos FROM ev WHERE hit = 1),
-         |re AS (SELECT doc_id, pos,
-         |    max(pos + $L) OVER (PARTITION BY doc_id ORDER BY pos
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS run_end FROM hits),
-         |mk AS (SELECT doc_id, pos,
-         |    CASE WHEN run_end IS NULL OR pos > run_end THEN 1 ELSE 0 END AS new_s FROM re),
-         |sid AS (SELECT doc_id, pos,
-         |    sum(new_s) OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING) AS sid FROM mk),
-         |spans AS (SELECT doc_id, min(pos) AS s, max(pos) + $L AS e
-         |  FROM sid GROUP BY doc_id, sid),
-         |sp AS (SELECT doc_id, count(*) AS n_spans, max(e - s) AS longest FROM spans GROUP BY 1)
-         |SELECT m.doc_id, m.split, CAST(n_windows AS BIGINT) AS n_windows,
-         |  CAST(n_cont AS BIGINT) AS n_contaminated,
-         |  CAST(n_cont AS DOUBLE) / n_windows AS contamination,
-         |  CAST(coalesce(n_spans, 0) AS BIGINT) AS n_spans,
-         |  CAST(coalesce(longest, 0) AS BIGINT) AS longest_span
-         |FROM summ m LEFT JOIN sp USING (doc_id) ORDER BY m.doc_id""".stripMargin
-    },
-
-    // the spans re-assembled into clipped text: kept segments from a
-    // lag window over the spans (+ the tail), pieces cut from the
-    // corpus once, position-ordered string_agg — mirroring the Spark
-    // sort_array(collect_list(...)) reassembly
-    "q_substring_clip" ->
-      s"""WITH $substringSpanCtes,
-         |mids AS (SELECT doc_id,
-         |    lag(span_end, 1, 1) OVER (PARTITION BY doc_id ORDER BY span_start) AS seg_start,
-         |    span_start AS seg_end FROM spans),
-         |tails AS (SELECT doc_id, max(span_end) AS seg_start, count(*) AS n_spans,
-         |    sum(span_end - span_start) AS removed_chars FROM spans GROUP BY doc_id),
-         |segs AS (SELECT doc_id, seg_start, seg_end FROM mids
-         |  UNION ALL SELECT doc_id, seg_start, NULL FROM tails),
-         |pieces AS (SELECT s.doc_id, s.seg_start,
-         |    substr(d.text, s.seg_start,
-         |      coalesce(s.seg_end, length(d.text) + 1) - s.seg_start) AS piece
-         |  FROM segs s JOIN documents d ON d.doc_id = s.doc_id),
-         |clip AS (SELECT doc_id, string_agg(piece, '' ORDER BY seg_start) AS clipped_text
-         |  FROM pieces GROUP BY doc_id)
-         |SELECT c.doc_id, CAST(t.n_spans AS BIGINT) AS n_spans,
-         |  CAST(t.removed_chars AS BIGINT) AS removed_chars, c.clipped_text
-         |FROM clip c JOIN tails t USING (doc_id) ORDER BY c.doc_id""".stripMargin,
-
-    "q_mixture_sample" ->
-      s"""SELECT source, count(*) AS n_sampled, min(doc_id) AS first_doc
-         |FROM (SELECT source, doc_id,
-         |  ${h32("text || '#mix'")} % 100 AS bucket,
-         |  10 + (CAST(substr(source, 4) AS INT) * 4) % 91 AS rate
-         |  FROM documents)
-         |WHERE bucket < rate GROUP BY source ORDER BY source""".stripMargin,
-
-    // α = 1/2 keeps the rate computable from sqrt + division alone —
-    // both IEEE-exact in the two engines, so the double column itself
-    // is under the hash (pow() would not be portable)
-    "q_temperature_mixture" ->
-      s"""WITH sizes AS (SELECT lang, count(*) AS n_docs,
-         |    1.0/sqrt(count(*)) AS w FROM documents GROUP BY 1),
-         |rates AS (SELECT lang, n_docs,
-         |    w / (SELECT max(w) FROM sizes) AS rate FROM sizes)
-         |SELECT lang, n_docs, rate, count(*) AS n_sampled,
-         |  min(doc_id) AS first_doc
-         |FROM documents JOIN rates USING (lang)
-         |WHERE ${h32("text || '#temp'")} % 1000000 < rate * 1000000
-         |GROUP BY 1, 2, 3 ORDER BY lang""".stripMargin,
-
-    // the shuffle key is engine-portable mix31, so shard AND in-shard
-    // rank replicate exactly; % stands in for pmod (skey ≥ 0); salt
-    // and shard count interpolate from the library constants so
-    // editing them cannot desynchronize the gate
-    "q_shard_assign" ->
-      s"""WITH keyed AS (SELECT doc_id,
-         |    ${mixSql("doc_id", Dedup.ShardSalt.toString)} AS skey
-         |  FROM documents)
-         |SELECT doc_id, skey % ${Dedup.NumShards} AS shard,
-         |  row_number() OVER (PARTITION BY skey % ${Dedup.NumShards}
-         |    ORDER BY skey, doc_id) - 1 AS pos
-         |FROM keyed ORDER BY shard, pos""".stripMargin,
-
-    // incremental layout: old split laid out as q_shard_assign, new
-    // split appended per shard after the existing max position
-    "q_delta_shard_assign" -> {
-      val n = Dedup.NumShards
-      val mix = mixSql("doc_id", Dedup.ShardSalt.toString)
-      s"""WITH oldk AS (SELECT doc_id, $mix AS skey
-         |  FROM documents WHERE doc_id % 10 < 8),
-         |base AS (SELECT doc_id, skey % $n AS shard,
-         |    row_number() OVER (PARTITION BY skey % $n
-         |      ORDER BY skey, doc_id) - 1 AS pos
-         |  FROM oldk),
-         |off AS (SELECT shard, count(*) AS base_n FROM base GROUP BY 1),
-         |newk AS (SELECT doc_id, $mix AS skey
-         |  FROM documents WHERE doc_id % 10 >= 8),
-         |app AS (SELECT doc_id, shard,
-         |    coalesce(base_n, 0) + row_number() OVER (PARTITION BY shard
-         |      ORDER BY skey, doc_id) - 1 AS pos
-         |  FROM (SELECT doc_id, skey % $n AS shard, skey FROM newk)
-         |  LEFT JOIN off USING (shard))
-         |SELECT doc_id, shard, pos FROM base
-         |UNION ALL SELECT doc_id, shard, pos FROM app
-         |ORDER BY shard, pos""".stripMargin
-    },
-
-    "q_minhash_signatures" ->
-      s"SELECT * FROM ($sigSql) ORDER BY doc_id",
-
-    // incremental ingest emits each document's final signature exactly
-    // once (all of a doc's shingles ride its own row), so the streamed
-    // result is bit-identical to the batch signature table
-    "q_stream_minhash" ->
-      s"SELECT * FROM ($sigSql) ORDER BY doc_id",
-
-    "q_minhash_lsh_pairs" -> s"$lshPairsSql ORDER BY id_a, id_b",
-    // write→read-back of the materialized pair graph must be value-
-    // identical to recomputing the pairs directly
-    "q_neardup_graph" -> s"$lshPairsSql ORDER BY id_a, id_b",
-    // streaming arrivals joined against the accumulated band-bucket
-    // store emit exactly the batch pair set (first-shared-band rule
-    // dedups across buckets; see DocumentStreams.streamedNearDupPairs)
-    "q_stream_neardup" -> s"$lshPairsSql ORDER BY id_a, id_b",
-    // TTL variant under the deterministic replay clock (ts = base +
-    // doc_id s, one micro-batch per TtlChunk-wide id range, watermark
-    // delay 0): a member a is still in state when b arrives iff
-    // ts(a) >= wm - horizon, and wm while b's chunk processes is the
-    // max doc_id of EARLIER chunks (in seconds) — so the horizon is
-    // the pure integer predicate below. First chunk: wm = 0 → the
-    // coalesce keeps everything, matching the engine's initial
-    // watermark.
-    "q_stream_neardup_ttl" -> {
-      val floor = graft.streaming.DocumentStreams.TtlChunk
-      val hSec = graft.streaming.DocumentStreams.TtlHorizonMs / 1000
-      s"""WITH cw AS (SELECT greatest($floor, (max(doc_id)+5)//5) AS w FROM documents),
-         |pairs AS ($lshPairsSql),
-         |chmax AS (SELECT doc_id // (SELECT w FROM cw) AS ch, max(doc_id) AS mx
-         |  FROM documents GROUP BY 1),
-         |prevm AS (SELECT ch, max(mx) OVER (ORDER BY ch
-         |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prevmax
-         |  FROM chmax)
-         |SELECT id_a, id_b, est_jaccard FROM pairs
-         |JOIN prevm ON id_b // (SELECT w FROM cw) = prevm.ch
-         |WHERE id_a >= coalesce(prevm.prevmax, id_a) - $hSec
-         |ORDER BY id_a, id_b""".stripMargin
-    },
-    "q_lsh_multiprobe" -> lshMultiProbeSql,
-    "q_recursive_reach" ->
-      s"""WITH RECURSIVE pairs0 AS ($lshPairsSql),
-         |reach(doc_id, depth) AS (
-         |  SELECT DISTINCT id_a AS doc_id, 0 AS depth FROM pairs0 WHERE id_a % 10 = 0
-         |  UNION ALL
-         |  SELECT DISTINCT e.dst, r.depth + 1
-         |  FROM reach r
-         |  JOIN (SELECT id_a AS src, id_b AS dst FROM pairs0
-         |        UNION ALL SELECT id_b, id_a FROM pairs0) e
-         |    ON e.src = r.doc_id
-         |  WHERE r.depth < 3)
-         |SELECT doc_id, CAST(min(depth) AS BIGINT) AS min_depth
-         |FROM reach GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q_dup_clusters" -> dupClustersSql,
-    // label MAINTENANCE == full recompute (the min-label convention
-    // argument at Dedup.maintainComponentLabels): the incremental
-    // entry shares the closure oracle verbatim
-    "q_delta_dup_clusters" -> dupClustersSql,
-    // two chained maintenance steps == one full CC: the compounding
-    // entry shares the whole-corpus closure oracle verbatim
-    "q_delta2_dup_clusters" -> dupClustersSql,
-
-    // the batch pair set restricted to pairs touching the new side of
-    // the hash split — the delta probe must find exactly these (the
-    // incremental join changes WORK, not results)
-    "q_delta_dedup" ->
-      s"""WITH pairs AS ($lshPairsSql),
-         |tag AS (SELECT doc_id, ${h32("text")} % 10 >= 8 AS is_new FROM documents)
-         |SELECT id_a, id_b, est_jaccard,
-         |  CASE WHEN ta.is_new AND tb.is_new THEN 'new_new'
-         |       ELSE 'new_existing' END AS pair_type
-         |FROM pairs JOIN tag ta ON id_a = ta.doc_id
-         |JOIN tag tb ON id_b = tb.doc_id
-         |WHERE ta.is_new OR tb.is_new
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // retraction: banded pairs over the surviving base docs — the
-    // retracted signature index equals the rebuild (per-doc pure
-    // signatures; pair logic is pairwise)
-    "q_retract_dedup" ->
-      overRetainedDocs(textRetainSql, lshPairsSql, "id_a, id_b"),
-
-    // retraction closure: the full recursive-CTE labeling over the
-    // surviving base docs — touched components relabel to fragment
-    // minima (the deleted-min case), untouched labels ride through
-    "q_retract_dup_clusters" ->
-      overRetainedDocs(textRetainSql, dupClustersSql, "cluster_rep"),
-
-    // rare-4-gram blocking + full unigram tf verification; integer
-    // products + one sqrt + one division make the cosine double (and
-    // so the threshold cut itself) bit-portable across engines
-    "q_lexical_cosine" -> s"$lexCosineSql\nORDER BY id_a, id_b",
-    // retraction: the same blocked+verified chain over survivors
-    "q_retract_lexical_cosine" ->
-      overRetainedDocs(textRetainSql, lexCosineSql, "id_a, id_b"),
-
-    // the incremental form: the SAME verified chain restricted to
-    // pairs touching the md5 batch and type-tagged — the stored-index
-    // probe with delta-applied union df must find exactly these
-    "q_delta_lexical_cosine" ->
-      s"""WITH pairs AS ($lexCosineSql),
-         |tag AS (SELECT doc_id, ${h32("text")} % 10 >= 8 AS is_new FROM documents)
-         |SELECT id_a, id_b, dot, cosine,
-         |  CASE WHEN ta.is_new AND tb.is_new THEN 'new_new'
-         |       ELSE 'new_existing' END AS pair_type
-         |FROM pairs JOIN tag ta ON id_a = ta.doc_id
-         |JOIN tag tb ON id_b = tb.doc_id
-         |WHERE ta.is_new OR tb.is_new
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // LSH pairs × hashSplit membership: the leaked flag marks pairs
-    // straddling the split boundary (near-dups hash apart, so the md5
-    // bucket cannot prevent them — this audit is the check)
-    "q_split_leakage" ->
-      s"""WITH pairs AS ($lshPairsSql),
-         |sp AS (SELECT doc_id,
-         |  CASE WHEN b < 8 THEN 'train' WHEN b = 8 THEN 'val' ELSE 'test' END AS split
-         |  FROM (SELECT doc_id, ${h32("text")} % 10 AS b FROM documents))
-         |SELECT id_a, id_b, est_jaccard, sa.split AS split_a, sb.split AS split_b,
-         |  sa.split <> sb.split AS leaked
-         |FROM pairs JOIN sp sa ON id_a = sa.doc_id
-         |JOIN sp sb ON id_b = sb.doc_id
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // same recursive-CTE labeling as q_dup_clusters, then keep-longest
-    // keeper per cluster (n_words desc, doc_id tie-break)
-    "q_dedup_keep_best" ->
-      s"""WITH RECURSIVE pairs AS (SELECT id_a, id_b FROM ($lshPairsSql)),
-         |edges AS (SELECT id_a AS u, id_b AS v FROM pairs UNION SELECT id_b, id_a FROM pairs),
-         |nodes AS (SELECT DISTINCT u AS id FROM edges),
-         |reach(id, r) AS (SELECT id, id FROM nodes
-         |  UNION SELECT e.v, r.r FROM reach r JOIN edges e ON e.u = r.id),
-         |lbl AS (SELECT id, min(r) AS rep FROM reach GROUP BY id),
-         |words AS (SELECT doc_id, CAST(len(list_filter(string_split_regex(text,'[^a-zA-Z]'), x -> x<>'')) AS BIGINT) AS n_words FROM documents),
-         |ranked AS (SELECT rep, id, n_words,
-         |    row_number() OVER (PARTITION BY rep ORDER BY n_words DESC, id) AS rn,
-         |    count(*) OVER (PARTITION BY rep) AS n_members
-         |  FROM lbl JOIN words ON lbl.id = words.doc_id)
-         |SELECT rep AS cluster_rep, id AS keeper,
-         |  CAST(n_members AS BIGINT) AS n_members, n_words AS keeper_words
-         |FROM ranked WHERE rn = 1 ORDER BY cluster_rep""".stripMargin,
-
-    // integer-arithmetic PageRank: iterations unrolled as chained CTEs
-    // (standard SQL forbids aggregates in a recursive member); same
-    // div/mod arithmetic as the Spark loop so the hash is exact
-    "q_pagerank" -> {
-      val iters = (1 to Dedup.PageRankIters).map { i =>
-        s"""r$i AS (SELECT e.dst AS id,
-           |  CAST(150000 + sum((r.rank * 85) // (d.deg * 100)) AS BIGINT) AS rank
-           |  FROM edges e JOIN deg d ON e.src = d.src JOIN r${i - 1} r ON r.id = e.src
-           |  GROUP BY e.dst)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH lsh AS ($lshPairsSql),
-         |pairs AS (SELECT id_a, id_b FROM lsh),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-         |  UNION ALL SELECT id_b, id_a FROM pairs),
-         |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-         |r0 AS (SELECT src AS id, CAST(1000000 AS BIGINT) AS rank FROM deg),
-         |$iters
-         |SELECT id AS doc_id, rank FROM r${Dedup.PageRankIters} ORDER BY doc_id""".stripMargin
-    },
-
-    "q_ngram_jaccard" -> jaccardSql,
-    // on the (diverse) fixture the density router provably takes the
-    // exact path — same oracle; DedupRoutingSpec covers the LSH route
-    "q_neardup_auto" -> jaccardSql,
-
-    "q_simhash" ->
-      s"""WITH toks AS (SELECT doc_id, ${h32("lower(w)")} AS h
-         |  FROM (SELECT doc_id, unnest(string_split_regex(text,'[^a-zA-Z]')) AS w FROM documents) WHERE w<>''),
-         |bits AS (SELECT doc_id, b, sum(CASE WHEN (h >> b) % 2 = 1 THEN 1 ELSE -1 END) AS v
-         |  FROM (SELECT doc_id, h, unnest(generate_series(0,31)) AS b FROM toks) GROUP BY doc_id, b)
-         |SELECT doc_id, CAST(sum(CASE WHEN v>0 THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS simhash
-         |FROM bits GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q_knn_bruteforce" ->
-      s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < ${Similarity.NumQueries}),
-         |sims AS (SELECT q_id, e.vec_id AS n_id,
-         |  round(${cosSql("q_emb", "e.embedding")}, 6) AS sim
-         |  FROM embeddings e, q WHERE q_id <> e.vec_id),
-         |ranked AS (SELECT q_id, n_id, sim,
-         |  row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) AS rank FROM sims)
-         |SELECT q_id, rank, n_id, sim FROM ranked WHERE rank <= ${Similarity.K}
-         |ORDER BY q_id, rank""".stripMargin,
-
-    // hard negatives = brute-force kNN restricted to cross-label pairs;
-    // same round-6 + n_id tie-break ordering contract
-    "q_hard_negatives" ->
-      s"""WITH q AS (SELECT vec_id AS q_id, label AS q_label, embedding AS q_emb FROM embeddings WHERE vec_id < ${Similarity.NumQueries}),
-         |sims AS (SELECT q_id, e.vec_id AS n_id, e.label AS n_label,
-         |  round(${cosSql("q_emb", "e.embedding")}, 6) AS sim
-         |  FROM embeddings e, q WHERE q_label <> e.label),
-         |ranked AS (SELECT q_id, n_id, n_label, sim,
-         |  row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) AS rank FROM sims)
-         |SELECT q_id, rank, n_id, n_label, sim FROM ranked WHERE rank <= ${Similarity.K}
-         |ORDER BY q_id, rank""".stripMargin,
-
-    // the full exact-quantizer IVF pipeline re-derived: unit vectors →
-    // 2^20 fixed-point → the shared Lloyd CTE rounds (k=IvfExactCells)
-    // → per-query 3-probe cell plan → exact cosine rerank in probed
-    // cells. Every float op mirrors the Spark plan's order.
-    "q_knn_ivf_exact" -> ivfExactSql,
-    // value-identical serving layout (write → pruned read-back of the
-    // same deterministic cells) ⇒ same oracle
-    "q_knn_ivf_exact_pruned" -> ivfExactSql,
-    "q_knn_quantized_ivf_exact" -> quantizedIvfExactSql,
-    // the production √N-sized tiers under the same gate: identical
-    // pipeline with cells re-derived from count(*) (sqrtCellsSql)
-    "q_knn_ivf" -> ivfSqrtSql,
-    "q_knn_ivf_pruned" -> ivfSqrtSql,
-    "q_knn_quantized_ivf" -> quantizedIvfSqrtSql,
-    "q_knn_pq" -> pqKnnSql,
-    // the graph-ANN family, fully re-derived since round 15 (build +
-    // beam search): deterministic mix31 pseudo-randomness replaced
-    // xxhash64, so both the blocked and the NN-descent graphs are pure
-    // functions of the corpus DuckDB can recompute
-    "q_knn_graph" -> blockedGraphSql,
-    // maintain-then-search re-derived end-to-end: base build + insert
-    // beams + serving beam, every stage the oracle-locked arithmetic
-    "q_delta_knn_graph" -> deltaGraphSql,
-    // edge compaction is a pure layout change: same edges, one table
-    "q_delta_knn_graph_compacted" -> deltaGraphSql,
-    // Lloyd over the id-prefix base, assignment over all — the stored
-    // layout's rows plus the stateless delta commit
-    "q_delta_knn_ivf" -> deltaIvfSql,
-    // two stateless commits union to one assignment pass at the 6/10
-    // cut; the N-commit fold is a pure layout change over it
-    "q_delta2_knn_ivf" -> deltaIvfSqlFor(6),
-    "q_delta2_knn_ivf_compacted" -> deltaIvfSqlFor(6),
-    // the chained two-beam insert recurrence, fully unrolled
-    "q_delta2_knn_graph" -> delta2GraphSql,
-    // the router measures ~1.0 sampled recall on the fixture and
-    // serves the delta-maintained graph — the delta oracle verbatim
-    "q_knn_graph_drift_routed" -> deltaGraphSql,
-    // the IVF router MEASURES 0.46 sampled insert recall on the
-    // fixture (the base-fitted quantizer genuinely mis-serves the
-    // inserted vectors here) and ESCALATES — so the graded entry
-    // exercises the refit arm and shares q_knn_ivf_exact's full-fit
-    // oracle; the graph router above serves its delta arm, putting
-    // BOTH router arms under the gate across the pair
-    "q_knn_ivf_drift_routed" -> ivfExactSql,
-    // retraction: the maintenance chain with assignment restricted to
-    // survivors — the quantizer still fits over the ORIGINAL base
-    // (stored-model semantics; tombstones exclude the query ids)
-    "q_retract_knn_ivf" ->
-      deltaIvfSqlFor(8,
-        s"(vec_id % 10 <> 7 OR vec_id < ${graft.operators.Similarity.NumQueries})"),
-    // graph retraction: immutable build history + tombstone-filtered
-    // serving edges
-    "q_retract_knn_graph" -> retractGraphSql,
-    // compaction is a pure layout change: same rows, one layout
-    "q_delta_knn_ivf_compacted" -> deltaIvfSql,
-    // the router picks the blocked build at gate scale (n=500 <= 200k)
-    "q_knn_graph_auto" -> blockedGraphSql,
-    "q_knn_graph_nnd" -> nndGraphSql,
-
-    // the int8 two-stage kNN re-derived: per-vector scale = max|x|/127,
-    // q_i = clamp(floor(x/scale + 0.5)) — floor(x+0.5) IS Java's
-    // Math.round (Int8PackExpr), NOT DuckDB round()'s half-away —
-    // integer coarse dot over every corpus vector, top-QuantRerank per
-    // query, exact cosine rerank of the shortlist. Deterministic
-    // end-to-end ("approximate" only vs brute force), so it grades.
-    "q_knn_quantized" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings),
-         |s AS (SELECT vec_id, emb,
-         |    list_max(list_transform(emb, x -> abs(x))) / 127.0 AS scale,
-         |    sqrt(list_sum(list_transform(emb, x -> x * x))) AS nrm FROM e),
-         |q AS (SELECT vec_id, scale, nrm,
-         |    CASE WHEN scale = 0.0 THEN list_transform(emb, x -> CAST(0 AS BIGINT))
-         |         ELSE list_transform(emb, x -> greatest(-127, least(127, CAST(floor(x / scale + 0.5) AS BIGINT)))) END AS qv
-         |  FROM s),
-         |qq AS (SELECT vec_id AS q_id, qv AS q_qv FROM q WHERE vec_id < ${Similarity.NumQueries}),
-         |coarse AS (SELECT qq.q_id, t.vec_id AS n_id,
-         |    (t.scale * CAST(list_sum(list_transform(generate_series(1, len(t.qv)),
-         |        i -> qq.q_qv[i] * t.qv[i])) AS DOUBLE))
-         |      / (CASE WHEN t.nrm = 0.0 THEN 1.0 ELSE t.nrm END) AS qsim
-         |  FROM q t, qq WHERE qq.q_id <> t.vec_id),
-         |short AS (SELECT q_id, n_id FROM coarse
-         |  QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY qsim DESC, n_id) <= ${Similarity.QuantRerank}),
-         |sims AS (SELECT sl.q_id, sl.n_id,
-         |    round(${cosSql("qe.embedding", "se.embedding")}, 6) AS sim
-         |  FROM short sl
-         |  JOIN embeddings se ON se.vec_id = sl.n_id
-         |  JOIN embeddings qe ON qe.vec_id = sl.q_id),
-         |ranked AS (SELECT q_id, n_id, sim,
-         |  row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) AS rank FROM sims)
-         |SELECT q_id, rank, n_id, sim FROM ranked WHERE rank <= ${Similarity.K}
-         |ORDER BY q_id, rank""".stripMargin,
-
-    "q_embedding_dedup" ->
-      s"""WITH cent AS (SELECT vec_id AS c_id, embedding AS c_emb FROM embeddings
-         |  WHERE vec_id < (SELECT greatest(4, CAST(floor(sqrt(count(*))) AS BIGINT)) FROM embeddings)),
-         |assigned AS (SELECT e.vec_id,
-         |  min({'d': list_sum(list_transform(generate_series(1, len(e.embedding)),
-         |        i -> (e.embedding[i]::DOUBLE - c_emb[i]::DOUBLE) * (e.embedding[i]::DOUBLE - c_emb[i]::DOUBLE))),
-         |       'c': c_id}) AS m
-         |  FROM embeddings e, cent GROUP BY e.vec_id),
-         |tagged AS (SELECT e.vec_id, e.embedding, a.m.c AS cell
-         |  FROM embeddings e JOIN assigned a ON e.vec_id=a.vec_id)
-         |SELECT id_a, id_b, sim FROM (
-         |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         |    round(${cosSql("a.embedding", "b.embedding")}, 6) AS sim
-         |  FROM tagged a JOIN tagged b ON a.cell=b.cell AND a.vec_id<b.vec_id)
-         |WHERE sim >= 0.4 ORDER BY id_a, id_b""".stripMargin,
-
-    "q_tumbling" ->
-      """SELECT strftime(time_bucket(INTERVAL '1 hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-        |event_type, count(*) AS n, round(sum(value),2) AS total_value
-        |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin,
-
-    // identical semantics, executed by the streaming engine
-    "q_stream_tumbling" ->
-      """SELECT strftime(time_bucket(INTERVAL '1 hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-        |event_type, count(*) AS n, round(sum(value),2) AS total_value
-        |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin,
-
-    "q_sliding" ->
-      """SELECT strftime(s, '%Y-%m-%d %H:%M:%S') AS win_start, count(*) AS n FROM (
-        |SELECT time_bucket(INTERVAL '30 minutes', ts) AS s FROM events
-        |UNION ALL
-        |SELECT time_bucket(INTERVAL '30 minutes', ts) - INTERVAL 30 MINUTE AS s FROM events)
-        |GROUP BY 1 ORDER BY win_start""".stripMargin,
-
-    "q_sessions" -> sessionsSql,
-    // the replay-clock streaming twin closes every session inline, so
-    // it reproduces the batch sessionization row-for-row
-    "q_stream_sessions_gated" -> sessionsSql,
-
-    // gaps-and-islands closing on event_type CHANGE (not inactivity):
-    // (ts, event_id) ordering everywhere — ts ties would otherwise
-    // make lag() peer-order-dependent between engines
-    "q_scd2" ->
-      """WITH flagged AS (SELECT user_id, ts, event_id, event_type,
-        |  CASE WHEN lag(event_type) OVER w IS NULL
-        |       OR lag(event_type) OVER w <> event_type THEN 1 ELSE 0 END AS chg
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |runs AS (SELECT user_id, event_type, ts,
-        |  CAST(sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS version FROM flagged),
-        |iv AS (SELECT user_id, version, min(event_type) AS event_type,
-        |  min(ts) AS t0, count(*) AS n_events FROM runs GROUP BY 1, 2)
-        |SELECT user_id, version, event_type,
-        |  strftime(t0, '%Y-%m-%d %H:%M:%S') AS valid_from,
-        |  strftime(lead(t0) OVER wv, '%Y-%m-%d %H:%M:%S') AS valid_to,
-        |  n_events, lead(t0) OVER wv IS NULL AS is_current
-        |FROM iv WINDOW wv AS (PARTITION BY user_id ORDER BY version)
-        |ORDER BY user_id, version""".stripMargin,
-
-    "q_retention" ->
-      """WITH hourly AS (SELECT DISTINCT time_bucket(INTERVAL '1 hour', ts) AS h, user_id FROM events)
-        |SELECT strftime(a.h, '%Y-%m-%d %H:%M:%S') AS hour, count(*) AS active,
-        |count(b.user_id) AS retained
-        |FROM hourly a LEFT JOIN hourly b
-        |ON b.h = a.h - INTERVAL 1 HOUR AND b.user_id = a.user_id
-        |GROUP BY a.h ORDER BY hour""".stripMargin,
-
-    "q_twap" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us,
-        |  CAST(round(value*100) AS BIGINT) AS cents FROM events),
-        |d AS (SELECT user_id, cents,
-        |  (lead(us) OVER (PARTITION BY user_id ORDER BY us, event_id) - us) // 1000 AS dur_ms FROM e)
-        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_intervals,
-        |CAST(sum(cents * dur_ms) AS BIGINT)::DOUBLE / CAST(sum(dur_ms) AS BIGINT)::DOUBLE / 100.0 AS twap
-        |FROM d WHERE dur_ms IS NOT NULL GROUP BY user_id
-        |HAVING CAST(sum(dur_ms) AS BIGINT) > 0 ORDER BY user_id""".stripMargin,
-
-    "q_event_paths" ->
-      s"""SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-         |array_to_string(list(event_type ORDER BY ts, event_id)[1:${EventAnalytics.PathLen}], '>') AS path
-         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q_funnel" ->
-      """WITH scored AS (SELECT user_id, ts, event_type,
-        |  min(CASE WHEN event_type='purchase' THEN ts END) OVER
-        |    (PARTITION BY user_id ORDER BY ts, event_id
-        |     ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS next_purchase
-        |  FROM events)
-        |SELECT user_id, count(*) AS n_clicks,
-        |CAST(sum(CASE WHEN next_purchase IS NOT NULL
-        |  AND next_purchase <= ts + INTERVAL 30 MINUTE THEN 1 ELSE 0 END) AS BIGINT) AS n_converted
-        |FROM scored WHERE event_type='click' GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q_new_users" ->
-      """WITH fs AS (SELECT user_id, time_bucket(INTERVAL '1 hour', min(ts)) AS h
-        |  FROM events GROUP BY user_id),
-        |hourly AS (SELECT h, count(*) AS n_new FROM fs GROUP BY h)
-        |SELECT strftime(h, '%Y-%m-%d %H:%M:%S') AS hour, n_new,
-        |CAST(sum(n_new) OVER (ORDER BY h ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_users
-        |FROM hourly ORDER BY hour""".stripMargin,
-
-    // α=1/2 EWMA: power-of-two weights make the numerator/denominator
-    // exact LONG sums; the reported ewma is one exact-input division
-    "q_ewma" -> ewmaSql,
-    // the streaming state twin emits the identical exact rows
-    "q_stream_ewma" -> ewmaSql,
-
-    // per-FEATURE fixed-point quantization makes the linear quality
-    // model's weighted sum and threshold compare exact-integer
-    "q_quality_model" -> {
-      val th = graft.operators.TextAnalysis.QualityModelThresholdFp
-      s"""WITH t AS (SELECT doc_id, text,
-         |  list_transform(list_filter(string_split_regex(text,'[^a-zA-Z]'), x -> x<>''),
-         |    x -> lower(x)) AS toks FROM documents),
-         |f AS (SELECT doc_id,
-         |  CAST(round((len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is','it')))::DOUBLE
-         |    / greatest(len(toks),1)) * 1048576.0) AS BIGINT) AS swr_fp,
-         |  CAST(round((length(regexp_replace(text,'[^a-zA-Z]','','g'))::DOUBLE
-         |    / greatest(length(text),1)) * 1048576.0) AS BIGINT) AS alpha_fp,
-         |  CAST(round((len(list_distinct(toks))::DOUBLE
-         |    / greatest(len(toks),1)) * 1048576.0) AS BIGINT) AS uniq_fp,
-         |  CAST(round(((length(regexp_replace(text,'[^a-zA-Z]','','g'))::DOUBLE
-         |    / greatest(len(toks),1)) / 10) * 1048576.0) AS BIGINT) AS mwl_fp
-         | FROM t)
-         |SELECT doc_id, CAST(3*swr_fp + 2*alpha_fp + 2*uniq_fp + mwl_fp AS BIGINT) AS score_fp,
-         |  CAST(3*swr_fp + 2*alpha_fp + 2*uniq_fp + mwl_fp AS BIGINT)::DOUBLE / 1048576.0 AS score,
-         |  (3*swr_fp + 2*alpha_fp + 2*uniq_fp + mwl_fp) > $th AS keep
-         |FROM f ORDER BY doc_id""".stripMargin
-    },
-
-    // exact interpolated percentiles of integer cents on both engines
-    // (the q_percentile precedent); flag and z share one IEEE tree
-    "q_anomaly_mad" ->
-      """WITH e AS (SELECT event_id, event_type,
-        |  CAST(round(value*100) AS BIGINT) AS cents FROM events),
-        |med AS (SELECT event_type, quantile_cont(cents, 0.5) AS med FROM e GROUP BY 1),
-        |d AS (SELECT event_id, event_type, cents, med,
-        |  abs(cents::DOUBLE - med) AS dev FROM e JOIN med USING(event_type)),
-        |mad AS (SELECT event_type, quantile_cont(dev, 0.5) AS mad FROM d GROUP BY 1)
-        |SELECT event_type, event_id, cents, med, mad,
-        |  dev / (1.4826 * mad) AS robust_z
-        |FROM d JOIN mad USING(event_type)
-        |WHERE mad > 0.0 AND dev > 3.0 * (1.4826 * mad)
-        |ORDER BY event_type, event_id""".stripMargin,
-
-    "q_image_decode" ->
-      """SELECT doc_id, CAST(32 AS BIGINT) AS width, CAST(16 AS BIGINT) AS height,
-        |CAST(sum((doc_id*31 + y*7 + x) % 256) AS BIGINT) AS luma_sum
-        |FROM (SELECT doc_id, unnest(generate_series(0, 15)) AS y FROM documents),
-        |     (SELECT unnest(generate_series(0, 31)) AS x)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // the 8x8-block average-hash bits re-derived arithmetically:
-    // block mean vs image mean as the scaled integer compare
-    // bs*64 > total (blocks are 4x2 px over 32x16), packed into two
-    // unsigned 32-bit halves (the simhash shift trick, twice)
-    "q_image_ahash" -> imageAhashSql,
-    // stateless streaming application of the same decode+hash — same
-    // per-doc rows, same oracle
-    "q_stream_image_ahash" -> imageAhashSql,
-    // banded Hamming-ball pairs over the same hash (exact at ≤ 3)
-    "q_image_neardup" -> imageNeardupSql,
-    // retraction: the same banded chain over the surviving docs
-    "q_retract_image_neardup" ->
-      overRetainedDocs("doc_id % 10 <> 7", imageNeardupSql, "id_a, id_b"),
-    // the wide tier and the router are value-identical to the 4-band
-    // tier by construction (same verify+expansion over a
-    // complete-recall candidate set), so all three share ONE oracle —
-    // a drift in any tier breaks its own hash match
-    "q_image_neardup_wide" -> imageNeardupSql,
-    "q_image_neardup_auto" -> imageNeardupSql,
-    // transitive closure over the visual pairs (the q_dup_clusters
-    // recursive-CTE shape on the image pair list)
-    "q_image_dup_clusters" -> imageDupClustersSql,
-    // the INCREMENTAL path changes WORK, never results: the maintained
-    // label table over base ∪ batch equals the full closure over the
-    // whole corpus, so the delta entry shares the oracle verbatim
-    "q_delta_image_dup_clusters" -> imageDupClustersSql,
-    // two chained hash-level maintenance steps == one full closure
-    "q_delta2_image_dup_clusters" -> imageDupClustersSql,
-    // retraction: the same recursive closure over surviving docs
-    "q_retract_image_dup_clusters" ->
-      overRetainedDocs("doc_id % 10 <> 7", imageDupClustersSql,
-        "cluster_rep"),
-    "q_image_dedup" -> imageDedupSql,
-    // incremental ingest: the full-batch pair lists restricted to the
-    // mod-10 batch side — the delta probe must match them exactly
-    "q_delta_image_neardup" -> deltaPairsSql(imageNeardupSql),
-    "q_delta_audio_neardup" -> deltaPairsSql(audioNeardupSql),
-    // the streaming serving twin probes the STORED side only, so its
-    // contract is the new-vs-existing cut (never new_new — arrivals
-    // pair with the frozen corpus, not each other)
-    "q_stream_image_neardup_delta" ->
-      s"""WITH pairs AS (SELECT * FROM ($imageNeardupSql))
-         |SELECT id_a, id_b, dist FROM pairs
-         |WHERE (id_a % 10 >= 8) <> (id_b % 10 >= 8)
-         |ORDER BY id_a, id_b""".stripMargin,
-    // the acoustic serving twin's contract is the same cut on the
-    // audio pair list
-    "q_stream_audio_neardup_delta" ->
-      s"""WITH pairs AS (SELECT * FROM ($audioNeardupSql))
-         |SELECT id_a, id_b, dist FROM pairs
-         |WHERE (id_a % 10 >= 8) <> (id_b % 10 >= 8)
-         |ORDER BY id_a, id_b""".stripMargin,
-    // frozen-rep delta dedup decision: existing classes keep their
-    // stored (base-min) representative, new classes elect min batch
-    // doc; n_class counts the class AFTER ingest
-    "q_delta_image_dedup" ->
-      s"""WITH $ahashCtesSql,
-         |base AS (SELECT * FROM ahv WHERE doc_id % 10 < 8),
-         |batch AS (SELECT * FROM ahv WHERE doc_id % 10 >= 8),
-         |breps AS (SELECT ahash_hi, ahash_lo, min(doc_id) AS base_rep,
-         |    count(*) AS base_n FROM base GROUP BY 1, 2),
-         |bcls AS (SELECT ahash_hi, ahash_lo, min(doc_id) AS batch_min,
-         |    count(*) AS batch_n FROM batch GROUP BY 1, 2)
-         |SELECT b.doc_id, coalesce(base_rep, batch_min) AS rep_id,
-         |  CAST(coalesce(base_n, 0) + batch_n AS BIGINT) AS n_class
-         |FROM batch b JOIN bcls USING (ahash_hi, ahash_lo)
-         |LEFT JOIN breps USING (ahash_hi, ahash_lo)
-         |ORDER BY doc_id""".stripMargin,
-    // the audio twin: the same frozen-rep decision on the wide
-    // fingerprint class key
-    "q_delta_audio_dedup" ->
-      s"""WITH $audioFpWideCteSql,
-         |base AS (SELECT * FROM afw WHERE doc_id % 10 < 8),
-         |batch AS (SELECT * FROM afw WHERE doc_id % 10 >= 8),
-         |breps AS (SELECT afp_hi, afp_lo, min(doc_id) AS base_rep,
-         |    count(*) AS base_n FROM base GROUP BY 1, 2),
-         |bcls AS (SELECT afp_hi, afp_lo, min(doc_id) AS batch_min,
-         |    count(*) AS batch_n FROM batch GROUP BY 1, 2)
-         |SELECT b.doc_id, coalesce(base_rep, batch_min) AS rep_id,
-         |  CAST(coalesce(base_n, 0) + batch_n AS BIGINT) AS n_class
-         |FROM batch b JOIN bcls USING (afp_hi, afp_lo)
-         |LEFT JOIN breps USING (afp_hi, afp_lo)
-         |ORDER BY doc_id""".stripMargin,
-
-    // resize maps out(x,y) <- in(2x, 2y) for 32x16 -> 16x8
-    "q_image_resize" ->
-      """SELECT doc_id, CAST(16 AS BIGINT) AS width, CAST(8 AS BIGINT) AS height,
-        |CAST(sum((doc_id*31 + (y*2)*7 + (x*2)) % 256) AS BIGINT) AS luma_sum
-        |FROM (SELECT doc_id, unnest(generate_series(0, 7)) AS y FROM documents),
-        |     (SELECT unnest(generate_series(0, 15)) AS x)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q_audio_decode" ->
-      """SELECT doc_id, CAST(16000 AS BIGINT) AS sample_rate,
-        |CAST(1000 + doc_id % 500 AS BIGINT) AS n_samples,
-        |CAST(sum(abs((doc_id*13 + i*17) % 65536 - 32768)) AS BIGINT) AS amp_sum
-        |FROM (SELECT doc_id, unnest(generate_series(0, 999 + doc_id % 500)) AS i
-        |      FROM documents)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // frame f = floor(i*F/n); bit f iff frame mean |amp| > clip mean,
-    // cross-multiplied to exact integers (fs*n > total*nf); samples
-    // are the AM fixture: +/-8191 base x (1 + (doc_id + f) % 4)
-    "q_audio_fingerprint" ->
-      s"""WITH $audioFpCteSql
-         |SELECT doc_id, n_samples, afp FROM afv
-         |ORDER BY doc_id""".stripMargin,
-
-    // finite replay == batch: the streaming twin shares the oracle
-    "q_stream_audio_fingerprint" ->
-      s"""WITH $audioFpCteSql
-         |SELECT doc_id, n_samples, afp FROM afv
-         |ORDER BY doc_id""".stripMargin,
-
-    // exact acoustic dedup: min-doc representative + class size per
-    // fingerprint class (the q_image_dedup shape on the audio key)
-    "q_audio_dedup" ->
-      s"""WITH $audioFpCteSql,
-         |reps AS (SELECT afp, min(doc_id) AS rep_id,
-         |    count(*) AS n_class
-         |  FROM afv GROUP BY 1)
-         |SELECT doc_id, rep_id, n_class
-         |FROM afv JOIN reps USING (afp)
-         |ORDER BY doc_id""".stripMargin,
-
-    // wide 64-frame fingerprint, two 32-bit halves (aHash convention)
-    "q_audio_fingerprint_wide" ->
-      s"""WITH $audioFpWideCteSql
-         |SELECT doc_id, n_samples, afp_hi, afp_lo FROM afw
-         |ORDER BY doc_id""".stripMargin,
-
-    // finite replay == batch: the wide streaming twin shares the oracle
-    "q_stream_audio_fingerprint_wide" ->
-      s"""WITH $audioFpWideCteSql
-         |SELECT doc_id, n_samples, afp_hi, afp_lo FROM afw
-         |ORDER BY doc_id""".stripMargin,
-
-    // acoustic near-dup: 4×16-bit banding + popcount verify over the
-    // wide fingerprint — the imageNeardupSql shape on the audio key
-    "q_audio_neardup" -> audioNeardupSql,
-
-    // chunked fingerprints: chunk = i // 512, frame index and the
-    // cross-multiplied mean compare both within-CHUNK (nc, the short
-    // tail chunk's own length — never the clip's)
-    "q_audio_fingerprint_chunks" ->
-      s"""SELECT doc_id, chunk, n_samples, afp FROM ($audioChunksSql)
-         |ORDER BY doc_id, chunk""".stripMargin,
-
-    // overlapping windows: w*stride <= g < w*stride + cs, each window
-    // fingerprinted against its OWN mean over its own length (the
-    // short sub-stride tail windows included — w ranges to (n-1)//stride)
-    "q_audio_fingerprint_windows" -> {
-      val cs = graft.operators.Multimodal.AudioChunkSamples
-      val st = graft.operators.Multimodal.AudioWindowStride
-      val envF = graft.operators.Multimodal.AudioFpFrames
-      s"""WITH base AS (SELECT doc_id, (1000 + doc_id % 500) AS n FROM documents),
-         |wins AS (SELECT doc_id, n, unnest(generate_series(0, (n-1)//$st)) AS w
-         |  FROM base),
-         |samples AS (SELECT doc_id, w, len, j, w*$st + j AS g,
-         |    abs(((doc_id*13 + (w*$st + j)*17) % 16384 - 8192)
-         |        * (1 + (doc_id + ((w*$st + j)*$envF) // n) % 4)) AS a,
-         |    (j*$envF) // len AS f
-         |  FROM (SELECT doc_id, n, w, least($cs, n - w*$st) AS len,
-         |      unnest(generate_series(0, least($cs, n - w*$st) - 1)) AS j
-         |    FROM wins)),
-         |frames AS (SELECT doc_id, w, len, f, sum(a) AS fs, count(*) AS nf
-         |  FROM samples GROUP BY 1, 2, 3, 4),
-         |tot AS (SELECT doc_id, w, sum(a) AS total
-         |  FROM samples GROUP BY 1, 2)
-         |SELECT f.doc_id, CAST(f.w AS BIGINT) AS win,
-         |  CAST(f.len AS BIGINT) AS n_samples,
-         |  CAST(sum(CASE WHEN fs * len > total * nf
-         |    THEN (CAST(1 AS BIGINT) << f) ELSE 0 END) AS BIGINT) AS afp
-         |FROM frames f JOIN tot t ON f.doc_id = t.doc_id AND f.w = t.w
-         |GROUP BY 1, 2, 3
-         |ORDER BY 1, 2""".stripMargin
-    },
-
-    // chunk-level acoustic near-dup: df-capped exact-fingerprint
-    // posting join, per-pair best offset-consistent aligned run
-    "q_audio_chunk_neardup" -> {
-      val cap = graft.operators.Multimodal.AudioChunkMaxDf
-      val minA = graft.operators.Multimodal.AudioChunkMinAligned
-      s"""WITH ch AS (SELECT * FROM ($audioChunksSql)),
-         |dfc AS (SELECT afp FROM (
-         |    SELECT afp, count(DISTINCT doc_id) AS df FROM ch GROUP BY 1)
-         |  WHERE df <= $cap),
-         |posts AS (SELECT afp, doc_id, chunk FROM ch
-         |  WHERE afp IN (SELECT afp FROM dfc)),
-         |cnt AS (SELECT id_a, id_b, offs, count(*) AS n FROM (
-         |    SELECT a.doc_id AS id_a, c.doc_id AS id_b,
-         |      c.chunk - a.chunk AS offs
-         |    FROM posts a JOIN posts c
-         |      ON a.afp = c.afp AND a.doc_id < c.doc_id)
-         |  GROUP BY 1, 2, 3),
-         |best AS (SELECT id_a, id_b, max(n) AS n_aligned FROM cnt
-         |  GROUP BY 1, 2 HAVING max(n) >= $minA)
-         |SELECT id_a, id_b, min(offs) AS "offset", n_aligned
-         |FROM cnt JOIN best USING (id_a, id_b)
-         |WHERE n = n_aligned
-         |GROUP BY id_a, id_b, n_aligned
-         |ORDER BY id_a, id_b""".stripMargin
-    },
-
-    "q_media_features" ->
-      """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |lang AS format,
-        |CAST(octet_length(encode(text))*31 + ord(substr(text,1,1)) AS BIGINT) AS feature
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_media_stats" ->
-      """SELECT lang AS format, count(*) AS n_media,
-        |CAST(sum(octet_length(encode(text))) AS BIGINT) AS total_bytes,
-        |CAST(min(octet_length(encode(text))*31 + ord(substr(text,1,1))) AS BIGINT) AS min_feature
-        |FROM documents GROUP BY lang ORDER BY format""".stripMargin,
-
-    "q_tpch_q3" ->
-      """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
-        |o_orderpriority, round(sum(l_extendedprice*(1-l_discount)),2) AS revenue
-        |FROM customer JOIN orders ON o_custkey=c_custkey
-        |JOIN lineitem ON l_orderkey=o_orderkey
-        |WHERE c_mktsegment='BUILDING'
-        |AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
-        |AND l_shipdate > TIMESTAMP '1998-03-15 00:00:00'
-        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-
-    "q_tpch_q5" ->
-      """SELECT n_name, round(sum(l_extendedprice*(1-l_discount)),2) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey=o_orderkey
-        |JOIN customer ON o_custkey=c_custkey
-        |JOIN supplier ON l_suppkey=s_suppkey AND c_nationkey=s_nationkey
-        |JOIN nation ON s_nationkey=n_nationkey
-        |JOIN region ON n_regionkey=r_regionkey
-        |WHERE r_name='ASIA'
-        |AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
-
-    "q_tpch_q6" ->
-      """SELECT round(sum(l_extendedprice*l_discount),2) AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-        |AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-        |AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-
-    "q_tpch_q12" ->
-      """SELECT l_linestatus,
-        |CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey=o_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-        |AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin,
-
-    "q_tpch_q14" ->
-      """SELECT round(100.0 *
-        |  sum(CASE WHEN p_type='PROMO' THEN l_extendedprice*(1-l_discount) ELSE 0.0 END) /
-        |  sum(l_extendedprice*(1-l_discount)), 4) AS promo_revenue_pct
-        |FROM lineitem JOIN part ON l_partkey=p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1997-03-01 00:00:00'
-        |AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'""".stripMargin,
-
-    "q_tpch_q19" ->
-      """SELECT round(sum(l_extendedprice*(1-l_discount)),2) AS revenue
-        |FROM lineitem JOIN part ON l_partkey=p_partkey
-        |WHERE (p_brand='Brand#11' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 11)
-        |OR (p_brand='Brand#22' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 20)
-        |OR (p_brand='Brand#15' AND p_size BETWEEN 1 AND 35 AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-
-    "q_tpch_q18" ->
-      """WITH big AS (SELECT l_orderkey, round(sum(l_quantity),2) AS total_qty
-        |  FROM lineitem GROUP BY l_orderkey HAVING round(sum(l_quantity),2) > 300)
-        |SELECT c_name, c_custkey, o_orderkey,
-        |  strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
-        |  o_totalprice, total_qty
-        |FROM big JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
-
-    "q_tpch_q15" ->
-      """WITH rev AS (SELECT l_suppkey,
-        |    round(sum(l_extendedprice*(1-l_discount)),2) AS total_revenue
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-        |    AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'
-        |  GROUP BY l_suppkey)
-        |SELECT s_suppkey, s_name, total_revenue
-        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "q_tpch_q17" ->
-      """SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
-        |FROM lineitem, part
-        |WHERE p_partkey = l_partkey AND p_brand = 'Brand#12' AND p_size < 15
-        |  AND l_quantity < (SELECT 0.2 * avg(l2.l_quantity)
-        |                    FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""".stripMargin,
-
-    "q_tpch_q20" ->
-      """SELECT s_suppkey, s_name
-        |FROM supplier, nation
-        |WHERE s_suppkey IN (
-        |    SELECT ps.l_suppkey FROM
-        |      (SELECT l_partkey, l_suppkey, sum(l_quantity) AS avail
-        |       FROM lineitem GROUP BY 1, 2) ps
-        |    WHERE ps.l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'red%')
-        |      AND ps.avail > (SELECT 0.5 * sum(l2.l_quantity) FROM lineitem l2
-        |                      WHERE l2.l_partkey = ps.l_partkey
-        |                        AND l2.l_suppkey = ps.l_suppkey
-        |                        AND l2.l_shipdate >= TIMESTAMP '1997-01-01'
-        |                        AND l2.l_shipdate < TIMESTAMP '1998-01-01'))
-        |  AND s_nationkey = n_nationkey AND n_name IN ('NATION_3', 'NATION_7')
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "q_tpch_q21" ->
-      """SELECT s_name, count(*) AS numwait
-        |FROM supplier, lineitem l1, orders, nation
-        |WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey
-        |  AND o_orderstatus = 'F'
-        |  AND l1.l_shipdate > o_orderdate + INTERVAL 360 DAY
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |              WHERE l2.l_orderkey = l1.l_orderkey
-        |                AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |                  WHERE l3.l_orderkey = l1.l_orderkey
-        |                    AND l3.l_suppkey <> l1.l_suppkey
-        |                    AND l3.l_shipdate > o_orderdate + INTERVAL 360 DAY)
-        |  AND s_nationkey = n_nationkey
-        |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 100""".stripMargin,
-
-    "q_tpch_q2" ->
-      """WITH supply AS (
-        |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
-        |         min(l_extendedprice / l_quantity) AS ps_supplycost
-        |  FROM lineitem GROUP BY 1, 2)
-        |SELECT round(s_acctbal, 2) AS s_acctbal, s_name, n_name, p_partkey, p_name
-        |FROM part, supply, supplier, nation, region
-        |WHERE p_partkey = ps_partkey AND s_suppkey = ps_suppkey
-        |  AND p_size = 15 AND p_type = 'SMALL'
-        |  AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-        |  AND r_name = 'EUROPE'
-        |  AND ps_supplycost = (
-        |    SELECT min(s2.ps_supplycost)
-        |    FROM supply s2, supplier sup2, nation n2, region r2
-        |    WHERE s2.ps_partkey = p_partkey AND s2.ps_suppkey = sup2.s_suppkey
-        |      AND sup2.s_nationkey = n2.n_nationkey
-        |      AND n2.n_regionkey = r2.r_regionkey AND r2.r_name = 'EUROPE')
-        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-        |LIMIT 100""".stripMargin,
-
-    "q_tpch_q4" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-07-01'
-        |  AND o_orderdate < TIMESTAMP '1996-10-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey
-        |                AND l_shipdate > o_orderdate + INTERVAL 90 DAY)
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-
-    "q_tpch_q7" ->
-      """SELECT supp_nation, cust_nation, l_year, round(sum(volume), 2) AS revenue
-        |FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |             CAST(year(l_shipdate) AS INTEGER) AS l_year,
-        |             l_extendedprice * (1 - l_discount) AS volume
-        |      FROM lineitem, orders, supplier, customer, nation n1, nation n2
-        |      WHERE l_orderkey = o_orderkey AND l_suppkey = s_suppkey
-        |        AND o_custkey = c_custkey
-        |        AND s_nationkey = n1.n_nationkey AND c_nationkey = n2.n_nationkey
-        |        AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-        |          OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-        |        AND l_shipdate >= TIMESTAMP '1996-01-01'
-        |        AND l_shipdate < TIMESTAMP '1998-01-01') shipping
-        |GROUP BY supp_nation, cust_nation, l_year
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
-
-    "q_tpch_q8" ->
-      """SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
-        |       round(sum(CASE WHEN n2.n_name = 'NATION_3'
-        |                      THEN l_extendedprice * (1 - l_discount)
-        |                      ELSE 0 END), 2) AS nation_volume,
-        |       round(sum(l_extendedprice * (1 - l_discount)), 2) AS total_volume
-        |FROM lineitem, part, orders, customer, supplier,
-        |     nation n1, nation n2, region
-        |WHERE l_partkey = p_partkey AND p_type = 'ECONOMY'
-        |  AND l_orderkey = o_orderkey AND o_custkey = c_custkey
-        |  AND c_nationkey = n1.n_nationkey AND n1.n_regionkey = r_regionkey
-        |  AND r_name = 'AMERICA'
-        |  AND l_suppkey = s_suppkey AND s_nationkey = n2.n_nationkey
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY o_year
-        |ORDER BY o_year""".stripMargin,
-
-    "q_tpch_q9" ->
-      """SELECT n_name AS nation, CAST(year(o_orderdate) AS INTEGER) AS o_year,
-        |       sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |             * (100 - CAST(round(l_discount * 100) AS BIGINT))
-        |           - 600 * CAST(round(p_retailprice * 10) AS BIGINT)
-        |             * CAST(l_quantity AS BIGINT)) / 10000.0 AS sum_profit
-        |FROM lineitem, part, orders, supplier, nation
-        |WHERE l_partkey = p_partkey AND p_name LIKE '%gear%'
-        |  AND l_orderkey = o_orderkey AND l_suppkey = s_suppkey
-        |  AND s_nationkey = n_nationkey
-        |GROUP BY 1, 2
-        |ORDER BY nation, o_year DESC""".stripMargin,
-
-    "q_tpch_q11" ->
-      """SELECT l_partkey AS ps_partkey, round(sum(l_extendedprice), 2) AS value
-        |FROM lineitem, supplier, nation
-        |WHERE l_suppkey = s_suppkey AND s_nationkey = n_nationkey
-        |  AND n_name = 'NATION_5'
-        |GROUP BY l_partkey
-        |HAVING sum(l_extendedprice) > (
-        |  SELECT sum(l_extendedprice) * 0.001
-        |  FROM lineitem, supplier, nation
-        |  WHERE l_suppkey = s_suppkey AND s_nationkey = n_nationkey
-        |    AND n_name = 'NATION_5')
-        |ORDER BY value DESC, ps_partkey""".stripMargin,
-
-    "q_tpch_q13" ->
-      """SELECT c_count, count(*) AS custdist
-        |FROM (SELECT c_custkey, count(o_orderkey) AS c_count
-        |      FROM customer LEFT OUTER JOIN orders
-        |        ON c_custkey = o_custkey
-        |        AND o_orderpriority <> '4-NOT SPECIFIED'
-        |      GROUP BY c_custkey) c_orders
-        |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-
-    "q_tpch_q16" ->
-      """SELECT p_brand, p_type, p_size, count(DISTINCT ps_suppkey) AS supplier_cnt
-        |FROM (SELECT DISTINCT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey
-        |      FROM lineitem) supply, part
-        |WHERE p_partkey = ps_partkey
-        |  AND p_brand <> 'Brand#2' AND p_type NOT LIKE 'PROMO%'
-        |  AND p_size IN (5, 11, 17, 23, 29, 35, 41, 47)
-        |  AND ps_suppkey NOT IN (SELECT s_suppkey FROM supplier
-        |                         WHERE s_acctbal < 0)
-        |GROUP BY p_brand, p_type, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-
-    "q_tpch_q22" ->
-      """SELECT cntrycode, count(*) AS numcust, round(sum(c_acctbal), 2) AS totacctbal
-        |FROM (SELECT c_custkey % 10 AS cntrycode, c_acctbal
-        |      FROM customer
-        |      WHERE c_custkey % 10 IN (1, 2, 3, 4, 5, 6, 7)
-        |        AND c_acctbal > (SELECT avg(c_acctbal) FROM customer
-        |                         WHERE c_acctbal > 0.00
-        |                           AND c_custkey % 10 IN (1, 2, 3, 4, 5, 6, 7))
-        |        AND NOT EXISTS (SELECT 1 FROM orders
-        |                        WHERE o_custkey = c_custkey
-        |                          AND o_orderdate >= TIMESTAMP '2000-01-01')) custsale
-        |GROUP BY cntrycode
-        |ORDER BY cntrycode""".stripMargin,
-
-    "q_tpch_q10" ->
-      """SELECT c_custkey, c_name, round(c_acctbal,2) AS acctbal, n_name,
-        |round(sum(l_extendedprice*(1-l_discount)),2) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey=o_orderkey
-        |JOIN customer ON o_custkey=c_custkey
-        |JOIN nation ON c_nationkey=n_nationkey
-        |WHERE l_returnflag='R'
-        |AND o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-        |AND o_orderdate < TIMESTAMP '1997-04-01 00:00:00'
-        |GROUP BY c_custkey, c_name, c_acctbal, n_name
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-
-    "q_lateral_join" ->
-      """SELECT r_name, n_name, bal
-        |FROM region r,
-        |LATERAL (SELECT n_name, round(sum(c_acctbal),2) AS bal
-        |         FROM nation JOIN customer ON c_nationkey=n_nationkey
-        |         WHERE n_regionkey=r.r_regionkey
-        |         GROUP BY n_name ORDER BY bal DESC, n_name LIMIT 2) t
-        |ORDER BY r_name, bal DESC, n_name""".stripMargin,
-
-    "q_merge_upsert" ->
-      """WITH cur AS (SELECT o_custkey AS k, count(*) AS n,
-        |  round(sum(o_totalprice),2) AS v, strftime(max(o_orderdate),'%Y-%m-%d') AS d
-        |  FROM orders WHERE o_orderdate < TIMESTAMP '2001-01-01 00:00:00' GROUP BY o_custkey),
-        |inc AS (SELECT o_custkey AS k, count(*) AS n,
-        |  round(sum(o_totalprice),2) AS v, strftime(max(o_orderdate),'%Y-%m-%d') AS d
-        |  FROM orders WHERE o_orderdate >= TIMESTAMP '2001-01-01 00:00:00' GROUP BY o_custkey)
-        |SELECT coalesce(cur.k, inc.k) AS custkey,
-        |CASE WHEN cur.k IS NULL THEN 'insert'
-        |     WHEN inc.k IS NULL THEN 'keep' ELSE 'update' END AS action,
-        |CAST(coalesce(cur.n,0)+coalesce(inc.n,0) AS BIGINT) AS n_orders,
-        |round(coalesce(cur.v,0)+coalesce(inc.v,0),2) AS total_value,
-        |coalesce(inc.d, cur.d) AS last_order
-        |FROM cur FULL OUTER JOIN inc ON cur.k = inc.k
-        |ORDER BY custkey""".stripMargin,
-
-    // the MV delta-apply re-derived: base + delta monthly aggregates,
-    // full-outer merge, avg derived from the maintained sum/count
-    "q_incremental_agg" ->
-      """WITH base AS (SELECT strftime(o_orderdate, '%Y-%m') AS month, o_orderstatus AS status,
-        |    count(*) AS n, round(sum(o_totalprice), 2) AS v
-        |  FROM orders WHERE o_orderdate < TIMESTAMP '2001-01-01 00:00:00' GROUP BY 1, 2),
-        |delta AS (SELECT strftime(o_orderdate, '%Y-%m') AS month, o_orderstatus AS status,
-        |    count(*) AS n, round(sum(o_totalprice), 2) AS v
-        |  FROM orders WHERE o_orderdate >= TIMESTAMP '2001-01-01 00:00:00' GROUP BY 1, 2),
-        |merged AS (SELECT coalesce(delta.month, base.month) AS month,
-        |    coalesce(delta.status, base.status) AS status,
-        |    CAST(coalesce(base.n, 0) + coalesce(delta.n, 0) AS BIGINT) AS n_orders,
-        |    round(coalesce(base.v, 0) + coalesce(delta.v, 0), 2) AS total_value
-        |  FROM base FULL OUTER JOIN delta
-        |    ON base.month = delta.month AND base.status = delta.status)
-        |SELECT month, status, n_orders, total_value,
-        |  round(total_value / n_orders, 6) AS avg_value
-        |FROM merged ORDER BY month, status""".stripMargin,
-
-    "q_triangles" ->
-      s"""WITH e AS ($lshPairsSql),
-         |tri AS (SELECT e1.id_a AS a, e1.id_b AS b, e2.id_b AS c
-         |  FROM e e1 JOIN e e2 ON e2.id_a = e1.id_b
-         |  JOIN e e3 ON e3.id_a = e1.id_a AND e3.id_b = e2.id_b)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_triangles
-         |FROM (SELECT a AS doc_id FROM tri
-         |      UNION ALL SELECT b FROM tri
-         |      UNION ALL SELECT c FROM tri)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q_stream_distinct" ->
-      """SELECT DISTINCT user_id, event_type FROM events
-        |ORDER BY user_id, event_type""".stripMargin,
-
-    "q_stream_attribution" ->
-      """SELECT p.event_id AS purchase_id, p.user_id AS user_id,
-        |  c.event_id AS click_id,
-        |  strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts, p.value AS value
-        |FROM events p JOIN events c
-        |  ON p.event_type = 'purchase' AND c.event_type = 'click'
-        |  AND c.user_id = p.user_id
-        |  AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 1 HOUR
-        |ORDER BY purchase_id, click_id""".stripMargin,
-
-    // finite-replay emission rules (see EventStreams.streamedSessions):
-    // every non-final session per user, plus final sessions whose
-    // event-time timeout (last_ts + gap) the terminal watermark
-    // (max ts - delay) has passed. Money parity: the state function
-    // accumulates integer cents per event with half-away-from-zero
-    // rounding (DuckDB round()'s mode — exact for negative half-cents
-    // too), so the oracle sums per-event rounded cents — round-of-sum
-    // would be a DIFFERENT number, not just a different column name.
-    "q_stream_sessions" ->
-      """WITH flagged AS (SELECT user_id, ts, value,
-        |  CASE WHEN lag(ts) OVER w IS NULL
-        |       OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_s
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        |sess AS (SELECT user_id, ts, value,
-        |  sum(new_s) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM flagged),
-        |agg AS (SELECT user_id, max(ts) AS sess_last, count(*) AS n_events,
-        |  CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS total_cents
-        |  FROM sess GROUP BY user_id, sid),
-        |agg2 AS (SELECT *, max(sess_last) OVER (PARTITION BY user_id) AS user_last FROM agg),
-        |wm AS (SELECT max(ts) - INTERVAL 30 MINUTE AS w FROM events)
-        |SELECT user_id, CAST(n_events AS BIGINT) AS n_events, total_cents,
-        |  strftime(sess_last, '%Y-%m-%d %H:%M:%S') AS last_ts
-        |FROM agg2, wm
-        |WHERE sess_last < user_last OR sess_last + INTERVAL 30 MINUTE < w
-        |ORDER BY user_id, last_ts""".stripMargin,
-
-    // the 3σ detector re-derived over cumulative windows: the
-    // division-free test (n·x − Σx)² > 9·(n·Σx² − (Σx)²) is exact
-    // long arithmetic on both engines, and the (ts, event_id) order is
-    // the same total order the state function sorts each batch by;
-    // shared by the stream and its batch backfill twin
-    "q_stream_anomaly" -> anomalySql,
-    "q_anomaly_running" -> anomalySql,
-
-    "q_merge_roundtrip" ->
-      """WITH cur AS (SELECT o_custkey AS k, count(*) AS n,
-        |  round(sum(o_totalprice),2) AS v, strftime(max(o_orderdate),'%Y-%m-%d') AS d
-        |  FROM orders WHERE o_orderdate < TIMESTAMP '2001-01-01 00:00:00' GROUP BY o_custkey),
-        |inc AS (SELECT o_custkey AS k, count(*) AS n,
-        |  round(sum(o_totalprice),2) AS v, strftime(max(o_orderdate),'%Y-%m-%d') AS d
-        |  FROM orders WHERE o_orderdate >= TIMESTAMP '2001-01-01 00:00:00' GROUP BY o_custkey)
-        |SELECT cur.k AS custkey,
-        |CAST(cur.n + inc.n AS BIGINT) AS n_orders,
-        |round(cur.v + inc.v, 2) AS total_value,
-        |inc.d AS last_order
-        |FROM cur JOIN inc ON cur.k = inc.k
-        |ORDER BY custkey""".stripMargin,
-
-    "q_containment" ->
-      s"""WITH ds AS ($shSql),
-         |sz AS (SELECT doc_id, count(*) AS sz FROM ds GROUP BY doc_id),
-         |inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-         |  FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id <> b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT id_a, id_b, CAST(n_common AS BIGINT) AS n_common,
-         |n_common / sa.sz AS containment
-         |FROM inter JOIN sz sa ON sa.doc_id = id_a
-         |WHERE n_common / sa.sz >= 0.8
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    "q_corpus_filter" ->
-      s"SELECT doc_id, n_words, reason FROM ($corpusReasonSql) ORDER BY doc_id",
-
-    // the full curation cascade as ONE oracle CTE chain — each stage's
-    // rule byte-identical to its individually-graded oracle (corpus
-    // filter, exact dedup, hash split + shingle fingerprints, packing),
-    // so the hash match proves the COMPOSITION: stage boundaries, join
-    // plumbing, and that no stage leaks rows another should have dropped
-    // the text cascade's incremental form: the frozen composition
-    // re-derived — base-restricted cascade (the q_pipeline_e2e rules
-    // over doc_id < ⌊0.8n⌋) builds the three stored tables, the delta
-    // half runs the batch through quality → anti-join frozen-rep dedup
-    // → decontamination vs stored ∪ batch-eval vocabulary → packing
-    // append offset by the stored layout's per-shard token totals,
-    // merged through one final re-aggregation (the open-last-sequence
-    // merge)
-    "q_delta_pipeline_e2e" -> {
-      val k = graft.operators.Pipeline.DecontaminationSpanK
-      s"""WITH cf AS ($corpusReasonSql),
-         |kept AS (SELECT doc_id, text FROM cf WHERE reason = 'keep'),
-         |nb AS (SELECT count(*) * 8 // 10 AS b FROM documents),
-         |bkept AS (SELECT * FROM kept WHERE doc_id < (SELECT b FROM nb)),
-         |nkept AS (SELECT * FROM kept WHERE doc_id >= (SELECT b FROM nb)),
-         |bkeepers AS (SELECT min(doc_id) AS doc_id FROM bkept GROUP BY lower(trim(text))),
-         |bdd AS (SELECT k.doc_id, k.text FROM bkept k JOIN bkeepers USING (doc_id)),
-         |btag AS (SELECT doc_id, ${h32("text")} % 10 < 8 AS is_train FROM bdd),
-         |bsh AS (SELECT doc_id, ${rollSql("sh")} AS hh FROM (${shSqlFrom("bdd", k)})),
-         |bev AS (SELECT DISTINCT hh FROM bsh JOIN btag USING(doc_id) WHERE NOT is_train),
-         |bscore AS (SELECT bsh.doc_id, count(*) AS n,
-         |    sum(CASE WHEN bev.hh IS NOT NULL THEN 1 ELSE 0 END) AS o
-         |  FROM bsh JOIN btag USING(doc_id) LEFT JOIN bev ON bsh.hh = bev.hh
-         |  WHERE is_train GROUP BY bsh.doc_id),
-         |bclean AS (SELECT bdd.doc_id, bdd.text FROM bdd JOIN bscore USING(doc_id)
-         |  WHERE o::DOUBLE / n <= 0.05),
-         |bsized AS (SELECT doc_id, doc_id % 8 AS shard,
-         |    len(list_filter(string_split_regex(text,'[^a-zA-Z]'), x -> x<>'')) AS n_tok
-         |  FROM bclean),
-         |bpacked AS (SELECT doc_id, shard, n_tok,
-         |    CAST(coalesce(sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 2048 AS BIGINT) AS seq_id
-         |  FROM bsized),
-         |blayout AS (SELECT shard, seq_id, count(*) AS n_docs,
-         |  CAST(sum(n_tok) AS BIGINT) AS total_tokens, min(doc_id) AS first_doc
-         |  FROM bpacked GROUP BY shard, seq_id),
-         |bnorms AS (SELECT DISTINCT lower(trim(text)) AS nrm FROM bdd),
-         |nkeepers AS (SELECT min(doc_id) AS doc_id FROM nkept
-         |  WHERE lower(trim(text)) NOT IN (SELECT nrm FROM bnorms)
-         |  GROUP BY lower(trim(text))),
-         |ndd AS (SELECT k.doc_id, k.text FROM nkept k JOIN nkeepers USING (doc_id)),
-         |ntag AS (SELECT doc_id, ${h32("text")} % 10 < 8 AS is_train FROM ndd),
-         |nsh AS (SELECT doc_id, ${rollSql("sh")} AS hh FROM (${shSqlFrom("ndd", k)})),
-         |nev AS (SELECT hh FROM bev UNION
-         |  SELECT DISTINCT hh FROM nsh JOIN ntag USING(doc_id) WHERE NOT is_train),
-         |nscore AS (SELECT nsh.doc_id, count(*) AS n,
-         |    sum(CASE WHEN nev.hh IS NOT NULL THEN 1 ELSE 0 END) AS o
-         |  FROM nsh JOIN ntag USING(doc_id) LEFT JOIN nev ON nsh.hh = nev.hh
-         |  WHERE is_train GROUP BY nsh.doc_id),
-         |nclean AS (SELECT ndd.doc_id, ndd.text FROM ndd JOIN nscore USING(doc_id)
-         |  WHERE o::DOUBLE / n <= 0.05),
-         |nsized AS (SELECT doc_id, doc_id % 8 AS shard,
-         |    len(list_filter(string_split_regex(text,'[^a-zA-Z]'), x -> x<>'')) AS n_tok
-         |  FROM nclean),
-         |btok AS (SELECT shard, CAST(sum(total_tokens) AS BIGINT) AS base_tok
-         |  FROM blayout GROUP BY shard),
-         |npacked AS (SELECT doc_id, n.shard, n_tok,
-         |    CAST((coalesce(b.base_tok, 0) + coalesce(sum(n_tok) OVER (
-         |      PARTITION BY n.shard ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)) // 2048 AS BIGINT) AS seq_id
-         |  FROM nsized n LEFT JOIN btok b ON b.shard = n.shard),
-         |nlayout AS (SELECT shard, seq_id, count(*) AS n_docs,
-         |  CAST(sum(n_tok) AS BIGINT) AS total_tokens, min(doc_id) AS first_doc
-         |  FROM npacked GROUP BY shard, seq_id)
-         |SELECT shard, seq_id, CAST(sum(n_docs) AS BIGINT) AS n_docs,
-         |  CAST(sum(total_tokens) AS BIGINT) AS total_tokens,
-         |  min(first_doc) AS first_doc
-         |FROM (SELECT * FROM blayout UNION ALL SELECT * FROM nlayout)
-         |GROUP BY shard, seq_id ORDER BY shard, seq_id""".stripMargin
-    },
-
-    "q_pipeline_e2e" ->
+    }),
+
+    // exact phrase lookup over positional postings (attribution):
+    // only phrase-term postings ever shuffle, never the corpus
+    // positional postings re-derived with a 1-based LATERAL subscript
+    // walk (generate_series over len(arr)); adjacency joins on the
+    // pruned posting set mirror the Spark fold, with the terms and
+    // offsets INTERPOLATED from Retrieval.PhraseQuery so an edited
+    // phrase cannot desynchronize the gate
+    "q_phrase_search" -> graded(Retrieval.phraseSearch _, phraseSearchSql),
+    // the batch restatement (N phrases, ONE corpus scan + slot-count
+    // join) and the NEAR/k ordered-proximity variant of the same
+    // postings build
+    "q_phrase_batch" -> graded(Retrieval.phraseBatch _, phraseBatchSql),
+    "q_proximity_search" -> graded(Retrieval.proximitySearch _, proximitySearchSql),
+    // batch NEAR/k: N proximity probes through ONE pruned postings
+    // build, frontier-advanced one slot per round (band-join chains)
+    "q_proximity_batch" -> graded(Retrieval.proximityBatch _, proximityBatchSql),
+
+    // the graded stages composed end-to-end, the way a training-data
+    // pipeline runs them: quality filter → exact dedup → train-side
+    // decontamination → sequence packing, one dataflow, one corpus scan
+    "q_pipeline_e2e" -> graded(Pipeline.curationPipeline _,
       s"""WITH cf AS ($corpusReasonSql),
          |kept AS (SELECT doc_id, text FROM cf WHERE reason = 'keep'),
          |keepers AS (SELECT min(doc_id) AS doc_id FROM kept GROUP BY lower(trim(text))),
@@ -4455,13 +2443,16 @@ object SparkEntry {
          |  FROM sized)
          |SELECT shard, seq_id, count(*) AS n_docs,
          |  CAST(sum(n_tok) AS BIGINT) AS total_tokens, min(doc_id) AS first_doc
-         |FROM packed GROUP BY shard, seq_id ORDER BY shard, seq_id""".stripMargin,
+         |FROM packed GROUP BY shard, seq_id ORDER BY shard, seq_id""".stripMargin),
 
+    // the MULTIMODAL cascade: image decode+aHash + audio decode+wide
+    // fingerprint (both materialized once) → joint-key dedup decision
+    // → deterministic shard layout of the survivors
     // the multimodal cascade in ONE CTE chain: closed-form pixels →
     // aHash bits (i_ prefix), closed-form samples → wide fingerprint
     // bits (a_ prefix), joint-key class reps, mix31 shard layout —
     // the hash match proves the COMPOSITION across both modalities
-    "q_pipeline_media" ->
+    "q_pipeline_media" -> graded(Pipeline.mediaPipeline _,
       s"""WITH ${ahashCtes("i_")},
          |${audioFpWideCte("a_")},
          |k AS (SELECT v.doc_id, ahash_hi, ahash_lo, afp_hi, afp_lo
@@ -4474,21 +2465,28 @@ object SparkEntry {
          |SELECT doc_id, n_class, skey % ${Dedup.NumShards} AS shard,
          |  row_number() OVER (PARTITION BY skey % ${Dedup.NumShards}
          |    ORDER BY skey, doc_id) - 1 AS pos
-         |FROM keyed ORDER BY shard, pos""".stripMargin,
+         |FROM keyed ORDER BY shard, pos""".stripMargin),
 
+    // the media cascade with the NEAR-dup decision folded in: routed
+    // banded pairs per modality → class-contracted CC → keep-rep →
+    // layout (the production daily shape; exact-key sibling above)
     // the near-dup-folded cascade: the same two decode chains, exact
     // joint-key reps, then PER-MODALITY Hamming-ball pairs (brute
     // force here — value-equal to the routed banding by completeness),
     // class-contracted recursive closure, keep-rep, mix31 layout
-    "q_pipeline_media_near" ->
+    "q_pipeline_media_near" -> graded(Pipeline.mediaPipelineNear _,
       s"""WITH RECURSIVE ${ahashCtes("i_")},
          |${audioFpWideCte("a_")},
          |k AS (SELECT v.doc_id, ahash_hi, ahash_lo, afp_hi, afp_lo
          |  FROM i_ahv v JOIN a_afw w ON v.doc_id = w.doc_id),
          |${mediaNearChainCtes("", "")}
          |SELECT doc_id, n_docs, shard, pos FROM layout
-         |ORDER BY shard, pos""".stripMargin,
+         |ORDER BY shard, pos""".stripMargin),
 
+    // the INCREMENTAL media cascade: frozen-rep exact dedup against
+    // the stored joint-class table, delta band probes for near-dup
+    // bridges, batch-local CC + base-touch absorption, newly-born
+    // components appended to the stored layout (deltaShardAppend)
     // the incremental cascade's ONE oracle chain proves the whole
     // composition: the stored-base half is the SAME layout chain the
     // full cascade is graded against (restricted to the mod-10 base);
@@ -4497,7 +2495,7 @@ object SparkEntry {
     // recursive reach), base-touch absorption (a new hash within the
     // verify radius of any stored hash), and the per-shard append
     // arithmetic over the frozen layout's counts
-    "q_delta_pipeline_media" -> {
+    "q_delta_pipeline_media" -> graded(Pipeline.deltaMediaPipeline _, {
       val maxD = graft.operators.Multimodal.ImageNeardupMaxDist
       s"""WITH RECURSIVE ${ahashCtes("i_")},
          |${audioFpWideCte("a_")},
@@ -4567,6 +2565,1798 @@ object SparkEntry {
          |SELECT doc_id, n_docs, shard, pos FROM blayout
          |UNION ALL SELECT doc_id, n_docs, shard, pos FROM appended
          |ORDER BY shard, pos""".stripMargin
-    },
+    }),
+
+    // the TEXT cascade's incremental form: batch-only text passes,
+    // three stored tables (survivor norms, eval vocabulary, packed
+    // layout), frozen semantics, packing append under the id-prefix
+    // split
+    // the full curation cascade as ONE oracle CTE chain — each stage's
+    // rule byte-identical to its individually-graded oracle (corpus
+    // filter, exact dedup, hash split + shingle fingerprints, packing),
+    // so the hash match proves the COMPOSITION: stage boundaries, join
+    // plumbing, and that no stage leaks rows another should have dropped
+    // the text cascade's incremental form: the frozen composition
+    // re-derived — base-restricted cascade (the q_pipeline_e2e rules
+    // over doc_id < ⌊0.8n⌋) builds the three stored tables, the delta
+    // half runs the batch through quality → anti-join frozen-rep dedup
+    // → decontamination vs stored ∪ batch-eval vocabulary → packing
+    // append offset by the stored layout's per-shard token totals,
+    // merged through one final re-aggregation (the open-last-sequence
+    // merge)
+    "q_delta_pipeline_e2e" -> graded(Pipeline.deltaCurationPipeline _, {
+      val k = graft.operators.Pipeline.DecontaminationSpanK
+      s"""WITH cf AS ($corpusReasonSql),
+         |kept AS (SELECT doc_id, text FROM cf WHERE reason = 'keep'),
+         |nb AS (SELECT count(*) * 8 // 10 AS b FROM documents),
+         |bkept AS (SELECT * FROM kept WHERE doc_id < (SELECT b FROM nb)),
+         |nkept AS (SELECT * FROM kept WHERE doc_id >= (SELECT b FROM nb)),
+         |bkeepers AS (SELECT min(doc_id) AS doc_id FROM bkept GROUP BY lower(trim(text))),
+         |bdd AS (SELECT k.doc_id, k.text FROM bkept k JOIN bkeepers USING (doc_id)),
+         |btag AS (SELECT doc_id, ${h32("text")} % 10 < 8 AS is_train FROM bdd),
+         |bsh AS (SELECT doc_id, ${rollSql("sh")} AS hh FROM (${shSqlFrom("bdd", k)})),
+         |bev AS (SELECT DISTINCT hh FROM bsh JOIN btag USING(doc_id) WHERE NOT is_train),
+         |bscore AS (SELECT bsh.doc_id, count(*) AS n,
+         |    sum(CASE WHEN bev.hh IS NOT NULL THEN 1 ELSE 0 END) AS o
+         |  FROM bsh JOIN btag USING(doc_id) LEFT JOIN bev ON bsh.hh = bev.hh
+         |  WHERE is_train GROUP BY bsh.doc_id),
+         |bclean AS (SELECT bdd.doc_id, bdd.text FROM bdd JOIN bscore USING(doc_id)
+         |  WHERE o::DOUBLE / n <= 0.05),
+         |bsized AS (SELECT doc_id, doc_id % 8 AS shard,
+         |    len(list_filter(string_split_regex(text,'[^a-zA-Z]'), x -> x<>'')) AS n_tok
+         |  FROM bclean),
+         |bpacked AS (SELECT doc_id, shard, n_tok,
+         |    CAST(coalesce(sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 2048 AS BIGINT) AS seq_id
+         |  FROM bsized),
+         |blayout AS (SELECT shard, seq_id, count(*) AS n_docs,
+         |  CAST(sum(n_tok) AS BIGINT) AS total_tokens, min(doc_id) AS first_doc
+         |  FROM bpacked GROUP BY shard, seq_id),
+         |bnorms AS (SELECT DISTINCT lower(trim(text)) AS nrm FROM bdd),
+         |nkeepers AS (SELECT min(doc_id) AS doc_id FROM nkept
+         |  WHERE lower(trim(text)) NOT IN (SELECT nrm FROM bnorms)
+         |  GROUP BY lower(trim(text))),
+         |ndd AS (SELECT k.doc_id, k.text FROM nkept k JOIN nkeepers USING (doc_id)),
+         |ntag AS (SELECT doc_id, ${h32("text")} % 10 < 8 AS is_train FROM ndd),
+         |nsh AS (SELECT doc_id, ${rollSql("sh")} AS hh FROM (${shSqlFrom("ndd", k)})),
+         |nev AS (SELECT hh FROM bev UNION
+         |  SELECT DISTINCT hh FROM nsh JOIN ntag USING(doc_id) WHERE NOT is_train),
+         |nscore AS (SELECT nsh.doc_id, count(*) AS n,
+         |    sum(CASE WHEN nev.hh IS NOT NULL THEN 1 ELSE 0 END) AS o
+         |  FROM nsh JOIN ntag USING(doc_id) LEFT JOIN nev ON nsh.hh = nev.hh
+         |  WHERE is_train GROUP BY nsh.doc_id),
+         |nclean AS (SELECT ndd.doc_id, ndd.text FROM ndd JOIN nscore USING(doc_id)
+         |  WHERE o::DOUBLE / n <= 0.05),
+         |nsized AS (SELECT doc_id, doc_id % 8 AS shard,
+         |    len(list_filter(string_split_regex(text,'[^a-zA-Z]'), x -> x<>'')) AS n_tok
+         |  FROM nclean),
+         |btok AS (SELECT shard, CAST(sum(total_tokens) AS BIGINT) AS base_tok
+         |  FROM blayout GROUP BY shard),
+         |npacked AS (SELECT doc_id, n.shard, n_tok,
+         |    CAST((coalesce(b.base_tok, 0) + coalesce(sum(n_tok) OVER (
+         |      PARTITION BY n.shard ORDER BY doc_id
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)) // 2048 AS BIGINT) AS seq_id
+         |  FROM nsized n LEFT JOIN btok b ON b.shard = n.shard),
+         |nlayout AS (SELECT shard, seq_id, count(*) AS n_docs,
+         |  CAST(sum(n_tok) AS BIGINT) AS total_tokens, min(doc_id) AS first_doc
+         |  FROM npacked GROUP BY shard, seq_id)
+         |SELECT shard, seq_id, CAST(sum(n_docs) AS BIGINT) AS n_docs,
+         |  CAST(sum(total_tokens) AS BIGINT) AS total_tokens,
+         |  min(first_doc) AS first_doc
+         |FROM (SELECT * FROM blayout UNION ALL SELECT * FROM nlayout)
+         |GROUP BY shard, seq_id ORDER BY shard, seq_id""".stripMargin
+    }),
+
+    // — dedup family —
+    "q_dedup_exact" -> graded(Dedup.exactDedup _,
+      """SELECT min(doc_id) AS keep_id, count(*) AS n_copies FROM documents
+        |GROUP BY lower(trim(text)) ORDER BY keep_id""".stripMargin),
+
+    "q_dedup_hash" -> graded(Dedup.exactDedupByHash _,
+      """SELECT min(doc_id) AS keep_id, count(*) AS n_copies FROM documents
+        |GROUP BY sha256(text) ORDER BY keep_id""".stripMargin),
+
+    "q_minhash_signatures" -> graded(Dedup.minhashSignatures(_, _),
+      s"SELECT * FROM ($sigSql) ORDER BY doc_id"),
+
+    "q_minhash_lsh_pairs" -> graded(Dedup.minhashLshPairs(_, _),
+      s"$lshPairsSql ORDER BY id_a, id_b"),
+
+    // production-hash twins (xxhash64; no DuckDB analog → rows-only):
+    // same dataflow, benchmarked against the md5 oracle path
+    "q_minhash_signatures_xx" -> rowsOnly(Dedup.minhashSignatures(_, _, prodHash = true)),
+    "q_minhash_lsh_pairs_xx" -> rowsOnly(Dedup.minhashLshPairs(_, _, prodHash = true)),
+    // leave-one-out multi-probe banding: recall below the S-curve knee
+    "q_lsh_multiprobe" -> graded(Dedup.minhashLshPairsMultiProbe(_, _), lshMultiProbeSql),
+
+    // near-dup pair graph computed ONCE per session/corpus, landed as
+    // partitioned parquet, read back — the graph family's shared input
+    // write→read-back of the materialized pair graph must be value-
+    // identical to recomputing the pairs directly
+    "q_neardup_graph" -> graded((s: SparkSession, dir: String) =>
+      Dedup.materializedPairs(s, dir).orderBy(col("id_a"), col("id_b")),
+      s"$lshPairsSql ORDER BY id_a, id_b"),
+
+    "q_dup_clusters" -> graded(Dedup.duplicateClusters _, dupClustersSql),
+
+    // cluster dedup with keep-longest keeper selection (production
+    // pipelines keep the best duplicate, not the lowest doc_id)
+    // same recursive-CTE labeling as q_dup_clusters, then keep-longest
+    // keeper per cluster (n_words desc, doc_id tie-break)
+    "q_dedup_keep_best" -> graded(Dedup.dedupKeepBest _,
+      s"""WITH RECURSIVE pairs AS (SELECT id_a, id_b FROM ($lshPairsSql)),
+         |edges AS (SELECT id_a AS u, id_b AS v FROM pairs UNION SELECT id_b, id_a FROM pairs),
+         |nodes AS (SELECT DISTINCT u AS id FROM edges),
+         |reach(id, r) AS (SELECT id, id FROM nodes
+         |  UNION SELECT e.v, r.r FROM reach r JOIN edges e ON e.u = r.id),
+         |lbl AS (SELECT id, min(r) AS rep FROM reach GROUP BY id),
+         |words AS (SELECT doc_id, CAST(len(list_filter(string_split_regex(text,'[^a-zA-Z]'), x -> x<>'')) AS BIGINT) AS n_words FROM documents),
+         |ranked AS (SELECT rep, id, n_words,
+         |    row_number() OVER (PARTITION BY rep ORDER BY n_words DESC, id) AS rn,
+         |    count(*) OVER (PARTITION BY rep) AS n_members
+         |  FROM lbl JOIN words ON lbl.id = words.doc_id)
+         |SELECT rep AS cluster_rep, id AS keeper,
+         |  CAST(n_members AS BIGINT) AS n_members, n_words AS keeper_words
+         |FROM ranked WHERE rn = 1 ORDER BY cluster_rep""".stripMargin),
+
+    // WITH RECURSIVE (Spark 4.x): bounded BFS over the near-dup graph
+    "q_recursive_reach" -> graded(Dedup.recursiveReach _,
+      s"""WITH RECURSIVE pairs0 AS ($lshPairsSql),
+         |reach(doc_id, depth) AS (
+         |  SELECT DISTINCT id_a AS doc_id, 0 AS depth FROM pairs0 WHERE id_a % 10 = 0
+         |  UNION ALL
+         |  SELECT DISTINCT e.dst, r.depth + 1
+         |  FROM reach r
+         |  JOIN (SELECT id_a AS src, id_b AS dst FROM pairs0
+         |        UNION ALL SELECT id_b, id_a FROM pairs0) e
+         |    ON e.src = r.doc_id
+         |  WHERE r.depth < 3)
+         |SELECT doc_id, CAST(min(depth) AS BIGINT) AS min_depth
+         |FROM reach GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+
+    // integer-arithmetic PageRank: iterations unrolled as chained CTEs
+    // (standard SQL forbids aggregates in a recursive member); same
+    // div/mod arithmetic as the Spark loop so the hash is exact
+    "q_pagerank" -> graded(Dedup.nearDupPageRank _, {
+      val iters = (1 to Dedup.PageRankIters).map { i =>
+        s"""r$i AS (SELECT e.dst AS id,
+           |  CAST(150000 + sum((r.rank * 85) // (d.deg * 100)) AS BIGINT) AS rank
+           |  FROM edges e JOIN deg d ON e.src = d.src JOIN r${i - 1} r ON r.id = e.src
+           |  GROUP BY e.dst)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH lsh AS ($lshPairsSql),
+         |pairs AS (SELECT id_a, id_b FROM lsh),
+         |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+         |  UNION ALL SELECT id_b, id_a FROM pairs),
+         |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
+         |r0 AS (SELECT src AS id, CAST(1000000 AS BIGINT) AS rank FROM deg),
+         |$iters
+         |SELECT id AS doc_id, rank FROM r${Dedup.PageRankIters} ORDER BY doc_id""".stripMargin
+    }),
+
+    "q_ngram_jaccard" -> graded(Dedup.ngramJaccardPairs _, jaccardSql),
+    // density-routed near-dup: on this (diverse) corpus the probe picks
+    // the exact PPJoin path, so the exact-Jaccard oracle grades it; a
+    // duplicate-heavy corpus would route to LSH (DedupRoutingSpec)
+    // on the (diverse) fixture the density router provably takes the
+    // exact path — same oracle; DedupRoutingSpec covers the LSH route
+    "q_neardup_auto" -> graded(Dedup.nearDupPairsAuto(_, _), jaccardSql),
+
+    "q_simhash" -> graded(Dedup.simhash _,
+      s"""WITH toks AS (SELECT doc_id, ${h32("lower(w)")} AS h
+         |  FROM (SELECT doc_id, unnest(string_split_regex(text,'[^a-zA-Z]')) AS w FROM documents) WHERE w<>''),
+         |bits AS (SELECT doc_id, b, sum(CASE WHEN (h >> b) % 2 = 1 THEN 1 ELSE -1 END) AS v
+         |  FROM (SELECT doc_id, h, unnest(generate_series(0,31)) AS b FROM toks) GROUP BY doc_id, b)
+         |SELECT doc_id, CAST(sum(CASE WHEN v>0 THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS simhash
+         |FROM bits GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+
+    "q_hash_split" -> graded(Dedup.hashSplit _,
+      s"""SELECT lang, CASE WHEN b < 8 THEN 'train' WHEN b = 8 THEN 'val' ELSE 'test' END AS split,
+         |count(*) AS n_docs, min(doc_id) AS first_doc
+         |FROM (SELECT doc_id, lang, ${h32("text")} % 10 AS b FROM documents)
+         |GROUP BY 1, 2 ORDER BY lang, split""".stripMargin),
+
+    // incremental ingest: near-dup pairs touching the NEW batch only
+    // (delta-probed LSH join — existing-vs-existing never enumerated)
+    // the batch pair set restricted to pairs touching the new side of
+    // the hash split — the delta probe must find exactly these (the
+    // incremental join changes WORK, not results)
+    "q_delta_dedup" -> graded(Dedup.deltaDedup _,
+      s"""WITH pairs AS ($lshPairsSql),
+         |tag AS (SELECT doc_id, ${h32("text")} % 10 >= 8 AS is_new FROM documents)
+         |SELECT id_a, id_b, est_jaccard,
+         |  CASE WHEN ta.is_new AND tb.is_new THEN 'new_new'
+         |       ELSE 'new_existing' END AS pair_type
+         |FROM pairs JOIN tag ta ON id_a = ta.doc_id
+         |JOIN tag tb ON id_b = tb.doc_id
+         |WHERE ta.is_new OR tb.is_new
+         |ORDER BY id_a, id_b""".stripMargin),
+
+    // RETRACTION: tombstoned ids anti-joined out of the stored
+    // signature index; banded pairs over the retracted index equal the
+    // rebuild over surviving docs (pair logic is pairwise) — no text
+    // retraction: banded pairs over the surviving base docs — the
+    // retracted signature index equals the rebuild (per-doc pure
+    // signatures; pair logic is pairwise)
+    "q_retract_dedup" -> graded(Dedup.retractDedup _,
+      overRetainedDocs(textRetainSql, lshPairsSql, "id_a, id_b")),
+
+    // CC maintenance for the text family: stored base labels + batch
+    // bridges through the contracted mini-CC (the shared engine)
+    // label MAINTENANCE == full recompute (the min-label convention
+    // argument at Dedup.maintainComponentLabels): the incremental
+    // entry shares the closure oracle verbatim
+    "q_delta_dup_clusters" -> graded(Dedup.deltaDupClusters _, dupClustersSql),
+
+    // RETRACTION closure: deletion can split components and delete the
+    // min-id a component is labeled by — touched components relabel
+    // over their surviving stored edges, untouched ride through
+    // retraction closure: the full recursive-CTE labeling over the
+    // surviving base docs — touched components relabel to fragment
+    // minima (the deleted-min case), untouched labels ride through
+    "q_retract_dup_clusters" -> graded(Dedup.retractDupClusters _,
+      overRetainedDocs(textRetainSql, dupClustersSql, "cluster_rep")),
+
+    // MULTI-INGEST closure: maintain(maintain(L0,p1),p2) over two
+    // stored signature commits + a live third — equals one CC over
+    // the whole corpus, q_dup_clusters' oracle verbatim
+    // two chained maintenance steps == one full CC: the compounding
+    // entry shares the whole-corpus closure oracle verbatim
+    "q_delta2_dup_clusters" -> graded(Dedup.delta2DupClusters _, dupClustersSql),
+
+    // near-dup pairs straddling the train/val/test boundary — the
+    // eval-integrity audit (LSH pairs × hashSplit membership)
+    // LSH pairs × hashSplit membership: the leaked flag marks pairs
+    // straddling the split boundary (near-dups hash apart, so the md5
+    // bucket cannot prevent them — this audit is the check)
+    "q_split_leakage" -> graded(Dedup.splitLeakage _,
+      s"""WITH pairs AS ($lshPairsSql),
+         |sp AS (SELECT doc_id,
+         |  CASE WHEN b < 8 THEN 'train' WHEN b = 8 THEN 'val' ELSE 'test' END AS split
+         |  FROM (SELECT doc_id, ${h32("text")} % 10 AS b FROM documents))
+         |SELECT id_a, id_b, est_jaccard, sa.split AS split_a, sb.split AS split_b,
+         |  sa.split <> sb.split AS leaked
+         |FROM pairs JOIN sp sa ON id_a = sa.doc_id
+         |JOIN sp sb ON id_b = sb.doc_id
+         |ORDER BY id_a, id_b""".stripMargin),
+
+    // sparse lexical tf-cosine pairs via df-cut posting lists — the
+    // third similarity family (set / dense / SPARSE-LEXICAL)
+    // rare-4-gram blocking + full unigram tf verification; integer
+    // products + one sqrt + one division make the cosine double (and
+    // so the threshold cut itself) bit-portable across engines
+    "q_lexical_cosine" -> graded(Dedup.lexicalCosine _, s"$lexCosineSql\nORDER BY id_a, id_b"),
+
+    // INCREMENTAL lexical cosine: batch shingles probe the stored
+    // rare-gram/tf index with delta-applied union df (== the full
+    // verified pair set restricted to touching batch)
+    // the incremental form: the SAME verified chain restricted to
+    // pairs touching the md5 batch and type-tagged — the stored-index
+    // probe with delta-applied union df must find exactly these
+    "q_delta_lexical_cosine" -> graded(Dedup.deltaLexicalCosine _,
+      s"""WITH pairs AS ($lexCosineSql),
+         |tag AS (SELECT doc_id, ${h32("text")} % 10 >= 8 AS is_new FROM documents)
+         |SELECT id_a, id_b, dot, cosine,
+         |  CASE WHEN ta.is_new AND tb.is_new THEN 'new_new'
+         |       ELSE 'new_existing' END AS pair_type
+         |FROM pairs JOIN tag ta ON id_a = ta.doc_id
+         |JOIN tag tb ON id_b = tb.doc_id
+         |WHERE ta.is_new OR tb.is_new
+         |ORDER BY id_a, id_b""".stripMargin),
+
+    // RETRACTION: tombstones anti-join the stored quadruple, df
+    // subtracts the dead docs' own shingle rows — no text read; a
+    // shingle whose df falls back under the cap resumes blocking
+    // retraction: the same blocked+verified chain over survivors
+    "q_retract_lexical_cosine" -> graded(Dedup.retractLexicalCosine _,
+      overRetainedDocs(textRetainSql, lexCosineSql, "id_a, id_b")),
+
+    "q_mixture_sample" -> graded(Dedup.mixtureSample _,
+      s"""SELECT source, count(*) AS n_sampled, min(doc_id) AS first_doc
+         |FROM (SELECT source, doc_id,
+         |  ${h32("text || '#mix'")} % 100 AS bucket,
+         |  10 + (CAST(substr(source, 4) AS INT) * 4) % 91 AS rate
+         |  FROM documents)
+         |WHERE bucket < rate GROUP BY source ORDER BY source""".stripMargin),
+
+    // K smallest content-hashes per language via the bounded typed
+    // top-K aggregator — the few-huge-strata group sample (no window)
+    // the window form is the oracle's job; the Spark side must produce
+    // the identical draw through the bounded aggregator
+    "q_stratified_sample" -> graded(Dedup.stratifiedSample _,
+      s"""SELECT lang, rn, doc_id FROM (
+         |  SELECT lang, doc_id,
+         |    row_number() OVER (PARTITION BY lang
+         |      ORDER BY ${h32("text || '#strat'")}, doc_id) AS rn
+         |  FROM documents)
+         |WHERE rn <= ${Dedup.StratK} ORDER BY lang, rn""".stripMargin),
+
+    // rates FROM corpus stats: p(s) ∝ n^α flattening (α=1/2) as a
+    // deterministic static downsample — the actual data-mixing math
+    // α = 1/2 keeps the rate computable from sqrt + division alone —
+    // both IEEE-exact in the two engines, so the double column itself
+    // is under the hash (pow() would not be portable)
+    "q_temperature_mixture" -> graded(Dedup.temperatureMixture _,
+      s"""WITH sizes AS (SELECT lang, count(*) AS n_docs,
+         |    1.0/sqrt(count(*)) AS w FROM documents GROUP BY 1),
+         |rates AS (SELECT lang, n_docs,
+         |    w / (SELECT max(w) FROM sizes) AS rate FROM sizes)
+         |SELECT lang, n_docs, rate, count(*) AS n_sampled,
+         |  min(doc_id) AS first_doc
+         |FROM documents JOIN rates USING (lang)
+         |WHERE ${h32("text || '#temp'")} % 1000000 < rate * 1000000
+         |GROUP BY 1, 2, 3 ORDER BY lang""".stripMargin),
+
+    // deterministic global shuffle → N shard files with stable
+    // positions (the training writer's last stage; mix31-keyed so the
+    // whole layout has a DuckDB twin, per-shard rank = one reducer
+    // per output file)
+    // the shuffle key is engine-portable mix31, so shard AND in-shard
+    // rank replicate exactly; % stands in for pmod (skey ≥ 0); salt
+    // and shard count interpolate from the library constants so
+    // editing them cannot desynchronize the gate
+    "q_shard_assign" -> graded(Dedup.shardAssign _,
+      s"""WITH keyed AS (SELECT doc_id,
+         |    ${mixSql("doc_id", Dedup.ShardSalt.toString)} AS skey
+         |  FROM documents)
+         |SELECT doc_id, skey % ${Dedup.NumShards} AS shard,
+         |  row_number() OVER (PARTITION BY skey % ${Dedup.NumShards}
+         |    ORDER BY skey, doc_id) - 1 AS pos
+         |FROM keyed ORDER BY shard, pos""".stripMargin),
+
+    // incremental layout: new batch appended after each shard's
+    // existing max position — old rows byte-identical, cost ∝ batch
+    // incremental layout: old split laid out as q_shard_assign, new
+    // split appended per shard after the existing max position
+    "q_delta_shard_assign" -> graded(Dedup.deltaShardAssign _, {
+      val n = Dedup.NumShards
+      val mix = mixSql("doc_id", Dedup.ShardSalt.toString)
+      s"""WITH oldk AS (SELECT doc_id, $mix AS skey
+         |  FROM documents WHERE doc_id % 10 < 8),
+         |base AS (SELECT doc_id, skey % $n AS shard,
+         |    row_number() OVER (PARTITION BY skey % $n
+         |      ORDER BY skey, doc_id) - 1 AS pos
+         |  FROM oldk),
+         |off AS (SELECT shard, count(*) AS base_n FROM base GROUP BY 1),
+         |newk AS (SELECT doc_id, $mix AS skey
+         |  FROM documents WHERE doc_id % 10 >= 8),
+         |app AS (SELECT doc_id, shard,
+         |    coalesce(base_n, 0) + row_number() OVER (PARTITION BY shard
+         |      ORDER BY skey, doc_id) - 1 AS pos
+         |  FROM (SELECT doc_id, skey % $n AS shard, skey FROM newk)
+         |  LEFT JOIN off USING (shard))
+         |SELECT doc_id, shard, pos FROM base
+         |UNION ALL SELECT doc_id, shard, pos FROM app
+         |ORDER BY shard, pos""".stripMargin
+    }),
+
+    // benchmark-contamination scan: eval-split shingle overlap vs train
+    "q_decontamination" -> graded(Dedup.decontamination _, decontaminationSql),
+    // Bloom-prefiltered twin: eval-shingle sketch screens the train
+    // side at the scan; exact join verifies — same oracle proves it
+    // the Bloom prefilter is lossless (no false negatives + exact
+    // verify join), so the same oracle grades it — the hash match IS
+    // the losslessness proof
+    "q_decontamination_bloom" -> graded(Dedup.decontaminationBloom _, decontaminationSql),
+    // the same scan written as ONE spark.sql(...) TEXT driving the
+    // SQL-registered codegen functions (char_shingles / rolling_hash /
+    // md5_hash32) — same oracle proves the SQL surface end-to-end
+    // the spark.sql(...) TEXT form computes the identical scan through
+    // the SQL-registered expressions, so the same oracle grades it —
+    // the hash match proves registration + binding + codegen, not just
+    // that the functions evaluate (SqlFunctionsSpec covers that)
+    "q_sql_decontamination" -> graded(Dedup.decontaminationSqlForm _, decontaminationSql),
+
+    // fixed-window chunking with stride (context-window prep)
+    "q_chunk_documents" -> graded(TextAnalysis.chunkDocuments(_, _),
+      s"$chunkSql ORDER BY doc_id, chunk_idx"),
+
+    // chunking -> exact dedup over chunk hashes (cross-doc repeated spans)
+    "q_chunk_dedup" -> graded(Dedup.chunkDedup _,
+      s"""SELECT chunk_hash, chunk_hash2, CAST(n_copies AS BIGINT) AS n_copies,
+         |  CAST(n_docs AS BIGINT) AS n_docs,
+         |  CAST(k // 1000000 AS BIGINT) AS keep_doc,
+         |  CAST(k % 1000000 AS BIGINT) AS keep_idx
+         |FROM (SELECT chunk_hash, chunk_hash2, count(*) AS n_copies,
+         |    count(DISTINCT doc_id) AS n_docs,
+         |    min(doc_id * 1000000 + chunk_idx) AS k
+         |  FROM ($chunkSql) GROUP BY 1, 2 HAVING count(*) > 1)
+         |ORDER BY chunk_hash, chunk_hash2""".stripMargin),
+
+    // suffix-array-family exact substring dedup (Lee et al. 2022):
+    // stride-1 Rabin-Karp window keys + per-doc interval merge emit the
+    // exact >=L repeated-substring character ranges, no suffix sort
+    // stride-1 window hashes re-derived with the O(n·L) per-substring
+    // fold (the Spark side slides in O(n) — same values), then the
+    // identical count-over-key and gaps-and-islands merge
+    "q_substring_dedup" -> graded(Dedup.substringDedup _,
+      s"""WITH $substringSpanCtes
+         |SELECT doc_id, span_start, span_end, span_len, n_windows
+         |FROM spans ORDER BY doc_id, span_start""".stripMargin),
+
+    // the >=1e9-window escalation: identical plan keyed on THREE
+    // polynomials (~2^89 composite space; +1 long per window row)
+    // the paranoid tier: the same chain keyed on three polynomials
+    "q_substring_dedup_p3" -> graded(Dedup.substringDedupP3 _,
+      s"""WITH ${substringSpanCtesFor(paranoid = true)}
+         |SELECT doc_id, span_start, span_end, span_len, n_windows
+         |FROM spans ORDER BY doc_id, span_start""".stripMargin),
+
+    // INCREMENTAL substring dedup: batch windows probe the stored
+    // distinct-key index; base text never re-hashed (== the full run
+    // restricted to batch docs)
+    // the incremental form: the SAME span chain restricted to the
+    // mod-10 ingest batch — the stored-key probe must find exactly
+    // these spans (incremental joins change WORK, never results)
+    "q_delta_substring_dedup" -> graded(Dedup.deltaSubstringDedup _,
+      s"""WITH $substringSpanCtes,
+         |tag AS (SELECT doc_id, ${h32("text")} % 10 >= 8 AS is_new FROM documents)
+         |SELECT doc_id, span_start, span_end, span_len, n_windows
+         |FROM spans JOIN tag USING (doc_id)
+         |WHERE is_new ORDER BY doc_id, span_start""".stripMargin),
+
+    // the spans applied: flagged docs re-emitted with repeated spans
+    // excised (ordered segment reassembly, one corpus scan)
+    // the spans re-assembled into clipped text: kept segments from a
+    // lag window over the spans (+ the tail), pieces cut from the
+    // corpus once, position-ordered string_agg — mirroring the Spark
+    // sort_array(collect_list(...)) reassembly
+    "q_substring_clip" -> graded(Dedup.substringClip _,
+      s"""WITH $substringSpanCtes,
+         |mids AS (SELECT doc_id,
+         |    lag(span_end, 1, 1) OVER (PARTITION BY doc_id ORDER BY span_start) AS seg_start,
+         |    span_start AS seg_end FROM spans),
+         |tails AS (SELECT doc_id, max(span_end) AS seg_start, count(*) AS n_spans,
+         |    sum(span_end - span_start) AS removed_chars FROM spans GROUP BY doc_id),
+         |segs AS (SELECT doc_id, seg_start, seg_end FROM mids
+         |  UNION ALL SELECT doc_id, seg_start, NULL FROM tails),
+         |pieces AS (SELECT s.doc_id, s.seg_start,
+         |    substr(d.text, s.seg_start,
+         |      coalesce(s.seg_end, length(d.text) + 1) - s.seg_start) AS piece
+         |  FROM segs s JOIN documents d ON d.doc_id = s.doc_id),
+         |clip AS (SELECT doc_id, string_agg(piece, '' ORDER BY seg_start) AS clipped_text
+         |  FROM pieces GROUP BY doc_id)
+         |SELECT c.doc_id, CAST(t.n_spans AS BIGINT) AS n_spans,
+         |  CAST(t.removed_chars AS BIGINT) AS removed_chars, c.clipped_text
+         |FROM clip c JOIN tails t USING (doc_id) ORDER BY c.doc_id""".stripMargin),
+
+    // position-exact eval-vs-train contamination: eval windows semi-
+    // joined against the train key set, merged into contaminated spans
+    // the same window-hash chain with a split tag: eval windows left-
+    // joined against the DISTINCT train key set, per-doc totals plus
+    // the islands-merged contaminated spans (count + longest)
+    "q_substring_decontamination" -> graded(Dedup.substringDecontamination _, {
+      val L = graft.operators.Dedup.SubstringL
+      s"""WITH p AS (SELECT doc_id, text,
+         |    CASE WHEN ${h32("text")} % 10 < 8 THEN 'train'
+         |         WHEN ${h32("text")} % 10 = 8 THEN 'val' ELSE 'test' END AS split,
+         |    CAST(unnest(generate_series(1, length(text) - ${L - 1})) AS BIGINT) AS pos
+         |  FROM documents WHERE length(text) >= $L),
+         |g AS (SELECT doc_id, split, pos,
+         |    ${rollSql(s"substr(text, pos, $L)")} AS h1,
+         |    ${rollSql2(s"substr(text, pos, $L)")} AS h2 FROM p),
+         |tr AS (SELECT DISTINCT h1 AS t1, h2 AS t2 FROM g WHERE split = 'train'),
+         |ev AS (SELECT g.doc_id, g.split, g.pos,
+         |    CASE WHEN t1 IS NOT NULL THEN 1 ELSE 0 END AS hit
+         |  FROM g LEFT JOIN tr ON g.h1 = t1 AND g.h2 = t2
+         |  WHERE g.split <> 'train'),
+         |summ AS (SELECT doc_id, split, count(*) AS n_windows, sum(hit) AS n_cont
+         |  FROM ev GROUP BY 1, 2),
+         |hits AS (SELECT doc_id, pos FROM ev WHERE hit = 1),
+         |re AS (SELECT doc_id, pos,
+         |    max(pos + $L) OVER (PARTITION BY doc_id ORDER BY pos
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS run_end FROM hits),
+         |mk AS (SELECT doc_id, pos,
+         |    CASE WHEN run_end IS NULL OR pos > run_end THEN 1 ELSE 0 END AS new_s FROM re),
+         |sid AS (SELECT doc_id, pos,
+         |    sum(new_s) OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING) AS sid FROM mk),
+         |spans AS (SELECT doc_id, min(pos) AS s, max(pos) + $L AS e
+         |  FROM sid GROUP BY doc_id, sid),
+         |sp AS (SELECT doc_id, count(*) AS n_spans, max(e - s) AS longest FROM spans GROUP BY 1)
+         |SELECT m.doc_id, m.split, CAST(n_windows AS BIGINT) AS n_windows,
+         |  CAST(n_cont AS BIGINT) AS n_contaminated,
+         |  CAST(n_cont AS DOUBLE) / n_windows AS contamination,
+         |  CAST(coalesce(n_spans, 0) AS BIGINT) AS n_spans,
+         |  CAST(coalesce(longest, 0) AS BIGINT) AS longest_span
+         |FROM summ m LEFT JOIN sp USING (doc_id) ORDER BY m.doc_id""".stripMargin
+    }),
+
+    // — similarity search over embeddings —
+    "q_knn_bruteforce" -> graded(Similarity.bruteForceKnn _,
+      s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < ${Similarity.NumQueries}),
+         |sims AS (SELECT q_id, e.vec_id AS n_id,
+         |  round(${cosSql("q_emb", "e.embedding")}, 6) AS sim
+         |  FROM embeddings e, q WHERE q_id <> e.vec_id),
+         |ranked AS (SELECT q_id, n_id, sim,
+         |  row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) AS rank FROM sims)
+         |SELECT q_id, rank, n_id, sim FROM ranked WHERE rank <= ${Similarity.K}
+         |ORDER BY q_id, rank""".stripMargin),
+
+    // contrastive hard-negative mining: per anchor, top-K most-similar
+    // vectors with a DIFFERENT label, via the bounded top-K aggregator
+    // hard negatives = brute-force kNN restricted to cross-label pairs;
+    // same round-6 + n_id tie-break ordering contract
+    "q_hard_negatives" -> graded(Similarity.hardNegatives _,
+      s"""WITH q AS (SELECT vec_id AS q_id, label AS q_label, embedding AS q_emb FROM embeddings WHERE vec_id < ${Similarity.NumQueries}),
+         |sims AS (SELECT q_id, e.vec_id AS n_id, e.label AS n_label,
+         |  round(${cosSql("q_emb", "e.embedding")}, 6) AS sim
+         |  FROM embeddings e, q WHERE q_label <> e.label),
+         |ranked AS (SELECT q_id, n_id, n_label, sim,
+         |  row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) AS rank FROM sims)
+         |SELECT q_id, rank, n_id, n_label, sim FROM ranked WHERE rank <= ${Similarity.K}
+         |ORDER BY q_id, rank""".stripMargin),
+
+    // greedy k-center (farthest-point) coreset selection: shuffle-free
+    // scan per round, selected set = O(k·dim) model state
+    "q_kcenter_select" -> graded(Similarity.kCenterSelect _, kcenterSql),
+    // production IVF: the gated fixed-point Lloyd quantizer at the √N
+    // cell sizing — deterministic end-to-end, fully oracle-graded
+    // the production √N-sized tiers under the same gate: identical
+    // pipeline with cells re-derived from count(*) (sqrtCellsSql)
+    "q_knn_ivf" -> graded(Similarity.ivfKnn(_, _), ivfSqrtSql),
+    // the IVF serving layout made executable: corpus WRITTEN partitioned
+    // by its Lloyd cell, probe = partition-pruned read-back (plan-
+    // asserted); same quantizer/search as q_knn_ivf → identical rows
+    "q_knn_ivf_pruned" -> graded(Similarity.ivfKnnMaterialized(_, _), ivfSqrtSql),
+    // IVF over graft's OWN fixed-point Lloyd quantizer: the whole tier
+    // (normalize → quantize → Lloyd cells → multi-probe plan → cosine
+    // rerank) is a deterministic pure function, so this ANN tier is
+    // graded end-to-end by the DuckDB oracle — closing the rows-only
+    // gap of the fitted-model tiers
+    // the full exact-quantizer IVF pipeline re-derived: unit vectors →
+    // 2^20 fixed-point → the shared Lloyd CTE rounds (k=IvfExactCells)
+    // → per-query 3-probe cell plan → exact cosine rerank in probed
+    // cells. Every float op mirrors the Spark plan's order.
+    "q_knn_ivf_exact" -> graded(Similarity.ivfKnnExact(_, _), ivfExactSql),
+    // the graded tier's serving layout: corpus written partitioned by
+    // the deterministic Lloyd cell, probes partition-pruned — identical
+    // rows to q_knn_ivf_exact, so it shares the full oracle
+    // value-identical serving layout (write → pruned read-back of the
+    // same deterministic cells) ⇒ same oracle
+    "q_knn_ivf_exact_pruned" -> graded(Similarity.ivfKnnExactMaterialized(_, _), ivfExactSql),
+    // INCREMENTAL IVF: stored Lloyd quantizer + frozen cell-partitioned
+    // base layout; the batch lands via stateless argmin as a delta
+    // commit, search reads base + delta partition-pruned
+    // Lloyd over the id-prefix base, assignment over all — the stored
+    // layout's rows plus the stateless delta commit
+    "q_delta_knn_ivf" -> graded(Similarity.deltaIvfKnn(_, _), deltaIvfSql),
+    // the lifecycle's closing stage: the delta commit COMPACTED into
+    // one cell-partitioned layout — a pure layout change, so it shares
+    // the delta oracle and the gate certifies value identity
+    // compaction is a pure layout change: same rows, one layout
+    "q_delta_knn_ivf_compacted" -> graded(Similarity.deltaIvfKnnCompacted(_, _), deltaIvfSql),
+    // MULTI-INGEST IVF: 6/10-fitted quantizer, TWO stored stateless
+    // assignment commits — ingest(ingest(base,b1),b2) == one full
+    // assignment pass, hash-matched at the 6/10-cut oracle
+    // two stateless commits union to one assignment pass at the 6/10
+    // cut; the N-commit fold is a pure layout change over it
+    "q_delta2_knn_ivf" -> graded(Similarity.delta2IvfKnn(_, _), deltaIvfSqlFor(6)),
+
+    // N-commit compaction: base + both ingest commits folded into ONE
+    // layout — pure layout change, shares the delta2 oracle
+    "q_delta2_knn_ivf_compacted" -> graded(Similarity.delta2IvfKnnCompacted(_, _),
+      deltaIvfSqlFor(6)),
+
+    // DRIFT-MEASURED refit router, IVF edition: sampled insert recall
+    // through the maintained index's own serving plan decides
+    // serve-delta vs full Lloyd refit; the fixture MEASURES drift
+    // (0.46) and exercises the ESCALATE arm — the graph router serves
+    // its delta arm, so both router arms sit under the gate
+    // expectArm pins the oracle's arm IN the entry: a fixture/sampling
+    // drift across the recall floor now fails loudly as a routing
+    // assertion instead of an opaque hash mismatch (round-20 advice)
+    // the IVF router MEASURES 0.46 sampled insert recall on the
+    // fixture (the base-fitted quantizer genuinely mis-serves the
+    // inserted vectors here) and ESCALATES — so the graded entry
+    // exercises the refit arm and shares q_knn_ivf_exact's full-fit
+    // oracle; the graph router above serves its delta arm, putting
+    // BOTH router arms under the gate across the pair
+    "q_knn_ivf_drift_routed" -> graded(Similarity.ivfKnnDriftRouted(_, _, expectArm = Some("refit")),
+      ivfExactSql),
+
+    // RETRACTION, ANN edition: tombstoned ids fold out of the stored
+    // cell-partitioned layout (one anti-filter write, model untouched
+    // — the drift router decides when the FIT must refresh)
+    // retraction: the maintenance chain with assignment restricted to
+    // survivors — the quantizer still fits over the ORIGINAL base
+    // (stored-model semantics; tombstones exclude the query ids)
+    "q_retract_knn_ivf" -> graded(Similarity.retractIvfKnn(_, _),
+      deltaIvfSqlFor(8,
+        s"(vec_id % 10 <> 7 OR vec_id < ${graft.operators.Similarity.NumQueries})")),
+
+    // RETRACTION, graph edition: serving over the stored ∪ inserted
+    // edges with every tombstone-touching edge filtered — deleted
+    // nodes neither returned nor traversable; the drift router prices
+    // the eventual rebuild as connectivity erodes
+    // graph retraction: immutable build history + tombstone-filtered
+    // serving edges
+    "q_retract_knn_graph" -> graded(Similarity.retractGraphKnn _, retractGraphSql),
+
+    // the IVF-PQ composition under the gate: int8 coarse dot inside
+    // the deterministic Lloyd cells of a partition-pruned packed
+    // layout, exact rerank — fully oracle-graded
+    "q_knn_quantized_ivf_exact" -> graded(Similarity.quantizedIvfKnnExact(_, _),
+      quantizedIvfExactSql),
+
+    // product quantization: per-subspace gated-Lloyd codebooks, m-code
+    // encoding, ADC shortlist + exact rerank — fully oracle-graded
+    "q_knn_pq" -> graded(Similarity.pqKnn(_, _), pqKnnSql),
+    // NSW-style graph ANN: navigable neighbor graph (blocked proximity
+    // links + hash-ring shortcuts) searched by batch beam expansion;
+    // recall floors in SimilaritySpec, and since round 15 the whole
+    // build+search is mix31-deterministic -> full DuckDB oracle
+    // the graph-ANN family, fully re-derived since round 15 (build +
+    // beam search): deterministic mix31 pseudo-randomness replaced
+    // xxhash64, so both the blocked and the NN-descent graphs are pure
+    // functions of the corpus DuckDB can recompute
+    "q_knn_graph" -> graded(Similarity.graphKnn _, blockedGraphSql),
+    // INCREMENTAL NSW: batch vectors beam-search the STORED edge table
+    // for their top-M links (insert = search cost, never a rebuild);
+    // serving runs over stored ∪ inserted edges
+    // maintain-then-search re-derived end-to-end: base build + insert
+    // beams + serving beam, every stage the oracle-locked arithmetic
+    "q_delta_knn_graph" -> graded(Similarity.deltaGraphKnn _, deltaGraphSql),
+    // the graph lifecycle's closing stage: base + insert commits folded
+    // into ONE edge table (pure layout change — shares the delta-graph
+    // oracle, the gate certifies value identity)
+    // edge compaction is a pure layout change: same edges, one table
+    "q_delta_knn_graph_compacted" -> graded(Similarity.deltaGraphKnnCompacted _, deltaGraphSql),
+    // MULTI-INGEST graph: the ORDER-DEPENDENT chained insert — ingest
+    // 2 beams over the edges ingest 1 appended; two unrolled insert
+    // beams in the oracle re-derive insert(insert(G0,b1),b2)
+    // the chained two-beam insert recurrence, fully unrolled
+    "q_delta2_knn_graph" -> graded(Similarity.delta2GraphKnn _, delta2GraphSql),
+
+    // DRIFT-MEASURED refit router: sampled insert recall over the
+    // maintained edges vs an exact scan decides serve-delta vs refit
+    // (the routeWide discipline on ANN maintenance); the fixture
+    // measures ~1.0 → serves the delta graph, sharing its oracle
+    // the router measures ~1.0 sampled recall on the fixture and
+    // serves the delta-maintained graph — the delta oracle verbatim
+    "q_knn_graph_drift_routed" -> graded(Similarity.graphKnnDriftRouted(_, _, expectArm = Some("serve")),
+      deltaGraphSql),
+
+    // the routed production entry (blocked <=200k, NN-descent above):
+    // at gate scale the router picks the blocked build, so this shares
+    // q_knn_graph's oracle — the gate certifies the routing decision
+    // the router picks the blocked build at gate scale (n=500 <= 200k)
+    "q_knn_graph_auto" -> graded(Similarity.graphKnnAuto _, blockedGraphSql),
+
+    "q_embedding_dedup" -> graded(Similarity.embeddingDedup(_, _),
+      s"""WITH cent AS (SELECT vec_id AS c_id, embedding AS c_emb FROM embeddings
+         |  WHERE vec_id < (SELECT greatest(4, CAST(floor(sqrt(count(*))) AS BIGINT)) FROM embeddings)),
+         |assigned AS (SELECT e.vec_id,
+         |  min({'d': list_sum(list_transform(generate_series(1, len(e.embedding)),
+         |        i -> (e.embedding[i]::DOUBLE - c_emb[i]::DOUBLE) * (e.embedding[i]::DOUBLE - c_emb[i]::DOUBLE))),
+         |       'c': c_id}) AS m
+         |  FROM embeddings e, cent GROUP BY e.vec_id),
+         |tagged AS (SELECT e.vec_id, e.embedding, a.m.c AS cell
+         |  FROM embeddings e JOIN assigned a ON e.vec_id=a.vec_id)
+         |SELECT id_a, id_b, sim FROM (
+         |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+         |    round(${cosSql("a.embedding", "b.embedding")}, 6) AS sim
+         |  FROM tagged a JOIN tagged b ON a.cell=b.cell AND a.vec_id<b.vec_id)
+         |WHERE sim >= 0.4 ORDER BY id_a, id_b""".stripMargin),
+
+    // int8 scalar quantization: 4x vector compression with measured
+    // reconstruction error (per-row codegen arithmetic, gate-exact)
+    // int8 quantization: all-double IEEE arithmetic both engines
+    // reproduce exactly; the error sum is an IN-ORDER left fold on both
+    // sides (Spark aggregate / DuckDB list_reduce) — float sums must
+    // never ride an order-free aggregate. (x - q*scale) is squared by
+    // multiplication, not pow(), to keep the op identical.
+    "q_embedding_quantize" -> graded(Similarity.embeddingQuantize _,
+      """WITH e AS (SELECT vec_id,
+        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
+        |  FROM embeddings),
+        |s AS (SELECT vec_id, emb,
+        |    list_max(list_transform(emb, x -> abs(x))) / 127.0 AS scale FROM e),
+        |q AS (SELECT vec_id, emb, scale,
+        |    CASE WHEN scale = 0.0 THEN list_transform(emb, x -> CAST(0 AS BIGINT))
+        |         ELSE list_transform(emb, x -> CAST(round(x / scale) AS BIGINT)) END AS qvec
+        |  FROM s)
+        |SELECT vec_id, scale, CAST(len(emb) AS BIGINT) AS dim,
+        |  array_to_string(list_transform(qvec[1:8], v -> CAST(v AS VARCHAR)), ',') AS q_head8_csv,
+        |  sqrt(list_reduce(
+        |    list_prepend(0.0, list_transform(generate_series(1, len(emb)),
+        |      i -> (emb[i] - qvec[i] * scale) * (emb[i] - qvec[i] * scale))),
+        |    (a, b) -> a + b)) AS recon_err
+        |FROM q ORDER BY vec_id""".stripMargin),
+
+    // chunk→doc mean pooling; float parity by explicit fold ORDER
+    // (first member seeds, like DuckDB list_reduce), never tolerance
+    // mean pooling: members fold in vec_id order with the FIRST member
+    // as init on BOTH sides (list_reduce's seeding; a zero-vector init
+    // would differ on ±0.0 inputs) — bit-identical running sums, so
+    // the exploded doubles sit directly under the hash
+    "q_embedding_pool" -> graded(Similarity.embeddingPool _,
+      s"""WITH m AS (
+         |  SELECT vec_id // ${graft.operators.Similarity.PoolGroup} AS group_id,
+         |    array_agg(list_transform(embedding, x -> x::DOUBLE) ORDER BY vec_id) AS embs,
+         |    count(*) AS n
+         |  FROM embeddings GROUP BY 1),
+         |pooled AS (
+         |  SELECT group_id, n,
+         |    list_reduce(embs,
+         |      (acc, e) -> list_transform(generate_series(1, len(acc)), i -> acc[i] + e[i])) AS vec
+         |  FROM m)
+         |SELECT group_id, CAST(unnest(generate_series(1, len(vec))) AS BIGINT) AS pos,
+         |  unnest(vec) / n AS val
+         |FROM pooled ORDER BY group_id, pos""".stripMargin),
+
+    // declarative Lloyd's k-means (fixed seeds, 3 rounds, fixed-point
+    // centroid sums) — deterministic, so the full clustering sits
+    // under the DuckDB gate; the same chain is the IVF coarse quantizer
+    // full Lloyd's clustering under the exact gate: fixed-point
+    // centroid sums make every float deterministic (see kmeansChainSql)
+    "q_kmeans" -> graded(Similarity.kmeansAssign _,
+      s"""WITH $kmeansChainSql,
+         |sz AS (SELECT cluster, count(*) AS n_cluster FROM kmf GROUP BY 1)
+         |SELECT kmf.vec_id, kmf.cluster, kmf.dist, sz.n_cluster
+         |FROM kmf JOIN sz USING (cluster) ORDER BY vec_id""".stripMargin),
+
+    // the SAME assignment executed by the streaming engine: batch-fitted
+    // centroid model as plan literals, stateless per-row argmin, APPEND
+    // mode with zero state rows (the serving shape); shares the Lloyd
+    // chain oracle minus the batch-side size aggregate
+    // the streaming twin: same Lloyd chain, assignment columns only
+    "q_stream_kmeans" -> graded(graft.streaming.EmbeddingStreams.streamedKmeansAssign _,
+      s"""WITH $kmeansChainSql
+         |SELECT vec_id, cluster, dist FROM kmf ORDER BY vec_id""".stripMargin),
+
+    // the delta-SemDeDup SERVING twin: arrivals assigned via centroid
+    // literals, adjudicated against the frozen stored decision table
+    // through one stream-static join — zero state rows
+    // the serving twin: the same chain with the comparison side
+    // restricted to base (batch-internal terms vanish at batch size 1)
+    "q_stream_semdedup_delta" -> graded(graft.streaming.EmbeddingStreams.streamedDeltaSemDedup(_, _),
+      deltaSemdedupServeSql),
+
+    // kNN majority-vote classification over the labeled fixture — the
+    // label-propagation primitive; vote = groupBy over the exact top-k
+    // kNN majority vote: extend the gated brute-force top-k with the
+    // label join + (n_votes DESC, label) argmax
+    "q_knn_classify" -> graded(Similarity.knnClassify _,
+      s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < ${graft.operators.Similarity.NumQueries}),
+         |sims AS (SELECT q_id, e.vec_id AS n_id,
+         |  round(${cosSql("q_emb", "e.embedding")}, 6) AS sim
+         |  FROM embeddings e, q WHERE q_id <> e.vec_id),
+         |ranked AS (SELECT q_id, n_id,
+         |  row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) AS rank FROM sims),
+         |votes AS (SELECT t.q_id, CAST(e.label AS BIGINT) AS label, count(*) AS n_votes
+         |  FROM ranked t JOIN embeddings e ON t.n_id = e.vec_id
+         |  WHERE t.rank <= ${graft.operators.Similarity.K} GROUP BY 1, 2),
+         |best AS (SELECT q_id, label, n_votes,
+         |  row_number() OVER (PARTITION BY q_id ORDER BY n_votes DESC, label) AS rn FROM votes)
+         |SELECT b.q_id, b.label AS pred_label, b.n_votes,
+         |  CAST(e2.label AS BIGINT) AS true_label
+         |FROM best b JOIN embeddings e2 ON b.q_id = e2.vec_id
+         |WHERE b.rn = 1 ORDER BY b.q_id""".stripMargin),
+
+    // temperature flattening over SEMANTIC clusters (kmeans assignment
+    // instead of language tags) — the DataComp-style topic rebalance
+    // temperature flattening over the Lloyd-chain clusters; same
+    // IEEE-exact sqrt/divide rate math as q_temperature_mixture
+    "q_cluster_mixture" -> graded(Similarity.clusterMixture _,
+      s"""WITH $kmeansChainSql,
+         |sz AS (SELECT cluster, count(*) AS n_cluster FROM kmf GROUP BY 1),
+         |sw AS (SELECT cluster, n_cluster, 1.0/sqrt(n_cluster) AS w FROM sz),
+         |rates AS (SELECT cluster, n_cluster,
+         |    w / (SELECT max(w) FROM sw) AS rate FROM sw)
+         |SELECT r.cluster, r.n_cluster, r.rate, count(*) AS n_sampled,
+         |  min(kmf.vec_id) AS first_vec
+         |FROM kmf JOIN rates r USING (cluster)
+         |WHERE ${h32("CAST(kmf.vec_id AS VARCHAR) || '#cmix'")} % 1000000 < r.rate * 1000000
+         |GROUP BY 1, 2, 3 ORDER BY r.cluster""".stripMargin),
+
+    // SemDeDup-style semantic dedup: k-means blocks, within-cluster
+    // cosine pairs, rank-based keep policy (keep the outlier, prune
+    // the dense duplicated core) — a curation DECISION per vector
+    // SemDeDup decision: rank within cluster by centroid distance DESC
+    // (vec_id tie-break), drop any vector with a higher-ranked
+    // within-cluster neighbor at cosine >= 0.4
+    "q_semdedup" -> graded(Similarity.semanticDedup(_, _),
+      s"""WITH $kmeansChainSql,
+         |r AS (SELECT vec_id, cluster,
+         |    row_number() OVER (PARTITION BY cluster ORDER BY dist DESC, vec_id) AS rnk
+         |  FROM kmf),
+         |re AS (SELECT r.vec_id, r.cluster, r.rnk, e.embedding
+         |  FROM r JOIN embeddings e USING (vec_id)),
+         |dropped AS (SELECT DISTINCT b.vec_id
+         |  FROM re a JOIN re b ON a.cluster = b.cluster AND a.rnk < b.rnk
+         |  WHERE round(${cosSql("a.embedding", "b.embedding")}, 6) >= 0.4)
+         |SELECT r.vec_id, r.cluster, CAST(r.rnk AS BIGINT) AS "rank",
+         |  CAST(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS kept
+         |FROM r LEFT JOIN dropped d ON r.vec_id = d.vec_id ORDER BY r.vec_id""".stripMargin),
+
+    // INCREMENTAL SemDeDup: stored base-fitted quantizer + frozen
+    // cluster-partitioned decision table; batch assigned statelessly,
+    // decision = one pruned join vs stored members + batch-internal
+    // pass (== the full recompute restricted to batch vec_ids)
+    // the incremental decision: Lloyd over the id-prefix base,
+    // assignment + rank + drop over the union, batch rows out — the
+    // frozen-base delta operator must emit exactly these
+    "q_delta_semdedup" -> graded(Similarity.deltaSemDedup(_, _), deltaSemdedupSql),
+
+    // the quantized serving path: int8-dot coarse pass over the packed
+    // table + exact rerank of the short list (approximate -> rows-only)
+    // the int8 two-stage kNN re-derived: per-vector scale = max|x|/127,
+    // q_i = clamp(floor(x/scale + 0.5)) — floor(x+0.5) IS Java's
+    // Math.round (Int8PackExpr), NOT DuckDB round()'s half-away —
+    // integer coarse dot over every corpus vector, top-QuantRerank per
+    // query, exact cosine rerank of the shortlist. Deterministic
+    // end-to-end ("approximate" only vs brute force), so it grades.
+    "q_knn_quantized" -> graded(Similarity.quantizedKnn _,
+      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings),
+         |s AS (SELECT vec_id, emb,
+         |    list_max(list_transform(emb, x -> abs(x))) / 127.0 AS scale,
+         |    sqrt(list_sum(list_transform(emb, x -> x * x))) AS nrm FROM e),
+         |q AS (SELECT vec_id, scale, nrm,
+         |    CASE WHEN scale = 0.0 THEN list_transform(emb, x -> CAST(0 AS BIGINT))
+         |         ELSE list_transform(emb, x -> greatest(-127, least(127, CAST(floor(x / scale + 0.5) AS BIGINT)))) END AS qv
+         |  FROM s),
+         |qq AS (SELECT vec_id AS q_id, qv AS q_qv FROM q WHERE vec_id < ${Similarity.NumQueries}),
+         |coarse AS (SELECT qq.q_id, t.vec_id AS n_id,
+         |    (t.scale * CAST(list_sum(list_transform(generate_series(1, len(t.qv)),
+         |        i -> qq.q_qv[i] * t.qv[i])) AS DOUBLE))
+         |      / (CASE WHEN t.nrm = 0.0 THEN 1.0 ELSE t.nrm END) AS qsim
+         |  FROM q t, qq WHERE qq.q_id <> t.vec_id),
+         |short AS (SELECT q_id, n_id FROM coarse
+         |  QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY qsim DESC, n_id) <= ${Similarity.QuantRerank}),
+         |sims AS (SELECT sl.q_id, sl.n_id,
+         |    round(${cosSql("qe.embedding", "se.embedding")}, 6) AS sim
+         |  FROM short sl
+         |  JOIN embeddings se ON se.vec_id = sl.n_id
+         |  JOIN embeddings qe ON qe.vec_id = sl.q_id),
+         |ranked AS (SELECT q_id, n_id, sim,
+         |  row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) AS rank FROM sims)
+         |SELECT q_id, rank, n_id, sim FROM ranked WHERE rank <= ${Similarity.K}
+         |ORDER BY q_id, rank""".stripMargin),
+
+    // the same beam search over an NN-descent-built graph — the
+    // O(N·M²)-per-round build whose round cost scales linearly with
+    // the corpus; mix31-deterministic since round 15 -> full oracle
+    "q_knn_graph_nnd" -> graded(Similarity.graphKnnNnd(_, _), nndGraphSql),
+    // IVF-PQ-style composition: the int8 coarse pass confined to the
+    // probed √N Lloyd cells of a partition-pruned packed layout — the
+    // sublinear form of q_knn_quantized, fully oracle-graded
+    "q_knn_quantized_ivf" -> graded(Similarity.quantizedIvfKnn(_, _), quantizedIvfSqrtSql),
+    // — time-windowed event analytics (streaming-shaped, batch oracle) —
+    "q_tumbling" -> graded(EventAnalytics.tumbling _, hourlyEventsSql),
+    // the SAME aggregation executed as a real StreamingQuery (streaming
+    // file source -> AvailableNow -> memory sink); shares the oracle
+    "q_stream_tumbling" -> graded(graft.streaming.EventStreams.streamedTumbling _, hourlyEventsSql),
+
+    "q_sliding" -> graded(EventAnalytics.sliding _,
+      """SELECT strftime(s, '%Y-%m-%d %H:%M:%S') AS win_start, count(*) AS n FROM (
+        |SELECT time_bucket(INTERVAL '30 minutes', ts) AS s FROM events
+        |UNION ALL
+        |SELECT time_bucket(INTERVAL '30 minutes', ts) - INTERVAL 30 MINUTE AS s FROM events)
+        |GROUP BY 1 ORDER BY win_start""".stripMargin),
+
+    "q_sessions" -> graded(EventAnalytics.sessions _, sessionsSql),
+
+    // SCD-2 dimension build: per-user event_type validity intervals
+    // gaps-and-islands closing on event_type CHANGE (not inactivity):
+    // (ts, event_id) ordering everywhere — ts ties would otherwise
+    // make lag() peer-order-dependent between engines
+    "q_scd2" -> graded(EventAnalytics.scd2 _,
+      """WITH flagged AS (SELECT user_id, ts, event_id, event_type,
+        |  CASE WHEN lag(event_type) OVER w IS NULL
+        |       OR lag(event_type) OVER w <> event_type THEN 1 ELSE 0 END AS chg
+        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+        |runs AS (SELECT user_id, event_type, ts,
+        |  CAST(sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS version FROM flagged),
+        |iv AS (SELECT user_id, version, min(event_type) AS event_type,
+        |  min(ts) AS t0, count(*) AS n_events FROM runs GROUP BY 1, 2)
+        |SELECT user_id, version, event_type,
+        |  strftime(t0, '%Y-%m-%d %H:%M:%S') AS valid_from,
+        |  strftime(lead(t0) OVER wv, '%Y-%m-%d %H:%M:%S') AS valid_to,
+        |  n_events, lead(t0) OVER wv IS NULL AS is_current
+        |FROM iv WINDOW wv AS (PARTITION BY user_id ORDER BY version)
+        |ORDER BY user_id, version""".stripMargin),
+
+    "q_retention" -> graded(EventAnalytics.retention _,
+      """WITH hourly AS (SELECT DISTINCT time_bucket(INTERVAL '1 hour', ts) AS h, user_id FROM events)
+        |SELECT strftime(a.h, '%Y-%m-%d %H:%M:%S') AS hour, count(*) AS active,
+        |count(b.user_id) AS retained
+        |FROM hourly a LEFT JOIN hourly b
+        |ON b.h = a.h - INTERVAL 1 HOUR AND b.user_id = a.user_id
+        |GROUP BY a.h ORDER BY hour""".stripMargin),
+
+    "q_funnel" -> graded(EventAnalytics.funnel _,
+      """WITH scored AS (SELECT user_id, ts, event_type,
+        |  min(CASE WHEN event_type='purchase' THEN ts END) OVER
+        |    (PARTITION BY user_id ORDER BY ts, event_id
+        |     ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS next_purchase
+        |  FROM events)
+        |SELECT user_id, count(*) AS n_clicks,
+        |CAST(sum(CASE WHEN next_purchase IS NOT NULL
+        |  AND next_purchase <= ts + INTERVAL 30 MINUTE THEN 1 ELSE 0 END) AS BIGINT) AS n_converted
+        |FROM scored WHERE event_type='click' GROUP BY user_id ORDER BY user_id""".stripMargin),
+
+    // order-sensitive list aggregation: per-user first-10 event paths
+    "q_event_paths" -> graded(EventAnalytics.eventPaths _,
+      s"""SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
+         |array_to_string(list(event_type ORDER BY ts, event_id)[1:${EventAnalytics.PathLen}], '>') AS path
+         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
+
+    // time-weighted average value (irregular time-series aggregation)
+    "q_twap" -> graded(EventAnalytics.twap _,
+      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us,
+        |  CAST(round(value*100) AS BIGINT) AS cents FROM events),
+        |d AS (SELECT user_id, cents,
+        |  (lead(us) OVER (PARTITION BY user_id ORDER BY us, event_id) - us) // 1000 AS dur_ms FROM e)
+        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_intervals,
+        |CAST(sum(cents * dur_ms) AS BIGINT)::DOUBLE / CAST(sum(dur_ms) AS BIGINT)::DOUBLE / 100.0 AS twap
+        |FROM d WHERE dur_ms IS NOT NULL GROUP BY user_id
+        |HAVING CAST(sum(dur_ms) AS BIGINT) > 0 ORDER BY user_id""".stripMargin),
+
+    "q_new_users" -> graded(EventAnalytics.newUsers _,
+      """WITH fs AS (SELECT user_id, time_bucket(INTERVAL '1 hour', min(ts)) AS h
+        |  FROM events GROUP BY user_id),
+        |hourly AS (SELECT h, count(*) AS n_new FROM fs GROUP BY h)
+        |SELECT strftime(h, '%Y-%m-%d %H:%M:%S') AS hour, n_new,
+        |CAST(sum(n_new) OVER (ORDER BY h ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_users
+        |FROM hourly ORDER BY hour""".stripMargin),
+
+    // α=1/2 EWMA smoother: power-of-two weights → exact long sums
+    // α=1/2 EWMA: power-of-two weights make the numerator/denominator
+    // exact LONG sums; the reported ewma is one exact-input division
+    "q_ewma" -> graded(EventAnalytics.ewma _, ewmaSql),
+
+    // fastText-style linear quality model (map-only scan; exact-long
+    // score via per-feature fixed-point quantization)
+    // per-FEATURE fixed-point quantization makes the linear quality
+    // model's weighted sum and threshold compare exact-integer
+    "q_quality_model" -> graded(TextAnalysis.qualityModel _, {
+      val th = graft.operators.TextAnalysis.QualityModelThresholdFp
+      s"""WITH t AS (SELECT doc_id, text,
+         |  list_transform(list_filter(string_split_regex(text,'[^a-zA-Z]'), x -> x<>''),
+         |    x -> lower(x)) AS toks FROM documents),
+         |f AS (SELECT doc_id,
+         |  CAST(round((len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is','it')))::DOUBLE
+         |    / greatest(len(toks),1)) * 1048576.0) AS BIGINT) AS swr_fp,
+         |  CAST(round((length(regexp_replace(text,'[^a-zA-Z]','','g'))::DOUBLE
+         |    / greatest(length(text),1)) * 1048576.0) AS BIGINT) AS alpha_fp,
+         |  CAST(round((len(list_distinct(toks))::DOUBLE
+         |    / greatest(len(toks),1)) * 1048576.0) AS BIGINT) AS uniq_fp,
+         |  CAST(round(((length(regexp_replace(text,'[^a-zA-Z]','','g'))::DOUBLE
+         |    / greatest(len(toks),1)) / 10) * 1048576.0) AS BIGINT) AS mwl_fp
+         | FROM t)
+         |SELECT doc_id, CAST(3*swr_fp + 2*alpha_fp + 2*uniq_fp + mwl_fp AS BIGINT) AS score_fp,
+         |  CAST(3*swr_fp + 2*alpha_fp + 2*uniq_fp + mwl_fp AS BIGINT)::DOUBLE / 1048576.0 AS score,
+         |  (3*swr_fp + 2*alpha_fp + 2*uniq_fp + mwl_fp) > $th AS keep
+         |FROM f ORDER BY doc_id""".stripMargin
+    }),
+
+    // median/MAD robust outliers (exact percentiles + broadcast flags)
+    // exact interpolated percentiles of integer cents on both engines
+    // (the q_percentile precedent); flag and z share one IEEE tree
+    "q_anomaly_mad" -> graded(EventAnalytics.madAnomalies _,
+      """WITH e AS (SELECT event_id, event_type,
+        |  CAST(round(value*100) AS BIGINT) AS cents FROM events),
+        |med AS (SELECT event_type, quantile_cont(cents, 0.5) AS med FROM e GROUP BY 1),
+        |d AS (SELECT event_id, event_type, cents, med,
+        |  abs(cents::DOUBLE - med) AS dev FROM e JOIN med USING(event_type)),
+        |mad AS (SELECT event_type, quantile_cont(dev, 0.5) AS mad FROM d GROUP BY 1)
+        |SELECT event_type, event_id, cents, med, mad,
+        |  dev / (1.4826 * mad) AS robust_z
+        |FROM d JOIN mad USING(event_type)
+        |WHERE mad > 0.0 AND dev > 3.0 * (1.4826 * mad)
+        |ORDER BY event_type, event_id""".stripMargin),
+
+    // batch backfill twin of the streaming 3σ detector (shared oracle)
+    "q_anomaly_running" -> graded(EventAnalytics.runningAnomalies _, anomalySql),
+
+    // — multimodal columns —
+    // REAL codec round trips (JDK ImageIO PNG, RIFF/PCM WAV): payloads
+    // synthesized deterministically, decoded by actual format code, and
+    // the features must match DuckDB's closed-form pixel/sample math
+    "q_image_decode" -> graded(Multimodal.imageDecode _,
+      """SELECT doc_id, CAST(32 AS BIGINT) AS width, CAST(16 AS BIGINT) AS height,
+        |CAST(sum((doc_id*31 + y*7 + x) % 256) AS BIGINT) AS luma_sum
+        |FROM (SELECT doc_id, unnest(generate_series(0, 15)) AS y FROM documents),
+        |     (SELECT unnest(generate_series(0, 31)) AS x)
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+
+    // perceptual average-hash fingerprint over the real decoded raster
+    // the 8x8-block average-hash bits re-derived arithmetically:
+    // block mean vs image mean as the scaled integer compare
+    // bs*64 > total (blocks are 4x2 px over 32x16), packed into two
+    // unsigned 32-bit halves (the simhash shift trick, twice)
+    "q_image_ahash" -> graded(Multimodal.imageAhash _, imageAhashSql),
+    // visual near-dup DECISION pairs: 4×16-bit aHash bands bucket the
+    // candidates (Manku banding — complete recall at Hamming ≤ 3),
+    // integer popcount verifies; joins the multimodal + dedup families
+    // banded Hamming-ball pairs over the same hash (exact at ≤ 3)
+    "q_image_neardup" -> graded(Multimodal.imageNeardup _, imageNeardupSql),
+
+    // RETRACTION, media edition: tombstones anti-join the stored
+    // doc→aHash table; pairs re-derive at distinct-hash granularity —
+    // the decode never re-runs, and a hash class leaves the band join
+    // exactly when its last member dies
+    // retraction: the same banded chain over the surviving docs
+    "q_retract_image_neardup" -> graded(Multimodal.retractImageNeardup _,
+      overRetainedDocs("doc_id % 10 <> 7", imageNeardupSql, "id_a, id_b")),
+
+    // Manku multi-table widening of the same contract (C(6,3)=20
+    // three-block ~11-bit band tables, same pigeonhole completeness):
+    // the d ≫ 10^6 diverse-hash escalation, value-identical output
+    // the wide tier and the router are value-identical to the 4-band
+    // tier by construction (same verify+expansion over a
+    // complete-recall candidate set), so all three share ONE oracle —
+    // a drift in any tier breaks its own hash match
+    "q_image_neardup_wide" -> graded(Multimodal.imageNeardupWide _, imageNeardupSql),
+    // routed production entry: distinct-hash count picks the tier
+    "q_image_neardup_auto" -> graded(Multimodal.imageNeardupAuto _, imageNeardupSql),
+    // connected components over the visual pair graph (near-dup at a
+    // Hamming ball is not transitive — group dedup needs the closure)
+    // transitive closure over the visual pairs (the q_dup_clusters
+    // recursive-CTE shape on the image pair list)
+    "q_image_dup_clusters" -> graded(Multimodal.imageDupClusters _, imageDupClustersSql),
+    // CC MAINTENANCE under ingest: stored hash-label table + batch
+    // bridges through a contracted mini-CC — batch-sized closure work,
+    // value-identical to the full recompute (shared oracle)
+    // the INCREMENTAL path changes WORK, never results: the maintained
+    // label table over base ∪ batch equals the full closure over the
+    // whole corpus, so the delta entry shares the oracle verbatim
+    "q_delta_image_dup_clusters" -> graded(Multimodal.deltaImageDupClusters _, imageDupClustersSql),
+
+    // MULTI-INGEST visual closure: maintain(maintain(L0,p1),p2) at
+    // hash granularity over two stored ingests + a live third ==
+    // one CC over the whole corpus — q_image_dup_clusters' oracle
+    // two chained hash-level maintenance steps == one full closure
+    "q_delta2_image_dup_clusters" -> graded(Multimodal.delta2ImageDupClusters _,
+      imageDupClustersSql),
+
+    // RETRACTION closure, media edition: doc tombstones touch the
+    // hash graph only through dead hashes (refcounts from the stored
+    // doc→hash table); touched components relabel over surviving
+    // stored pairs — no decode, no re-banding
+    // retraction: the same recursive closure over surviving docs
+    "q_retract_image_dup_clusters" -> graded(Multimodal.retractImageDupClusters _,
+      overRetainedDocs("doc_id % 10 <> 7", imageDupClustersSql,
+        "cluster_rep")),
+
+    // exact visual dedup: one row per image → its aHash-class
+    // representative + class size (the linear-output decision the
+    // pair contract above audits)
+    "q_image_dedup" -> graded(Multimodal.imageDedup _, imageDedupSql),
+
+    // INCREMENTAL media ingest (the q_delta_dedup discipline on the
+    // hash tables): batch band keys probe the stored index, existing
+    // vs existing never enumerated
+    // incremental ingest: the full-batch pair lists restricted to the
+    // mod-10 batch side — the delta probe must match them exactly
+    "q_delta_image_neardup" -> graded(Multimodal.deltaImageNeardup _,
+      deltaPairsSql(imageNeardupSql)),
+
+    "q_delta_audio_neardup" -> graded(Multimodal.deltaAudioNeardup _,
+      deltaPairsSql(audioNeardupSql)),
+
+    // delta dedup DECISION: one row per new record → frozen stored
+    // rep (or elects one), class size after ingest
+    // frozen-rep delta dedup decision: existing classes keep their
+    // stored (base-min) representative, new classes elect min batch
+    // doc; n_class counts the class AFTER ingest
+    "q_delta_image_dedup" -> graded(Multimodal.deltaImageDedup _,
+      s"""WITH $ahashCtesSql,
+         |base AS (SELECT * FROM ahv WHERE doc_id % 10 < 8),
+         |batch AS (SELECT * FROM ahv WHERE doc_id % 10 >= 8),
+         |breps AS (SELECT ahash_hi, ahash_lo, min(doc_id) AS base_rep,
+         |    count(*) AS base_n FROM base GROUP BY 1, 2),
+         |bcls AS (SELECT ahash_hi, ahash_lo, min(doc_id) AS batch_min,
+         |    count(*) AS batch_n FROM batch GROUP BY 1, 2)
+         |SELECT b.doc_id, coalesce(base_rep, batch_min) AS rep_id,
+         |  CAST(coalesce(base_n, 0) + batch_n AS BIGINT) AS n_class
+         |FROM batch b JOIN bcls USING (ahash_hi, ahash_lo)
+         |LEFT JOIN breps USING (ahash_hi, ahash_lo)
+         |ORDER BY doc_id""".stripMargin),
+
+    // the audio twin: the same frozen-rep decision on the wide
+    // fingerprint class key
+    "q_delta_audio_dedup" -> graded(Multimodal.deltaAudioDedup _,
+      s"""WITH $audioFpWideCteSql,
+         |base AS (SELECT * FROM afw WHERE doc_id % 10 < 8),
+         |batch AS (SELECT * FROM afw WHERE doc_id % 10 >= 8),
+         |breps AS (SELECT afp_hi, afp_lo, min(doc_id) AS base_rep,
+         |    count(*) AS base_n FROM base GROUP BY 1, 2),
+         |bcls AS (SELECT afp_hi, afp_lo, min(doc_id) AS batch_min,
+         |    count(*) AS batch_n FROM batch GROUP BY 1, 2)
+         |SELECT b.doc_id, coalesce(base_rep, batch_min) AS rep_id,
+         |  CAST(coalesce(base_n, 0) + batch_n AS BIGINT) AS n_class
+         |FROM batch b JOIN bcls USING (afp_hi, afp_lo)
+         |LEFT JOIN breps USING (afp_hi, afp_lo)
+         |ORDER BY doc_id""".stripMargin),
+
+    // resize maps out(x,y) <- in(2x, 2y) for 32x16 -> 16x8
+    "q_image_resize" -> graded(Multimodal.imageResize _,
+      """SELECT doc_id, CAST(16 AS BIGINT) AS width, CAST(8 AS BIGINT) AS height,
+        |CAST(sum((doc_id*31 + (y*2)*7 + (x*2)) % 256) AS BIGINT) AS luma_sum
+        |FROM (SELECT doc_id, unnest(generate_series(0, 7)) AS y FROM documents),
+        |     (SELECT unnest(generate_series(0, 15)) AS x)
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+
+    "q_audio_decode" -> graded(Multimodal.audioDecode _,
+      """SELECT doc_id, CAST(16000 AS BIGINT) AS sample_rate,
+        |CAST(1000 + doc_id % 500 AS BIGINT) AS n_samples,
+        |CAST(sum(abs((doc_id*13 + i*17) % 65536 - 32768)) AS BIGINT) AS amp_sum
+        |FROM (SELECT doc_id, unnest(generate_series(0, 999 + doc_id % 500)) AS i
+        |      FROM documents)
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+
+    // 16-frame energy fingerprint over the REAL RIFF decode — the
+    // audio blocking key (1-D aHash twin; bands into the same
+    // Hamming-ball consumer shape as the image family)
+    // frame f = floor(i*F/n); bit f iff frame mean |amp| > clip mean,
+    // cross-multiplied to exact integers (fs*n > total*nf); samples
+    // are the AM fixture: +/-8191 base x (1 + (doc_id + f) % 4)
+    "q_audio_fingerprint" -> graded(Multimodal.audioFingerprint _,
+      s"""WITH $audioFpCteSql
+         |SELECT doc_id, n_samples, afp FROM afv
+         |ORDER BY doc_id""".stripMargin),
+
+    // exact acoustic dedup: fingerprint-class representative + size,
+    // one row per clip (the q_image_dedup decision on the audio key)
+    // exact acoustic dedup: min-doc representative + class size per
+    // fingerprint class (the q_image_dedup shape on the audio key)
+    "q_audio_dedup" -> graded(Multimodal.audioDedup _,
+      s"""WITH $audioFpCteSql,
+         |reps AS (SELECT afp, min(doc_id) AS rep_id,
+         |    count(*) AS n_class
+         |  FROM afv GROUP BY 1)
+         |SELECT doc_id, rep_id, n_class
+         |FROM afv JOIN reps USING (afp)
+         |ORDER BY doc_id""".stripMargin),
+
+    // WIDE 64-frame fingerprint as two 32-bit halves — the bandable
+    // acoustic key (the image-aHash convention on audio)
+    // wide 64-frame fingerprint, two 32-bit halves (aHash convention)
+    "q_audio_fingerprint_wide" -> graded(Multimodal.audioFingerprintWide _,
+      s"""WITH $audioFpWideCteSql
+         |SELECT doc_id, n_samples, afp_hi, afp_lo FROM afw
+         |ORDER BY doc_id""".stripMargin),
+
+    // acoustic near-dup pairs: the image banding engine verbatim on
+    // the wide fingerprint (completes the audio triple: blocking key →
+    // near-dup pairs → dedup decision)
+    // acoustic near-dup: 4×16-bit banding + popcount verify over the
+    // wide fingerprint — the imageNeardupSql shape on the audio key
+    "q_audio_neardup" -> graded(Multimodal.audioNeardup _, audioNeardupSql),
+
+    // chunked long-clip fingerprints: one row per (clip, chunk), each
+    // chunk against its own mean — lifts the 2^24-sample clip bound
+    // chunked fingerprints: chunk = i // 512, frame index and the
+    // cross-multiplied mean compare both within-CHUNK (nc, the short
+    // tail chunk's own length — never the clip's)
+    "q_audio_fingerprint_chunks" -> graded(Multimodal.audioFingerprintChunks _,
+      s"""SELECT doc_id, chunk, n_samples, afp FROM ($audioChunksSql)
+         |ORDER BY doc_id, chunk""".stripMargin),
+
+    // chunk-level acoustic near-dup: df-capped posting join on chunk
+    // fingerprints, verified by offset-consistent aligned-run counting
+    // — partial-overlap detection whole-clip keys cannot see
+    // chunk-level acoustic near-dup: df-capped exact-fingerprint
+    // posting join, per-pair best offset-consistent aligned run
+    "q_audio_chunk_neardup" -> graded(Multimodal.audioChunkNeardup _, {
+      val cap = graft.operators.Multimodal.AudioChunkMaxDf
+      val minA = graft.operators.Multimodal.AudioChunkMinAligned
+      s"""WITH ch AS (SELECT * FROM ($audioChunksSql)),
+         |dfc AS (SELECT afp FROM (
+         |    SELECT afp, count(DISTINCT doc_id) AS df FROM ch GROUP BY 1)
+         |  WHERE df <= $cap),
+         |posts AS (SELECT afp, doc_id, chunk FROM ch
+         |  WHERE afp IN (SELECT afp FROM dfc)),
+         |cnt AS (SELECT id_a, id_b, offs, count(*) AS n FROM (
+         |    SELECT a.doc_id AS id_a, c.doc_id AS id_b,
+         |      c.chunk - a.chunk AS offs
+         |    FROM posts a JOIN posts c
+         |      ON a.afp = c.afp AND a.doc_id < c.doc_id)
+         |  GROUP BY 1, 2, 3),
+         |best AS (SELECT id_a, id_b, max(n) AS n_aligned FROM cnt
+         |  GROUP BY 1, 2 HAVING max(n) >= $minA)
+         |SELECT id_a, id_b, min(offs) AS "offset", n_aligned
+         |FROM cnt JOIN best USING (id_a, id_b)
+         |WHERE n = n_aligned
+         |GROUP BY id_a, id_b, n_aligned
+         |ORDER BY id_a, id_b""".stripMargin
+    }),
+
+    // OVERLAPPING-window fingerprints (stride = chunk/2): lifts the
+    // chunker's boundary-alignment sensitivity — stride-aligned copies
+    // fingerprint identically wherever they land
+    // overlapping windows: w*stride <= g < w*stride + cs, each window
+    // fingerprinted against its OWN mean over its own length (the
+    // short sub-stride tail windows included — w ranges to (n-1)//stride)
+    "q_audio_fingerprint_windows" -> graded(Multimodal.audioFingerprintWindows _, {
+      val cs = graft.operators.Multimodal.AudioChunkSamples
+      val st = graft.operators.Multimodal.AudioWindowStride
+      val envF = graft.operators.Multimodal.AudioFpFrames
+      s"""WITH base AS (SELECT doc_id, (1000 + doc_id % 500) AS n FROM documents),
+         |wins AS (SELECT doc_id, n, unnest(generate_series(0, (n-1)//$st)) AS w
+         |  FROM base),
+         |samples AS (SELECT doc_id, w, len, j, w*$st + j AS g,
+         |    abs(((doc_id*13 + (w*$st + j)*17) % 16384 - 8192)
+         |        * (1 + (doc_id + ((w*$st + j)*$envF) // n) % 4)) AS a,
+         |    (j*$envF) // len AS f
+         |  FROM (SELECT doc_id, n, w, least($cs, n - w*$st) AS len,
+         |      unnest(generate_series(0, least($cs, n - w*$st) - 1)) AS j
+         |    FROM wins)),
+         |frames AS (SELECT doc_id, w, len, f, sum(a) AS fs, count(*) AS nf
+         |  FROM samples GROUP BY 1, 2, 3, 4),
+         |tot AS (SELECT doc_id, w, sum(a) AS total
+         |  FROM samples GROUP BY 1, 2)
+         |SELECT f.doc_id, CAST(f.w AS BIGINT) AS win,
+         |  CAST(f.len AS BIGINT) AS n_samples,
+         |  CAST(sum(CASE WHEN fs * len > total * nf
+         |    THEN (CAST(1 AS BIGINT) << f) ELSE 0 END) AS BIGINT) AS afp
+         |FROM frames f JOIN tot t ON f.doc_id = t.doc_id AND f.w = t.w
+         |GROUP BY 1, 2, 3
+         |ORDER BY 1, 2""".stripMargin
+    }),
+
+    // stub-decoded plumbing (formats with no JVM codec):
+    "q_media_features" -> graded(Multimodal.mediaFeatures _,
+      """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+        |lang AS format,
+        |CAST(octet_length(encode(text))*31 + ord(substr(text,1,1)) AS BIGINT) AS feature
+        |FROM documents ORDER BY doc_id""".stripMargin),
+
+    "q_media_stats" -> graded(Multimodal.mediaStats _,
+      """SELECT lang AS format, count(*) AS n_media,
+        |CAST(sum(octet_length(encode(text))) AS BIGINT) AS total_bytes,
+        |CAST(min(octet_length(encode(text))*31 + ord(substr(text,1,1))) AS BIGINT) AS min_feature
+        |FROM documents GROUP BY lang ORDER BY format""".stripMargin),
+
+    "q_frame_features" -> graded(Multimodal.frameFeatures(_, _),
+      """SELECT frame_idx, count(*) AS n_frames, CAST(sum(chunk_bytes) AS BIGINT) AS total_bytes FROM (
+        |SELECT doc_id, i AS frame_idx,
+        |  least(step, greatest(n_bytes - i*step, 0)) AS chunk_bytes
+        |FROM (SELECT doc_id, n_bytes, greatest(n_bytes//4, 1) AS step
+        |      FROM (SELECT doc_id, least(octet_length(encode(text)), 4096) AS n_bytes FROM documents)),
+        |  (SELECT unnest(generate_series(0, 3)) AS i)
+        |WHERE i < least(4, n_bytes))
+        |GROUP BY frame_idx ORDER BY frame_idx""".stripMargin),
+
+    // — TPC-H-shaped multi-join analytics (join-order/broadcast bench) —
+    "q_tpch_q3" -> graded(Relational.tpchQ3 _,
+      """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
+        |o_orderpriority, round(sum(l_extendedprice*(1-l_discount)),2) AS revenue
+        |FROM customer JOIN orders ON o_custkey=c_custkey
+        |JOIN lineitem ON l_orderkey=o_orderkey
+        |WHERE c_mktsegment='BUILDING'
+        |AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
+        |AND l_shipdate > TIMESTAMP '1998-03-15 00:00:00'
+        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
+        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin),
+
+    "q_tpch_q5" -> graded(Relational.tpchQ5 _,
+      """SELECT n_name, round(sum(l_extendedprice*(1-l_discount)),2) AS revenue
+        |FROM lineitem JOIN orders ON l_orderkey=o_orderkey
+        |JOIN customer ON o_custkey=c_custkey
+        |JOIN supplier ON l_suppkey=s_suppkey AND c_nationkey=s_nationkey
+        |JOIN nation ON s_nationkey=n_nationkey
+        |JOIN region ON n_regionkey=r_regionkey
+        |WHERE r_name='ASIA'
+        |AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+        |AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
+        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin),
+
+    "q_tpch_q6" -> graded(Relational.tpchQ6 _,
+      """SELECT round(sum(l_extendedprice*l_discount),2) AS revenue
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
+        |AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
+        |AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin),
+
+    "q_tpch_q10" -> graded(Relational.tpchQ10 _,
+      """SELECT c_custkey, c_name, round(c_acctbal,2) AS acctbal, n_name,
+        |round(sum(l_extendedprice*(1-l_discount)),2) AS revenue
+        |FROM lineitem JOIN orders ON l_orderkey=o_orderkey
+        |JOIN customer ON o_custkey=c_custkey
+        |JOIN nation ON c_nationkey=n_nationkey
+        |WHERE l_returnflag='R'
+        |AND o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
+        |AND o_orderdate < TIMESTAMP '1997-04-01 00:00:00'
+        |GROUP BY c_custkey, c_name, c_acctbal, n_name
+        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin),
+
+    "q_tpch_q12" -> graded(Relational.tpchQ12 _,
+      """SELECT l_linestatus,
+        |CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+        |CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
+        |FROM lineitem JOIN orders ON l_orderkey=o_orderkey
+        |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
+        |AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
+        |GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin),
+
+    "q_tpch_q14" -> graded(Relational.tpchQ14 _,
+      """SELECT round(100.0 *
+        |  sum(CASE WHEN p_type='PROMO' THEN l_extendedprice*(1-l_discount) ELSE 0.0 END) /
+        |  sum(l_extendedprice*(1-l_discount)), 4) AS promo_revenue_pct
+        |FROM lineitem JOIN part ON l_partkey=p_partkey
+        |WHERE l_shipdate >= TIMESTAMP '1997-03-01 00:00:00'
+        |AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'""".stripMargin),
+
+    "q_tpch_q19" -> graded(Relational.tpchQ19 _,
+      """SELECT round(sum(l_extendedprice*(1-l_discount)),2) AS revenue
+        |FROM lineitem JOIN part ON l_partkey=p_partkey
+        |WHERE (p_brand='Brand#11' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 11)
+        |OR (p_brand='Brand#22' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 20)
+        |OR (p_brand='Brand#15' AND p_size BETWEEN 1 AND 35 AND l_quantity BETWEEN 20 AND 30)""".stripMargin),
+
+    // aggregate-HAVING subquery drives the join (big-order selection
+    // broadcast by AQE), top-100 via TakeOrderedAndProject
+    "q_tpch_q18" -> graded(Relational.tpchQ18 _,
+      """WITH big AS (SELECT l_orderkey, round(sum(l_quantity),2) AS total_qty
+        |  FROM lineitem GROUP BY l_orderkey HAVING round(sum(l_quantity),2) > 300)
+        |SELECT c_name, c_custkey, o_orderkey,
+        |  strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
+        |  o_totalprice, total_qty
+        |FROM big JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin),
+
+    // scalar-agg-max equality filter (the decorrelated Q15 view)
+    "q_tpch_q15" -> graded(Relational.tpchQ15 _,
+      """WITH rev AS (SELECT l_suppkey,
+        |    round(sum(l_extendedprice*(1-l_discount)),2) AS total_revenue
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
+        |    AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'
+        |  GROUP BY l_suppkey)
+        |SELECT s_suppkey, s_name, total_revenue
+        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
+        |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
+        |ORDER BY s_suppkey""".stripMargin),
+
+    // correlated scalar-AVG subquery (per-part average gates the fact)
+    "q_tpch_q17" -> graded(Relational.tpchQ17 _,
+      """SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
+        |FROM lineitem, part
+        |WHERE p_partkey = l_partkey AND p_brand = 'Brand#12' AND p_size < 15
+        |  AND l_quantity < (SELECT 0.2 * avg(l2.l_quantity)
+        |                    FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""".stripMargin),
+
+    // nested semi-join chain + correlated availability scalar
+    "q_tpch_q20" -> graded(Relational.tpchQ20 _,
+      """SELECT s_suppkey, s_name
+        |FROM supplier, nation
+        |WHERE s_suppkey IN (
+        |    SELECT ps.l_suppkey FROM
+        |      (SELECT l_partkey, l_suppkey, sum(l_quantity) AS avail
+        |       FROM lineitem GROUP BY 1, 2) ps
+        |    WHERE ps.l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'red%')
+        |      AND ps.avail > (SELECT 0.5 * sum(l2.l_quantity) FROM lineitem l2
+        |                      WHERE l2.l_partkey = ps.l_partkey
+        |                        AND l2.l_suppkey = ps.l_suppkey
+        |                        AND l2.l_shipdate >= TIMESTAMP '1997-01-01'
+        |                        AND l2.l_shipdate < TIMESTAMP '1998-01-01'))
+        |  AND s_nationkey = n_nationkey AND n_name IN ('NATION_3', 'NATION_7')
+        |ORDER BY s_suppkey""".stripMargin),
+
+    // multi-EXISTS/NOT-EXISTS lineitem self-joins (semi + anti)
+    "q_tpch_q21" -> graded(Relational.tpchQ21 _,
+      """SELECT s_name, count(*) AS numwait
+        |FROM supplier, lineitem l1, orders, nation
+        |WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey
+        |  AND o_orderstatus = 'F'
+        |  AND l1.l_shipdate > o_orderdate + INTERVAL 360 DAY
+        |  AND EXISTS (SELECT 1 FROM lineitem l2
+        |              WHERE l2.l_orderkey = l1.l_orderkey
+        |                AND l2.l_suppkey <> l1.l_suppkey)
+        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
+        |                  WHERE l3.l_orderkey = l1.l_orderkey
+        |                    AND l3.l_suppkey <> l1.l_suppkey
+        |                    AND l3.l_shipdate > o_orderdate + INTERVAL 360 DAY)
+        |  AND s_nationkey = n_nationkey
+        |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 100""".stripMargin),
+
+    // — the remaining 9 stock shapes: full TPC-H 22/22 coverage —
+    // correlated scalar-MIN over the derived supply relation
+    "q_tpch_q2" -> graded(Relational.tpchQ2 _,
+      """WITH supply AS (
+        |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
+        |         min(l_extendedprice / l_quantity) AS ps_supplycost
+        |  FROM lineitem GROUP BY 1, 2)
+        |SELECT round(s_acctbal, 2) AS s_acctbal, s_name, n_name, p_partkey, p_name
+        |FROM part, supply, supplier, nation, region
+        |WHERE p_partkey = ps_partkey AND s_suppkey = ps_suppkey
+        |  AND p_size = 15 AND p_type = 'SMALL'
+        |  AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
+        |  AND r_name = 'EUROPE'
+        |  AND ps_supplycost = (
+        |    SELECT min(s2.ps_supplycost)
+        |    FROM supply s2, supplier sup2, nation n2, region r2
+        |    WHERE s2.ps_partkey = p_partkey AND s2.ps_suppkey = sup2.s_suppkey
+        |      AND sup2.s_nationkey = n2.n_nationkey
+        |      AND n2.n_regionkey = r2.r_regionkey AND r2.r_name = 'EUROPE')
+        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
+        |LIMIT 100""".stripMargin),
+
+    // EXISTS correlated on key + outer date column (semi join)
+    "q_tpch_q4" -> graded(Relational.tpchQ4 _,
+      """SELECT o_orderpriority, count(*) AS order_count
+        |FROM orders
+        |WHERE o_orderdate >= TIMESTAMP '1996-07-01'
+        |  AND o_orderdate < TIMESTAMP '1996-10-01'
+        |  AND EXISTS (SELECT 1 FROM lineitem
+        |              WHERE l_orderkey = o_orderkey
+        |                AND l_shipdate > o_orderdate + INTERVAL 90 DAY)
+        |GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""".stripMargin),
+
+    // bidirectional two-nation trade (nation dim joined twice)
+    "q_tpch_q7" -> graded(Relational.tpchQ7 _,
+      """SELECT supp_nation, cust_nation, l_year, round(sum(volume), 2) AS revenue
+        |FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+        |             CAST(year(l_shipdate) AS INTEGER) AS l_year,
+        |             l_extendedprice * (1 - l_discount) AS volume
+        |      FROM lineitem, orders, supplier, customer, nation n1, nation n2
+        |      WHERE l_orderkey = o_orderkey AND l_suppkey = s_suppkey
+        |        AND o_custkey = c_custkey
+        |        AND s_nationkey = n1.n_nationkey AND c_nationkey = n2.n_nationkey
+        |        AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
+        |          OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
+        |        AND l_shipdate >= TIMESTAMP '1996-01-01'
+        |        AND l_shipdate < TIMESTAMP '1998-01-01') shipping
+        |GROUP BY supp_nation, cust_nation, l_year
+        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin),
+
+    // 7-relation tree + conditional market-share aggregate
+    "q_tpch_q8" -> graded(Relational.tpchQ8 _,
+      """SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
+        |       round(sum(CASE WHEN n2.n_name = 'NATION_3'
+        |                      THEN l_extendedprice * (1 - l_discount)
+        |                      ELSE 0 END), 2) AS nation_volume,
+        |       round(sum(l_extendedprice * (1 - l_discount)), 2) AS total_volume
+        |FROM lineitem, part, orders, customer, supplier,
+        |     nation n1, nation n2, region
+        |WHERE l_partkey = p_partkey AND p_type = 'ECONOMY'
+        |  AND l_orderkey = o_orderkey AND o_custkey = c_custkey
+        |  AND c_nationkey = n1.n_nationkey AND n1.n_regionkey = r_regionkey
+        |  AND r_name = 'AMERICA'
+        |  AND l_suppkey = s_suppkey AND s_nationkey = n2.n_nationkey
+        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
+        |  AND o_orderdate < TIMESTAMP '1998-01-01'
+        |GROUP BY o_year
+        |ORDER BY o_year""".stripMargin),
+
+    // name-sliced profit by nation/year
+    "q_tpch_q9" -> graded(Relational.tpchQ9 _,
+      """SELECT n_name AS nation, CAST(year(o_orderdate) AS INTEGER) AS o_year,
+        |       sum(CAST(round(l_extendedprice * 100) AS BIGINT)
+        |             * (100 - CAST(round(l_discount * 100) AS BIGINT))
+        |           - 600 * CAST(round(p_retailprice * 10) AS BIGINT)
+        |             * CAST(l_quantity AS BIGINT)) / 10000.0 AS sum_profit
+        |FROM lineitem, part, orders, supplier, nation
+        |WHERE l_partkey = p_partkey AND p_name LIKE '%gear%'
+        |  AND l_orderkey = o_orderkey AND l_suppkey = s_suppkey
+        |  AND s_nationkey = n_nationkey
+        |GROUP BY 1, 2
+        |ORDER BY nation, o_year DESC""".stripMargin),
+
+    // grouped agg with scalar-subquery HAVING threshold
+    "q_tpch_q11" -> graded(Relational.tpchQ11 _,
+      """SELECT l_partkey AS ps_partkey, round(sum(l_extendedprice), 2) AS value
+        |FROM lineitem, supplier, nation
+        |WHERE l_suppkey = s_suppkey AND s_nationkey = n_nationkey
+        |  AND n_name = 'NATION_5'
+        |GROUP BY l_partkey
+        |HAVING sum(l_extendedprice) > (
+        |  SELECT sum(l_extendedprice) * 0.001
+        |  FROM lineitem, supplier, nation
+        |  WHERE l_suppkey = s_suppkey AND s_nationkey = n_nationkey
+        |    AND n_name = 'NATION_5')
+        |ORDER BY value DESC, ps_partkey""".stripMargin),
+
+    // outer-join histogram (filter on the join condition)
+    "q_tpch_q13" -> graded(Relational.tpchQ13 _,
+      """SELECT c_count, count(*) AS custdist
+        |FROM (SELECT c_custkey, count(o_orderkey) AS c_count
+        |      FROM customer LEFT OUTER JOIN orders
+        |        ON c_custkey = o_custkey
+        |        AND o_orderpriority <> '4-NOT SPECIFIED'
+        |      GROUP BY c_custkey) c_orders
+        |GROUP BY c_count
+        |ORDER BY custdist DESC, c_count DESC""".stripMargin),
+
+    // distinct-count groups behind a null-aware NOT IN anti join
+    "q_tpch_q16" -> graded(Relational.tpchQ16 _,
+      """SELECT p_brand, p_type, p_size, count(DISTINCT ps_suppkey) AS supplier_cnt
+        |FROM (SELECT DISTINCT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey
+        |      FROM lineitem) supply, part
+        |WHERE p_partkey = ps_partkey
+        |  AND p_brand <> 'Brand#2' AND p_type NOT LIKE 'PROMO%'
+        |  AND p_size IN (5, 11, 17, 23, 29, 35, 41, 47)
+        |  AND ps_suppkey NOT IN (SELECT s_suppkey FROM supplier
+        |                         WHERE s_acctbal < 0)
+        |GROUP BY p_brand, p_type, p_size
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin),
+
+    // scalar-AVG threshold + NOT EXISTS anti join finale
+    "q_tpch_q22" -> graded(Relational.tpchQ22 _,
+      """SELECT cntrycode, count(*) AS numcust, round(sum(c_acctbal), 2) AS totacctbal
+        |FROM (SELECT c_custkey % 10 AS cntrycode, c_acctbal
+        |      FROM customer
+        |      WHERE c_custkey % 10 IN (1, 2, 3, 4, 5, 6, 7)
+        |        AND c_acctbal > (SELECT avg(c_acctbal) FROM customer
+        |                         WHERE c_acctbal > 0.00
+        |                           AND c_custkey % 10 IN (1, 2, 3, 4, 5, 6, 7))
+        |        AND NOT EXISTS (SELECT 1 FROM orders
+        |                        WHERE o_custkey = c_custkey
+        |                          AND o_orderdate >= TIMESTAMP '2000-01-01')) custsale
+        |GROUP BY cntrycode
+        |ORDER BY cntrycode""".stripMargin),
+
+    // SQL LATERAL correlated subquery (Catalyst decorrelates to a join)
+    "q_lateral_join" -> graded(Relational.lateralTopNations _,
+      """SELECT r_name, n_name, bal
+        |FROM region r,
+        |LATERAL (SELECT n_name, round(sum(c_acctbal),2) AS bal
+        |         FROM nation JOIN customer ON c_nationkey=n_nationkey
+        |         WHERE n_regionkey=r.r_regionkey
+        |         GROUP BY n_name ORDER BY bal DESC, n_name LIMIT 2) t
+        |ORDER BY r_name, bal DESC, n_name""".stripMargin),
+
+    // MERGE-style incremental snapshot upsert (full-outer merge dataflow)
+    "q_merge_upsert" -> graded(Relational.mergeUpsert _,
+      """WITH cur AS (SELECT o_custkey AS k, count(*) AS n,
+        |  round(sum(o_totalprice),2) AS v, strftime(max(o_orderdate),'%Y-%m-%d') AS d
+        |  FROM orders WHERE o_orderdate < TIMESTAMP '2001-01-01 00:00:00' GROUP BY o_custkey),
+        |inc AS (SELECT o_custkey AS k, count(*) AS n,
+        |  round(sum(o_totalprice),2) AS v, strftime(max(o_orderdate),'%Y-%m-%d') AS d
+        |  FROM orders WHERE o_orderdate >= TIMESTAMP '2001-01-01 00:00:00' GROUP BY o_custkey)
+        |SELECT coalesce(cur.k, inc.k) AS custkey,
+        |CASE WHEN cur.k IS NULL THEN 'insert'
+        |     WHEN inc.k IS NULL THEN 'keep' ELSE 'update' END AS action,
+        |CAST(coalesce(cur.n,0)+coalesce(inc.n,0) AS BIGINT) AS n_orders,
+        |round(coalesce(cur.v,0)+coalesce(inc.v,0),2) AS total_value,
+        |coalesce(inc.d, cur.d) AS last_order
+        |FROM cur FULL OUTER JOIN inc ON cur.k = inc.k
+        |ORDER BY custkey""".stripMargin),
+
+    // materialized-view maintenance: monthly pre-agg + batch delta
+    // merged by the same full-outer dataflow; == full recompute (spec)
+    // the MV delta-apply re-derived: base + delta monthly aggregates,
+    // full-outer merge, avg derived from the maintained sum/count
+    "q_incremental_agg" -> graded(Relational.incrementalAgg _,
+      """WITH base AS (SELECT strftime(o_orderdate, '%Y-%m') AS month, o_orderstatus AS status,
+        |    count(*) AS n, round(sum(o_totalprice), 2) AS v
+        |  FROM orders WHERE o_orderdate < TIMESTAMP '2001-01-01 00:00:00' GROUP BY 1, 2),
+        |delta AS (SELECT strftime(o_orderdate, '%Y-%m') AS month, o_orderstatus AS status,
+        |    count(*) AS n, round(sum(o_totalprice), 2) AS v
+        |  FROM orders WHERE o_orderdate >= TIMESTAMP '2001-01-01 00:00:00' GROUP BY 1, 2),
+        |merged AS (SELECT coalesce(delta.month, base.month) AS month,
+        |    coalesce(delta.status, base.status) AS status,
+        |    CAST(coalesce(base.n, 0) + coalesce(delta.n, 0) AS BIGINT) AS n_orders,
+        |    round(coalesce(base.v, 0) + coalesce(delta.v, 0), 2) AS total_value
+        |  FROM base FULL OUTER JOIN delta
+        |    ON base.month = delta.month AND base.status = delta.status)
+        |SELECT month, status, n_orders, total_value,
+        |  round(total_value / n_orders, 6) AS avg_value
+        |FROM merged ORDER BY month, status""".stripMargin),
+
+    // degree-oriented triangle counting over the near-dup graph
+    "q_triangles" -> graded(Dedup.triangleCounts _,
+      s"""WITH e AS ($lshPairsSql),
+         |tri AS (SELECT e1.id_a AS a, e1.id_b AS b, e2.id_b AS c
+         |  FROM e e1 JOIN e e2 ON e2.id_a = e1.id_b
+         |  JOIN e e3 ON e3.id_a = e1.id_a AND e3.id_b = e2.id_b)
+         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_triangles
+         |FROM (SELECT a AS doc_id FROM tri
+         |      UNION ALL SELECT b FROM tri
+         |      UNION ALL SELECT c FROM tri)
+         |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+
+    // asymmetric containment join (sub-document duplication)
+    "q_containment" -> graded(Dedup.containmentPairs(_, _),
+      s"""WITH ds AS ($shSql),
+         |sz AS (SELECT doc_id, count(*) AS sz FROM ds GROUP BY doc_id),
+         |inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
+         |  FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id <> b.doc_id
+         |  GROUP BY 1, 2)
+         |SELECT id_a, id_b, CAST(n_common AS BIGINT) AS n_common,
+         |n_common / sa.sz AS containment
+         |FROM inter JOIN sz sa ON sa.doc_id = id_a
+         |WHERE n_common / sa.sz >= 0.8
+         |ORDER BY id_a, id_b""".stripMargin),
+
+    // composite curation cascade (first-failing-rule classification)
+    "q_corpus_filter" -> graded(TextAnalysis.corpusFilter _,
+      s"SELECT doc_id, n_words, reason FROM ($corpusReasonSql) ORDER BY doc_id"),
+
+    // streaming DISTINCT executed by the real engine in APPEND mode
+    "q_stream_distinct" -> graded(graft.streaming.EventStreams.streamedDistinct _,
+      """SELECT DISTINCT user_id, event_type FROM events
+        |ORDER BY user_id, event_type""".stripMargin),
+
+    // APPEND-mode closed sessions (flatMapGroupsWithState) under the gate
+    // finite-replay emission rules (see EventStreams.streamedSessions):
+    // every non-final session per user, plus final sessions whose
+    // event-time timeout (last_ts + gap) the terminal watermark
+    // (max ts - delay) has passed. Money parity: the state function
+    // accumulates integer cents per event with half-away-from-zero
+    // rounding (DuckDB round()'s mode — exact for negative half-cents
+    // too), so the oracle sums per-event rounded cents — round-of-sum
+    // would be a DIFFERENT number, not just a different column name.
+    "q_stream_sessions" -> graded(graft.streaming.EventStreams.streamedSessions _,
+      """WITH flagged AS (SELECT user_id, ts, value,
+        |  CASE WHEN lag(ts) OVER w IS NULL
+        |       OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_s
+        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+        |sess AS (SELECT user_id, ts, value,
+        |  sum(new_s) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
+        |  FROM flagged),
+        |agg AS (SELECT user_id, max(ts) AS sess_last, count(*) AS n_events,
+        |  CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS total_cents
+        |  FROM sess GROUP BY user_id, sid),
+        |agg2 AS (SELECT *, max(sess_last) OVER (PARTITION BY user_id) AS user_last FROM agg),
+        |wm AS (SELECT max(ts) - INTERVAL 30 MINUTE AS w FROM events)
+        |SELECT user_id, CAST(n_events AS BIGINT) AS n_events, total_cents,
+        |  strftime(sess_last, '%Y-%m-%d %H:%M:%S') AS last_ts
+        |FROM agg2, wm
+        |WHERE sess_last < user_last OR sess_last + INTERVAL 30 MINUTE < w
+        |ORDER BY user_id, last_ts""".stripMargin),
+
+    // the same sessionizer under the replay clock (no timeout, whole
+    // history in the single AvailableNow batch): every session closes
+    // inline, so the stream shares q_sessions' batch oracle exactly
+    // the replay-clock streaming twin closes every session inline, so
+    // it reproduces the batch sessionization row-for-row
+    "q_stream_sessions_gated" -> graded(graft.streaming.EventStreams.streamedSessionsGated(_, _),
+      sessionsSql),
+
+    // per-user running-moments 3σ outlier flags, all-long arithmetic
+    // the 3σ detector re-derived over cumulative windows: the
+    // division-free test (n·x − Σx)² > 9·(n·Σx² − (Σx)²) is exact
+    // long arithmetic on both engines, and the (ts, event_id) order is
+    // the same total order the state function sorts each batch by;
+    // shared by the stream and its batch backfill twin
+    "q_stream_anomaly" -> graded(graft.streaming.EventStreams.streamedAnomaly _, anomalySql),
+    // the EWMA smoother as per-key O(K) stream state; finite replay
+    // reproduces the batch lag() window exactly → shares its oracle
+    // the streaming state twin emits the identical exact rows
+    "q_stream_ewma" -> graded(graft.streaming.EventStreams.streamedEwma _, ewmaSql),
+
+    // incremental MinHash ingest: signatures computed as documents
+    // arrive; shares the batch signature oracle (bit-identical result)
+    // incremental ingest emits each document's final signature exactly
+    // once (all of a doc's shingles ride its own row), so the streamed
+    // result is bit-identical to the batch signature table
+    "q_stream_minhash" -> graded(graft.streaming.DocumentStreams.streamedMinhashSignatures _,
+      s"SELECT * FROM ($sigSql) ORDER BY doc_id"),
+
+    // the streaming near-dup DECISION join (band-bucket state store);
+    // emissions depend only on the document set, so a finite replay
+    // reproduces the batch pair set and shares its full-hash oracle
+    // streaming arrivals joined against the accumulated band-bucket
+    // store emit exactly the batch pair set (first-shared-band rule
+    // dedups across buckets; see DocumentStreams.streamedNearDupPairs)
+    "q_stream_neardup" -> graded(graft.streaming.DocumentStreams.streamedNearDupPairs _,
+      s"$lshPairsSql ORDER BY id_a, id_b"),
+
+    // the TTL-bounded variant GRADED: deterministic replay clock
+    // (ts = base + doc_id s, one micro-batch per 100-id chunk) makes
+    // the watermark-relative horizon pure doc_id arithmetic the oracle
+    // re-derives — the production memory bound, oracle-graded
+    // TTL variant under the deterministic replay clock (ts = base +
+    // doc_id s, one micro-batch per TtlChunk-wide id range, watermark
+    // delay 0): a member a is still in state when b arrives iff
+    // ts(a) >= wm - horizon, and wm while b's chunk processes is the
+    // max doc_id of EARLIER chunks (in seconds) — so the horizon is
+    // the pure integer predicate below. First chunk: wm = 0 → the
+    // coalesce keeps everything, matching the engine's initial
+    // watermark.
+    "q_stream_neardup_ttl" -> graded(graft.streaming.DocumentStreams.streamedNearDupPairsTtl _, {
+      val floor = graft.streaming.DocumentStreams.TtlChunk
+      val hSec = graft.streaming.DocumentStreams.TtlHorizonMs / 1000
+      s"""WITH cw AS (SELECT greatest($floor, (max(doc_id)+5)//5) AS w FROM documents),
+         |pairs AS ($lshPairsSql),
+         |chmax AS (SELECT doc_id // (SELECT w FROM cw) AS ch, max(doc_id) AS mx
+         |  FROM documents GROUP BY 1),
+         |prevm AS (SELECT ch, max(mx) OVER (ORDER BY ch
+         |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prevmax
+         |  FROM chmax)
+         |SELECT id_a, id_b, est_jaccard FROM pairs
+         |JOIN prevm ON id_b // (SELECT w FROM cw) = prevm.ch
+         |WHERE id_a >= coalesce(prevm.prevmax, id_a) - $hSec
+         |ORDER BY id_a, id_b""".stripMargin
+    }),
+
+    // stream-stream interval join under the gate (inner-join emission
+    // is not watermark-gated, so finite replay = the batch join)
+    "q_stream_attribution" -> graded(graft.streaming.EventStreams.streamedAttribution _,
+      """SELECT p.event_id AS purchase_id, p.user_id AS user_id,
+        |  c.event_id AS click_id,
+        |  strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts, p.value AS value
+        |FROM events p JOIN events c
+        |  ON p.event_type = 'purchase' AND c.event_type = 'click'
+        |  AND c.user_id = p.user_id
+        |  AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 1 HOUR
+        |ORDER BY purchase_id, click_id""".stripMargin),
+
+    // stream-STATIC join under the gate: eval docs stream against the
+    // static train vocabulary (stateless join + Complete-mode per-doc
+    // agg, so finite replay = the batch decontamination scan)
+    // the stream-static twin emits exactly the batch scan's rows
+    // (stateless join, Complete-mode agg) — same oracle proves it
+    "q_stream_decontamination" -> graded(graft.streaming.DocumentStreams.streamedDecontamination _,
+      decontaminationSql),
+
+    // deployed-tokenizer stream: rules trained batch-side, applied as a
+    // stateless per-doc projection (no state, no shuffle); shares
+    // q_bpe_tokenize's oracle
+    // stateless streaming application of the same trained rules —
+    // identical per-doc counts, same oracle
+    "q_stream_bpe_tokenize" -> graded(graft.streaming.DocumentStreams.streamedBpeTokenize _,
+      bpeTokenizeSql),
+
+    // deployed-decoder stream: REAL ImageIO decode + perceptual hash as
+    // a stateless streaming projection; shares q_image_ahash's oracle
+    // stateless streaming application of the same decode+hash — same
+    // per-doc rows, same oracle
+    "q_stream_image_ahash" -> graded(graft.streaming.DocumentStreams.streamedImageAhash _,
+      imageAhashSql),
+
+    // stateless streaming acoustic fingerprint (shares the batch
+    // entry's oracle — replay == batch, real RIFF parse on the stream)
+    // finite replay == batch: the streaming twin shares the oracle
+    "q_stream_audio_fingerprint" -> graded(
+      graft.streaming.DocumentStreams.streamedAudioFingerprint _,
+      s"""WITH $audioFpCteSql
+         |SELECT doc_id, n_samples, afp FROM afv
+         |ORDER BY doc_id""".stripMargin),
+
+    // the WIDE bandable key at arrival time (shares the wide batch
+    // oracle — what a streaming near-dup index would actually ingest)
+    // finite replay == batch: the wide streaming twin shares the oracle
+    "q_stream_audio_fingerprint_wide" -> graded(
+      graft.streaming.DocumentStreams.streamedAudioFingerprintWide _,
+      s"""WITH $audioFpWideCteSql
+         |SELECT doc_id, n_samples, afp_hi, afp_lo FROM afw
+         |ORDER BY doc_id""".stripMargin),
+
+    // the SERVING shape of the delta media family: new images stream
+    // in, probe the STORED band index (stream-static join, zero state,
+    // micro-batch-invariant), near-dups vs the corpus emitted on
+    // arrival; oracle = the full pair list cut to new-vs-existing
+    // the streaming serving twin probes the STORED side only, so its
+    // contract is the new-vs-existing cut (never new_new — arrivals
+    // pair with the frozen corpus, not each other)
+    "q_stream_image_neardup_delta" -> graded(
+      graft.streaming.DocumentStreams.streamedDeltaImageNeardup _,
+      s"""WITH pairs AS (SELECT * FROM ($imageNeardupSql))
+         |SELECT id_a, id_b, dist FROM pairs
+         |WHERE (id_a % 10 >= 8) <> (id_b % 10 >= 8)
+         |ORDER BY id_a, id_b""".stripMargin),
+
+    // the acoustic serving twin: same stream-static band-probe engine
+    // on the wide fingerprint computed at arrival time
+    // the acoustic serving twin's contract is the same cut on the
+    // audio pair list
+    "q_stream_audio_neardup_delta" -> graded(
+      graft.streaming.DocumentStreams.streamedDeltaAudioNeardup _,
+      s"""WITH pairs AS (SELECT * FROM ($audioNeardupSql))
+         |SELECT id_a, id_b, dist FROM pairs
+         |WHERE (id_a % 10 >= 8) <> (id_b % 10 >= 8)
+         |ORDER BY id_a, id_b""".stripMargin),
+
+    // MERGE landed on storage: partitioned overwrite + pruned read-back
+    "q_merge_roundtrip" -> graded(graft.sources.Sinks.mergeRoundTrip _,
+      """WITH cur AS (SELECT o_custkey AS k, count(*) AS n,
+        |  round(sum(o_totalprice),2) AS v, strftime(max(o_orderdate),'%Y-%m-%d') AS d
+        |  FROM orders WHERE o_orderdate < TIMESTAMP '2001-01-01 00:00:00' GROUP BY o_custkey),
+        |inc AS (SELECT o_custkey AS k, count(*) AS n,
+        |  round(sum(o_totalprice),2) AS v, strftime(max(o_orderdate),'%Y-%m-%d') AS d
+        |  FROM orders WHERE o_orderdate >= TIMESTAMP '2001-01-01 00:00:00' GROUP BY o_custkey)
+        |SELECT cur.k AS custkey,
+        |CAST(cur.n + inc.n AS BIGINT) AS n_orders,
+        |round(cur.v + inc.v, 2) AS total_value,
+        |inc.d AS last_order
+        |FROM cur JOIN inc ON cur.k = inc.k
+        |ORDER BY custkey""".stripMargin),
   )
 }

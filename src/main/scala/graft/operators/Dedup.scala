@@ -211,9 +211,9 @@ object Dedup {
     * as the Jaccard verification join); above it, an unbounded corpus
     * must shuffle, and broadcasting would be the wrong call.
     */
-  private[graft] def lshPairsFromSignatures(sig: DataFrame,
-                                            multiProbe: Boolean = false,
-                                            minEst: Double = 0.5): DataFrame = {
+  private def lshPairsFromSignatures(sig: DataFrame,
+                                     multiProbe: Boolean = false,
+                                     minEst: Double = 0.5): DataFrame = {
     // Persistence is a CONTRACT, not a convention: sig feeds three
     // branches (band keys + both verification sides) and this method
     // count()s it — an unpersisted frame would recompute the full
@@ -1666,12 +1666,12 @@ object Dedup {
     res.localCheckpoint().orderBy(col("id_a"), col("id_b"))
   }
 
-  /** The delta-probed band-bucket candidate join, factored out so the
-    * plan audit can assert the probe side is is_new-filtered BELOW the
-    * join on the pre-checkpoint dataflow (PlanAuditSpec).
+  /** The delta-probed band-bucket candidate join: the probe side is
+    * is_new-filtered BELOW the join (PlanAuditSpec audits it in the
+    * output pin of q_delta_dedup).
     */
-  private[graft] def deltaCandidates(sig: DataFrame,
-                                     newness: DataFrame): DataFrame = {
+  private def deltaCandidates(sig: DataFrame,
+                              newness: DataFrame): DataFrame = {
     val keyed = bandKeys(sig).join(newness, "doc_id")
     val all = keyed.as("a")
     val delta = keyed.filter(col("is_new")).as("d")

@@ -152,7 +152,7 @@ object Similarity {
   }
 
   /** IVF approximate top-k with a REAL coarse quantizer: the gated
-    * fixed-point Lloyd ([[ivfExactAssignments]]) over the corpus, cell
+    * fixed-point Lloyd ([[ivfFitCents]]) over the corpus, cell
     * count scaling ~√N with the corpus (the standard IVF sizing:
     * balances cells scanned per probe against vectors per cell), and
     * MULTI-PROBE search — each query scans its `probes` nearest cells,
@@ -178,12 +178,9 @@ object Similarity {
     * Recall < 1.0 by construction; SimilaritySpec holds the floor at
     * 0.8 recall@5.
     */
-  def ivfKnn(spark: SparkSession, dir: String, probes: Int = 3): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val (corpus, probeCells) = ivfAssignments(spark, e, probes,
-      Some(denseCountDir(spark, dir, "ivf sizing")))
-    ivfSearch(corpus, probeCells)
-  }
+  def ivfKnn(spark: SparkSession, dir: String, probes: Int = 3): DataFrame =
+    ivfFitSearch(spark, Tables.embeddings(spark, dir),
+      ivfCells(denseCountDir(spark, dir, "ivf sizing")), probes)
 
   /** IVF search over any (vec_id, embedding: array<float>) relation —
     * the quantizer-quality spec runs this on clustered data, where IVF
@@ -192,10 +189,8 @@ object Similarity {
     * probed cell holds a random ~1/cells of the true neighbors; that
     * is a property of the DATA, not the quantizer.)
     */
-  def ivfKnnOn(spark: SparkSession, e: DataFrame, probes: Int = 3): DataFrame = {
-    val (corpus, probeCells) = ivfAssignments(spark, e, probes)
-    ivfSearch(corpus, probeCells)
-  }
+  def ivfKnnOn(spark: SparkSession, e: DataFrame, probes: Int = 3): DataFrame =
+    ivfFitSearch(spark, e, ivfCells(e.count()), probes)
 
   /** Ceiling on the √N IVF cell count: centroids are collected,
     * broadcast model state (cells · dim · 8 B — 64 MB at this cap for
@@ -207,18 +202,7 @@ object Similarity {
     */
   val IvfMaxCells = 131072
 
-  /** The √N-sized quantizer's two products: the corpus tagged with its
-    * coarse cell (`n_id`, `embedding`, `cell`) and the per-query probe
-    * plan (`q_id`, `q_emb`, `cell` — one row per probed cell). Shared
-    * by the in-memory search and the materialized layout. The one
-    * sizing job (count → [[dedupCells]] capped at [[IvfMaxCells]]) is
-    * the only work before the shared Lloyd chain.
-    */
-  private def ivfAssignments(spark: SparkSession, e: DataFrame,
-                             probes: Int,
-                             precountedN: Option[Long] = None): (DataFrame, DataFrame) =
-    ivfExactAssignments(spark, e, probes, ivfCells(precountedN.getOrElse(e.count())))
-
+  /** √N cell sizing: [[dedupCells]] capped at [[IvfMaxCells]]. */
   private def ivfCells(n: Long): Int = math.min(IvfMaxCells, dedupCells(n))
 
   /** Cell-partitioned layout write with CONSOLIDATED files (guide §6
@@ -316,17 +300,24 @@ object Similarity {
     * the layout are pure functions of (corpus, cells), so their slots
     * are named by `cells`: both are written once per corpus version
     * and served ([[ivfServe]]) without refitting — the same rows as
-    * the in-memory fit ([[ivfExactAssignments]]), whose quantizer,
+    * the in-memory fit ([[ivfFitSearch]]), whose quantizer,
     * assignment and probe plan they store.
     */
   private def ivfKnnPruned(spark: SparkSession, dir: String, cells: Int,
       probes: Int): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val cents = graft.sources.Scratch.storedOnce(spark, dir, "embeddings",
-      s"ivf_k${cells}_centroids")(ivfFitCents(spark, e, cells))
-    ivfServe(spark, dir, cents,
-      Seq(cellLayoutOnce(spark, dir, s"ivf_k$cells")(ivfAssignTo(cents, e))), probes)
+    val cents = ivfStoredCents(spark, dir, cells)
+    ivfServe(spark, dir, cents, Seq(cellLayoutOnce(spark, dir, s"ivf_k$cells")(
+      ivfAssignTo(cents, Tables.embeddings(spark, dir)))), probes)
   }
+
+  /** The full-corpus `cells`-cell centroids, fitted once per corpus
+    * version ([[ivfFitCents]]) and stored in the `ivf_k${cells}_centroids`
+    * slot every pruned tier over that fit serves from.
+    */
+  private def ivfStoredCents(spark: SparkSession, dir: String,
+      cells: Int): DataFrame =
+    graft.sources.Scratch.storedOnce(spark, dir, "embeddings",
+      s"ivf_k${cells}_centroids")(ivfFitCents(spark, Tables.embeddings(spark, dir), cells))
 
   /** Cell count for [[ivfKnnExactOn]]. Fixed (not √N) so the DuckDB
     * twin's seed filter is a plain literal; the √N-sized production
@@ -350,9 +341,9 @@ object Similarity {
     * Cosine ranks neighbors, so cells must partition the unit sphere:
     * vectors are L2-normalized in double arithmetic BEFORE the 2^20
     * fixed-point quantization (for unit vectors ‖x−y‖² = 2−2cosθ, so
-    * L2 Lloyd over units IS angular clustering — the [[ivfAssignments]]
-    * note), with the zero-vector guard keeping all-zero embeddings
-    * zero instead of NaN-poisoning the fit.
+    * L2 Lloyd over units IS angular clustering), with the zero-vector
+    * guard keeping all-zero embeddings zero instead of NaN-poisoning
+    * the fit.
     *
     * Scale shape is [[ivfKnn]]'s: centroids are O(k·dim) collected
     * model state broadcast to both the corpus assignment and the probe
@@ -363,15 +354,21 @@ object Similarity {
   def ivfKnnExact(spark: SparkSession, dir: String, probes: Int = 3): DataFrame =
     ivfKnnExactOn(spark, Tables.embeddings(spark, dir), probes)
 
-  def ivfKnnExactOn(spark: SparkSession, e: DataFrame, probes: Int = 3): DataFrame = {
-    val (corpus, probeCells) = ivfExactAssignments(spark, e, probes)
-    ivfSearch(corpus, probeCells)
+  def ivfKnnExactOn(spark: SparkSession, e: DataFrame, probes: Int = 3): DataFrame =
+    ivfFitSearch(spark, e, IvfExactCells, probes)
+
+  /** In-memory IVF over `cells` cells, from the same three steps the
+    * stored tiers split between ingest and serving: fit the quantizer
+    * ([[ivfFitCents]]), tag the corpus with its cell ([[ivfAssignTo]]),
+    * plan each query's probed cells ([[ivfProbePlan]]); then search.
+    */
+  private def ivfFitSearch(spark: SparkSession, e: DataFrame, cells: Int,
+      probes: Int): DataFrame = {
+    val cents = ivfFitCents(spark, e, cells)
+    ivfSearch(ivfAssignTo(cents, e),
+      ivfProbePlan(e.filter(col("vec_id") < NumQueries), cents, probes))
   }
 
-  /** The deterministic quantizer's two products — tagged corpus and
-    * per-query probe plan — shared by the in-memory search and the
-    * materialized layout (the [[ivfAssignments]] split, Lloyd edition).
-    */
   /** Unit vectors in double arithmetic (sequential element-order fold,
     * the cosine-parity convention) — the row-local normalization every
     * IVF tier quantizes from; shared by the full fit and the delta
@@ -387,32 +384,6 @@ object Similarity {
         transform(col("embedding"), x => x.cast("double")))
         .otherwise(transform(col("embedding"), x => x.cast("double") / col("nrm")))
         .as("embedding"))
-
-  private def ivfExactAssignments(spark: SparkSession, e: DataFrame,
-      probes: Int, cells: Int = IvfExactCells): (DataFrame, DataFrame) = {
-    // quantizedX fixes the unit vectors to 2^20 longs + exact xv
-    // doubles for the Lloyd chain
-    val q = quantizedX(unitized(e))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents = lloydRounds(spark, q, cells)
-    // cell as INT on both sides: the materialized layout re-infers the
-    // partition column as IntegerType, and a mismatched join/filter
-    // type would push the cast onto the attribute and defeat pruning
-    val corpus = e.select(col("vec_id").as("n_id"), col("embedding"))
-      .join(assignStep(q, cents)
-        .select(col("vec_id").as("n_id"),
-          col("cluster").cast("int").as("cell")), "n_id")
-    val probeW = Window.partitionBy(col("q_id")).orderBy(col("d"), col("cid"))
-    val probeCells = q.filter(col("vec_id") < NumQueries)
-      .crossJoin(broadcast(cents))
-      .select(col("vec_id").as("q_id"), col("cid"),
-        sqDistD(col("xv"), col("cent")).as("d"))
-      .withColumn("pr", row_number().over(probeW))
-      .filter(col("pr") <= probes)
-      .join(e.select(col("vec_id").as("q_id"), col("embedding").as("q_emb")), "q_id")
-      .select(col("q_id"), col("q_emb"), col("cid").cast("int").as("cell"))
-    (corpus, probeCells)
-  }
 
   /** The graded tier's 100 TB SERVING LAYOUT: [[ivfKnnExact]]'s corpus
     * WRITTEN partitioned by its deterministic Lloyd cell, probes
@@ -458,6 +429,9 @@ object Similarity {
   /** Stateless cell assignment against FIXED centroids — the
     * q_stream_kmeans kernel as a corpus operator: one broadcast join,
     * map-only, the entire per-batch ingest cost of the maintained IVF.
+    * The cell is an INT: a stored layout re-infers its partition column
+    * as IntegerType, and a mismatched join or filter type would push a
+    * cast onto the attribute and defeat pruning.
     */
   private[graft] def ivfAssignTo(cents: DataFrame, e: DataFrame): DataFrame =
     e.select(col("vec_id").as("n_id"), col("embedding"))
@@ -1503,11 +1477,10 @@ object Similarity {
     topM.unionByName(ringEdges(e, n)).dropDuplicates("src", "dst")
   }
 
-  /** One expand-score-prune round of the beam search, factored out so
-    * the plan audit can assert the join sides on the pre-checkpoint
-    * dataflow (the loop checkpoints each round's result).
+  /** One expand-score-prune round of the beam search (the loop pins
+    * each round's result; PlanAuditSpec audits the pins' join sides).
     */
-  private[graft] def beamExpand(edges: DataFrame, corpus: DataFrame,
+  private def beamExpand(edges: DataFrame, corpus: DataFrame,
       queries: DataFrame, beam: DataFrame): DataFrame = {
     val score = cosine(col("q_emb"), col("embedding")).as("sim")
     val rankW = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("n_id"))
@@ -1639,21 +1612,21 @@ object Similarity {
       cells: Int, probes: Int): DataFrame = {
     import graft.functions.VectorFunctions.{int8Dot, int8Pack}
     val e = Tables.embeddings(spark, dir)
-    val (corpus, probeCells0) = ivfExactAssignments(spark, e, probes, cells)
+    val cents = ivfStoredCents(spark, dir, cells)
     // tiny (queries × probes rows), consumed thrice (cell collect,
-    // query pack, coarse join) with the corpus pass in its lineage
-    val probeCells = probeCells0.localCheckpoint()
+    // query pack, coarse join) with a normalization pass in its lineage
+    val probeCells = ivfProbePlan(e.filter(col("vec_id") < NumQueries), cents, probes)
+      .localCheckpoint()
     val scaleCol = aggregate(col("embedding"), lit(0.0),
       (acc, v) => greatest(acc, abs(v.cast("double")))) / 127.0
     val normCol = sqrt(aggregate(col("embedding"), lit(0.0),
       (acc, v) => acc + v.cast("double") * v.cast("double")))
-    val packed = corpus
-      .withColumn("scale", scaleCol)
-      .select(col("n_id"), int8Pack(col("embedding"), col("scale")).as("qb"),
-        col("scale"), normCol.as("nrm"), col("cell"))
     // the packed table is a pure function of (corpus, cells)
     val layout = prunedLayouts(probeCells, Seq(graft.sources.Scratch.readParquetOnce(
-      spark, cellLayoutOnce(spark, dir, s"ivf_k${cells}_int8")(packed))))
+      spark, cellLayoutOnce(spark, dir, s"ivf_k${cells}_int8")(ivfAssignTo(cents, e)
+        .withColumn("scale", scaleCol)
+        .select(col("n_id"), int8Pack(col("embedding"), col("scale")).as("qb"),
+          col("scale"), normCol.as("nrm"), col("cell"))))))
     // query-side pack: the query's own scale/norm are constant per
     // q_id, so dropping them from qsim is rank-invariant (same
     // shortcut quantizedKnnOn takes)
@@ -1689,7 +1662,7 @@ object Similarity {
   /** The IVF-PQ-style composition at the fixed [[IvfExactCells]] cell
     * count: int8 coarse scoring inside each query's probed cells of a
     * materialized packed layout — [[quantizedIvfKnn]]'s exact shape
-    * and quantizer ([[ivfExactAssignments]]), differing only in the
+    * and quantizer ([[ivfStoredCents]]), differing only in the
     * literal-k sizing; every stage (cells, probe plan, int8 pack via
     * Math.round = floor(x+0.5), integer dot, exact rerank) is a pure
     * function DuckDB re-derives. The two 100 TB savings still compose: probes/cells of
@@ -1908,7 +1881,7 @@ object Similarity {
     * Centroid selection is DETERMINISTIC (the first [[dedupCells]]
     * vectors by id) rather than fitted, so the oracle replicates the
     * assignment exactly; cell count scales ~√N with the corpus — the
-    * count() is O(1) probe metadata, same class as [[ivfAssignments]]'
+    * count() is O(1) probe metadata, same class as [[ivfKnnOn]]'s
     * sizing scan — keeping the within-cell self-join ~N^1.5 total at
     * any corpus size. The centroid table stays a broadcast-safe k·dim
     * floats (√N rows even at 10^12 vectors is ~10^6 · 256 B ≈ 256 MB;

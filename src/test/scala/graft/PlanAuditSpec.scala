@@ -88,23 +88,16 @@ class PlanAuditSpec extends AnyFunSuite with SparkSessionTestWrapper
   test("LSH verification join: both signature sides broadcast-pinned below the byte gate") {
     // round 2's unpinned plan let AQE shuffle the 65-long signature
     // payload to the candidates (the measured 4x swing on the _xx twin);
-    // the fix pins broadcast by estimated bytes — guard it structurally.
-    // (the operator checkpoints eagerly, so audit the pre-checkpoint
-    // builder directly with a persisted signature frame)
-    import graft.operators.Dedup
-    import org.apache.spark.sql.functions.col
-    spark.catalog.clearCache()
-    val docs = graft.tables.Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text"))
-    val sig = Dedup.minhashSignaturesUnsorted(docs, prodHash = true)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val plan = Dedup.lshPairsFromSignatures(sig)
-        .queryExecution.executedPlan.toString
+    // the fix pins broadcast by estimated bytes — guard it structurally
+    // on the graded entry's pin that holds the verification join
+    val verify = pinsOf(SparkEntry.queries("q_minhash_lsh_pairs_xx")(spark, sfDir))
+      .map(ran).filter(_.contains("est_jaccard"))
+    assert(verify.nonEmpty, "no pin holds the verification join")
+    verify.foreach { plan =>
       val nBroadcast = plan.linesIterator.count(_.contains("BroadcastHashJoin"))
       assert(nBroadcast >= 2,
         s"verification joins not broadcast-pinned ($nBroadcast found):\n${plan.take(1500)}")
-    } finally { sig.unpersist(); () }
+    }
   }
 
   test("q_exists_subquery: EXISTS decorrelated to a semi join, no nested re-execution") {
@@ -443,57 +436,33 @@ class PlanAuditSpec extends AnyFunSuite with SparkSessionTestWrapper
   }
 
   test("delta dedup: the band candidate join probes an is_new-filtered side") {
-    import graft.operators.Dedup
-    import graft.functions.TextFunctions.md5Hash32
-    import org.apache.spark.sql.functions.{col, lit, pmod}
-    import org.apache.spark.storage.StorageLevel
-    val docs = graft.tables.Tables.documents(spark, sfDir)
-    // checkpointed as in production — without it Catalyst pushes the
-    // is_new predicate below the aliasing projection and rewrites it
-    // in md5 terms, which is the same probe-side reduction
-    val newness = docs.select(col("doc_id"),
-      (pmod(md5Hash32(col("text")), lit(10)) >= 8).as("is_new"))
-      .localCheckpoint()
-    val sig = Dedup.minhashSignaturesUnsorted(docs, prodHash = false)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val cand = Dedup.deltaCandidates(sig, newness)
-      cand.collect()
-      val plan = cand.queryExecution.executedPlan.toString
-      // the incremental property in the PHYSICAL plan: one join input
-      // is reduced to the new batch by an is_new filter before the
-      // band join, so candidate work scales with |delta|, not |corpus|
-      assert(plan.linesIterator.exists(l =>
-          l.contains("Filter") && l.contains("is_new")),
-        s"no is_new filter below the band join:\n${plan.take(1500)}")
-      assert(!plan.contains("CartesianProduct"), plan.take(800))
-    } finally { sig.unpersist(); () }
+    // the incremental property in the PHYSICAL plan of the graded
+    // entry's output pin: one join input is reduced to the new batch
+    // by an is_new filter before the band join, so candidate work
+    // scales with |delta|, not |corpus|
+    val out = pinsOf(SparkEntry.queries("q_delta_dedup")(spark, sfDir))
+      .map(ran).filter(_.contains("pair_type"))
+    assert(out.size === 1, s"${out.size} pins hold the output pairs")
+    val plan = out.head
+    assert(plan.linesIterator.exists(l =>
+        l.contains("Filter") && l.contains("is_new")),
+      s"no is_new filter below the band join:\n${plan.take(1500)}")
+    assert(!plan.contains("CartesianProduct"), plan.take(800))
   }
 
   test("graph-ANN beam search: per-hop joins broadcast the beam, never the corpus") {
-    import graft.operators.Similarity
-    import org.apache.spark.sql.functions.{col, lit}
-    import org.apache.spark.storage.StorageLevel
-    val e = graft.tables.Tables.embeddings(spark, sfDir)
-    val edges = Similarity.graphAnnEdges(spark, e).persist(StorageLevel.MEMORY_AND_DISK)
-    val corpus = e.select(col("vec_id").as("n_id"), col("embedding"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val queries = e.filter(col("vec_id") < Similarity.NumQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val beam = corpus.filter(col("n_id") < Similarity.GraphEntries)
-        .crossJoin(queries).select(col("q_id"), col("n_id"), lit(0.0).as("sim"))
-        .localCheckpoint()
-      val hop = Similarity.beamExpand(edges, corpus, queries, beam)
-      hop.collect()
-      val plan = hop.queryExecution.executedPlan.toString
+    import graft.operators.Similarity.GraphHops
+    // the graded entry pins each hop's beam; the hops are its last pins
+    val pins = pinsOf(SparkEntry.queries("q_knn_graph")(spark, sfDir)).map(ran)
+    assert(pins.size > GraphHops, s"${pins.size} pins for $GraphHops hops")
+    pins.takeRight(GraphHops).foreach { plan =>
       assert(!plan.contains("CartesianProduct"), s"cartesian in:\n${plan.take(800)}")
       // the tiny beam (queries x beam-width rows) must be the broadcast
       // side; shuffling the edge or corpus table per hop would be the
       // wrong side at corpus scale
       assert(plan.linesIterator.count(_.contains("BroadcastHashJoin")) >= 2,
         s"beam joins not broadcast:\n${plan.take(1500)}")
-    } finally { edges.unpersist(); corpus.unpersist(); () }
+    }
   }
 
   test("q_pipeline_e2e: stages read the persisted frames, never re-scan the corpus") {

@@ -4,8 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Registry consistency: every oracle references a registered query,
   * and the set of rows-only queries (no oracle) is exactly the
-  * documented approximate / non-portable-hash set — a typo in either
-  * map would otherwise silently drop a query from the driver's grading.
+  * documented approximate / non-portable-hash set — an entry registered
+  * rows-only by mistake would otherwise silently drop a query from the
+  * oracle gate.
   */
 class RegistrySpec extends AnyFunSuite {
 

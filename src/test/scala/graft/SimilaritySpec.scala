@@ -135,8 +135,10 @@ class SimilaritySpec extends AnyFunSuite with SparkSessionTestWrapper {
       jobsIn(s)(SparkEntry.queries(q)(s, sfDir))
     }
     val delta = warmJobs("q_delta_knn_ivf")
-    val exact = warmJobs("q_knn_ivf_exact_pruned")
-    assert(exact <= delta, s"warm exact-pruned build ran $exact jobs, delta IVF $delta")
+    Seq("q_knn_ivf_exact_pruned", "q_knn_quantized_ivf", "q_knn_quantized_ivf_exact").foreach { q =>
+      val warm = warmJobs(q)
+      assert(warm <= delta, s"warm $q build ran $warm jobs, delta IVF $delta")
+    }
   }
 
   test("pqKnn: recall@5 on clustered data (codebook quality) and determinism") {

@@ -14,8 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[graft.sources.Scratch.once]]), and operators store artifacts only
   * through the slot policy and the commit chain
   * ([[graft.sources.Scratch.slotOnce]], [[graft.sources.Commits.chain]]),
-  * and every operator has one code path: no switch turns its pins off
-  * (plan audits read the pins' executed plans, [[graft.plan.PinPlans]]).
+  * every operator has one code path: no switch turns its pins off
+  * (plan audits read the pins' executed plans, [[graft.plan.PinPlans]]),
+  * and every query is named once, in the one registry that pairs its
+  * builder with its oracle ([[SparkEntry]]).
   */
 class StructureSpec extends AnyFunSuite {
   private lazy val sources: Seq[(Path, String)] = {
@@ -54,6 +56,11 @@ class StructureSpec extends AnyFunSuite {
     assert(switches.isEmpty, switches)
     val twins = sitesOf(""""x_\w+"""").filter(_.contains("ExplainOne.scala"))
     assert(twins.isEmpty, twins)
+  }
+
+  test("one query registry: SparkEntry names each query once") {
+    val keys = sitesOf("""^\s*"q_\w+"\s*->""").filter(_.contains("SparkEntry.scala"))
+    assert(keys.size === SparkEntry.queries.size, keys.take(5))
   }
 
   test("no state keyed by an identity hash") {
