@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Multimodal}
 import graft.functions.TextFunctions.{charShingles, md5Hash32, normalized, rollingFingerprint}
 
 /** Streaming surface over documents-shaped data: incremental ingest of
@@ -83,6 +83,11 @@ object DocumentStreams {
     if (narrow) df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     else df
 
+  /** [[streamedDocs]] widened on the batch probe of the same file. */
+  private def widenedDocs(spark: SparkSession, dir: String): DataFrame =
+    widenStream(streamedDocs(spark, dir),
+      graft.tables.Tables.documentsNarrow(spark, dir))
+
   /** Incremental MinHash ingest under the driver gate: the SAME
     * per-row signature expression as the batch operator
     * ([[Dedup.minhashSignatureArray]]) executed as a real StreamingQuery
@@ -96,22 +101,13 @@ object DocumentStreams {
     * band-bucket store ([[streamedNearDupPairs]]) as they land.
     */
   def streamedMinhashSignatures(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val unpack = (0 until Dedup.NumHashes).map(i =>
       element_at(col("sig"), i + 1).as(s"mh$i"))
-    val sig = widenStream(streamedDocs(spark, dir),
-      graft.tables.Tables.documentsNarrow(spark, dir))
+    val sig = widenedDocs(spark, dir)
       .select(col("doc_id"),
         Dedup.minhashSignatureArray(col("text"), prodHash = false).as("sig"))
       .select(col("doc_id") +: unpack: _*)
-    val q = sig.writeStream.format("memory")
-      .queryName("graft_stream_minhash")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q.stop()
-    spark.table("graft_stream_minhash").orderBy(col("doc_id"))
+    Replay.run(sig, OutputMode.Append())().orderBy(col("doc_id"))
   }
 
   /** Streaming decontamination — the STREAM-STATIC JOIN pattern (the
@@ -133,7 +129,6 @@ object DocumentStreams {
     * per arrival day.
     */
   def streamedDecontamination(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val docs = graft.tables.Tables.documents(spark, dir)
     val bucket = pmod(md5Hash32(col("text")), lit(10))
     val splitCol = when(bucket < 8, "train").when(bucket === 8, "val")
@@ -181,17 +176,8 @@ object DocumentStreams {
           sum(coalesce(col("hit"), lit(0L))).as("n_overlap"))
         .withColumn("contamination",
           col("n_overlap").cast("double") / col("n_shingles"))
-      StreamConf.withStatePartitions(spark, 4) {
-        val q = agg.writeStream.format("memory")
-          .queryName("graft_stream_decontamination")
-          .outputMode(OutputMode.Complete())
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        q.stop()
-      }
-      spark.table("graft_stream_decontamination").orderBy(col("doc_id"))
-        .localCheckpoint()
+      Replay.run(agg, OutputMode.Complete())()
+        .orderBy(col("doc_id")).localCheckpoint()
     } finally { trainVocab.unpersist(); () }
   }
 
@@ -227,25 +213,14 @@ object DocumentStreams {
     * DuckDB oracle.
     */
   def streamedNearDupPairs(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     // widenStream BEFORE the signature projection: the 64-hash MinHash
     // kernel otherwise runs on the file source's one scan task per
     // micro-batch; the banded rows re-shuffle to the 4 state partitions
     // afterwards either way, and per-bucket processing sorts by doc_id,
     // so emissions are unchanged
-    val pairs = nearDupPairStream(widenStream(streamedDocs(spark, dir),
-      graft.tables.Tables.documentsNarrow(spark, dir)))(spark)
-    // state-partition sizing note: see [[StreamConf]]
-    StreamConf.withStatePartitions(spark, 4) {
-      val q = pairs.toDF().writeStream.format("memory")
-        .queryName("graft_stream_neardup")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-    }
-    spark.table("graft_stream_neardup").orderBy(col("id_a"), col("id_b"))
+    val pairs = nearDupPairStream(widenedDocs(spark, dir))(spark)
+    Replay.run(pairs.toDF(), OutputMode.Append())()
+      .orderBy(col("id_a"), col("id_b"))
   }
 
   /** The streaming TRANSFORM half of [[streamedNearDupPairs]], factored
@@ -375,32 +350,26 @@ object DocumentStreams {
     // the state partitions afterwards and per-bucket processing sorts
     // by doc_id, so emissions are unchanged
     val pairs = nearDupPairStreamTtl(widenStream(stream, narrow = true), TtlHorizonMs)
-    StreamConf.withStatePartitions(spark, 4) {
-      val q = pairs.toDF().writeStream.format("memory")
-        .queryName("graft_stream_neardup_ttl")
-        .outputMode(OutputMode.Append())
-        .start()
-      try {
-        var c = 0L
-        while (c <= maxId / chunkW) {
-          // ONE file per chunk: the running query polls the directory
-          // continuously (default trigger), and a multi-file append is
-          // only atomic per FILE rename — a poll landing mid-commit
-          // would split the chunk across two micro-batches, advance the
-          // watermark mid-chunk, and flake near-horizon pairs (surfaced
-          // when the widened corpus scan made chunk writes 32-file).
-          // Batch boundaries ARE the replay's semantics; they must not
-          // depend on the writer's partitioning.
-          docs0.filter(col("doc_id") >= c * chunkW &&
-              col("doc_id") < (c + 1) * chunkW)
-            .coalesce(1)
-            .write.mode("append").parquet(replayDir)
-          q.processAllAvailable()
-          c += 1
-        }
-      } finally q.stop()
-    }
-    spark.table("graft_stream_neardup_ttl").orderBy(col("id_a"), col("id_b"))
+    Replay.run(pairs.toDF(), OutputMode.Append(),
+        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)) { q =>
+      var c = 0L
+      while (c <= maxId / chunkW) {
+        // ONE file per chunk: the running query polls the directory
+        // continuously (processing-time trigger, no interval), and a
+        // multi-file append is only atomic per FILE rename — a poll
+        // landing mid-commit would split the chunk across two
+        // micro-batches, advance the watermark mid-chunk, and flake
+        // near-horizon pairs (surfaced when the widened corpus scan
+        // made chunk writes 32-file). Batch boundaries ARE the replay's
+        // semantics; they must not depend on the writer's partitioning.
+        docs0.filter(col("doc_id") >= c * chunkW &&
+            col("doc_id") < (c + 1) * chunkW)
+          .coalesce(1)
+          .write.mode("append").parquet(replayDir)
+        q.processAllAvailable()
+        c += 1
+      }
+    }.orderBy(col("id_a"), col("id_b"))
   }
 
   case class TimedBandedSig(bucket: String, band: Int, doc_id: Long,
@@ -510,13 +479,11 @@ object DocumentStreams {
     * throughput.
     */
   def streamedBpeTokenize(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.functions.TextFunctions
     import graft.operators.Tokenizer
     val rules = Tokenizer.learnRules(spark, dir)
     val toks = TextFunctions.tokens(col("text"))
-    val out = widenStream(streamedDocs(spark, dir),
-      graft.tables.Tables.documentsNarrow(spark, dir))
+    val out = widenedDocs(spark, dir)
       .select(col("doc_id"),
         size(toks).cast("long").as("n_words"),
         aggregate(toks, lit(0L),
@@ -524,14 +491,7 @@ object DocumentStreams {
           .as("n_tokens"))
       // the oracle's inner join drops token-free docs; match it
       .filter(col("n_words") > 0)
-    val q = out.writeStream.format("memory")
-      .queryName("graft_stream_bpe")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q.stop()
-    spark.table("graft_stream_bpe").orderBy(col("doc_id"))
+    Replay.run(out, OutputMode.Append())().orderBy(col("doc_id"))
   }
 
   /** Streaming winnowed-fingerprint ingest — the MOSS index fed by
@@ -547,12 +507,10 @@ object DocumentStreams {
     * selection bit-for-bit, so the query shares q_winnow's oracle.
     */
   def streamedWinnow(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.operators.TextAnalysis.{WinnowK, WinnowW}
     val k = WinnowK
     val w = WinnowW
-    val out = widenStream(streamedDocs(spark, dir),
-      graft.tables.Tables.documentsNarrow(spark, dir))
+    val out = widenedDocs(spark, dir)
       .filter(length(col("text")) >= k + w - 1)
       .withColumn("hs",
         graft.functions.TextFunctions.rollingWindowFingerprint(col("text"), k))
@@ -561,14 +519,7 @@ object DocumentStreams {
           .winnowSelectCol(col("hs"), w)).as("pos"))
       .select(col("doc_id"), col("pos"),
         element_at(col("hs"), col("pos").cast("int")).as("fp"))
-    val q = out.writeStream.format("memory")
-      .queryName("graft_stream_winnow")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q.stop()
-    spark.table("graft_stream_winnow").orderBy(col("doc_id"), col("pos"))
+    Replay.run(out, OutputMode.Append())().orderBy(col("doc_id"), col("pos"))
   }
 
   /** Streaming multimodal ingest — the deployed-DECODER shape: each
@@ -581,27 +532,9 @@ object DocumentStreams {
     * re-derives the bits from the closed-form pixels while this path
     * exercises the actual codec on the stream).
     */
-  def streamedImageAhash(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    import spark.implicits._
-    import graft.operators.Multimodal.RealCodecs
-    val out = widenStream(streamedDocs(spark, dir),
-      graft.tables.Tables.documentsNarrow(spark, dir))
-      .select(col("doc_id")).as[Long]
-      .mapPartitions(_.map { id =>
-        val (hi, lo) = RealCodecs.ahashPng(RealCodecs.syntheticPng(id, 32, 16))
-        (id, hi, lo)
-      })
-      .toDF("doc_id", "ahash_hi", "ahash_lo")
-    val q = out.writeStream.format("memory")
-      .queryName("graft_stream_ahash")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q.stop()
-    spark.table("graft_stream_ahash").orderBy(col("doc_id"))
-  }
+  def streamedImageAhash(spark: SparkSession, dir: String): DataFrame =
+    Replay.run(Multimodal.ahashOf(spark, widenedDocs(spark, dir)),
+      OutputMode.Append())().orderBy(col("doc_id"))
 
   /** Streaming acoustic-fingerprint ingest — the audio twin of
     * [[streamedImageAhash]]: each arriving clip is synthesized, REALLY
@@ -611,28 +544,9 @@ object DocumentStreams {
     * q_audio_fingerprint's DuckDB oracle (closed-form samples on the
     * oracle side, the actual chunk-walk parser on the stream side).
     */
-  def streamedAudioFingerprint(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    import spark.implicits._
-    import graft.operators.Multimodal.RealCodecs
-    val out = widenStream(streamedDocs(spark, dir),
-      graft.tables.Tables.documentsNarrow(spark, dir))
-      .select(col("doc_id")).as[Long]
-      .mapPartitions(_.map { id =>
-        val wav = RealCodecs.syntheticWavAm(id, 1000 + (id % 500).toInt, 16000)
-        val (_, n, fp) = RealCodecs.fingerprintWav(wav)
-        (id, n.toLong, fp)
-      })
-      .toDF("doc_id", "n_samples", "afp")
-    val q = out.writeStream.format("memory")
-      .queryName("graft_stream_audio_fp")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q.stop()
-    spark.table("graft_stream_audio_fp").orderBy(col("doc_id"))
-  }
+  def streamedAudioFingerprint(spark: SparkSession, dir: String): DataFrame =
+    Replay.run(Multimodal.audioFingerprintOn(spark, widenedDocs(spark, dir)),
+      OutputMode.Append())().orderBy(col("doc_id"))
 
   /** The WIDE 64-frame fingerprint's deployed-decoder twin — the same
     * stateless streaming projection over
@@ -641,28 +555,9 @@ object DocumentStreams {
     * identical whether computed batch or at arrival time (finite
     * replay == batch on q_audio_fingerprint_wide's shared oracle).
     */
-  def streamedAudioFingerprintWide(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    import spark.implicits._
-    import graft.operators.Multimodal.RealCodecs
-    val out = widenStream(streamedDocs(spark, dir),
-      graft.tables.Tables.documentsNarrow(spark, dir))
-      .select(col("doc_id")).as[Long]
-      .mapPartitions(_.map { id =>
-        val wav = RealCodecs.syntheticWavAm(id, 1000 + (id % 500).toInt, 16000)
-        val (_, n, hi, lo) = RealCodecs.fingerprintWavWide(wav)
-        (id, n.toLong, hi, lo)
-      })
-      .toDF("doc_id", "n_samples", "afp_hi", "afp_lo")
-    val q = out.writeStream.format("memory")
-      .queryName("graft_stream_audio_fp_wide")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q.stop()
-    spark.table("graft_stream_audio_fp_wide").orderBy(col("doc_id"))
-  }
+  def streamedAudioFingerprintWide(spark: SparkSession, dir: String): DataFrame =
+    Replay.run(Multimodal.audioFpWideOf(spark, widenedDocs(spark, dir)),
+      OutputMode.Append())().orderBy(col("doc_id"))
 
   /** STREAMING delta visual near-dup — the SERVING shape of
     * [[graft.operators.Multimodal.deltaNeardupFromHashes]]: new images
@@ -687,23 +582,13 @@ object DocumentStreams {
     * CASE instead of a shuffle.
     */
   def streamedDeltaImageNeardup(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import graft.operators.Multimodal
-    import graft.operators.Multimodal.RealCodecs
     // the stored side: the materialized corpus hash table's base split
     val base = Multimodal.ahashTable(spark, dir)
       .filter(col("doc_id") % 10 < 8)
     // the arrival side: stateless decode + hash
-    val arrivals = widenStream(streamedDocs(spark, dir),
-      graft.tables.Tables.documentsNarrow(spark, dir))
-      .filter(col("doc_id") % 10 >= 8)
-      .select(col("doc_id")).as[Long]
-      .mapPartitions(_.map { id =>
-        val (hi, lo) = RealCodecs.ahashPng(RealCodecs.syntheticPng(id, 32, 16))
-        (id, hi, lo)
-      })
-      .toDF("doc_id", "ahash_hi", "ahash_lo")
-    streamedDeltaBandProbe(spark, base, arrivals, "graft_stream_img_delta")
+    val arrivals = Multimodal.ahashOf(spark,
+      widenedDocs(spark, dir).filter(col("doc_id") % 10 >= 8))
+    streamedDeltaBandProbe(base, arrivals)
   }
 
   /** The acoustic twin: new clips stream in, fingerprint at arrival
@@ -715,24 +600,14 @@ object DocumentStreams {
     * oracle restricted to the new-vs-existing cut.
     */
   def streamedDeltaAudioNeardup(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import graft.operators.Multimodal
-    import graft.operators.Multimodal.RealCodecs
-    val base = Multimodal.audioFpWideTable(spark, dir)
-      .filter(col("doc_id") % 10 < 8)
-      .select(col("doc_id"), col("afp_hi").as("ahash_hi"),
+    def asAhash(fps: DataFrame): DataFrame =
+      fps.select(col("doc_id"), col("afp_hi").as("ahash_hi"),
         col("afp_lo").as("ahash_lo"))
-    val arrivals = widenStream(streamedDocs(spark, dir),
-      graft.tables.Tables.documentsNarrow(spark, dir))
-      .filter(col("doc_id") % 10 >= 8)
-      .select(col("doc_id")).as[Long]
-      .mapPartitions(_.map { id =>
-        val wav = RealCodecs.syntheticWavAm(id, 1000 + (id % 500).toInt, 16000)
-        val (_, _, hi, lo) = RealCodecs.fingerprintWavWide(wav)
-        (id, hi, lo)
-      })
-      .toDF("doc_id", "ahash_hi", "ahash_lo")
-    streamedDeltaBandProbe(spark, base, arrivals, "graft_stream_aud_delta")
+    val base = asAhash(Multimodal.audioFpWideTable(spark, dir)
+      .filter(col("doc_id") % 10 < 8))
+    val arrivals = asAhash(Multimodal.audioFpWideOf(spark,
+      widenedDocs(spark, dir).filter(col("doc_id") % 10 >= 8)))
+    streamedDeltaBandProbe(base, arrivals)
   }
 
   /** The shared stream-static probe: band the stored base hashes once
@@ -744,10 +619,8 @@ object DocumentStreams {
     * (doc_id, ahash_hi, ahash_lo); only the hash PRODUCER differs per
     * modality.
     */
-  private def streamedDeltaBandProbe(spark: SparkSession, base: DataFrame,
-      arrivals: DataFrame, queryName: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.operators.Multimodal
+  private def streamedDeltaBandProbe(base: DataFrame,
+      arrivals: DataFrame): DataFrame = {
     val index = Multimodal.bands4(base
         .select(col("doc_id").as("base_id"), col("ahash_hi"),
           col("ahash_lo")))
@@ -769,15 +642,7 @@ object DocumentStreams {
       .filter(col("dist") <= Multimodal.ImageNeardupMaxDist)
       .select(least(col("doc_id"), col("base_id")).as("id_a"),
         greatest(col("doc_id"), col("base_id")).as("id_b"), col("dist"))
-    val q = out.writeStream.format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q.stop()
-    spark.table(queryName)
-      .orderBy(col("id_a"), col("id_b"))
+    Replay.run(out, OutputMode.Append())().orderBy(col("id_a"), col("id_b"))
   }
 
   /** Smallest band index on which two signatures fully agree (exists for

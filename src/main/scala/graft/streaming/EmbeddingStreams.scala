@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -15,6 +15,42 @@ import graft.operators.Similarity
   * per-row function once the model is data).
   */
 object EmbeddingStreams {
+
+  /** Corpus replay through the streaming FILE source — the same
+    * executor-side ingest as [[DocumentStreams.streamedDocs]]; the
+    * driver never holds a row, so the gate harness survives a 100×
+    * embeddings table unchanged. The declared schema is the fixture's
+    * own, read from its footer once per session.
+    */
+  private def embeddingStream(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream
+      .schema(graft.tables.Tables.schemaOf(spark, s"$dir/embeddings.parquet"))
+      .option("pathGlobFilter", "embeddings.parquet")
+      .parquet(dir)
+      .select(col("vec_id"), col("embedding"))
+
+  /** Assign each (vec_id, embedding) row to its nearest fitted centroid,
+    * the `(cid, centroid)` model rows carried as k·dim plan LITERALS
+    * (bounded model state). The batch assignment verbatim: quantize to
+    * longs at 2^20 and back to exact doubles, then the codegen sqDistD
+    * argmin with min(struct) tie-break by (d, cid). Adds `cluster` and
+    * `dist` to the vec_id and embedding columns.
+    */
+  private def assignNearest(vecs: DataFrame, model: Array[Row]): DataFrame = {
+    val centArr = array(model.map { r =>
+      struct(lit(r.getLong(0)).as("cid"),
+        array(r.getSeq[Double](1).map(lit(_)): _*).as("cent"))
+    }: _*)
+    vecs
+      .withColumn("xv", transform(col("embedding"),
+        v => round(v.cast("double") * Similarity.KmeansScale, 0).cast("long")
+          .cast("double") / Similarity.KmeansScale))
+      .withColumn("m", array_min(transform(centArr,
+        c => struct(sqDistD(col("xv"), c.getField("cent")).as("d"),
+          c.getField("cid").as("cid")))))
+      .select(col("vec_id"), col("embedding"),
+        col("m.cid").as("cluster"), round(col("m.d"), 6).as("dist"))
+  }
 
   /** Streaming k-means assignment: arrivals score against the
     * batch-fitted [[Similarity.kmeansCentroids]] model, carried as
@@ -31,53 +67,14 @@ object EmbeddingStreams {
     * a streaming count per cluster would need Complete-mode state).
     */
   def streamedKmeansAssign(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types._
-
-    val e = graft.tables.Tables.embeddings(spark, dir)
     // k·dim Lloyd centroids: bounded MODEL state (the one legitimate
     // driver-side materialization — O(k·dim) doubles, never the corpus).
-    val model = Similarity.kmeansCentroids(spark, e).collect()
-    val centArr = array(model.map { r =>
-      struct(lit(r.getLong(0)).as("cid"),
-        array(r.getSeq[Double](1).map(lit(_)): _*).as("cent"))
-    }: _*)
-
-    // Corpus replay through the streaming FILE source — the same
-    // executor-side ingest as [[DocumentStreams.streamedDocs]]; the
-    // driver never holds a row, so the gate harness survives a 100×
-    // embeddings table unchanged.
-    val embSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("label", IntegerType)))
-    val stream = spark.readStream.schema(embSchema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
-      .select(col("vec_id"), col("embedding"))
-
-    // the batch quantization verbatim: longs at 2^20, exact doubles back
-    val assigned = stream
-      .withColumn("xv", transform(col("embedding"),
-        v => round(v.cast("double") * Similarity.KmeansScale, 0).cast("long")
-          .cast("double") / Similarity.KmeansScale))
-      .withColumn("m", array_min(transform(centArr,
-        c => struct(sqDistD(col("xv"), c.getField("cent")).as("d"),
-          c.getField("cid").as("cid")))))
-      .select(col("vec_id"), col("m.cid").as("cluster"),
-        round(col("m.d"), 6).as("dist"))
-
-    StreamConf.withStatePartitions(spark, 4) {
-      val q = assigned.writeStream.format("memory")
-        .queryName("graft_stream_kmeans")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-    }
-    spark.table("graft_stream_kmeans").orderBy(col("vec_id"))
-      .localCheckpoint()
+    val model = Similarity.kmeansCentroids(spark,
+      graft.tables.Tables.embeddings(spark, dir)).collect()
+    val assigned = assignNearest(embeddingStream(spark, dir), model)
+      .select(col("vec_id"), col("cluster"), col("dist"))
+    Replay.run(assigned, OutputMode.Append())()
+      .orderBy(col("vec_id")).localCheckpoint()
   }
 
   /** Streaming delta-SemDeDup — the SERVING shape of the incremental
@@ -112,17 +109,9 @@ object EmbeddingStreams {
     */
   def streamedDeltaSemDedup(spark: SparkSession, dir: String,
       threshold: Double = 0.4): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types._
     import graft.functions.VectorFunctions.cosine
 
     val (centsDf, storedBase, b) = Similarity.semdedupStoredState(spark, dir)
-    // k·dim fitted centroids as plan literals (bounded model state)
-    val model = centsDf.collect()
-    val centArr = array(model.map { r =>
-      struct(lit(r.getLong(0)).as("cid"),
-        array(r.getSeq[Double](1).map(lit(_)): _*).as("cent"))
-    }: _*)
     // static side 1 — the RANK DIGEST: per cluster, its frozen
     // members' (dist, vec_id) only (16 bytes/member; the sort is
     // presentation-stable only, the fold is order-independent)
@@ -138,26 +127,9 @@ object EmbeddingStreams {
         col("dist").as("m_dist"), col("vec_id").as("m_vid"),
         col("embedding").as("m_emb"))
 
-    val embSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("label", IntegerType)))
-    val stream = spark.readStream.schema(embSchema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
-      .filter(col("vec_id") >= b)
-      .select(col("vec_id"), col("embedding"))
-
-    // the batch assignment verbatim (quantize → literal-centroid argmin)
-    val assigned = stream
-      .withColumn("xv", transform(col("embedding"),
-        v => round(v.cast("double") * Similarity.KmeansScale, 0).cast("long")
-          .cast("double") / Similarity.KmeansScale))
-      .withColumn("m", array_min(transform(centArr,
-        c => struct(sqDistD(col("xv"), c.getField("cent")).as("d"),
-          c.getField("cid").as("cid")))))
-      .select(col("vec_id"), col("embedding"),
-        col("m.cid").as("cluster"), round(col("m.d"), 6).as("dist"))
+    // k·dim fitted centroids as plan literals (bounded model state)
+    val assigned = assignNearest(
+      embeddingStream(spark, dir).filter(col("vec_id") >= b), centsDf.collect())
 
     // `stored member above this arrival` in the SemDeDup order
     def above(m: Column): Column =
@@ -185,16 +157,7 @@ object EmbeddingStreams {
       .unionByName(ranked.join(mr, hit, "left_anti")
         .select(out :+ lit(1L).as("kept"): _*))
 
-    StreamConf.withStatePartitions(spark, 4) {
-      val q = decided.writeStream.format("memory")
-        .queryName("graft_stream_semdedup_delta")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-    }
-    spark.table("graft_stream_semdedup_delta").orderBy(col("vec_id"))
-      .localCheckpoint()
+    Replay.run(decided, OutputMode.Append())()
+      .orderBy(col("vec_id")).localCheckpoint()
   }
 }

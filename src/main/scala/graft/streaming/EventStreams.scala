@@ -61,13 +61,6 @@ object EventStreams {
   def readEventStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(eventSchema).parquet(dir)
 
-  /** The streaming file source over `$dir/events.parquet` with `ts`
-    * normalized across the fixture encodings the driver has shipped
-    * (TIMESTAMP(NANOS)-as-long vs TIMESTAMP(MICROS) NTZ — see
-    * [[graft.tables.Tables.normalizedTs]]). A streaming source needs
-    * its schema DECLARED, so it is sniffed from one batch footer read
-    * (metadata only, no data scan) and applied to the stream.
-    */
   /** Full-microsecond replay order. `Timestamp.getTime` is MILLISECOND
     * precision, so two same-user events inside one millisecond but
     * different microseconds would tie under a getTime sort and could
@@ -91,27 +84,13 @@ object EventStreams {
   private def tsMicros(t: Timestamp): Long =
     math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
 
-  /** Runs a finite replay to completion and asserts the data arrived
-    * in ONE micro-batch. The stateful per-user ops sort each batch by
-    * (ts, event_id) and rely on that being the GLOBAL order per user —
-    * true only when the whole fixture lands in a single batch, which
-    * holds because events.parquet is one file under AvailableNow with
-    * no maxFilesPerTrigger. A multi-file fixture (or a trigger cap)
-    * would split users across batches and break oracle parity, so the
-    * assumption is asserted, not trusted: the replay fails loudly
-    * instead of silently diverging.
+  /** The streaming file source over `$dir/events.parquet` with `ts`
+    * normalized across both fixture encodings of events.parquet
+    * (TIMESTAMP(NANOS)-as-long vs TIMESTAMP(MICROS) NTZ — see
+    * [[graft.tables.Tables.normalizedTs]]). A streaming source needs
+    * its schema DECLARED, so it is sniffed from one batch footer read
+    * (metadata only, no data scan) and applied to the stream.
     */
-  private def runSingleBatchReplay(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    q.stop()
-    require(dataBatches <= 1,
-      s"replay delivered data in $dataBatches micro-batches; the per-batch " +
-        "(ts, event_id) sort only reproduces the batch/oracle order when " +
-        "each user's events arrive in one batch (single-file fixture)")
-  }
-
   private def normalizedEventStream(spark: SparkSession, dir: String): DataFrame = {
     val fileSchema = graft.tables.Tables.schemaOf(spark, s"$dir/events.parquet")
     spark.readStream.schema(fileSchema)
@@ -131,16 +110,15 @@ object EventStreams {
       .select(col("window.start").as("win_start"), col("event_type"),
         col("n"), col("total_value"))
 
-  /** Sliding windows (each event lands in dur/slide windows). */
-  def slidingCounts(events: DataFrame, dur: String = "1 hour",
-      slide: String = "30 minutes", delay: String = "30 minutes"): DataFrame =
-    events.withWatermark("ts", delay)
-      .groupBy(window(col("ts"), dur, slide))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("win_start"), col("n"))
-
   /** Session windows: per-user sessions closed by `gap` inactivity —
     * the streaming twin of the batch gaps-and-islands oracle query.
+    *
+    * (The `session_window` AGGREGATION supports neither Complete nor
+    * Update output — merging windows forbid both — so a finite replay
+    * of it can never reproduce its batch twin and it stays
+    * MemoryStream-verified. [[streamedSessions]] closes the gap from the
+    * flatMapGroupsWithState side, whose Append-mode emissions ARE
+    * deterministic on a finite replay and sit under the oracle gate.)
     */
   def sessionCounts(events: DataFrame, gap: String = "30 minutes",
       delay: String = "30 minutes"): DataFrame =
@@ -240,22 +218,11 @@ object EventStreams {
     * watermark-gated and the finite-replay rules must be spelled out.)
     */
   def streamedAttribution(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     def side(eventType: String): DataFrame =
       normalizedEventStream(spark, dir)
         .filter(col("event_type") === eventType)
-    val joined = attributionJoin(side("click"), side("purchase"))
-    // same state-partition sizing note as [[streamedTumbling]]
-    StreamConf.withStatePartitions(spark, 4) {
-      val q = joined.writeStream.format("memory")
-        .queryName("graft_stream_attribution")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-    }
-    spark.table("graft_stream_attribution")
+    Replay.run(attributionJoin(side("click"), side("purchase")),
+        OutputMode.Append())()
       .select(col("purchase_id"), col("user_id"), col("click_id"),
         date_format(col("purchase_ts"), "yyyy-MM-dd HH:mm:ss").as("purchase_ts"),
         col("value"))
@@ -272,23 +239,6 @@ object EventStreams {
     events.withWatermark("ts", delay)
       .dropDuplicatesWithinWatermark("event_id")
 
-  /** Write helper: append sink to parquet with a checkpoint — the
-    * exactly-once file sink pattern.
-    *
-    * (The `session_window` AGGREGATION supports neither Complete nor
-    * Update output — merging windows forbid both — so a finite replay
-    * of [[sessionCounts]] can never reproduce its batch twin and it
-    * stays MemoryStream-verified. [[streamedSessions]] closes the gap
-    * from the flatMapGroupsWithState side, whose Append-mode emissions
-    * ARE deterministic on a finite replay and sit under the oracle
-    * gate.)
-    */
-  def writeParquetStream(df: DataFrame, path: String, checkpoint: String) =
-    df.writeStream.format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-
   /** ACTUAL streaming execution under the driver gate: read the events
     * parquet through the STREAMING file source, run the tumbling-window
     * aggregation as a real StreamingQuery (Trigger.AvailableNow →
@@ -303,7 +253,6 @@ object EventStreams {
     * open and emit nothing (the classic finite-replay trap).
     */
   def streamedTumbling(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     // events.parquet is TIMESTAMP(NANOS): the streaming source reads it
     // with ts normalized exactly like Tables.events; the streaming
     // file source wants a DIRECTORY (landing-zone shape), glob-filtered
@@ -314,23 +263,7 @@ object EventStreams {
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"), col("n"), col("total_value"))
-    // State-partition sizing: shuffle partitions are frozen into the
-    // state store at query START, and every micro-batch then pays
-    // per-partition state-store open/commit/maintenance — measured at
-    // ~18 s for a 3.4k-row result with the session's 32 partitions,
-    // almost all of it state-store fixed cost, not aggregation. A few
-    // thousand group keys need a handful of state partitions; at
-    // production stream volume this knob is sized to key cardinality,
-    // not to the batch session's CPU count.
-    StreamConf.withStatePartitions(spark, 4) {
-      val q = agg.writeStream.format("memory").queryName("graft_stream_tumbling")
-        .outputMode(OutputMode.Complete())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-    }
-    spark.table("graft_stream_tumbling")
+    Replay.run(agg, OutputMode.Complete())()
       .orderBy(col("hour"), col("event_type"))
   }
 
@@ -356,26 +289,14 @@ object EventStreams {
     * the gate-compatibility trick, not a semantic change.
     */
   def streamedSessions(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
     val events = normalizedEventStream(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
       .as[Event]
-    val sessions = closedSessions(events)(spark)
-    // same state-partition sizing note as [[streamedTumbling]]
-    StreamConf.withStatePartitions(spark, 4) {
-      val q = sessions.toDF().writeStream.format("memory")
-        .queryName("graft_stream_sessions")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-    }
     // sessions of one user are ≥ gap apart, so (user_id, last_ts) is a
     // unique deterministic sort key
-    spark.table("graft_stream_sessions")
+    Replay.run(closedSessions(events)(spark).toDF(), OutputMode.Append())()
       .select(col("user_id"), col("n_events"), col("total_cents"),
         date_format(col("last_ts"), "yyyy-MM-dd HH:mm:ss").as("last_ts"))
       .orderBy(col("user_id"), col("last_ts"))
@@ -393,7 +314,7 @@ object EventStreams {
     * [[streamedEwma]]: flatMapGroupsWithState with NO timeout, each
     * user's events sorted by the full-microsecond [[replayKey]] inside
     * the single AvailableNow data batch (asserted by
-    * [[runSingleBatchReplay]]) — with the whole history in hand, the
+    * [[Replay.oneDataBatch]]) — with the whole history in hand, the
     * state function closes EVERY session including each user's final
     * one, which is exactly the batch `session_window` result.
     *
@@ -409,7 +330,6 @@ object EventStreams {
     */
   def streamedSessionsGated(spark: SparkSession, dir: String,
       gapMs: Long = 30 * 60 * 1000L): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
     val events = normalizedEventStream(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"),
@@ -448,15 +368,7 @@ object EventStreams {
           cur.foreach(close)
           out.result().iterator
       }
-    StreamConf.withStatePartitions(spark, 4) {
-      val q = sessions.toDF().writeStream.format("memory")
-        .queryName("graft_stream_sessions_gated")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      runSingleBatchReplay(q)
-    }
-    spark.table("graft_stream_sessions_gated")
+    Replay.run(sessions.toDF(), OutputMode.Append())(Replay.oneDataBatch)
       .select(col("user_id"),
         date_format(col("session_start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
         col("n_events"), col("session_value"))
@@ -476,22 +388,10 @@ object EventStreams {
     * distinct-set gate query necessarily keeps all keys.
     */
   def streamedDistinct(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val events = normalizedEventStream(spark, dir)
-    val distinctKeys = events
+    val distinctKeys = normalizedEventStream(spark, dir)
       .select(col("user_id"), col("event_type"))
       .dropDuplicates("user_id", "event_type")
-    // same state-partition sizing note as [[streamedTumbling]]
-    StreamConf.withStatePartitions(spark, 4) {
-      val q = distinctKeys.writeStream.format("memory")
-        .queryName("graft_stream_distinct")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-    }
-    spark.table("graft_stream_distinct")
+    Replay.run(distinctKeys, OutputMode.Append())()
       .orderBy(col("user_id"), col("event_type"))
   }
 
@@ -535,7 +435,7 @@ object EventStreams {
     *
     * Determinism: a finite AvailableNow replay delivers each user's
     * events in one micro-batch in arbitrary order (asserted by
-    * [[runSingleBatchReplay]] — the guarantee comes from the fixture
+    * [[Replay.oneDataBatch]] — the guarantee comes from the fixture
     * being a single parquet file), so the state function sorts its
     * batch by the FULL-precision (ts, event_id) [[replayKey]] — the
     * same total order the oracle's window uses; ties on ts cannot
@@ -548,7 +448,6 @@ object EventStreams {
     * ProcessingTimeTimeout sweep).
     */
   def streamedAnomaly(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
     val events = normalizedEventStream(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"),
@@ -577,16 +476,7 @@ object EventStreams {
           state.update(s)
           out.result().iterator
       }
-    // same state-partition sizing note as [[streamedTumbling]]
-    StreamConf.withStatePartitions(spark, 4) {
-      val q = flagged.toDF().writeStream.format("memory")
-        .queryName("graft_stream_anomaly")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      runSingleBatchReplay(q)
-    }
-    spark.table("graft_stream_anomaly")
+    Replay.run(flagged.toDF(), OutputMode.Append())(Replay.oneDataBatch)
       .orderBy(col("user_id"), col("event_id"))
   }
 
@@ -609,7 +499,6 @@ object EventStreams {
     * the batch lag() form is its backfill twin.
     */
   def streamedEwma(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
     val k = graft.operators.EventAnalytics.EwmaK
     val events = normalizedEventStream(spark, dir)
@@ -637,16 +526,7 @@ object EventStreams {
           state.update(s)
           out.result().iterator
       }
-    // same state-partition sizing note as [[streamedTumbling]]
-    StreamConf.withStatePartitions(spark, 4) {
-      val q = smoothed.toDF().writeStream.format("memory")
-        .queryName("graft_stream_ewma")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      runSingleBatchReplay(q)
-    }
-    spark.table("graft_stream_ewma")
+    Replay.run(smoothed.toDF(), OutputMode.Append())(Replay.oneDataBatch)
       .orderBy(col("user_id"), col("rn"))
   }
 }

@@ -2,16 +2,20 @@ package graft
 
 import java.sql.Timestamp
 
-import graft.streaming.EventStreams
+import graft.streaming.{EventStreams, Replay}
 import graft.streaming.EventStreams.{ClosedSession, Event}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Deterministic streaming replay (SURVEY.md §7 Phase 3): MemoryStream
   * micro-batches through the same transforms the batch oracle queries
   * use, asserting stream results equal the batch computation and that
   * watermark-driven state (flatMapGroupsWithState + event-time timeout)
-  * closes sessions exactly once.
+  * closes sessions exactly once. The graded stream queries run through
+  * [[Replay]], which leaves no sink registered and guards the
+  * single-batch replay the stateful per-user queries rely on.
   */
 class StreamingSpec extends AnyFunSuite with SparkSessionTestWrapper {
   import spark.implicits._
@@ -194,5 +198,34 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestWrapper {
       q.processAllAvailable()
       assert(spark.table("t_file").count() > 0)
     } finally q.stop()
+  }
+
+  private def tempViews(s: SparkSession): Set[String] =
+    s.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+
+  test("a graded stream query leaves no temp view behind; its frame still collects") {
+    val s = spark.newSession()
+    val before = tempViews(s)
+    val streamed = SparkEntry.queries("q_stream_tumbling")(s, sfDir)
+    assert(tempViews(s) === before)
+    val rows = streamed.collect().toSeq
+    assert(rows.nonEmpty &&
+      rows === SparkEntry.queries("q_tumbling")(s, sfDir).collect().toSeq)
+  }
+
+  test("Replay.oneDataBatch refuses a replay delivered in two micro-batches") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-replay").toString
+    spark.range(0, 10).coalesce(1).write.parquet(s"$dir/one")
+    spark.range(0, 5).coalesce(1).write.parquet(s"$dir/two")
+    spark.range(5, 10).coalesce(1).write.mode("append").parquet(s"$dir/two")
+    def replay(path: String) = Replay.run(
+      spark.readStream.schema("id BIGINT").option("maxFilesPerTrigger", "1")
+        .parquet(path),
+      OutputMode.Append())(Replay.oneDataBatch)
+    assert(replay(s"$dir/one").count() === 10)
+    val before = tempViews(spark)
+    val e = intercept[IllegalArgumentException](replay(s"$dir/two"))
+    assert(e.getMessage.contains("2 micro-batches"), e.getMessage)
+    assert(tempViews(spark) === before)
   }
 }

@@ -16,8 +16,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * ([[graft.sources.Scratch.slotOnce]], [[graft.sources.Commits.chain]]),
   * every operator has one code path: no switch turns its pins off
   * (plan audits read the pins' executed plans, [[graft.plan.PinPlans]]),
-  * and every query is named once, in the one registry that pairs its
-  * builder with its oracle ([[SparkEntry]]).
+  * every query is named once, in the one registry that pairs its
+  * builder with its oracle ([[SparkEntry]]), and every streaming query
+  * runs through the one finite-replay runner
+  * ([[graft.streaming.Replay]]).
   */
 class StructureSpec extends AnyFunSuite {
   private lazy val sources: Seq[(Path, String)] = {
@@ -61,6 +63,14 @@ class StructureSpec extends AnyFunSuite {
   test("one query registry: SparkEntry names each query once") {
     val keys = sitesOf("""^\s*"q_\w+"\s*->""").filter(_.contains("SparkEntry.scala"))
     assert(keys.size === SparkEntry.queries.size, keys.take(5))
+  }
+
+  test("one stream runner: memory sinks, triggers and replay waits live in Replay") {
+    val sites = sitesOf("""format\("memory"\)|awaitTermination|\.trigger\(""")
+      .filterNot(_.contains("streaming/Replay.scala"))
+    assert(sites.isEmpty, sites)
+    val window = sitesOf("""StreamConf|withStatePartitions""")
+    assert(window.isEmpty, window)
   }
 
   test("no state keyed by an identity hash") {
