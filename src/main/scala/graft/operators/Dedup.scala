@@ -583,10 +583,7 @@ object Dedup {
     * two pointer jumps are fused into each materialized round.
     */
   def duplicateClusters(spark: SparkSession, dir: String): DataFrame =
-    corpusClusterLabels(spark, dir)
-      .groupBy(col("lbl").as("cluster_rep"))
-      .agg(count(lit(1)).as("n_members"))
-      .orderBy(col("cluster_rep"))
+    clusterSizes(corpusClusterLabels(spark, dir))
 
   /** The CONVERGED corpus label table, MATERIALIZED once per
     * (session, corpus) — the [[materializedPairs]] discipline one
@@ -618,11 +615,7 @@ object Dedup {
     // materialize the pair list ONCE: it feeds both union branches below,
     // and without the checkpoint each branch re-executes the whole
     // upstream pipeline (for the LSH caller, the entire candidate join)
-    val tDbg0 = System.nanoTime()
-    def dbg(msg: String): Unit = if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(f"[cc] $msg at ${(System.nanoTime() - tDbg0) / 1e9}%.2f s")
     val pairs = rawPairs.toDF("id_a", "id_b").localCheckpoint()
-    dbg("pairs checkpointed")
     // Undirected edge list (both directions) PLUS a self-loop per node:
     // the self-loop both carries each node's own label into the
     // neighbor-min (no per-round union) and exposes the previous label
@@ -636,10 +629,8 @@ object Dedup {
     val edges = rawEdges
       .union(nodes.select(col("id").as("src"), col("id").as("dst")))
       .localCheckpoint()
-    dbg("edges checkpointed")
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("lbl", col("id")).localCheckpoint()
-    dbg("labels initialized")
 
     // Path halving: adopt the label OF the label. Reads its input twice
     // (shuffle reuse dedups the exchange); `old` is carried through.
@@ -669,15 +660,12 @@ object Dedup {
         .groupBy(col("dst").as("id"))
         .agg(min(col("slbl")).as("lbl"),
           min(when(col("src") === col("dst"), col("slbl"))).as("old"))
-      val t0 = System.nanoTime()
       val next = jump(jump(nbrMin)).localCheckpoint() // ONE job per round
       // convergence: a narrow filter-count over the blocks the
       // checkpoint just materialized — near-free, checked every round
       changed = next.filter(col("lbl") =!= col("old")).count()
       labels = next.select(col("id"), col("lbl"))
       rounds += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[cc] round $rounds: changed=$changed ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     // A correctness-critical cap must fail loudly: silent exit would
     // return WRONG cluster labels. 64 rounds cover the diameter-bound
@@ -801,13 +789,58 @@ object Dedup {
       .groupBy(col("id")).agg(min(col("lbl")).as("lbl"))
   }
 
+  /** The label chain of a closure family, the label half of the commit
+    * chain ([[graft.sources.Commits.chain]]; `cuts` in tenths of the
+    * corpus): the converged (id, lbl) table over `[0, cuts.last)`,
+    * one stored fold step per range. The labels over `[0, cuts.head)`
+    * are [[componentLabels]] of `basePairs(cuts.head)`; each later
+    * range `[lo, hi)` is [[maintainComponentLabels]] of the step
+    * before it with `bridges(lo, hi)`, the range's pairs against the
+    * stored `[0, lo)`. Each step is a [[graft.sources.Scratch.storedOnce]]
+    * slot named by [[graft.sources.Commits.foldSlot]] over its prefix
+    * of the cuts, so chains sharing a prefix share its steps, and an
+    * earlier step is read only while a later one is built. Both the
+    * text (doc-granularity) and the image (hash-granularity) closures
+    * run on it.
+    */
+  private[operators] def storedLabels(spark: SparkSession, dir: String,
+      family: String, cuts: Seq[Int])(basePairs: Int => DataFrame,
+      bridges: (Int, Int) => DataFrame): DataFrame = {
+    graft.sources.Commits.requireCuts(cuts)
+    def step(i: Int): DataFrame = graft.sources.Scratch.storedOnce(spark, dir,
+        "documents", graft.sources.Commits.foldSlot(family, cuts.take(i + 1), "labels"))(
+        if (i == 0) componentLabels(basePairs(cuts.head))
+        else maintainComponentLabels(step(i - 1), bridges(cuts(i - 1), cuts(i))))
+      .select(col("id"), col("lbl"))
+    step(cuts.size - 1)
+  }
+
+  /** [[storedLabels]] with the live batch `[cuts.last, 10)` bridged on
+    * top, unstored: the labels over the whole corpus. Maintained
+    * labels equal the full recompute at every step, so any grouping
+    * of the corpus into cuts serves the same labels.
+    */
+  private[operators] def chainLabels(spark: SparkSession, dir: String,
+      family: String, cuts: Seq[Int])(basePairs: Int => DataFrame,
+      bridges: (Int, Int) => DataFrame): DataFrame = {
+    val stored = storedLabels(spark, dir, family, cuts)(basePairs, bridges)
+    if (cuts.last == 10) stored
+    else maintainComponentLabels(stored, bridges(cuts.last, 10))
+  }
+
   /** Connected components, aggregated to (cluster_rep, n_members) —
     * the q_dup_clusters shape. [[clusterLabels]] exposes the per-doc
     * label table for consumers that need membership, not just sizes
     * ([[dedupKeepBest]]).
     */
   def clustersFromPairs(rawPairs: DataFrame): DataFrame =
-    clusterLabels(rawPairs).groupBy(col("lbl").as("cluster_rep"))
+    clusterSizes(clusterLabels(rawPairs))
+
+  /** A label table (id, lbl) aggregated to the (cluster_rep, n_members)
+    * output of every text closure entry.
+    */
+  private def clusterSizes(labels: DataFrame): DataFrame =
+    labels.groupBy(col("lbl").as("cluster_rep"))
       .agg(count(lit(1)).as("n_members"))
       .orderBy(col("cluster_rep"))
 
@@ -970,54 +1003,51 @@ object Dedup {
     * a new batch lands next to an already-ingested corpus, and the
     * question is which NEW documents near-duplicate anything already
     * present (or each other) — existing-vs-existing pairs must NOT be
-    * re-enumerated, that work was paid at prior ingests. Membership is
-    * the [[hashSplit]] arithmetic (md5 bucket mod 10, buckets 8-9 =
-    * new ~20%): content-derived, so the fixture split is deterministic
-    * and oracle-reproducible. The candidate join probes the NEW side's
-    * band keys against ALL band keys, so join work scales with
-    * |delta| × bucket occupancy, never |corpus|² — and at 100 TB the
-    * existing side's signatures and band keys are a stored index
-    * (written at prior ingests, cf. [[materializedPairs]]'s layout)
-    * that this probe reads without touching existing text at all;
-    * here both sides come from one signature pass over the corpus
-    * table. Output tags each surviving pair `new_new` (both sides in
-    * the batch) or `new_existing` (batch vs corpus).
+    * re-enumerated, that work was paid at prior ingests. The candidate
+    * join probes the NEW side's band keys against ALL band keys, so
+    * join work scales with |delta| × bucket occupancy, never
+    * |corpus|². The existing side's signatures are the stored
+    * [[sigCommits]] chain cut at 8/10 (md5 buckets 8–9 = the new ~20%,
+    * the [[hashSplit]] arithmetic), read back instead of re-shingling
+    * the base text; batch membership is the anti-join against the
+    * stored doc_ids (production's "not yet ingested"). Output tags
+    * each surviving pair `new_new` (both sides in the batch) or
+    * `new_existing` (batch vs corpus).
     */
-  /** Graded entry — round 19 gives the text family its STORED
-    * signature index (the media [[graft.operators.Multimodal.baseBandIndex]]
-    * discipline): the base's MinHash signatures are materialized once
-    * per corpus, and a delta run reads them back instead of
-    * re-shingling the base text — the only per-ingest text pass is the
-    * batch's. Batch membership comes from the stored index's doc_ids
-    * (an anti-join — production's "not yet ingested", replacing the
-    * md5-over-text split scan), which equals the fixture's md5 rule
-    * because the stored table was built from it.
+  def deltaDedup(spark: SparkSession, dir: String): DataFrame =
+    deltaDedupFrom(baseSigTable(spark, dir), Tables.documents(spark, dir))
+
+  /** The text family's stored MinHash signatures as ONE commit chain
+    * ([[graft.sources.Commits.chain]]) over md5-bucket ranges
+    * ([[md5Bucket]]): commit `[lo, hi)` holds the signatures of the
+    * docs whose bucket is in that range. Returns the commit paths.
     */
-  def deltaDedup(spark: SparkSession, dir: String): DataFrame = {
+  private def sigCommits(spark: SparkSession, dir: String,
+      cuts: Seq[Int]): Seq[String] = {
     val docs = Tables.documents(spark, dir)
-    deltaDedupFrom(baseSigTable(spark, dir, docs), docs)
+    graft.sources.Commits.chain(spark, dir, "documents", "minhash_sig", cuts) { (lo, hi, path) =>
+      minhashSignaturesUnsorted(docs.filter(md5Bucket >= lo && md5Bucket < hi),
+        prodHash = false).write.mode("overwrite").parquet(path)
+    }
   }
 
-  /** The stored base-signature table, materialized once per corpus —
-    * shared by [[deltaDedup]] and [[deltaDupClusters]] (one stored
-    * index, every text-delta consumer).
+  /** The stored base signatures — the [[sigCommits]] chain at 8/10,
+    * the one stored copy every text delta and retraction entry reads.
     */
-  private def baseSigTable(spark: SparkSession, dir: String,
-      docs: DataFrame): DataFrame =
-    graft.sources.Scratch.storedOnce(spark, dir, "documents", "delta_sig_base")(
-      minhashSignaturesUnsorted(docs.filter(!deltaIsNew), prodHash = false))
+  private def baseSigTable(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.Scratch.readParquetMultiOnce(spark, sigCommits(spark, dir, Seq(8)))
 
   /** Batch-membership rule shared by EVERY text delta operator
-    * ([[deltaDedupOn]], [[deltaDupClustersOn]] and its stored-label
-    * builder): md5 bucket mod 10, buckets 8–9 = the new ~20%. One
+    * ([[deltaDedupOn]], [[deltaDupClustersOn]] and the stored chain's
+    * 8/10 cut): md5 bucket mod 10, buckets 8–9 = the new ~20%. One
     * definition — the probe entry and the closure-maintenance entry
     * must never disagree on what "the batch" is.
     */
   private[graft] def deltaIsNew: Column = md5Bucket >= 8
 
   /** The md5 bucket (0–9) of a document's text — the content-hash
-    * split of every text delta rule and of the winnow and lexical
-    * commit chains.
+    * split of every text delta rule and of the signature, winnow and
+    * lexical commit chains.
     */
   private[graft] def md5Bucket: Column = pmod(md5Hash32(col("text")), lit(10))
 
@@ -1037,21 +1067,28 @@ object Dedup {
       docs: DataFrame): DataFrame =
     deltaProbePairs(baseSig, docs).orderBy(col("id_a"), col("id_b"))
 
-  /** The shared stored-index delta probe (both text delta entries):
-    * the batch = docs absent from the stored index (anti-join on
-    * doc_id), signatured in the ONLY per-ingest text pass; base
-    * signatures are read back narrow (65 longs/doc), never re-derived
-    * from text. Candidates probe the batch's band keys against the
-    * full band projection (derived from signatures — a map-only
-    * explode, no text), verify is the exact matches/64 estimate over
-    * the union signature frame. Output pinned eagerly so consumers
-    * plan over the tiny pair list after the signature cache releases.
+  /** The live-batch probe: the batch = docs absent from the stored
+    * index (anti-join on doc_id), signatured in the ONLY per-ingest
+    * text pass, probed by [[probePairs]].
     */
   private def deltaProbePairs(baseSig: DataFrame,
-      docs: DataFrame): DataFrame = {
+      docs: DataFrame): DataFrame =
+    probePairs(baseSig, minhashSignaturesUnsorted(
+      docs.join(baseSig.select(col("doc_id")), Seq("doc_id"), "left_anti"),
+      prodHash = false))
+
+  /** The shared stored-index delta probe (every text delta entry and
+    * every stored step of the closure chain): base signatures are read
+    * back narrow (65 longs/doc), never re-derived from text.
+    * Candidates probe the batch's band keys against the full band
+    * projection (derived from signatures — a map-only explode, no
+    * text), verify is the exact matches/64 estimate over the union
+    * signature frame. Output pinned eagerly so consumers plan over the
+    * tiny pair list after the signature cache releases.
+    */
+  private def probePairs(baseSig: DataFrame,
+      batchSig: DataFrame): DataFrame = {
     val baseIds = baseSig.select(col("doc_id"))
-    val batchSig = minhashSignaturesUnsorted(
-      docs.join(baseIds, Seq("doc_id"), "left_anti"), prodHash = false)
     val sig = baseSig.unionByName(batchSig)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1074,6 +1111,15 @@ object Dedup {
     } finally { sig.unpersist(); () }
   }
 
+  /** LSH pairs (id_a, id_b) of a signature table, pinned — the base
+    * graph of the closure chain and of the retraction store.
+    */
+  private def sigPairs(sig: DataFrame): DataFrame = {
+    val pinned = sig.persist(StorageLevel.MEMORY_AND_DISK)
+    try lshPairsFromSignatures(pinned).select(col("id_a"), col("id_b")).localCheckpoint()
+    finally { pinned.unpersist(); () }
+  }
+
   /** INCREMENTAL duplicate clusters — [[maintainComponentLabels]] on
     * the TEXT family, closing the delta triple (candidate probe =
     * [[deltaDedupOn]], decision = delta pairs, CLOSURE = this): prior
@@ -1083,50 +1129,59 @@ object Dedup {
     * enumerated) arrive as bridges, endpoints contract to stored
     * labels, and CC runs over batch-sized contracted edges only.
     * Maintained labels equal the full recompute (the min-label
-    * convention argument at [[maintainComponentLabels]]), so the
-    * graded entry shares q_dup_clusters' closure oracle verbatim.
-    * Membership split is [[hashSplit]]'s md5 arithmetic (buckets 8–9
-    * new), the [[deltaDedupOn]] convention.
+    * convention argument at [[maintainComponentLabels]]), so every
+    * commit grouping shares q_dup_clusters' closure oracle verbatim:
+    * the single-ingest entry serves the chain cut at 8/10, the
+    * multi-ingest one ([[delta2DupClusters]]) at 6/10 and 8/10.
     */
-  def deltaDupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    // BOTH stored tables read back (the converged label table + the
-    // round-19 signature index): a daily ingest never recomputes the
-    // base closure and never re-shingles the base text
-    deltaDupClustersFrom(baseLabelTable(spark, dir, docs),
-      baseSigTable(spark, dir, docs), docs)
+  def deltaDupClusters(spark: SparkSession, dir: String): DataFrame =
+    dupClustersOver(spark, dir, Seq(8))
+
+  /** MULTI-INGEST compounding — md5 buckets [0,6) and {6,7} stored,
+    * {8,9} live: maintain(maintain(L0, p1), p2) EQUALS one CC over the
+    * whole corpus's pair graph (the [[maintainComponentLabels]]
+    * induction), associativity as a hash-matched result.
+    */
+  def delta2DupClusters(spark: SparkSession, dir: String): DataFrame =
+    dupClustersOver(spark, dir, Seq(6, 8))
+
+  /** Serve the text closure over the label chain cut at `cuts`
+    * ([[chainLabels]] over [[textPairs]]); the live batch is the md5
+    * buckets at or past the last cut.
+    */
+  private[graft] def dupClustersOver(spark: SparkSession, dir: String,
+      cuts: Seq[Int]): DataFrame = {
+    val (base, bridges) = textPairs(spark, dir, cuts)
+    clusterSizes(chainLabels(spark, dir, "minhash_sig", cuts)(base, bridges))
   }
 
-  def deltaDupClustersOn(docs: DataFrame): DataFrame =
-    deltaDupClustersFrom(baseDocLabels(docs),
-      minhashSignaturesUnsorted(docs.filter(!deltaIsNew), prodHash = false),
-      docs)
-
-  /** [[baseDocLabels]] stored once per corpus version — shared by
-    * [[deltaDupClusters]] and [[retractDupClusters]].
+  /** The text closure's pair sources over the [[sigCommits]] chain cut
+    * at `cuts`: the base pairs of `[0, hi)` are the LSH pairs of the
+    * stored signatures; the bridges of a stored range `[lo, hi)` probe
+    * its stored commit against the commits below it, and those of the
+    * live batch probe the docs no commit holds ([[deltaProbePairs]]).
     */
-  private def baseLabelTable(spark: SparkSession, dir: String,
-      docs: DataFrame): DataFrame =
-    graft.sources.Scratch.storedOnce(spark, dir, "documents", "delta_base_cc_txt")(
-      baseDocLabels(docs)).select(col("id"), col("lbl"))
-
-  /** Stored state: converged labels over the BASE split's own pair
-    * graph (deterministic, so the graded entry materializes it once
-    * per corpus — it IS the table a production ingest reads).
-    */
-  private def baseDocLabels(docs: DataFrame): DataFrame = {
-    val baseDocs = docs.filter(!deltaIsNew)
-    componentLabels(
-      minhashLshPairsOn(baseDocs).select(col("id_a"), col("id_b")))
+  private def textPairs(spark: SparkSession, dir: String,
+      cuts: Seq[Int]): (Int => DataFrame, (Int, Int) => DataFrame) = {
+    val commits = (0 +: cuts).zip(sigCommits(spark, dir, cuts))
+    def sigBelow(lo: Int): DataFrame = graft.sources.Scratch.readParquetMultiOnce(spark,
+      commits.collect { case (start, path) if start < lo => path })
+    val bridges = (lo: Int, hi: Int) =>
+      (if (hi <= cuts.last) probePairs(sigBelow(lo),
+          graft.sources.Scratch.readParquetOnce(spark, commits.toMap.apply(lo)))
+        else deltaProbePairs(sigBelow(lo), Tables.documents(spark, dir)))
+        .select(col("id_a"), col("id_b"))
+    ((hi: Int) => sigPairs(sigBelow(hi)), bridges)
   }
 
-  private def deltaDupClustersFrom(baseLabels: DataFrame,
-      baseSig: DataFrame, docs: DataFrame): DataFrame =
-    maintainComponentLabels(baseLabels,
-        deltaProbePairs(baseSig, docs).select(col("id_a"), col("id_b")))
-      .groupBy(col("lbl").as("cluster_rep"))
-      .agg(count(lit(1)).as("n_members"))
-      .orderBy(col("cluster_rep"))
+  /** Recompute form of [[deltaDupClusters]] — base labels and the
+    * batch's bridges built inline, value-identical to the chain.
+    */
+  def deltaDupClustersOn(docs: DataFrame): DataFrame = {
+    val baseSig = minhashSignaturesUnsorted(docs.filter(!deltaIsNew), prodHash = false)
+    clusterSizes(maintainComponentLabels(componentLabels(sigPairs(baseSig)),
+      deltaProbePairs(baseSig, docs).select(col("id_a"), col("id_b"))))
+  }
 
   /** RETRACTION — stored signature index under DELETION, the band
     * family's missing lifecycle half (ingest has [[deltaDedup]]; a
@@ -1146,7 +1201,7 @@ object Dedup {
     * that reclaim to the data plane.
     */
   def retractDedup(spark: SparkSession, dir: String): DataFrame = {
-    val baseSig = baseSigTable(spark, dir, Tables.documents(spark, dir))
+    val baseSig = baseSigTable(spark, dir)
     retractDedupFrom(baseSig,
       baseSig.filter(col("doc_id") % 10 === 7).select(col("doc_id")))
   }
@@ -1204,7 +1259,7 @@ object Dedup {
 
   /** RETRACTION — duplicate clusters under deletion: the graded
     * [[retractComponentLabels]] composition over the text family's
-    * stored state (the converged label table AND the pair graph both
+    * stored state (the label chain's 8/10 step AND the pair graph both
     * persisted at prior ingests — a production closure store keeps its
     * edges precisely so deletions can relabel without re-deriving
     * pairs from text). Tombstones: stored doc_ids ≡ 7 (mod 10).
@@ -1212,82 +1267,16 @@ object Dedup {
     * shares the closure oracle restricted to surviving docs.
     */
   def retractDupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val baseSig = baseSigTable(spark, dir, docs)
+    val baseSig = baseSigTable(spark, dir)
+    // built from the STORED signatures (identical to the text-built
+    // pairs — signatures are deterministic), not from text
     val pairsPath = graft.sources.Scratch.slotOnce(spark, dir, "documents",
-        "delta_base_pairs_txt") { path =>
-      // built from the STORED signatures (identical to the text-built
-      // pairs — signatures are deterministic), not from text
-      val sig = baseSig.persist(StorageLevel.MEMORY_AND_DISK)
-      try lshPairsFromSignatures(sig).select(col("id_a"), col("id_b"))
-        .write.mode("overwrite").parquet(path)
-      finally { sig.unpersist(); () }
-    }
-    retractComponentLabels(baseLabelTable(spark, dir, docs),
-        graft.sources.Scratch.readParquetOnce(spark, pairsPath),
-        baseSig.filter(col("doc_id") % 10 === 7).select(col("doc_id")))
-      .groupBy(col("lbl").as("cluster_rep"))
-      .agg(count(lit(1)).as("n_members"))
-      .orderBy(col("cluster_rep"))
-  }
-
-  /** MULTI-INGEST compounding for the closure family — TWO stored
-    * ingests then a live third, under the gate: ingest 0 writes the
-    * base signature commit and its converged labels; ingest 1 probes
-    * the stored index with its batch (existing-vs-existing never
-    * enumerated), appends its signature commit, and REWRITES the label
-    * table through [[maintainComponentLabels]]; the live third ingest
-    * probes the two merged signature commits and maintains once more.
-    * Because each maintenance step provably equals the recompute over
-    * the graph-so-far (labels stay component minima — the
-    * [[maintainComponentLabels]] induction), the chained result
-    * maintain(maintain(L0, p1), p2) EQUALS one CC over the whole
-    * corpus's pair graph, and the graded entry shares q_dup_clusters'
-    * closure oracle VERBATIM — associativity as a hash-matched result.
-    * Commit split: md5 buckets [0,6) base, {6,7} ingest 1, {8,9} live.
-    */
-  def delta2DupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val bucket = md5Bucket
-    val root = graft.sources.Scratch.slotOnce(spark, dir, "documents",
-        "cc_multi_txt") { root =>
-      // ingest 0 — base: signature commit + converged labels
-      val sig0 = minhashSignaturesUnsorted(docs.filter(bucket < 6),
-        prodHash = false).persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        sig0.write.mode("overwrite").parquet(s"$root/sig_c0")
-        // ingest 0's label convergence and ingest 1's signature commit
-        // have no data dependency (labels_0 reads the pinned sig0; the
-        // c1 commit reads only its own doc split) — run them from
-        // concurrent driver threads (guide §2.6): each alone is a
-        // small-parallelism job chain that leaves most cores idle
-        graft.sources.Scratch.inParallel(
-          () => componentLabels(lshPairsFromSignatures(sig0)
-              .select(col("id_a"), col("id_b")))
-            .write.mode("overwrite").parquet(s"$root/labels_0"),
-          () => minhashSignaturesUnsorted(
-              docs.filter(bucket >= 6 && bucket < 8), prodHash = false)
-            .write.mode("overwrite").parquet(s"$root/sig_c1"))
-      } finally { sig0.unpersist(); () }
-      // ingest 1 — buckets {6,7}: probe the STORED index, maintain
-      // labels (batch-sized CC only)
-      val probe1 = deltaProbePairs(graft.sources.Scratch.readParquetOnce(spark, s"$root/sig_c0"),
-        docs.filter(bucket < 8))
-      maintainComponentLabels(
-          graft.sources.Scratch.readParquetOnce(spark, s"$root/labels_0").select(col("id"), col("lbl")),
-          probe1.select(col("id_a"), col("id_b")))
-        .write.mode("overwrite").parquet(s"$root/labels_1")
-    }
-    // live ingest 2 — buckets {8,9} probe the MERGED signature commits
-    val storedSig = graft.sources.Scratch.readParquetOnce(spark, s"$root/sig_c0")
-      .unionByName(graft.sources.Scratch.readParquetOnce(spark, s"$root/sig_c1"))
-    val probe2 = deltaProbePairs(storedSig, docs)
-    maintainComponentLabels(
-        graft.sources.Scratch.readParquetOnce(spark, s"$root/labels_1").select(col("id"), col("lbl")),
-        probe2.select(col("id_a"), col("id_b")))
-      .groupBy(col("lbl").as("cluster_rep"))
-      .agg(count(lit(1)).as("n_members"))
-      .orderBy(col("cluster_rep"))
+        "delta_base_pairs_txt")(sigPairs(baseSig).write.mode("overwrite").parquet(_))
+    val (base, bridges) = textPairs(spark, dir, Seq(8))
+    clusterSizes(retractComponentLabels(
+      storedLabels(spark, dir, "minhash_sig", Seq(8))(base, bridges),
+      graft.sources.Scratch.readParquetOnce(spark, pairsPath),
+      baseSig.filter(col("doc_id") % 10 === 7).select(col("doc_id"))))
   }
 
   /** Cross-split contamination audit — the eval-integrity check every

@@ -261,8 +261,7 @@ object Pipeline {
     // stored state 3+4: the per-modality band indexes — the SAME slots
     // the delta near-dup entries probe (artifact sharing: one stored
     // index serves every delta consumer)
-    val imgIdx = Multimodal.baseBandIndex(spark, "delta_band_index_img",
-      dir, imgBase)
+    val imgIdx = Multimodal.imageBandIndex(spark, dir, 8)
     val audIdx = Multimodal.baseBandIndex(spark, "delta_band_index_aud",
       dir, audBase.select(col("doc_id"), col("afp_hi").as("ahash_hi"),
         col("afp_lo").as("ahash_lo")))

@@ -31,8 +31,7 @@ class Round19OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val ah = Multimodal.ahashTable(spark, sfDir)
     val base = ah.filter(col("doc_id") % 10 < 8)
     val batch = ah.filter(col("doc_id") % 10 >= 8)
-    val stored = Multimodal.baseBandIndex(
-      spark, "delta_band_index_img", sfDir, base)
+    val stored = Multimodal.imageBandIndex(spark, sfDir, 8)
     val recomputed = Multimodal.bands4(
       base.select(col("ahash_hi"), col("ahash_lo")).distinct())
     val key = Seq("ahash_hi", "ahash_lo", "cb", "kv")
@@ -250,14 +249,39 @@ class Round19OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     }
   }
 
+  test("dup-cluster label chains: every stored split serves the whole-corpus closure") {
+    import graft.operators.{Dedup, Multimodal}
+    val dir = gateDir
+    // the live batch is md5 bucket / doc_id mod 10 past the last cut;
+    // Seq(3, 6, 8, 10) stores everything and leaves it empty
+    val splits = Seq(Seq(8), Seq(6, 8), Seq(3, 6, 8), Seq(3, 6, 8, 10))
+    for ((family, serve, whole) <- Seq(
+        ("text", Dedup.dupClustersOver _, "q_dup_clusters"),
+        ("image", Multimodal.imageDupClustersOver _, "q_image_dup_clusters"))) {
+      val full = SparkEntry.queries(whole)(spark, dir).collect().toSeq
+      assert(full.nonEmpty, s"$family: whole-corpus closure is empty — weak fixture")
+      splits.foreach { cuts =>
+        assert(serve(spark, dir, cuts).collect().toSeq == full,
+          s"$family: the label chain at cuts $cuts served different clusters")
+      }
+    }
+  }
+
   // A table rewritten inside a live session must never be served from
   // the stored state of its old version: each entry builds, the table
-  // is overwritten by its first 400 ids, and the entry builds again.
-  // (entry, input table, id column of the output, id column of the table)
-  for ((label, query, table, outId, inId) <- Seq(
-      ("delta IVF", "q_delta_knn_ivf", "embeddings", "n_id", "vec_id"),
-      ("delta SemDeDup", "q_delta_semdedup", "embeddings", "vec_id", "vec_id"),
-      ("delta BM25", "q_delta_bm25", "documents", "doc_id", "doc_id"))) {
+  // is overwritten by the rows whose ids lie in [from, until), and the
+  // entry builds again. The image closure keeps [100, 500): at the gate
+  // scale its hashes form one component, whose rep is doc 0.
+  // (entry, input table, id column of the output, id column of the
+  // table, kept id range)
+  for ((label, query, table, outId, inId, (from, until)) <- Seq(
+      ("delta IVF", "q_delta_knn_ivf", "embeddings", "n_id", "vec_id", (0L, 400L)),
+      ("delta SemDeDup", "q_delta_semdedup", "embeddings", "vec_id", "vec_id", (0L, 400L)),
+      ("delta BM25", "q_delta_bm25", "documents", "doc_id", "doc_id", (0L, 400L)),
+      ("delta2 dup clusters", "q_delta2_dup_clusters", "documents", "cluster_rep",
+        "doc_id", (0L, 400L)),
+      ("delta2 image dup clusters", "q_delta2_image_dup_clusters", "documents",
+        "cluster_rep", "doc_id", (100L, 500L)))) {
     test(s"$label after an input rewrite in the session: re-counted and re-indexed") {
       import java.nio.file.{Files, Paths, StandardCopyOption}
       import scala.jdk.CollectionConverters._
@@ -267,15 +291,18 @@ class Round19OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
       def served(s: org.apache.spark.sql.SparkSession) =
         SparkEntry.queries(query)(s, dir.toString).collect().toSeq
       def ids(rows: Seq[org.apache.spark.sql.Row]) = rows.map(_.getAs[Long](outId))
-      assert(ids(served(spark)).exists(_ >= 400), "no id >= 400 served before the rewrite")
+      def kept(id: Long) = id >= from && id < until
+      assert(!ids(served(spark)).forall(kept),
+        s"no id outside [$from, $until) served before the rewrite")
       val subset = dir.resolve("subset").toString
-      graft.tables.Tables.load(spark, dir.toString, table).filter(col(inId) < 400)
+      graft.tables.Tables.load(spark, dir.toString, table)
+        .filter(col(inId) >= from && col(inId) < until)
         .coalesce(1).write.parquet(subset)
       val part = Files.list(Paths.get(subset)).iterator().asScala
         .find(_.getFileName.toString.endsWith(".parquet")).get
       Files.copy(part, file, StandardCopyOption.REPLACE_EXISTING)
       val after = served(spark)
-      assert(after.nonEmpty && ids(after).forall(_ < 400),
+      assert(after.nonEmpty && ids(after).forall(kept),
         "an id the rewrite removed was served — stale count or stale stored state")
       // a fresh session with its own scratch root shares no memo and no slot
       val fresh = spark.newSession()

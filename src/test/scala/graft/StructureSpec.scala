@@ -91,5 +91,9 @@ class StructureSpec extends AnyFunSuite {
     // and Commits.foldSlot
     val commitPaths = inOperators("""\$root/(?:c\d|compacted)""")
     assert(commitPaths.isEmpty, commitPaths)
+    // and the closure families' signature and label tables to the chain
+    // and its Scratch.storedOnce fold steps
+    val closurePaths = inOperators("""\$root/(?:sig_c\d|labels_\d)|"cc_multi_""")
+    assert(closurePaths.isEmpty, closurePaths)
   }
 }
