@@ -5,8 +5,9 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 
 /** The one local session shape shared by every main (Bench, Verify,
-  * ProfOne, ExplainOne, ScalingProbe) and the test suite, plus the
-  * noop-sink execution and the untimed warm-up the timing mains share.
+  * ProfOne, ExplainOne, ScalingProbe) and the test suite, the one
+  * session-conf window ([[withConf]]), plus the noop-sink execution
+  * and the untimed warm-up the timing mains share.
   *
   * Options read here, each with one default:
   *   - `$SPARK_GRAFT_CPUS`: local cores and shuffle partitions (default:
@@ -41,6 +42,24 @@ object LocalSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  private val confLock = new Object
+
+  /** Run `body` with `overrides` set in the session conf, then restore
+    * each key (unset again if it was unset). Every window holds one
+    * lock, so no two interleave; `src/main` changes session conf only
+    * here.
+    */
+  def withConf[T](spark: SparkSession, overrides: Seq[(String, String)])(body: => T): T =
+    confLock.synchronized {
+      val saved = overrides.map { case (k, _) => k -> spark.conf.getOption(k) }
+      overrides.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body
+      finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
+    }
 
   /** Run a registered query's FULL plan through the `noop` sink (a bare
     * count() lets Spark skip final sorts and prune columns). */

@@ -402,10 +402,10 @@ object ScalingProbe {
       // full recompute (which also re-runs the Lloyd chain every time).
       case "delta_semdedup"  => graft.operators.Similarity.deltaSemDedupFrom(
         semdedupCents, docs,
-        embRange(n.toLong, n.toLong + 4096).localCheckpoint(), 0.4)
+        embRange(n.toLong, n.toLong + 4096).localCheckpoint())
       // the scale path: k sized ~√N so within-cluster pair work stays ~N^1.5
       case "semdedup_sqrtk"  =>
-        graft.operators.Similarity.semanticDedupOn(spark, docs, 0.4,
+        graft.operators.Similarity.semanticDedupOn(spark, docs,
           math.max(8, math.sqrt(n.toDouble).toInt))
       case "boilerplate"     => graft.operators.TextAnalysis.removeBoilerplateOn(docs)
       case "bm25"            => graft.operators.Retrieval.bm25On(docs)

@@ -109,17 +109,20 @@ object SparkEntry {
     s"list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(generate_series(1, length($e)), i -> CAST(ord(substr($e,i,1)) AS BIGINT))), (acc,c) -> (acc*257+c)%999999893)"
 
   /** Fixed-window chunking body (no ORDER BY) — mirrors
-    * TextAnalysis.chunkDocuments (size 32, stride 24); shared by
-    * q_chunk_documents and q_chunk_dedup.
+    * TextAnalysis.chunkDocuments (`ChunkSize`-token windows every
+    * `ChunkStride` tokens); shared by q_chunk_documents and q_chunk_dedup.
     */
-  private val chunkSql =
-    s"""SELECT doc_id, CAST((s - 1) // 24 AS BIGINT) AS chunk_idx,
-       |  CAST(len(list_slice(t, s, s + 31)) AS BIGINT) AS n_tokens,
-       |  ${rollSql("array_to_string(list_slice(t, s, s + 31), ' ')")} AS chunk_hash,
-       |  ${rollSql2("array_to_string(list_slice(t, s, s + 31), ' ')")} AS chunk_hash2
-       |FROM (SELECT doc_id, t, unnest(generate_series(1, greatest(len(t), 1), 24)) AS s
+  private val chunkSql = {
+    val stride = TextAnalysis.ChunkStride
+    val window = s"list_slice(t, s, s + ${TextAnalysis.ChunkSize - 1})"
+    s"""SELECT doc_id, CAST((s - 1) // $stride AS BIGINT) AS chunk_idx,
+       |  CAST(len($window) AS BIGINT) AS n_tokens,
+       |  ${rollSql(s"array_to_string($window, ' ')")} AS chunk_hash,
+       |  ${rollSql2(s"array_to_string($window, ' ')")} AS chunk_hash2
+       |FROM (SELECT doc_id, t, unnest(generate_series(1, greatest(len(t), 1), $stride)) AS s
        |  FROM (SELECT doc_id, list_filter(string_split_regex(text,'[^a-zA-Z]'), x -> x<>'') AS t
        |    FROM documents))""".stripMargin
+  }
 
   /** Decontamination oracle — shared by q_decontamination and its
     * Bloom-prefiltered twin (the prefilter is lossless by construction,
@@ -591,7 +594,7 @@ object SparkEntry {
        |probe AS (SELECT qq.vec_id AS q_id, c.cid AS cell
        |  FROM (SELECT * FROM q WHERE vec_id < ${graft.operators.Similarity.NumQueries}) qq, c${iters - 1} c
        |  QUALIFY row_number() OVER (PARTITION BY qq.vec_id
-       |    ORDER BY ${lloydDistSql("qq.qv", "c.cent")}, c.cid) <= 3),
+       |    ORDER BY ${lloydDistSql("qq.qv", "c.cent")}, c.cid) <= ${Similarity.IvfProbes}),
        |sims AS (SELECT p.q_id, s.vec_id AS n_id,
        |  round(${cosSql("qe.embedding", "s.embedding")}, 6) AS sim
        |  FROM probe p
@@ -642,7 +645,7 @@ object SparkEntry {
        |probe AS (SELECT qq.vec_id AS q_id, c.cid AS cell
        |  FROM (SELECT * FROM qa WHERE vec_id < ${graft.operators.Similarity.NumQueries}) qq, c${iters - 1} c
        |  QUALIFY row_number() OVER (PARTITION BY qq.vec_id
-       |    ORDER BY ${lloydDistSql("qq.qv", "c.cent")}, c.cid) <= 3),
+       |    ORDER BY ${lloydDistSql("qq.qv", "c.cent")}, c.cid) <= ${Similarity.IvfProbes}),
        |sims AS (SELECT p.q_id, s.vec_id AS n_id,
        |  round(${cosSql("qe.embedding", "s.embedding")}, 6) AS sim
        |  FROM probe p
@@ -694,7 +697,7 @@ object SparkEntry {
        |dropped AS (SELECT DISTINCT b.vec_id
        |  FROM re a JOIN re b ON a.cluster = b.cluster AND a.rnk < b.rnk
        |  WHERE b.vec_id >= $bCut
-       |    AND round(${cosSql("a.embedding", "b.embedding")}, 6) >= 0.4)
+       |    AND round(${cosSql("a.embedding", "b.embedding")}, 6) >= ${Similarity.SemDedupThreshold})
        |SELECT r.vec_id, r.cluster, CAST(r.rnk AS BIGINT) AS "rank",
        |  CAST(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS kept
        |FROM r LEFT JOIN dropped d ON r.vec_id = d.vec_id
@@ -718,7 +721,7 @@ object SparkEntry {
        |SELECT b.vec_id, b.cluster,
        |  CAST(1 + count(CASE WHEN $above THEN 1 END) AS BIGINT) AS "rank",
        |  CAST(CASE WHEN max(CASE WHEN $above AND
-       |      round(${cosSql("a.embedding", "b.embedding")}, 6) >= 0.4
+       |      round(${cosSql("a.embedding", "b.embedding")}, 6) >= ${Similarity.SemDedupThreshold}
        |    THEN 1 ELSE 0 END) = 1 THEN 0 ELSE 1 END AS BIGINT) AS kept
        |FROM bb b LEFT JOIN ba a ON a.cluster = b.cluster
        |GROUP BY b.vec_id, b.cluster
@@ -827,7 +830,7 @@ object SparkEntry {
        |probe AS (SELECT qq.vec_id AS q_id, c.cid AS cell
        |  FROM (SELECT * FROM q WHERE vec_id < ${graft.operators.Similarity.NumQueries}) qq, c${iters - 1} c
        |  QUALIFY row_number() OVER (PARTITION BY qq.vec_id
-       |    ORDER BY ${lloydDistSql("qq.qv", "c.cent")}, c.cid) <= 3),
+       |    ORDER BY ${lloydDistSql("qq.qv", "c.cent")}, c.cid) <= ${Similarity.IvfProbes}),
        |e8 AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings),
        |s8 AS (SELECT vec_id, emb,
        |    list_max(list_transform(emb, x -> abs(x))) / 127.0 AS scale,
@@ -1232,7 +1235,7 @@ object SparkEntry {
        |WHERE n_shared * 100 >= least(sa.n_fps, sb.n_fps) * $pct""".stripMargin
   }
 
-  /** Exact n-gram Jaccard pairs (threshold 0.4) — shared by
+  /** Exact n-gram Jaccard pairs (at least `Dedup.JaccardMin`) — shared by
     * q_ngram_jaccard and q_neardup_auto (the router's exact path).
     */
   private val jaccardSql =
@@ -1244,7 +1247,7 @@ object SparkEntry {
        |  SELECT id_a, id_b,
        |    round(n_common::DOUBLE/(sa.sz+sb.sz-n_common),4) AS jaccard
        |  FROM common JOIN sizes sa ON id_a=sa.doc_id JOIN sizes sb ON id_b=sb.doc_id)
-       |WHERE jaccard >= 0.4 ORDER BY id_a, id_b""".stripMargin
+       |WHERE jaccard >= ${Dedup.JaccardMin} ORDER BY id_a, id_b""".stripMargin
 
   /** LSH near-dup pairs (unordered) — shared by q_minhash_lsh_pairs and
     * the q_dup_clusters component oracle.
@@ -2275,12 +2278,12 @@ object SparkEntry {
         |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     "q_pack_sequences" -> graded(TextAnalysis.packSequences(_, _),
-      """SELECT shard, seq_id, count(*) AS n_docs,
+      s"""SELECT shard, seq_id, count(*) AS n_docs,
         |CAST(sum(n_tok) AS BIGINT) AS total_tokens, min(doc_id) AS first_doc
         |FROM (SELECT doc_id, shard, n_tok,
         |  CAST(coalesce(sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 2048 AS BIGINT) AS seq_id
-        |FROM (SELECT doc_id, doc_id % 8 AS shard,
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // ${TextAnalysis.PackBudget} AS BIGINT) AS seq_id
+        |FROM (SELECT doc_id, doc_id % ${TextAnalysis.PackShards} AS shard,
         |  len(list_filter(string_split_regex(text,'[^a-zA-Z]'), x -> x<>'')) AS n_tok
         |  FROM documents))
         |GROUP BY shard, seq_id ORDER BY shard, seq_id""".stripMargin),
@@ -2433,13 +2436,13 @@ object SparkEntry {
          |  FROM sh JOIN tag USING(doc_id) LEFT JOIN ev ON sh.hh = ev.hh
          |  WHERE is_train GROUP BY sh.doc_id),
          |clean AS (SELECT dd.doc_id, dd.text FROM dd JOIN score USING(doc_id)
-         |  WHERE o::DOUBLE / n <= 0.05),
-         |sized AS (SELECT doc_id, doc_id % 8 AS shard,
+         |  WHERE o::DOUBLE / n <= ${Pipeline.MaxContamination}),
+         |sized AS (SELECT doc_id, doc_id % ${TextAnalysis.PackShards} AS shard,
          |    len(list_filter(string_split_regex(text,'[^a-zA-Z]'), x -> x<>'')) AS n_tok
          |  FROM clean),
          |packed AS (SELECT doc_id, shard, n_tok,
          |    CAST(coalesce(sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 2048 AS BIGINT) AS seq_id
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // ${TextAnalysis.PackBudget} AS BIGINT) AS seq_id
          |  FROM sized)
          |SELECT shard, seq_id, count(*) AS n_docs,
          |  CAST(sum(n_tok) AS BIGINT) AS total_tokens, min(doc_id) AS first_doc
@@ -2601,13 +2604,13 @@ object SparkEntry {
          |  FROM bsh JOIN btag USING(doc_id) LEFT JOIN bev ON bsh.hh = bev.hh
          |  WHERE is_train GROUP BY bsh.doc_id),
          |bclean AS (SELECT bdd.doc_id, bdd.text FROM bdd JOIN bscore USING(doc_id)
-         |  WHERE o::DOUBLE / n <= 0.05),
-         |bsized AS (SELECT doc_id, doc_id % 8 AS shard,
+         |  WHERE o::DOUBLE / n <= ${Pipeline.MaxContamination}),
+         |bsized AS (SELECT doc_id, doc_id % ${TextAnalysis.PackShards} AS shard,
          |    len(list_filter(string_split_regex(text,'[^a-zA-Z]'), x -> x<>'')) AS n_tok
          |  FROM bclean),
          |bpacked AS (SELECT doc_id, shard, n_tok,
          |    CAST(coalesce(sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 2048 AS BIGINT) AS seq_id
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // ${TextAnalysis.PackBudget} AS BIGINT) AS seq_id
          |  FROM bsized),
          |blayout AS (SELECT shard, seq_id, count(*) AS n_docs,
          |  CAST(sum(n_tok) AS BIGINT) AS total_tokens, min(doc_id) AS first_doc
@@ -2626,8 +2629,8 @@ object SparkEntry {
          |  FROM nsh JOIN ntag USING(doc_id) LEFT JOIN nev ON nsh.hh = nev.hh
          |  WHERE is_train GROUP BY nsh.doc_id),
          |nclean AS (SELECT ndd.doc_id, ndd.text FROM ndd JOIN nscore USING(doc_id)
-         |  WHERE o::DOUBLE / n <= 0.05),
-         |nsized AS (SELECT doc_id, doc_id % 8 AS shard,
+         |  WHERE o::DOUBLE / n <= ${Pipeline.MaxContamination}),
+         |nsized AS (SELECT doc_id, doc_id % ${TextAnalysis.PackShards} AS shard,
          |    len(list_filter(string_split_regex(text,'[^a-zA-Z]'), x -> x<>'')) AS n_tok
          |  FROM nclean),
          |btok AS (SELECT shard, CAST(sum(total_tokens) AS BIGINT) AS base_tok
@@ -2635,7 +2638,7 @@ object SparkEntry {
          |npacked AS (SELECT doc_id, n.shard, n_tok,
          |    CAST((coalesce(b.base_tok, 0) + coalesce(sum(n_tok) OVER (
          |      PARTITION BY n.shard ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)) // 2048 AS BIGINT) AS seq_id
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)) // ${TextAnalysis.PackBudget} AS BIGINT) AS seq_id
          |  FROM nsized n LEFT JOIN btok b ON b.shard = n.shard),
          |nlayout AS (SELECT shard, seq_id, count(*) AS n_docs,
          |  CAST(sum(n_tok) AS BIGINT) AS total_tokens, min(doc_id) AS first_doc
@@ -3236,7 +3239,7 @@ object SparkEntry {
          |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
          |    round(${cosSql("a.embedding", "b.embedding")}, 6) AS sim
          |  FROM tagged a JOIN tagged b ON a.cell=b.cell AND a.vec_id<b.vec_id)
-         |WHERE sim >= 0.4 ORDER BY id_a, id_b""".stripMargin),
+         |WHERE sim >= ${Similarity.SemDedupThreshold} ORDER BY id_a, id_b""".stripMargin),
 
     // int8 scalar quantization: 4x vector compression with measured
     // reconstruction error (per-row codegen arithmetic, gate-exact)
@@ -3354,7 +3357,7 @@ object SparkEntry {
     // the dense duplicated core) — a curation DECISION per vector
     // SemDeDup decision: rank within cluster by centroid distance DESC
     // (vec_id tie-break), drop any vector with a higher-ranked
-    // within-cluster neighbor at cosine >= 0.4
+    // within-cluster neighbor at cosine >= SemDedupThreshold
     "q_semdedup" -> graded(Similarity.semanticDedup(_, _),
       s"""WITH $kmeansChainSql,
          |r AS (SELECT vec_id, cluster,
@@ -3364,7 +3367,7 @@ object SparkEntry {
          |  FROM r JOIN embeddings e USING (vec_id)),
          |dropped AS (SELECT DISTINCT b.vec_id
          |  FROM re a JOIN re b ON a.cluster = b.cluster AND a.rnk < b.rnk
-         |  WHERE round(${cosSql("a.embedding", "b.embedding")}, 6) >= 0.4)
+         |  WHERE round(${cosSql("a.embedding", "b.embedding")}, 6) >= ${Similarity.SemDedupThreshold})
          |SELECT r.vec_id, r.cluster, CAST(r.rnk AS BIGINT) AS "rank",
          |  CAST(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS kept
          |FROM r LEFT JOIN dropped d ON r.vec_id = d.vec_id ORDER BY r.vec_id""".stripMargin),
@@ -3811,13 +3814,13 @@ object SparkEntry {
         |FROM documents GROUP BY lang ORDER BY format""".stripMargin),
 
     "q_frame_features" -> graded(Multimodal.frameFeatures(_, _),
-      """SELECT frame_idx, count(*) AS n_frames, CAST(sum(chunk_bytes) AS BIGINT) AS total_bytes FROM (
+      s"""SELECT frame_idx, count(*) AS n_frames, CAST(sum(chunk_bytes) AS BIGINT) AS total_bytes FROM (
         |SELECT doc_id, i AS frame_idx,
         |  least(step, greatest(n_bytes - i*step, 0)) AS chunk_bytes
-        |FROM (SELECT doc_id, n_bytes, greatest(n_bytes//4, 1) AS step
+        |FROM (SELECT doc_id, n_bytes, greatest(n_bytes//${Multimodal.FrameSamples}, 1) AS step
         |      FROM (SELECT doc_id, least(octet_length(encode(text)), 4096) AS n_bytes FROM documents)),
-        |  (SELECT unnest(generate_series(0, 3)) AS i)
-        |WHERE i < least(4, n_bytes))
+        |  (SELECT unnest(generate_series(0, ${Multimodal.FrameSamples - 1})) AS i)
+        |WHERE i < least(${Multimodal.FrameSamples}, n_bytes))
         |GROUP BY frame_idx ORDER BY frame_idx""".stripMargin),
 
     // — TPC-H-shaped multi-join analytics (join-order/broadcast bench) —
@@ -4161,7 +4164,7 @@ object SparkEntry {
          |SELECT id_a, id_b, CAST(n_common AS BIGINT) AS n_common,
          |n_common / sa.sz AS containment
          |FROM inter JOIN sz sa ON sa.doc_id = id_a
-         |WHERE n_common / sa.sz >= 0.8
+         |WHERE n_common / sa.sz >= ${Dedup.ContainmentMin}
          |ORDER BY id_a, id_b""".stripMargin),
 
     // composite curation cascade (first-failing-rule classification)

@@ -41,10 +41,6 @@ object TextFunctions {
   def md5Hash32(s: Column): Column =
     org.apache.spark.sql.graft.HashExpressions.md5Prefix32Col(s)
 
-  /** Seeded variant: independent hash family member i (for MinHash). */
-  def md5Hash32Seeded(s: Column, seed: Int): Column =
-    md5Hash32(concat(s, lit("#" + seed)))
-
   /** Normalization used for exact dedup: trim + lowercase. */
   def normalized(text: Column): Column = lower(trim(text))
 

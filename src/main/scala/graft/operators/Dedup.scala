@@ -310,7 +310,8 @@ object Dedup {
     *     as the naive plan.
     *
     * The hot shingles land at the END of the canonical order and never
-    * enter the index, so candidate buckets stay small. Threshold 0.4.
+    * enter the index, so candidate buckets stay small. Threshold
+    * [[JaccardMin]].
     *
     * Caveat measured in SURVEY §8: cost scales with the TRUE result set;
     * on duplicate-dominated corpora route to LSH + clusters instead.
@@ -337,7 +338,10 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  def ngramJaccardPairsOn(docs: DataFrame, threshold: Double = 0.4): DataFrame = {
+  /** Shingle-set Jaccard from which two documents are a near-dup pair. */
+  val JaccardMin = 0.4
+
+  def ngramJaccardPairsOn(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.graft.TextShingleExpressions.{shingleHashSetCol, sortedIntersectSizeCol}
     // One codegen'd pass per document builds its shingle set as a SORTED
@@ -358,7 +362,7 @@ object Dedup {
     val prefixes = exploded.join(dfreq, "h")
       .withColumn("pos", row_number().over(
         Window.partitionBy(col("doc_id")).orderBy(col("df"), col("h"))))
-      .filter(col("pos") <= col("sz") - ceilConservative(col("sz") * threshold) + 1)
+      .filter(col("pos") <= col("sz") - ceilConservative(col("sz") * JaccardMin) + 1)
       .select(col("doc_id"), col("h"), col("pos"), col("sz"))
       // both sides of the candidate self-join — pinned EAGERLY so the
       // two join branches cannot recompute the df-window subtree while
@@ -372,10 +376,10 @@ object Dedup {
     // exact verification that follows.
     val szA = col("a.sz"); val szB = col("b.sz")
     val maxOverlap = least(szA - col("a.pos"), szB - col("b.pos")) + 1
-    val alpha = ceilConservative((szA + szB) * (threshold / (1 + threshold)))
+    val alpha = ceilConservative((szA + szB) * (JaccardMin / (1 + JaccardMin)))
     val cand = prefixes.as("a").join(prefixes.as("b"),
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id") &&
-        greatest(szA, szB) * threshold <= least(szA, szB) &&
+        greatest(szA, szB) * JaccardMin <= least(szA, szB) &&
         maxOverlap >= alpha)
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
@@ -402,7 +406,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         round(n_common.cast("double") /
           (col("sz_a") + col("sz_b") - n_common), 4).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+      .filter(col("jaccard") >= JaccardMin)
       .localCheckpoint() // materialize so both persists release at exit
       .orderBy(col("id_a"), col("id_b"))
     } finally { prefixes.unpersist(); () }
@@ -425,7 +429,10 @@ object Dedup {
     */
   private def ceilConservative(x: Column): Column = ceil(x - lit(1e-9))
 
-  /** Asymmetric CONTAINMENT join: pairs where ≥ `threshold` of document
+  /** Share of A's shingles inside B from which A is contained in B. */
+  val ContainmentMin = 0.8
+
+  /** Asymmetric CONTAINMENT join: pairs where ≥ [[ContainmentMin]] of document
     * A's shingle set lies inside document B — the sub-document
     * duplication detector (boilerplate, quoted passages, a short doc
     * embedded in a long one) that symmetric Jaccard structurally
@@ -447,7 +454,7 @@ object Dedup {
   def containmentPairs(spark: SparkSession, dir: String): DataFrame =
     containmentPairsOn(Tables.documents(spark, dir))
 
-  def containmentPairsOn(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
+  def containmentPairsOn(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.graft.TextShingleExpressions.{shingleHashSetCol, sortedIntersectSizeCol}
     val docSets = docs
@@ -476,13 +483,13 @@ object Dedup {
           Window.partitionBy(col("doc_id")).orderBy(col("df"), col("h"))))
         .localCheckpoint()
       val prefixes = positions
-        .filter(col("pos") <= col("sz") - ceilConservative(col("sz") * threshold) + 1)
+        .filter(col("pos") <= col("sz") - ceilConservative(col("sz") * ContainmentMin) + 1)
         .select(col("doc_id").as("id_a"), col("sz").as("sz_a"), col("h"))
       val cand = prefixes
         .join(positions.select(col("doc_id").as("id_b"), col("h"),
           col("pos").as("pos_b"), col("sz").as("sz_b")), "h")
         .filter(col("id_a") =!= col("id_b") &&
-          col("pos_b") <= col("sz_b") - ceilConservative(col("sz_a") * threshold) + 1)
+          col("pos_b") <= col("sz_b") - ceilConservative(col("sz_a") * ContainmentMin) + 1)
         .select(col("id_a"), col("id_b"))
         .distinct()
       // same byte-gated broadcast pin as the Jaccard verification join
@@ -494,15 +501,15 @@ object Dedup {
       val docSide: DataFrame => DataFrame =
         if (estBytes < MaxPinnedBroadcastBytes) broadcast else identity
       // Early-exit verification: a pair can only pass the containment
-      // filter with n_common ≥ threshold·sz_a, so the merge walk may
+      // filter with n_common ≥ ContainmentMin·sz_a, so the merge walk may
       // abort once that is provably unreachable. `need` is FLOOR of the
-      // double product — a conservative lower bound (threshold·sz_a is
+      // double product — a conservative lower bound (ContainmentMin·sz_a is
       // inexact in binary; ceil could exceed the true minimum on exact
       // multiples and early-exit a passing pair) — so every row the
       // filter keeps completed its walk and carries the EXACT count;
       // aborted rows return an underestimate still < need and are
       // dropped by the same filter they always failed.
-      val need = floor(lit(threshold) * col("sz_a")).cast("long")
+      val need = floor(lit(ContainmentMin) * col("sz_a")).cast("long")
       val nCommon = org.apache.spark.sql.graft.TextShingleExpressions
         .sortedIntersectAtLeastCol(col("set_a"), col("set_b"), need)
       val verified = cand
@@ -512,7 +519,7 @@ object Dedup {
           col("set").as("set_b"))), "id_b")
         .select(col("id_a"), col("id_b"), nCommon.cast("long").as("n_common"),
           (nCommon.cast("double") / col("sz_a")).as("containment"))
-        .filter(col("containment") >= threshold)
+        .filter(col("containment") >= ContainmentMin)
       verified.localCheckpoint().orderBy(col("id_a"), col("id_b"))
     } finally { docSets.unpersist(); () }
   }
@@ -920,12 +927,15 @@ object Dedup {
     if (nSample == 0) 0.0 else (candPairs / nSample) * sampleMod
   }
 
+  /** Band candidates per doc above which the router leaves PPJoin. */
+  val MaxCandPerDoc = 2.0
+
   /** Near-dup pairs with the duplicate-heavy-corpus guard (measured in
     * SURVEY §8): the exact PPJoin operator is OUTPUT-sensitive — on a
     * duplicate-dominated corpus its true result set (and therefore its
     * cost) grows quadratically with corpus size, while LSH + banding
     * stays candidate-bounded. Probe the band buckets first; take the
-    * exact path only while candidates/doc stay under `maxCandPerDoc`,
+    * exact path only while candidates/doc stay under [[MaxCandPerDoc]],
     * else fall back to the LSH estimate (whose downstream consumer is
     * [[duplicateClustersOn]] — cluster reps, not all pairs, are the
     * useful product of a duplicate-heavy corpus anyway).
@@ -940,27 +950,24 @@ object Dedup {
     * different hash draws. Downstream clustering is unaffected (both
     * families honor the same threshold semantics).
     */
-  def nearDupPairsAuto(spark: SparkSession, dir: String,
-                       maxCandPerDoc: Double = 2.0): DataFrame =
+  def nearDupPairsAuto(spark: SparkSession, dir: String): DataFrame =
     // exact route reads the shared materialization (one PPJoin per
     // session+corpus across q_ngram_jaccard and this entry); the
     // density probe still runs — the ROUTING decision is what the
     // gate certifies, the pair build is not re-paid
-    autoRoute(Tables.documents(spark, dir), maxCandPerDoc,
+    autoRoute(Tables.documents(spark, dir),
       materializedJaccardPairs(spark, dir)
         .orderBy(col("id_a"), col("id_b")))
 
-  def nearDupPairsAutoOn(docs: DataFrame,
-      maxCandPerDoc: Double = 2.0): DataFrame =
+  def nearDupPairsAutoOn(docs: DataFrame): DataFrame =
     // arbitrary frame: no corpus key to materialize under → fresh build
-    autoRoute(docs, maxCandPerDoc, ngramJaccardPairsOn(docs))
+    autoRoute(docs, ngramJaccardPairsOn(docs))
 
-  private def autoRoute(docs: DataFrame, maxCandPerDoc: Double,
-      exactPairs: => DataFrame): DataFrame = {
+  private def autoRoute(docs: DataFrame, exactPairs: => DataFrame): DataFrame = {
     val mod = probeMod(docs)
     val sig = probeSignatures(docs, mod)
     try {
-      if (densityFromSignatures(sig, mod) <= maxCandPerDoc)
+      if (densityFromSignatures(sig, mod) <= MaxCandPerDoc)
         exactPairs
       else {
         // Duplicate-heavy route REUSES the probe's signature frame when
@@ -1157,21 +1164,25 @@ object Dedup {
 
   /** The text closure's pair sources over the [[sigCommits]] chain cut
     * at `cuts`: the base pairs of `[0, hi)` are the LSH pairs of the
-    * stored signatures; the bridges of a stored range `[lo, hi)` probe
-    * its stored commit against the commits below it, and those of the
-    * live batch probe the docs no commit holds ([[deltaProbePairs]]).
+    * stored signatures, stored once in their own fold slot (the label
+    * chain's first step and the retraction store read the same
+    * table); the bridges of a stored range `[lo, hi)` probe its stored
+    * commit against the commits below it, and those of the live batch
+    * probe the docs no commit holds ([[deltaProbePairs]]).
     */
   private def textPairs(spark: SparkSession, dir: String,
       cuts: Seq[Int]): (Int => DataFrame, (Int, Int) => DataFrame) = {
     val commits = (0 +: cuts).zip(sigCommits(spark, dir, cuts))
     def sigBelow(lo: Int): DataFrame = graft.sources.Scratch.readParquetMultiOnce(spark,
       commits.collect { case (start, path) if start < lo => path })
+    val basePairs = (hi: Int) => graft.sources.Scratch.storedOnce(spark, dir, "documents",
+      graft.sources.Commits.foldSlot("minhash_sig", Seq(hi), "pairs"))(sigPairs(sigBelow(hi)))
     val bridges = (lo: Int, hi: Int) =>
       (if (hi <= cuts.last) probePairs(sigBelow(lo),
           graft.sources.Scratch.readParquetOnce(spark, commits.toMap.apply(lo)))
         else deltaProbePairs(sigBelow(lo), Tables.documents(spark, dir)))
         .select(col("id_a"), col("id_b"))
-    ((hi: Int) => sigPairs(sigBelow(hi)), bridges)
+    (basePairs, bridges)
   }
 
   /** Recompute form of [[deltaDupClusters]] — base labels and the
@@ -1267,16 +1278,13 @@ object Dedup {
     * shares the closure oracle restricted to surviving docs.
     */
   def retractDupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val baseSig = baseSigTable(spark, dir)
-    // built from the STORED signatures (identical to the text-built
-    // pairs — signatures are deterministic), not from text
-    val pairsPath = graft.sources.Scratch.slotOnce(spark, dir, "documents",
-        "delta_base_pairs_txt")(sigPairs(baseSig).write.mode("overwrite").parquet(_))
+    // the pair graph is the label chain's stored base pairs, built from
+    // the STORED signatures (identical to the text-built pairs —
+    // signatures are deterministic), not from text
     val (base, bridges) = textPairs(spark, dir, Seq(8))
     clusterSizes(retractComponentLabels(
-      storedLabels(spark, dir, "minhash_sig", Seq(8))(base, bridges),
-      graft.sources.Scratch.readParquetOnce(spark, pairsPath),
-      baseSig.filter(col("doc_id") % 10 === 7).select(col("doc_id"))))
+      storedLabels(spark, dir, "minhash_sig", Seq(8))(base, bridges), base(8),
+      baseSigTable(spark, dir).filter(col("doc_id") % 10 === 7).select(col("doc_id"))))
   }
 
   /** Cross-split contamination audit — the eval-integrity check every
@@ -1813,18 +1821,14 @@ object Dedup {
       // cover the requested size for the duration of the build.
       val nEval = evalSide.count()
       val spark = evalSide.sparkSession
-      val clamps = Seq(
-        "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" -> nEval * 8,
-        "spark.sql.optimizer.runtime.bloomFilter.maxNumItems" -> nEval)
-      val saved = clamps.map { case (k, _) => k -> spark.conf.get(k) }
-      clamps.foreach { case (k, want) =>
-        if (want > spark.conf.get(k).toLong) spark.conf.set(k, want.toString)
-      }
-      val bloomBytes =
-        try evalSide
-          .select(BloomExpressions.bloomFilterAgg(col("hh"), nEval, nEval * 8).as("bf"))
-          .head().getAs[Array[Byte]](0)
-        finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+      // only ever raised: a clamp already above the request stays
+      val raised = Seq(
+          "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" -> nEval * 8,
+          "spark.sql.optimizer.runtime.bloomFilter.maxNumItems" -> nEval)
+        .collect { case (k, want) if want > spark.conf.get(k).toLong => k -> want.toString }
+      val bloomBytes = graft.LocalSession.withConf(spark, raised)(evalSide
+        .select(BloomExpressions.bloomFilterAgg(col("hh"), nEval, nEval * 8).as("bf"))
+        .head().getAs[Array[Byte]](0))
       trainSide.filter(BloomExpressions.mightContain(bloomBytes, col("hh")))
     }
 

@@ -923,7 +923,7 @@ object Multimodal {
     * from pairing with itself.
     */
   private[graft] def deltaBandHashPairsFromIndex(baseBands: DataFrame,
-      batch: DataFrame, maxDist: Int = ImageNeardupMaxDist): DataFrame = {
+      batch: DataFrame): DataFrame = {
     val batchHashes = batch.select(col("ahash_hi"), col("ahash_lo")).distinct()
     // probe (batch-sized) vs index (stored base bands + the batch's
     // own): the ONLY candidate join — base bands never meet base bands
@@ -947,7 +947,7 @@ object Multimodal {
           when(aFirst, col("a.ahash_lo")).otherwise(col("c.ahash_lo")).as("lo_a"),
           when(aFirst, col("c.ahash_hi")).otherwise(col("a.ahash_hi")).as("hi_b"),
           when(aFirst, col("c.ahash_lo")).otherwise(col("a.ahash_lo")).as("lo_b")),
-      maxDist)
+      ImageNeardupMaxDist)
   }
 
   /** Recompute-index form for callers without a corpus identity to
@@ -955,10 +955,9 @@ object Multimodal {
     * value-identical to the stored-index path (spec-pinned).
     */
   private[graft] def deltaBandHashPairs(base: DataFrame,
-      batch: DataFrame, maxDist: Int = ImageNeardupMaxDist): DataFrame =
+      batch: DataFrame): DataFrame =
     deltaBandHashPairsFromIndex(
-      bands4(base.select(col("ahash_hi"), col("ahash_lo")).distinct()),
-      batch, maxDist)
+      bands4(base.select(col("ahash_hi"), col("ahash_lo")).distinct()), batch)
 
   private[graft] def deltaNeardupFromHashes(base: DataFrame,
       batch: DataFrame, baseBands: Option[DataFrame] = None): DataFrame = {
@@ -1596,17 +1595,19 @@ object Multimodal {
       .orderBy(col("doc_id"))
   }
 
+  val FrameSamples = 4 // frames sampled per payload
+
   /** Resize + frame-sample pipeline: payload-shrinking stages run as
     * narrow per-partition maps BEFORE anything wide; the one-to-many
     * frame explosion emits (doc, frame_idx, chunk) records whose chunks
     * are immediately reduced to features. Per-format frame counts are
     * the (tiny) aggregate that shuffles.
     */
-  def frameFeatures(spark: SparkSession, dir: String, frames: Int = 4): DataFrame = {
+  def frameFeatures(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     mediaTable(spark, dir)
       .mapPartitions(_.map(MediaDecoder.resizeStub(_, 4096)))
-      .mapPartitions(_.flatMap(MediaDecoder.frameSampleStub(_, frames)))
+      .mapPartitions(_.flatMap(MediaDecoder.frameSampleStub(_, FrameSamples)))
       .map { case (doc, idx, chunk) => (doc, idx, chunk.length.toLong) }
       .toDF("doc_id", "frame_idx", "chunk_bytes")
       .groupBy(col("frame_idx"))

@@ -59,6 +59,9 @@ object Pipeline {
     */
   val DecontaminationSpanK = 40
 
+  /** Largest eval-span share a train doc may carry and stay packed. */
+  val MaxContamination = 0.05
+
   def curationPipeline(spark: SparkSession, dir: String): DataFrame =
     curationPipelineOn(Tables.documents(spark, dir))
 
@@ -459,7 +462,7 @@ object Pipeline {
               .groupBy(col("doc_id"))
               .agg(count(lit(1)).as("n_shingles"),
                 sum(coalesce(col("hit"), lit(0L))).as("n_overlap"))
-              .filter(col("n_overlap").cast("double") / col("n_shingles") <= 0.05)
+              .filter(col("n_overlap").cast("double") / col("n_shingles") <= MaxContamination)
               .select(col("doc_id"))
             TextAnalysis.packSequencesOn(
                 deduped.join(cleanTrainIds, Seq("doc_id"), "left_semi"))
@@ -482,7 +485,7 @@ object Pipeline {
     */
   private[graft] def deltaCurationPipelineFrom(storedNorms: DataFrame,
       storedEvalVocab: DataFrame, storedPacking: DataFrame,
-      batch: DataFrame, budget: Int = 2048, shards: Int = 8): DataFrame = {
+      batch: DataFrame): DataFrame = {
     // batch-only quality pass (per-doc rule, the cascade's stage 1)
     val qualityIds = TextAnalysis.corpusReasons(batch)
       .select(col("doc_id"), col("reason"))
@@ -523,7 +526,7 @@ object Pipeline {
             .groupBy(col("doc_id"))
             .agg(count(lit(1)).as("n_shingles"),
               sum(coalesce(col("hit"), lit(0L))).as("n_overlap"))
-            .filter(col("n_overlap").cast("double") / col("n_shingles") <= 0.05)
+            .filter(col("n_overlap").cast("double") / col("n_shingles") <= MaxContamination)
             .select(col("doc_id"))
           val cleanTrain = deduped.join(cleanTrainIds, Seq("doc_id"), "left_semi")
           // packing APPEND: batch docs slot after every stored doc in
@@ -536,13 +539,13 @@ object Pipeline {
             .rowsBetween(Window.unboundedPreceding, -1)
           val npacked = cleanTrain
             .select(col("doc_id"),
-              pmod(col("doc_id"), lit(shards.toLong)).as("shard"),
+              pmod(col("doc_id"), lit(TextAnalysis.PackShards.toLong)).as("shard"),
               size(tokens(col("text"))).cast("long").as("n_tok"))
             .withColumn("cum_local", coalesce(sum(col("n_tok")).over(w), lit(0L)))
             .join(baseTok, Seq("shard"), "left")
             .withColumn("seq_id", floor(
               (coalesce(col("base_tok"), lit(0L)) + col("cum_local"))
-                / budget).cast("long"))
+                / TextAnalysis.PackBudget).cast("long"))
             .groupBy(col("shard"), col("seq_id"))
             .agg(count(lit(1)).as("n_docs"),
               sum(col("n_tok")).as("total_tokens"),
@@ -562,9 +565,7 @@ object Pipeline {
     } finally { kept.unpersist(); () }
   }
 
-  def curationPipelineOn(docs: DataFrame,
-                         budget: Int = 2048, shards: Int = 8,
-                         maxContamination: Double = 0.05): DataFrame = {
+  def curationPipelineOn(docs: DataFrame): DataFrame = {
     // Decision pass FIRST, as a narrow (doc_id, reason) table that is
     // checkpointed BEFORE filtering. Filtering corpusReasons directly
     // looks natural but is a 60× trap: predicate pushdown substitutes
@@ -614,10 +615,10 @@ object Pipeline {
           .agg(count(lit(1)).as("n_shingles"),
             sum(coalesce(col("hit"), lit(0L))).as("n_overlap"))
           .filter(col("n_overlap").cast("double") / col("n_shingles")
-            <= maxContamination)
+            <= MaxContamination)
           .select(col("doc_id"))
         val cleanTrain = deduped.join(cleanTrainIds, Seq("doc_id"), "left_semi")
-        val packed = TextAnalysis.packSequencesOn(cleanTrain, budget, shards)
+        val packed = TextAnalysis.packSequencesOn(cleanTrain)
         // the localCheckpoint materializes NOW, while the three
         // persists are live, and the finally blocks release them
         packed.localCheckpoint().orderBy(col("shard"), col("seq_id"))

@@ -1269,11 +1269,11 @@ object Relational {
     * (runtime filters only pay off on shuffle joins — a broadcast join
     * already filters at probe time), and the application-side size
     * threshold is lowered ONLY while this plan is optimized (default
-    * 10 GB targets real clusters; the try/finally restores the session
-    * for every other query). The Bloom filter is semantics-preserving
-    * (false positives just pass through the real join), so the values
-    * sit under the exact oracle gate while the plan assertion pins the
-    * injection.
+    * 10 GB targets real clusters; [[graft.LocalSession.withConf]]
+    * restores the session for every other query). The Bloom filter is
+    * semantics-preserving (false positives just pass through the real
+    * join), so the values sit under the exact oracle gate while the
+    * plan assertion pins the injection.
     *
     * The default path EXECUTES the Bloom-filtered plan inside the conf
     * window via an eager localCheckpoint — a consumer's later write
@@ -1297,9 +1297,7 @@ object Relational {
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val saved = overrides.map { case (k, _) => k -> spark.conf.getOption(k) }
-    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    graft.LocalSession.withConf(spark, overrides) {
       val o = Tables.orders(spark, dir)
         .filter(col("o_orderpriority") === "1-URGENT" &&
           col("o_totalprice") > 400000.0)
@@ -1317,11 +1315,6 @@ object Relational {
       // join+agg EXECUTE here, under the overrides; the 3-row sort
       // re-plans later under the restored conf, which is fine
       df.localCheckpoint().orderBy(col("l_returnflag"))
-    } finally {
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
     }
   }
 
@@ -1466,9 +1459,7 @@ object Relational {
     val overrides = Seq(
       "spark.sql.cbo.enabled" -> "true",
       "spark.sql.cbo.joinReorder.enabled" -> "true")
-    val saved = overrides.map { case (k, _) => k -> spark.conf.getOption(k) }
-    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    graft.LocalSession.withConf(spark, overrides) {
       val df = spark.table(tOrders)
         .join(spark.table(tCust), col("o_custkey") === col("c_custkey"))
         .join(spark.table(tNat), col("c_nationkey") === col("n_nationkey"))
@@ -1477,11 +1468,6 @@ object Relational {
         .agg(count(lit(1)).as("n_orders"),
           round(sum(col("o_totalprice")), 2).as("revenue"))
       df.localCheckpoint().orderBy(col("c_mktsegment"))
-    } finally {
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
     }
   }
 
@@ -1515,9 +1501,7 @@ object Relational {
     val overrides = Seq(
       "spark.sql.cbo.enabled" -> "true",
       "spark.sql.cbo.joinReorder.enabled" -> "true")
-    val saved = overrides.map { case (k, _) => k -> spark.conf.getOption(k) }
-    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    graft.LocalSession.withConf(spark, overrides) {
       val df = spark.table(tOrders)
         .join(spark.table(tCust), col("o_custkey") === col("c_custkey"))
         .join(spark.table(tNat), col("c_nationkey") === col("n_nationkey"))
@@ -1527,11 +1511,6 @@ object Relational {
         .agg(count(lit(1)).as("n_orders"),
           round(sum(col("o_totalprice")), 2).as("revenue"))
       df.localCheckpoint().orderBy(col("c_mktsegment"))
-    } finally {
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
     }
   }
 

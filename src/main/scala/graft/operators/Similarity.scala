@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *  - [[ivfKnn]]: IVF two-stage search — deterministic fixed-point
   *    Lloyd coarse quantizer (cells ~√N), multi-probe within the
   *    nearest cells. At
-  *    100 TB this turns an O(N·Q) scan into O(probes·N/cells · Q) with
+  *    100 TB this turns an O(N·Q) scan into O(IvfProbes·N/cells · Q) with
   *    the corpus partitioned BY cell, which is the standard
   *    billion-scale layout (cell = partition key → partition pruning
   *    on probe).
@@ -155,7 +155,7 @@ object Similarity {
     * fixed-point Lloyd ([[ivfFitCents]]) over the corpus, cell
     * count scaling ~√N with the corpus (the standard IVF sizing:
     * balances cells scanned per probe against vectors per cell), and
-    * MULTI-PROBE search — each query scans its `probes` nearest cells,
+    * MULTI-PROBE search — each query scans its [[IvfProbes]] nearest cells,
     * which recovers the boundary neighbors single-probe loses.
     *
     * The quantizer is a pure function of the data (deterministic init =
@@ -178,9 +178,9 @@ object Similarity {
     * Recall < 1.0 by construction; SimilaritySpec holds the floor at
     * 0.8 recall@5.
     */
-  def ivfKnn(spark: SparkSession, dir: String, probes: Int = 3): DataFrame =
+  def ivfKnn(spark: SparkSession, dir: String): DataFrame =
     ivfFitSearch(spark, Tables.embeddings(spark, dir),
-      ivfCells(denseCountDir(spark, dir, "ivf sizing")), probes)
+      ivfCells(denseCountDir(spark, dir, "ivf sizing")))
 
   /** IVF search over any (vec_id, embedding: array<float>) relation —
     * the quantizer-quality spec runs this on clustered data, where IVF
@@ -189,8 +189,8 @@ object Similarity {
     * probed cell holds a random ~1/cells of the true neighbors; that
     * is a property of the DATA, not the quantizer.)
     */
-  def ivfKnnOn(spark: SparkSession, e: DataFrame, probes: Int = 3): DataFrame =
-    ivfFitSearch(spark, e, ivfCells(e.count()), probes)
+  def ivfKnnOn(spark: SparkSession, e: DataFrame): DataFrame =
+    ivfFitSearch(spark, e, ivfCells(e.count()))
 
   /** Ceiling on the √N IVF cell count: centroids are collected,
     * broadcast model state (cells · dim · 8 B — 64 MB at this cap for
@@ -292,8 +292,8 @@ object Similarity {
     * independent library calls over the same table always agree, and
     * both match the DuckDB re-derivation (shared q_knn_ivf oracle).
     */
-  def ivfKnnMaterialized(spark: SparkSession, dir: String, probes: Int = 3): DataFrame =
-    ivfKnnPruned(spark, dir, ivfCells(denseCountDir(spark, dir, "ivf sizing")), probes)
+  def ivfKnnMaterialized(spark: SparkSession, dir: String): DataFrame =
+    ivfKnnPruned(spark, dir, ivfCells(denseCountDir(spark, dir, "ivf sizing")))
 
   /** Pruned serving over the full-fit `cells`-cell layout, shared by the
     * √N-sized and the fixed-[[IvfExactCells]] tiers. The centroids and
@@ -303,11 +303,10 @@ object Similarity {
     * the in-memory fit ([[ivfFitSearch]]), whose quantizer,
     * assignment and probe plan they store.
     */
-  private def ivfKnnPruned(spark: SparkSession, dir: String, cells: Int,
-      probes: Int): DataFrame = {
+  private def ivfKnnPruned(spark: SparkSession, dir: String, cells: Int): DataFrame = {
     val cents = ivfStoredCents(spark, dir, cells)
     ivfServe(spark, dir, cents, Seq(cellLayoutOnce(spark, dir, s"ivf_k$cells")(
-      ivfAssignTo(cents, Tables.embeddings(spark, dir)))), probes)
+      ivfAssignTo(cents, Tables.embeddings(spark, dir)))))
   }
 
   /** The full-corpus `cells`-cell centroids, fitted once per corpus
@@ -326,6 +325,9 @@ object Similarity {
     * the whole pipeline stays a pure function of the data.
     */
   val IvfExactCells = 16
+
+  /** Cells each query probes, in every IVF tier and its oracle. */
+  val IvfProbes = 3
 
   /** IVF at the FIXED [[IvfExactCells]] cell count — the first
     * oracle-graded ANN tier, kept alongside the √N-sized [[ivfKnn]] as
@@ -351,22 +353,21 @@ object Similarity {
     * at 100 TB the corpus would be written partitioned by cell
     * ([[ivfKnnMaterialized]]) and a probe is partition pruning.
     */
-  def ivfKnnExact(spark: SparkSession, dir: String, probes: Int = 3): DataFrame =
-    ivfKnnExactOn(spark, Tables.embeddings(spark, dir), probes)
+  def ivfKnnExact(spark: SparkSession, dir: String): DataFrame =
+    ivfKnnExactOn(spark, Tables.embeddings(spark, dir))
 
-  def ivfKnnExactOn(spark: SparkSession, e: DataFrame, probes: Int = 3): DataFrame =
-    ivfFitSearch(spark, e, IvfExactCells, probes)
+  def ivfKnnExactOn(spark: SparkSession, e: DataFrame): DataFrame =
+    ivfFitSearch(spark, e, IvfExactCells)
 
   /** In-memory IVF over `cells` cells, from the same three steps the
     * stored tiers split between ingest and serving: fit the quantizer
     * ([[ivfFitCents]]), tag the corpus with its cell ([[ivfAssignTo]]),
     * plan each query's probed cells ([[ivfProbePlan]]); then search.
     */
-  private def ivfFitSearch(spark: SparkSession, e: DataFrame, cells: Int,
-      probes: Int): DataFrame = {
+  private def ivfFitSearch(spark: SparkSession, e: DataFrame, cells: Int): DataFrame = {
     val cents = ivfFitCents(spark, e, cells)
     ivfSearch(ivfAssignTo(cents, e),
-      ivfProbePlan(e.filter(col("vec_id") < NumQueries), cents, probes))
+      ivfProbePlan(e.filter(col("vec_id") < NumQueries), cents))
   }
 
   /** Unit vectors in double arithmetic (sequential element-order fold,
@@ -395,9 +396,8 @@ object Similarity {
     * PartitionFilters asserted in the same spec), hence it shares
     * q_knn_ivf_exact's DuckDB oracle.
     */
-  def ivfKnnExactMaterialized(spark: SparkSession, dir: String,
-      probes: Int = 3): DataFrame =
-    ivfKnnPruned(spark, dir, IvfExactCells, probes)
+  def ivfKnnExactMaterialized(spark: SparkSession, dir: String): DataFrame =
+    ivfKnnPruned(spark, dir, IvfExactCells)
 
   // ——— delta (incremental) ANN index maintenance ———
 
@@ -439,17 +439,16 @@ object Similarity {
         .select(col("vec_id").as("n_id"),
           col("cluster").cast("int").as("cell")), "n_id")
 
-  /** Per-query probe plan against fixed centroids: top-`probes` cells
+  /** Per-query probe plan against fixed centroids: top-[[IvfProbes]] cells
     * by quantized distance, query embedding riding along.
     */
-  private def ivfProbePlan(queriesE: DataFrame, cents: DataFrame,
-      probes: Int): DataFrame = {
+  private def ivfProbePlan(queriesE: DataFrame, cents: DataFrame): DataFrame = {
     val probeW = Window.partitionBy(col("q_id")).orderBy(col("d"), col("cid"))
     quantizedX(unitized(queriesE)).crossJoin(broadcast(cents))
       .select(col("vec_id").as("q_id"), col("cid"),
         sqDistD(col("xv"), col("cent")).as("d"))
       .withColumn("pr", row_number().over(probeW))
-      .filter(col("pr") <= probes)
+      .filter(col("pr") <= IvfProbes)
       .join(queriesE.select(col("vec_id").as("q_id"),
         col("embedding").as("q_emb")), "q_id")
       .select(col("q_id"), col("q_emb"), col("cid").cast("int").as("cell"))
@@ -511,10 +510,10 @@ object Similarity {
     * ([[prunedSearch]]).
     */
   private[graft] def ivfServe(spark: SparkSession, dir: String,
-      cents: DataFrame, layouts: Seq[String], probes: Int): DataFrame =
+      cents: DataFrame, layouts: Seq[String]): DataFrame =
     prunedSearch(
       ivfProbePlan(Tables.embeddings(spark, dir).filter(col("vec_id") < NumQueries),
-        cents, probes),
+        cents),
       layouts.map(graft.sources.Scratch.readParquetOnce(spark, _)))
 
   /** Fold stored IVF layouts into one cell-partitioned layout, off the
@@ -533,9 +532,9 @@ object Similarity {
   /** INCREMENTAL IVF, single ingest: the [[ivfCommits]] chain cut at
     * 8/10 ([[deltaBaseCount]]), served over base + delta commits.
     */
-  def deltaIvfKnn(spark: SparkSession, dir: String, probes: Int = 3): DataFrame = {
+  def deltaIvfKnn(spark: SparkSession, dir: String): DataFrame = {
     val (cents, commits) = ivfCommits(spark, dir, Seq(8))
-    ivfServe(spark, dir, cents, commits, probes)
+    ivfServe(spark, dir, cents, commits)
   }
 
   /** RETRACTION — the IVF layout under DELETION, closing the ANN
@@ -551,14 +550,13 @@ object Similarity {
     * ORIGINAL base — exactly the stored-model semantics). Fixture
     * tombstones: vec_id ≡ 7 (mod 10) excluding the query ids.
     */
-  def retractIvfKnn(spark: SparkSession, dir: String,
-      probes: Int = 3): DataFrame = {
+  def retractIvfKnn(spark: SparkSession, dir: String): DataFrame = {
     val cuts = Seq(8)
     val (cents, commits) = ivfCommits(spark, dir, cuts)
     val survivors = ivfFold(spark, dir,
       graft.sources.Commits.foldSlot("ivf", cuts, "retract"), commits,
       keep = !(col("n_id") % 10 === 7 && col("n_id") >= NumQueries))
-    ivfServe(spark, dir, cents, Seq(survivors), probes)
+    ivfServe(spark, dir, cents, Seq(survivors))
   }
 
   /** DRIFT-MEASURED refit router, IVF edition ([[graphKnnDriftRouted]]'s
@@ -576,25 +574,25 @@ object Similarity {
     * rewritten embeddings file is measured again.
     */
   def ivfKnnDriftRouted(spark: SparkSession, dir: String,
-      probes: Int = 3, expectArm: Option[String] = None): DataFrame = {
+      expectArm: Option[String] = None): DataFrame = {
     val (cents, commits) = ivfCommits(spark, dir, Seq(8))
     val recall = graft.sources.Scratch.once(spark,
-        s"ivf-recall:$probes:${commits.mkString(",")}") {
+        s"ivf-recall:${commits.mkString(",")}") {
       val n = denseCountDir(spark, dir, "drift-routed IVF")
       val b = deltaBaseCount(n)
       measuredIvfRecall(spark, Tables.embeddings(spark, dir), cents,
         commits.map(graft.sources.Scratch.readParquetOnce(spark, _)), b,
-        math.min(DriftSampleQueries.toLong, n - b), probes)
+        math.min(DriftSampleQueries.toLong, n - b))
     }
     assertRoutedArm("IVF", recall, expectArm)
     if (recall >= DriftRecallFloor) {
       System.err.println(f"[drift-router] sampled IVF insert recall@$K = " +
         f"$recall%.3f >= $DriftRecallFloor — serving the maintained index")
-      ivfServe(spark, dir, cents, commits, probes)
+      ivfServe(spark, dir, cents, commits)
     } else {
       System.err.println(f"[drift-router] sampled IVF insert recall@$K = " +
         f"$recall%.3f < $DriftRecallFloor — ESCALATING to a full refit")
-      ivfKnnExactMaterialized(spark, dir, probes)
+      ivfKnnExactMaterialized(spark, dir)
     }
   }
 
@@ -631,12 +629,11 @@ object Similarity {
     * scans) returns. Deterministic on both sides.
     */
   private[graft] def measuredIvfRecall(spark: SparkSession, e: DataFrame,
-      cents: DataFrame, layouts: Seq[DataFrame], b: Long, nSample: Long,
-      probes: Int): Double = {
+      cents: DataFrame, layouts: Seq[DataFrame], b: Long, nSample: Long): Double = {
     if (nSample <= 0) return 1.0
     val sample = e.filter(col("vec_id") >= b && col("vec_id") < b + nSample)
       .localCheckpoint()
-    val probeCells = ivfProbePlan(sample, cents, probes).localCheckpoint()
+    val probeCells = ivfProbePlan(sample, cents).localCheckpoint()
     val approx = ivfSearch(layouts.reduce(_ unionByName _), probeCells)
       .select(col("q_id"), col("n_id"))
     val sampleQ = sample
@@ -680,18 +677,17 @@ object Similarity {
     * stays partition-pruned; the plan now reads ONE layout instead of
     * base ∪ delta.
     */
-  def deltaIvfKnnCompacted(spark: SparkSession, dir: String,
-      probes: Int = 3): DataFrame = ivfCompacted(spark, dir, Seq(8), probes)
+  def deltaIvfKnnCompacted(spark: SparkSession, dir: String): DataFrame =
+    ivfCompacted(spark, dir, Seq(8))
 
   /** MULTI-INGEST compounding for the IVF family: the [[ivfCommits]]
     * chain cut at 6/10 and 8/10 — TWO stored assignment commits after
     * the base, then serving over all three layouts partition-pruned.
     * Hash-matches the [[deltaIvfKnn]] oracle chain at the 6/10 cut.
     */
-  def delta2IvfKnn(spark: SparkSession, dir: String,
-      probes: Int = 3): DataFrame = {
+  def delta2IvfKnn(spark: SparkSession, dir: String): DataFrame = {
     val (cents, commits) = ivfCommits(spark, dir, Seq(6, 8))
-    ivfServe(spark, dir, cents, commits, probes)
+    ivfServe(spark, dir, cents, commits)
   }
 
   /** The two-commit lifecycle's N-COMMIT compaction: base + BOTH
@@ -699,15 +695,14 @@ object Similarity {
     * the delta2 oracle row-for-row, certifying the N-way fold as a pure
     * layout change.
     */
-  def delta2IvfKnnCompacted(spark: SparkSession, dir: String,
-      probes: Int = 3): DataFrame = ivfCompacted(spark, dir, Seq(6, 8), probes)
+  def delta2IvfKnnCompacted(spark: SparkSession, dir: String): DataFrame =
+    ivfCompacted(spark, dir, Seq(6, 8))
 
-  private def ivfCompacted(spark: SparkSession, dir: String, cuts: Seq[Int],
-      probes: Int): DataFrame = {
+  private def ivfCompacted(spark: SparkSession, dir: String, cuts: Seq[Int]): DataFrame = {
     val (cents, commits) = ivfCommits(spark, dir, cuts)
     ivfServe(spark, dir, cents,
       Seq(ivfFold(spark, dir, graft.sources.Commits.foldSlot("ivf", cuts, "fold"),
-        commits)), probes)
+        commits)))
   }
 
   /** In-memory delta-IVF body for specs and probes (no corpus identity
@@ -715,15 +710,14 @@ object Similarity {
     * batch statelessly against those centroids, search the union —
     * value-identical to [[deltaIvfKnn]]'s stored-table path.
     */
-  private[graft] def deltaIvfKnnOn(spark: SparkSession, e: DataFrame,
-      probes: Int = 3): DataFrame = {
+  private[graft] def deltaIvfKnnOn(spark: SparkSession, e: DataFrame): DataFrame = {
     val n = denseCount(e, "delta IVF")
     val b = deltaBaseCount(n)
     val cents = ivfFitCents(spark, e.filter(col("vec_id") < b), IvfExactCells)
     val corpus = ivfAssignTo(cents, e.filter(col("vec_id") < b))
       .unionByName(ivfAssignTo(cents, e.filter(col("vec_id") >= b)))
-    val probeCells = ivfProbePlan(e.filter(col("vec_id") < NumQueries),
-      cents, probes).localCheckpoint()
+    val probeCells = ivfProbePlan(e.filter(col("vec_id") < NumQueries), cents)
+      .localCheckpoint()
     ivfSearch(corpus, probeCells)
   }
 
@@ -734,8 +728,8 @@ object Similarity {
     * filtered scan, never a fit.
     */
   private[graft] def deltaIvfProbe(baseLayout: DataFrame, cents: DataFrame,
-      batch: DataFrame, queriesE: DataFrame, probes: Int = 3): DataFrame =
-    prunedSearch(ivfProbePlan(queriesE, cents, probes),
+      batch: DataFrame, queriesE: DataFrame): DataFrame =
+    prunedSearch(ivfProbePlan(queriesE, cents),
       Seq(baseLayout, ivfAssignTo(cents, batch)))
 
   // ——— graph ANN (NSW-style) ———
@@ -1597,9 +1591,9 @@ object Similarity {
     * oracle gate — the [[quantizedIvfKnnExact]] pipeline at production
     * cell sizing.
     */
-  def quantizedIvfKnn(spark: SparkSession, dir: String, probes: Int = 3): DataFrame =
+  def quantizedIvfKnn(spark: SparkSession, dir: String): DataFrame =
     quantizedIvfSearch(spark, dir,
-      ivfCells(denseCountDir(spark, dir, "ivf sizing")), probes)
+      ivfCells(denseCountDir(spark, dir, "ivf sizing")))
 
   /** The shared IVF-int8 serving pipeline behind [[quantizedIvfKnn]]
     * (√N Lloyd cells) and [[quantizedIvfKnnExact]] (fixed
@@ -1609,13 +1603,13 @@ object Similarity {
     * top-[[QuantRerank]] shortlist.
     */
   private def quantizedIvfSearch(spark: SparkSession, dir: String,
-      cells: Int, probes: Int): DataFrame = {
+      cells: Int): DataFrame = {
     import graft.functions.VectorFunctions.{int8Dot, int8Pack}
     val e = Tables.embeddings(spark, dir)
     val cents = ivfStoredCents(spark, dir, cells)
-    // tiny (queries × probes rows), consumed thrice (cell collect,
+    // tiny (queries × IvfProbes rows), consumed thrice (cell collect,
     // query pack, coarse join) with a normalization pass in its lineage
-    val probeCells = ivfProbePlan(e.filter(col("vec_id") < NumQueries), cents, probes)
+    val probeCells = ivfProbePlan(e.filter(col("vec_id") < NumQueries), cents)
       .localCheckpoint()
     val scaleCol = aggregate(col("embedding"), lit(0.0),
       (acc, v) => greatest(acc, abs(v.cast("double")))) / 127.0
@@ -1672,9 +1666,8 @@ object Similarity {
     * differ only where int8 rounding pushes a true pool-neighbor out
     * of the quantized top-[[QuantRerank]]).
     */
-  def quantizedIvfKnnExact(spark: SparkSession, dir: String,
-      probes: Int = 3): DataFrame =
-    quantizedIvfSearch(spark, dir, IvfExactCells, probes)
+  def quantizedIvfKnnExact(spark: SparkSession, dir: String): DataFrame =
+    quantizedIvfSearch(spark, dir, IvfExactCells)
 
   // ——— product quantization (PQ) ———
 
@@ -1875,7 +1868,7 @@ object Similarity {
       .orderBy(col("group_id"), col("pos"))
   }
 
-  /** Embedding near-duplicate pairs: cosine ≥ threshold among vectors
+  /** Embedding near-duplicate pairs: cosine ≥ [[SemDedupThreshold]] among vectors
     * sharing a coarse cell (the IVF assignment doubles as the LSH-style
     * blocking key, keeping the pair join off the full cross product).
     * Centroid selection is DETERMINISTIC (the first [[dedupCells]]
@@ -2104,9 +2097,12 @@ object Similarity {
       .orderBy(col("cluster"))
   }
 
+  /** Rounded cosine from which two embeddings are semantic duplicates. */
+  val SemDedupThreshold = 0.4
+
   /** SemDeDup-style semantic dedup: k-means clusters as the blocking
     * key, cosine pairs only WITHIN a cluster, and a rank-based keep
-    * policy — for every within-cluster pair with cosine ≥ threshold,
+    * policy — for every within-cluster pair with cosine ≥ [[SemDedupThreshold]],
     * the lower-ranked member is dropped; survivors are the semantic
     * representatives. Rank follows the SemDeDup paper's choice: order
     * by distance to the final centroid DESCENDING (keep the outlier,
@@ -2116,16 +2112,15 @@ object Similarity {
     * aggregate, O(Σ n_c²) pair work like [[embeddingDedup]], but with
     * ITERATED clusters as blocks and a curation DECISION as output.
     */
-  def semanticDedup(spark: SparkSession, dir: String, threshold: Double = 0.4): DataFrame =
-    semanticDedupOn(spark, Tables.embeddings(spark, dir), threshold)
+  def semanticDedup(spark: SparkSession, dir: String): DataFrame =
+    semanticDedupOn(spark, Tables.embeddings(spark, dir))
 
   /** Operator form over any (vec_id, embedding) relation. `k` as in
     * [[kmeansAssignOn]] — the pair stage below is O(Σ n_c²), so k is
     * THE scale knob: at fixed k the stage grows N²/k, sized correctly
     * it stays ~N·target_cluster_size.
     */
-  def semanticDedupOn(spark: SparkSession, e: DataFrame,
-      threshold: Double = 0.4, k: Int = KmeansK): DataFrame = {
+  def semanticDedupOn(spark: SparkSession, e: DataFrame, k: Int = KmeansK): DataFrame = {
     val assigned = kmeansAssignOn(spark, e, k)
     val w = Window.partitionBy(col("cluster"))
       .orderBy(col("dist").desc, col("vec_id"))
@@ -2138,7 +2133,7 @@ object Similarity {
     val b = ranked.as("b")
     val dropped = a.join(b,
         col("a.cluster") === col("b.cluster") && col("a.rank") < col("b.rank"))
-      .filter(round(cosine(col("a.embedding"), col("b.embedding")), 6) >= threshold)
+      .filter(round(cosine(col("a.embedding"), col("b.embedding")), 6) >= SemDedupThreshold)
       .select(col("b.vec_id").as("vec_id")).distinct()
     ranked.join(dropped.withColumn("is_dropped", lit(1L)), Seq("vec_id"), "left")
       .select(col("vec_id"), col("cluster"), col("rank").cast("long").as("rank"),
@@ -2188,11 +2183,10 @@ object Similarity {
     * ~|batch| · target_cluster_size. Probed vs the full recompute in
     * ScalingProbe delta_semdedup.
     */
-  def deltaSemDedup(spark: SparkSession, dir: String,
-      threshold: Double = 0.4): DataFrame = {
+  def deltaSemDedup(spark: SparkSession, dir: String): DataFrame = {
     val (cents, storedBase, b) = semdedupStoredState(spark, dir)
     deltaSemDedupFrom(cents, storedBase,
-      Tables.embeddings(spark, dir).filter(col("vec_id") >= b), threshold)
+      Tables.embeddings(spark, dir).filter(col("vec_id") >= b))
   }
 
   /** The stored semdedup state (fitted centroids + frozen
@@ -2216,18 +2210,17 @@ object Similarity {
     (cents, graft.sources.Scratch.readParquetOnce(spark, basePath), b)
   }
 
-  /** Recompute-state form (specs, probes): fits the base model and
+  /** Recompute-state form (specs): fits the base model and
     * derives the stored decision table inline — value-identical to the
     * stored-table path.
     */
-  private[graft] def deltaSemDedupOn(spark: SparkSession, e: DataFrame,
-      threshold: Double = 0.4): DataFrame = {
+  private[graft] def deltaSemDedupOn(spark: SparkSession, e: DataFrame): DataFrame = {
     val n = denseCount(e, "delta semdedup")
     val b = deltaBaseCount(n)
     val base = e.filter(col("vec_id") < b)
     val cents = kmeansCentroids(spark, base)
     deltaSemDedupFrom(cents, semdedupAssign(cents, base),
-      e.filter(col("vec_id") >= b), threshold)
+      e.filter(col("vec_id") >= b))
   }
 
   /** Assignment against FIXED centroids with the decision table's
@@ -2242,7 +2235,7 @@ object Similarity {
       .join(e.select(col("vec_id"), col("embedding")), "vec_id")
 
   private[graft] def deltaSemDedupFrom(cents: DataFrame, storedBase: DataFrame,
-      batch: DataFrame, threshold: Double): DataFrame = {
+      batch: DataFrame): DataFrame = {
     // THE INGEST: stateless assignment — one broadcast join, map-only
     val assigned = semdedupAssign(cents, batch)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -2264,7 +2257,7 @@ object Similarity {
           col("a.cluster") === col("b.cluster"))
         .groupBy(col("b.vec_id").as("vec_id"))
         .agg(sum(when(above("a", "b"), 1L).otherwise(0L)).as("n_stored_above"),
-          max(when(above("a", "b") && simAB >= threshold, 1L)
+          max(when(above("a", "b") && simAB >= SemDedupThreshold, 1L)
             .otherwise(0L)).as("hit_stored"))
       // batch-internal rank + drop (batch-sized window and self-join)
       val w = Window.partitionBy(col("cluster"))
@@ -2273,7 +2266,7 @@ object Similarity {
         (row_number().over(w) - 1).cast("long"))
       val hitBatch = assigned.as("a").join(assigned.as("b"),
           col("a.cluster") === col("b.cluster") && above("a", "b"))
-        .filter(simAB >= threshold)
+        .filter(simAB >= SemDedupThreshold)
         .select(col("b.vec_id").as("vec_id")).distinct()
         .withColumn("hit_batch", lit(1L))
       batchRank
@@ -2290,7 +2283,7 @@ object Similarity {
     } finally { assigned.unpersist(); () }
   }
 
-  def embeddingDedup(spark: SparkSession, dir: String, threshold: Double = 0.4): DataFrame = {
+  def embeddingDedup(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     val nCells = dedupCells(e.count())
     val centroids = e.filter(col("vec_id") < nCells)
@@ -2306,7 +2299,7 @@ object Similarity {
     a.join(b, col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
         round(cosine(col("a.embedding"), col("b.embedding")), 6).as("sim"))
-      .filter(col("sim") >= threshold)
+      .filter(col("sim") >= SemDedupThreshold)
       .orderBy(col("id_a"), col("id_b"))
   }
 }

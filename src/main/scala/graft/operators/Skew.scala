@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 
 /** Skew-mitigation patterns. A hot grouping key (a stopword in word
   * count, a celebrity user in events) concentrates one reducer at
-  * 100 TB; salting splits each key across `salt` sub-keys for the first
-  * (heavy) aggregation and re-merges in a second (tiny) one. The rewrite
+  * 100 TB; salting splits each key across [[SaltBuckets]] sub-keys for
+  * the first (heavy) aggregation and re-merges in a second (tiny) one. The rewrite
   * is semantics-preserving for associative+commutative aggregates —
   * q_salted_wordcount shares its DuckDB oracle with q_wordcount, so the
   * gate itself proves the equivalence.
@@ -21,23 +21,22 @@ import org.apache.spark.sql.functions._
   */
 object Skew {
 
-  val DefaultSalt = 16
+  val SaltBuckets = 16
 
-  /** Deterministic salt in [0, n): hash of the full row payload. */
-  private def saltCol(payload: Column, n: Int): Column =
-    pmod(hash(payload), lit(n))
+  /** Deterministic salt in [0, SaltBuckets): hash of the full row payload. */
+  private def saltCol(payload: Column): Column =
+    pmod(hash(payload), lit(SaltBuckets))
 
   /** Two-phase salted count: groupBy(key, salt) → groupBy(key). */
-  def saltedCount(df: DataFrame, key: Column, payload: Column,
-      salt: Int = DefaultSalt): DataFrame =
-    df.groupBy(key.as("key"), saltCol(payload, salt).as("_salt"))
+  def saltedCount(df: DataFrame, key: Column, payload: Column): DataFrame =
+    df.groupBy(key.as("key"), saltCol(payload).as("_salt"))
       .agg(count(lit(1)).as("_partial"))
       .groupBy(col("key"))
       .agg(sum(col("_partial")).as("cnt"))
 
   /** Word count via the salted two-phase plan — identical results to
     * [[TextAnalysis.wordCount]] (same oracle), different physical shape:
-    * the first shuffle spreads each hot word over `salt` reducers.
+    * the first shuffle spreads each hot word over [[SaltBuckets]] reducers.
     */
   def saltedWordCount(spark: SparkSession, dir: String): DataFrame =
     saltedCount(
@@ -47,23 +46,23 @@ object Skew {
       .withColumnRenamed("key", "word")
       .orderBy(col("word"))
 
-  /** Broadcast-salted join: replicate the (small) build side `salt`
-    * times so a skewed probe key fans across `salt` tasks. With AQE's
-    * skew-join handling this is rarely hand-written; kept as the
-    * explicit form for engines/configs without it.
+  /** Broadcast-salted join: replicate the (small) build side
+    * [[SaltBuckets]] times so a skewed probe key fans across that many
+    * tasks. With AQE's skew-join handling this is rarely hand-written;
+    * kept as the explicit form for engines/configs without it.
     */
   def saltedJoin(probe: DataFrame, build: DataFrame, key: String,
-      payload: Column, salt: Int = DefaultSalt): DataFrame = {
-    val salted = probe.withColumn("_salt", saltCol(payload, salt))
+      payload: Column): DataFrame = {
+    val salted = probe.withColumn("_salt", saltCol(payload))
     val replicated = build.withColumn("_salt",
-      explode(sequence(lit(0), lit(salt - 1))))
+      explode(sequence(lit(0), lit(SaltBuckets - 1))))
     salted.join(replicated, Seq(key, "_salt")).drop("_salt")
   }
 
   /** Brand revenue via the salted-join plan — identical results to
     * [[Relational.joinBroadcast]] (shares its oracle: the gate proves
     * the salting rewrite lossless), but the probe side fans each part
-    * key over `salt` sub-keys before the join.
+    * key over [[SaltBuckets]] sub-keys before the join.
     */
   def saltedJoinBrand(spark: SparkSession, dir: String): DataFrame = {
     val probe = Tables.lineitem(spark, dir)

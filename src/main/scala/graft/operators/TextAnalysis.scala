@@ -509,6 +509,10 @@ object TextAnalysis {
           .otherwise("keep").as("reason"))
   }
 
+  /** Token budget of a packed sequence, and the doc-id shards packed in. */
+  val PackBudget = 2048
+  val PackShards = 8
+
   /** Token-budget sequence packing: assign documents to fixed-budget
     * training sequences by exclusive running token count, packed WITHIN
     * deterministic shards (packing is inherently sequential, so the
@@ -518,26 +522,24 @@ object TextAnalysis {
     * reproduce the same packing because shard and order derive from
     * doc_id alone. Returns per-sequence stats.
     */
-  def packSequences(spark: SparkSession, dir: String,
-                    budget: Int = 2048, shards: Int = 8): DataFrame =
-    packSequencesOn(Tables.documents(spark, dir), budget, shards)
+  def packSequences(spark: SparkSession, dir: String): DataFrame =
+    packSequencesOn(Tables.documents(spark, dir))
 
   /** Operator form over any (doc_id, text) relation — what a curation
     * pipeline calls on its CLEANED corpus, not the raw table. Sharding
     * derives from doc_id alone, so it is insensitive to the id gaps a
     * filtered corpus has.
     */
-  def packSequencesOn(docs: DataFrame,
-                      budget: Int = 2048, shards: Int = 8): DataFrame = {
+  def packSequencesOn(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
     docs
       .select(col("doc_id"),
-        pmod(col("doc_id"), lit(shards.toLong)).as("shard"),
+        pmod(col("doc_id"), lit(PackShards.toLong)).as("shard"),
         size(tokens(col("text"))).cast("long").as("n_tok"))
       .withColumn("cum_excl", coalesce(sum(col("n_tok")).over(w), lit(0L)))
-      .withColumn("seq_id", floor(col("cum_excl") / budget).cast("long"))
+      .withColumn("seq_id", floor(col("cum_excl") / PackBudget).cast("long"))
       .groupBy(col("shard"), col("seq_id"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tok")).as("total_tokens"),
@@ -545,39 +547,39 @@ object TextAnalysis {
       .orderBy(col("shard"), col("seq_id"))
   }
 
+  /** Tokens per chunk, and between chunk starts, of [[chunkDocuments]]. */
+  val ChunkSize = 32
+  val ChunkStride = 24
+
   /** Fixed-window chunking with stride: every document's token stream
-    * cut into `size`-token chunks starting every `stride` tokens
-    * (overlap = size - stride) — the standard context-window prep step
-    * between cleaning and packing (overlapping windows preserve
-    * cross-boundary context; dedup-by-chunk-hash then drops the
-    * redundant tails). Entirely narrow per-row work (sequence + slice
+    * cut into [[ChunkSize]]-token chunks starting every [[ChunkStride]]
+    * tokens (overlap = ChunkSize - ChunkStride) — the standard
+    * context-window prep step between cleaning and packing (overlapping
+    * windows preserve cross-boundary context; dedup-by-chunk-hash then
+    * drops the redundant tails). Entirely narrow per-row work (sequence + slice
     * over the bound token array — one generate, no shuffle until the
     * output sort); chunk identity is the portable rolling hash so a
     * downstream exact-dedup over chunks shuffles 8-byte keys.
     */
-  def chunkDocuments(spark: SparkSession, dir: String,
-                     chunkSize: Int = 32, stride: Int = 24): DataFrame = {
-    require(stride >= 1 && chunkSize >= stride,
-      s"bad chunk geometry ($chunkSize, $stride)")
+  def chunkDocuments(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       // one start per stride step; greatest(...) guards the empty doc
       // (sequence(1, 0) yields DESCENDING [1, 0], not empty)
       .withColumn("start",
-        explode(sequence(lit(1), greatest(size(col("toks")), lit(1)), lit(stride))))
+        explode(sequence(lit(1), greatest(size(col("toks")), lit(1)), lit(ChunkStride))))
       // chunk identity = TWO independent polynomials (~60-bit composite;
       // one 30-bit hash alone would silently report distinct-content
       // chunks as copies at the 10^8-chunk scale — birthday collisions
       // neither engine could catch since both compute the same hash)
       .select(col("doc_id"),
-        ((col("start") - 1) / stride).cast("long").as("chunk_idx"),
-        size(slice(col("toks"), col("start"), lit(chunkSize))).cast("long").as("n_tokens"),
-        rollingFingerprint(concat_ws(" ", slice(col("toks"), col("start"), lit(chunkSize))))
+        ((col("start") - 1) / ChunkStride).cast("long").as("chunk_idx"),
+        size(slice(col("toks"), col("start"), lit(ChunkSize))).cast("long").as("n_tokens"),
+        rollingFingerprint(concat_ws(" ", slice(col("toks"), col("start"), lit(ChunkSize))))
           .as("chunk_hash"),
-        rollingFingerprint2(concat_ws(" ", slice(col("toks"), col("start"), lit(chunkSize))))
+        rollingFingerprint2(concat_ws(" ", slice(col("toks"), col("start"), lit(ChunkSize))))
           .as("chunk_hash2"))
       .orderBy(col("doc_id"), col("chunk_idx"))
-  }
 
   /** Document fingerprinting: (a) md5-based 32-bit content fingerprint
     * (engine-portable, oracle-checked) and (b) rolling polynomial hash

@@ -18,9 +18,9 @@ import org.apache.spark.sql.functions._
   */
 object TextSources {
 
-  def wholeFiles(spark: SparkSession, dir: String, glob: String = "*.txt"): DataFrame =
+  def wholeFiles(spark: SparkSession, dir: String): DataFrame =
     spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
+      .option("pathGlobFilter", "*.txt")
       .load(dir)
       .select(col("path"), col("content").cast("string").as("content"))
 

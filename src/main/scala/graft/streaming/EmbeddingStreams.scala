@@ -107,8 +107,7 @@ object EmbeddingStreams {
     * the DuckDB oracle (the delta chain with the comparison side
     * restricted to base).
     */
-  def streamedDeltaSemDedup(spark: SparkSession, dir: String,
-      threshold: Double = 0.4): DataFrame = {
+  def streamedDeltaSemDedup(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.cosine
 
     val (centsDf, storedBase, b) = Similarity.semdedupStoredState(spark, dir)
@@ -149,7 +148,7 @@ object EmbeddingStreams {
     val hit = col("cluster") === col("m_cluster") &&
       ((col("m_dist") > col("dist")) ||
         (col("m_dist") === col("dist") && col("m_vid") < col("vec_id"))) &&
-      round(cosine(col("m_emb"), col("embedding")), 6) >= threshold
+      round(cosine(col("m_emb"), col("embedding")), 6) >= Similarity.SemDedupThreshold
     val mr = memberRows.withColumnRenamed("cluster", "m_cluster")
     val out = Seq(col("vec_id"), col("cluster"), col("rank"))
     val decided = ranked.join(mr, hit, "left_semi")

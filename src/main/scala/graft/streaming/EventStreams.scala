@@ -99,19 +99,26 @@ object EventStreams {
       .withColumn("ts", graft.tables.Tables.normalizedTs(spark, fileSchema))
   }
 
+  /** Watermark delay, tumbling window, session gap, attribution window. */
+  val WatermarkDelay = "30 minutes"
+  val TumblingWindow = "1 hour"
+  val SessionGapMinutes = 30
+  val AttributionWindow = "1 hour"
+  private val SessionGapMs = SessionGapMinutes * 60 * 1000L
+
   /** Tumbling-window counts per event type; watermark bounds state and
-    * drops late data beyond `delay`.
+    * drops late data beyond [[WatermarkDelay]].
     */
-  def tumblingCounts(events: DataFrame, dur: String = "1 hour",
-      delay: String = "30 minutes"): DataFrame =
-    events.withWatermark("ts", delay)
-      .groupBy(window(col("ts"), dur), col("event_type"))
+  def tumblingCounts(events: DataFrame): DataFrame =
+    events.withWatermark("ts", WatermarkDelay)
+      .groupBy(window(col("ts"), TumblingWindow), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
       .select(col("window.start").as("win_start"), col("event_type"),
         col("n"), col("total_value"))
 
-  /** Session windows: per-user sessions closed by `gap` inactivity —
-    * the streaming twin of the batch gaps-and-islands oracle query.
+  /** Session windows: per-user sessions closed by [[SessionGapMinutes]]
+    * of inactivity — the streaming twin of the batch gaps-and-islands
+    * oracle query.
     *
     * (The `session_window` AGGREGATION supports neither Complete nor
     * Update output — merging windows forbid both — so a finite replay
@@ -120,10 +127,9 @@ object EventStreams {
     * flatMapGroupsWithState side, whose Append-mode emissions ARE
     * deterministic on a finite replay and sit under the oracle gate.)
     */
-  def sessionCounts(events: DataFrame, gap: String = "30 minutes",
-      delay: String = "30 minutes"): DataFrame =
-    events.withWatermark("ts", delay)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
+  def sessionCounts(events: DataFrame): DataFrame =
+    events.withWatermark("ts", WatermarkDelay)
+      .groupBy(session_window(col("ts"), s"$SessionGapMinutes minutes"), col("user_id"))
       .agg(count(lit(1)).as("n_events"), sum(col("value")).as("session_value"))
       .select(col("user_id"), col("session_window.start").as("session_start"),
         col("n_events"), col("session_value"))
@@ -133,10 +139,10 @@ object EventStreams {
     * summary row only when the session CLOSES, via event-time timeout at
     * watermark + gap). State per user is O(1).
     */
-  def closedSessions(events: Dataset[Event], gapMs: Long = 30 * 60 * 1000L)(
+  def closedSessions(events: Dataset[Event])(
       implicit spark: SparkSession): Dataset[ClosedSession] = {
     import spark.implicits._
-    events.withWatermark("ts", "30 minutes")
+    events.withWatermark("ts", WatermarkDelay)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionState, ClosedSession](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
@@ -158,7 +164,7 @@ object EventStreams {
               val cents = if (c0 >= 0) math.round(c0) else -math.round(-c0)
               val em = tsMicros(e.ts)
               cur match {
-                case Some(s) if em - s.lastMicros <= gapMs * 1000L =>
+                case Some(s) if em - s.lastMicros <= SessionGapMs * 1000L =>
                   cur = Some(SessionState(s.nEvents + 1, s.totalCents + cents,
                     math.max(s.lastMicros, em)))
                 case Some(s) =>
@@ -177,7 +183,7 @@ object EventStreams {
               // boundary (a floor would make it up to 999µs early and
               // split a gap-boundary event that batch merges)
               state.setTimeoutTimestamp(
-                math.floorDiv(s.lastMicros + 999L, 1000L) + gapMs)
+                math.floorDiv(s.lastMicros + 999L, 1000L) + SessionGapMs)
             }
             closed.result().iterator
           }
@@ -185,23 +191,23 @@ object EventStreams {
   }
 
   /** Stream-stream interval join: attribute each "purchase" event to
-    * the same user's "click" events in the preceding hour. Both sides
-    * carry watermarks and the join condition bounds the time skew, so
-    * Spark can evict buffered state from BOTH sides — the conditions
-    * under which an unbounded×unbounded join is feasible at all.
+    * the same user's "click" events in the preceding
+    * [[AttributionWindow]]. Both sides carry watermarks and the join
+    * condition bounds the time skew, so Spark can evict buffered state
+    * from BOTH sides — the conditions under which an unbounded×unbounded
+    * join is feasible at all.
     */
-  def attributionJoin(clicks: DataFrame, purchases: DataFrame,
-      window: String = "1 hour"): DataFrame = {
-    val c = clicks.withWatermark("ts", "30 minutes")
+  def attributionJoin(clicks: DataFrame, purchases: DataFrame): DataFrame = {
+    val c = clicks.withWatermark("ts", WatermarkDelay)
       .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
         col("event_id").as("click_id"))
-    val p = purchases.withWatermark("ts", "30 minutes")
+    val p = purchases.withWatermark("ts", WatermarkDelay)
       .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
         col("event_id").as("purchase_id"), col("value"))
     p.join(c,
       col("p_user") === col("c_user") &&
         col("click_ts") <= col("purchase_ts") &&
-        col("click_ts") >= col("purchase_ts") - expr(s"INTERVAL $window"))
+        col("click_ts") >= col("purchase_ts") - expr(s"INTERVAL $AttributionWindow"))
       .select(col("purchase_id"), col("p_user").as("user_id"),
         col("click_id"), col("purchase_ts"), col("value"))
   }
@@ -235,8 +241,8 @@ object EventStreams {
     * upstream → exactly-once downstream). Without the watermark variant
     * the seen-set grows forever.
     */
-  def dedupStream(events: DataFrame, delay: String = "30 minutes"): DataFrame =
-    events.withWatermark("ts", delay)
+  def dedupStream(events: DataFrame): DataFrame =
+    events.withWatermark("ts", WatermarkDelay)
       .dropDuplicatesWithinWatermark("event_id")
 
   /** ACTUAL streaming execution under the driver gate: read the events
@@ -259,7 +265,7 @@ object EventStreams {
     // down to the events table
     val events = normalizedEventStream(spark, dir)
     val agg = events
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .groupBy(window(col("ts"), TumblingWindow), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"), col("n"), col("total_value"))
@@ -328,8 +334,7 @@ object EventStreams {
     * batch q_sessions gate already rests on), and the final rounding
     * is BigDecimal HALF_UP — bit-identical to Spark's `round`.
     */
-  def streamedSessionsGated(spark: SparkSession, dir: String,
-      gapMs: Long = 30 * 60 * 1000L): DataFrame = {
+  def streamedSessionsGated(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val events = normalizedEventStream(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"),
@@ -355,7 +360,7 @@ object EventStreams {
           sorted.foreach { e =>
             val em = tsMicros(e.ts)
             cur match {
-              case Some(s) if em - s._2 <= gapMs * 1000L =>
+              case Some(s) if em - s._2 <= SessionGapMs * 1000L =>
                 cur = Some((s._1, math.max(s._2, em), s._3 + 1, s._4 + e.value))
               case other =>
                 other.foreach(close)

@@ -23,15 +23,14 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * production stream volume this knob is sized to key cardinality, not
   * to the batch session's CPU count.
   *
-  * That set/restore mutates SHARED session conf, so two concurrent
-  * replays on one session would race the restore. A lock serializes the
-  * window: the conf is only ever observed mutated inside it. A
-  * production pipeline sizes state partitions per query at its own
-  * checkpoint birth, not via session conf.
+  * That set/restore mutates SHARED session conf, so it runs in the one
+  * conf window ([[graft.LocalSession.withConf]]), whose lock serializes
+  * it against every other window: the conf is only ever observed
+  * mutated inside it. A production pipeline sizes state partitions per
+  * query at its own checkpoint birth, not via session conf.
   */
 object Replay {
   private val StatePartitions = 4
-  private val lock = new Object
   private val ids = new AtomicLong
 
   /** Run `df` as a streaming query into a memory sink named for this
@@ -46,14 +45,11 @@ object Replay {
     val spark = df.sparkSession
     val name = s"graft_replay_${ids.incrementAndGet()}"
     try {
-      lock.synchronized {
-        val prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
-        try {
-          val q = df.writeStream.format("memory").queryName(name)
-            .outputMode(mode).trigger(trigger).start()
-          try drive(q) finally q.stop()
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      graft.LocalSession.withConf(spark,
+          Seq("spark.sql.shuffle.partitions" -> StatePartitions.toString)) {
+        val q = df.writeStream.format("memory").queryName(name)
+          .outputMode(mode).trigger(trigger).start()
+        try drive(q) finally q.stop()
       }
       spark.table(name)
     } finally { spark.catalog.dropTempView(name); () }

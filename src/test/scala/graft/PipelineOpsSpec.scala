@@ -29,8 +29,8 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
   }
 
   test("packSequences: partitions the corpus, budget respected up to one doc overhang") {
-    val budget = 2048
-    val seqs = TextAnalysis.packSequences(spark, sfDir, budget)
+    val budget = TextAnalysis.PackBudget
+    val seqs = TextAnalysis.packSequences(spark, sfDir)
       .as[(Long, Long, Long, Long, Long)].collect() // shard, seq, n_docs, total, first
     val nDocs = Tables.documents(spark, sfDir).count()
     assert(seqs.map(_._3).sum === nDocs, "every document packed exactly once")
@@ -68,8 +68,8 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
   }
 
   test("chunkDocuments: contiguous chunk ids, geometry respected, all docs covered") {
-    val chunkSize = 32; val stride = 24
-    val chunks = TextAnalysis.chunkDocuments(spark, sfDir, chunkSize, stride)
+    val chunkSize = TextAnalysis.ChunkSize; val stride = TextAnalysis.ChunkStride
+    val chunks = TextAnalysis.chunkDocuments(spark, sfDir)
       .as[(Long, Long, Long, Long, Long)].collect() // doc_id, idx, n_tokens, hash, hash2
     assert(chunks.nonEmpty)
     val nDocs = Tables.documents(spark, sfDir).count()

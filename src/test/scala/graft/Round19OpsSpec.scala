@@ -208,7 +208,7 @@ class Round19OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
       val fold = Similarity.ivfFold(spark, dir,
         s"spec_grouping_fold_${cuts.mkString("_")}", commits)
       Seq(commits, Seq(fold)).map(layouts =>
-        Similarity.ivfServe(spark, dir, cents, layouts, 3)
+        Similarity.ivfServe(spark, dir, cents, layouts)
           .as[(Long, Long, Long, Double)].collect().toSeq)
     }
     val splits = Seq(Seq(6), Seq(6, 8), Seq(6, 7, 9))
@@ -265,6 +265,62 @@ class Round19OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
           s"$family: the label chain at cuts $cuts served different clusters")
       }
     }
+  }
+
+  // At the gate scale every image hash lies in one component, so the
+  // image closures' oracle rows are a single row. Here the corpus is the
+  // gate fixture's documents minus every hash at breadth-first depth
+  // 2 (mod 4) from doc 0's hash: the hash graph falls apart into several
+  // components, and each serving path must equal an in-test union-find.
+  test("image dup-cluster chains and retraction over a hash graph of several components") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import scala.jdk.CollectionConverters._
+    import graft.operators.Multimodal
+    type H = (Long, Long)
+    val rows = Multimodal.ahashTable(spark, gateDir).as[(Long, Long, Long)].collect().toSeq
+    def hashOf(r: (Long, Long, Long)): H = (r._2, r._3)
+    def near(a: H, b: H) = java.lang.Long.bitCount(a._1 ^ b._1) +
+      java.lang.Long.bitCount(a._2 ^ b._2) <= Multimodal.ImageNeardupMaxDist
+    // (cluster_rep, n_members) of the doc graph, by union-find over hashes
+    def reference(docs: Seq[(Long, Long, Long)]): Seq[(Long, Long)] = {
+      val hashes = docs.map(hashOf).distinct
+      val parent = scala.collection.mutable.Map(hashes.map(h => h -> h): _*)
+      def find(h: H): H = if (parent(h) == h) h else { val r = find(parent(h)); parent(h) = r; r }
+      for (a <- hashes; b <- hashes if near(a, b)) parent(find(a)) = find(b)
+      docs.groupBy(r => find(hashOf(r))).values.toSeq
+        .map(g => (g.map(_._1).min, g.size.toLong)).filter(_._2 >= 2).sorted
+    }
+    val hashes = rows.map(hashOf).distinct
+    val start = hashOf(rows.minBy(_._1))
+    val depth = scala.collection.mutable.Map(start -> 0)
+    var frontier = Seq(start)
+    while (frontier.nonEmpty) {
+      val next = frontier
+        .flatMap(h => hashes.filter(o => !depth.contains(o) && near(h, o))).distinct
+      next.foreach(h => depth(h) = depth(frontier.head) + 1)
+      frontier = next
+    }
+    val picked = rows.filter(r => depth.get(hashOf(r)).forall(_ % 4 != 2))
+    val whole = reference(picked)
+    val survivors = reference(picked.filter(_._1 % 10 != 7))
+    assert(whole.size >= 2 && survivors.size >= 2,
+      s"the picked corpus must split into several multi-member components: $whole")
+
+    val dir = Files.createTempDirectory("graft-image-components")
+    val subset = dir.resolve("subset").toString
+    graft.tables.Tables.load(spark, gateDir, "documents")
+      .filter(col("doc_id").isin(picked.map(_._1): _*))
+      .coalesce(1).write.parquet(subset)
+    val part = Files.list(Paths.get(subset)).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    Files.copy(part, dir.resolve("documents.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    def served(df: org.apache.spark.sql.DataFrame) = df.as[(Long, Long)].collect().toSeq
+    Seq(Seq(8), Seq(6, 8), Seq(3, 6, 8, 10)).foreach { cuts =>
+      assert(served(Multimodal.imageDupClustersOver(spark, dir.toString, cuts)) == whole,
+        s"the label chain at cuts $cuts served different clusters")
+    }
+    assert(served(Multimodal.retractImageDupClusters(spark, dir.toString)) == survivors,
+      "retraction served different clusters than the survivors' closure")
   }
 
   // A table rewritten inside a live session must never be served from

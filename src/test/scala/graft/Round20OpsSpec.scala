@@ -216,7 +216,7 @@ class Round20OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
       Similarity.IvfExactCells)
     val layout = Similarity.ivfAssignTo(cents, fresh).localCheckpoint()
     val freshRecall = Similarity.measuredIvfRecall(spark, fresh, cents,
-      Seq(layout), b, 16, probes = 3)
+      Seq(layout), b, 16)
     info(f"fresh-fixture sampled IVF recall = $freshRecall%.3f")
     assert(freshRecall >= Similarity.DriftRecallFloor,
       f"shared-cluster batch should serve well ($freshRecall%.3f)")
@@ -236,7 +236,7 @@ class Round20OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
       Similarity.IvfExactCells)
     val dLayout = Similarity.ivfAssignTo(dCents, de).localCheckpoint()
     val driftRecall = Similarity.measuredIvfRecall(spark, de, dCents,
-      Seq(dLayout), db, 16, probes = 3)
+      Seq(dLayout), db, 16)
     info(f"drifted-fixture sampled IVF recall = $driftRecall%.3f")
     assert(driftRecall < Similarity.DriftRecallFloor,
       f"drifted batch should measure low ($driftRecall%.3f) — weak fixture")

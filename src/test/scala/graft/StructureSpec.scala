@@ -17,9 +17,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * every operator has one code path: no switch turns its pins off
   * (plan audits read the pins' executed plans, [[graft.plan.PinPlans]]),
   * every query is named once, in the one registry that pairs its
-  * builder with its oracle ([[SparkEntry]]), and every streaming query
+  * builder with its oracle ([[SparkEntry]]), every streaming query
   * runs through the one finite-replay runner
-  * ([[graft.streaming.Replay]]).
+  * ([[graft.streaming.Replay]]), session conf changes only inside the
+  * one conf window ([[LocalSession.withConf]]), and an operator value
+  * with one setting in use is a named constant, not a parameter.
   */
 class StructureSpec extends AnyFunSuite {
   private lazy val sources: Seq[(Path, String)] = {
@@ -93,7 +95,35 @@ class StructureSpec extends AnyFunSuite {
     assert(commitPaths.isEmpty, commitPaths)
     // and the closure families' signature and label tables to the chain
     // and its Scratch.storedOnce fold steps
-    val closurePaths = inOperators("""\$root/(?:sig_c\d|labels_\d)|"cc_multi_""")
+    val closurePaths =
+      inOperators("""\$root/(?:sig_c\d|labels_\d)|"cc_multi_|"delta_base_pairs_txt"""")
     assert(closurePaths.isEmpty, closurePaths)
+  }
+
+  test("one conf window: session conf is set and unset only in LocalSession.withConf") {
+    val sites = sitesOf("""conf\.(?:set|unset)\(""")
+      .filterNot(_.contains("graft/LocalSession.scala"))
+    assert(sites.isEmpty, sites)
+  }
+
+  test("one value, one constant: no operator parameter a single value would fill") {
+    val probes = sitesOf("""\bprobes\s*:\s*Int""")
+    assert(probes.isEmpty, probes)
+    // parameters whose only value in use became a named constant
+    val removed = Seq(
+      "operators/Similarity.scala" -> Seq("probes", "threshold"),
+      "operators/Dedup.scala" -> Seq("threshold", "maxCandPerDoc"),
+      "operators/Multimodal.scala" -> Seq("frames"),
+      "operators/TextAnalysis.scala" -> Seq("budget", "shards", "chunkSize", "stride"),
+      "operators/Pipeline.scala" -> Seq("budget", "shards", "maxContamination"),
+      "operators/Skew.scala" -> Seq("salt"),
+      "streaming/EmbeddingStreams.scala" -> Seq("threshold"),
+      "streaming/EventStreams.scala" -> Seq("dur", "delay", "gap", "gapMs", "window"),
+      "sources/TextSources.scala" -> Seq("glob"))
+    removed.foreach { case (file, names) =>
+      val param = s"""\\b(?:${names.mkString("|")})\\s*:\\s*[\\w\\[\\]., ]+?=(?![=>])"""
+      val defaulted = sitesOf(param).filter(_.contains(s"graft/$file:"))
+      assert(defaulted.isEmpty, defaulted)
+    }
   }
 }
