@@ -1,5 +1,9 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graft.ListenerBus
 import scala.collection.mutable
 
@@ -15,7 +19,9 @@ import scala.collection.mutable
   * builds land here), pass 2 warm — the printed job table labels the
   * pass so one-time costs are attributable. The `pass=2` total is the
   * query's time under Bench conditions (same warm-up, noop sink, cache
-  * cleared between queries).
+  * cleared between queries). A job is labelled with its SQL execution's
+  * description and the first `graft.` frame of its call site; each pass
+  * also prints how many classes codegen compiled and the compiler time.
   */
 object ProfOne {
   private case class JobRec(id: Int, desc: String, start: Long,
@@ -28,11 +34,20 @@ object ProfOne {
     val spark = LocalSession.build()
     val jobs = mutable.LinkedHashMap[Int, JobRec]()
     val stageToJob = mutable.HashMap[Int, Int]()
+    val execLabels = mutable.HashMap[Long, String]()
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => jobs.synchronized {
+          val frame = x.details.linesIterator.map(_.trim).find(_.startsWith("graft."))
+          execLabels(x.executionId) =
+            (x.description.linesIterator.take(1).toSeq ++ frame).mkString(" | ")
+        }
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        val desc = prop(SQLExecution.EXECUTION_ID_KEY).flatMap(id => execLabels.get(id.toLong))
+          .orElse(prop("spark.job.description")).getOrElse("")
         jobs(e.jobId) = JobRec(e.jobId, desc, e.time)
         e.stageIds.foreach(s => stageToJob(s) = e.jobId)
       }
@@ -55,10 +70,14 @@ object ProfOne {
     LocalSession.warmUp(spark, sfDir)
     args.foreach { name =>
       (1 to 2).foreach { pass =>
-        jobs.synchronized { jobs.clear(); stageToJob.clear() }
+        jobs.synchronized { jobs.clear(); stageToJob.clear(); execLabels.clear() }
+        val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val compileNs0 = CodeGenerator.compileTime
         val t0 = System.nanoTime()
         LocalSession.exec(spark, sfDir, name)
         val dt = (System.nanoTime() - t0) / 1e9
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+        val compileS = (CodeGenerator.compileTime - compileNs0) / 1e9
         spark.catalog.clearCache()
         ListenerBus.drain(spark.sparkContext)
         println(f"\n=== PROF $name pass=$pass total=$dt%.2f s ===")
@@ -66,12 +85,13 @@ object ProfOne {
         val nJobs = snap.size
         val wall = snap.map(j => math.max(0L, j.end - j.start)).sum / 1e3
         println(f"jobs=$nJobs wallSum=$wall%.2f s (overlap possible)")
+        println(f"codegen compiles=$compiles compileTime=$compileS%.3f s")
         snap.sortBy(j => -(j.end - j.start)).take(30).foreach { j =>
           val w = math.max(0L, j.end - j.start) / 1e3
           println(f"  job ${j.id}%4d ${w}%7.3f s tasks=${j.nTasks}%4d " +
             f"taskTime=${j.taskTimeMs / 1e3}%7.2f s " +
             f"shufR=${j.shuffleReadB / 1024}%8d KB shufW=${j.shuffleWriteB / 1024}%8d KB " +
-            f"in=${j.inputB / 1024}%8d KB  ${j.desc.take(60)}%s")
+            f"in=${j.inputB / 1024}%8d KB  ${j.desc.take(120)}%s")
         }
       }
     }

@@ -3,6 +3,7 @@ package graft
 import graft.mapreduce.MapReduceJob
 import graft.operators._
 import graft.plan.OutputSort
+import graft.streaming.EventStreams.{SessionGapMinutes, TumblingWindow, WatermarkDelayMinutes}
 import graft.tables.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1514,14 +1515,14 @@ object SparkEntry {
 
   /** q_tumbling; its streaming twin executes the same aggregation. */
   private val hourlyEventsSql =
-    """SELECT strftime(time_bucket(INTERVAL '1 hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
+    s"""SELECT strftime(time_bucket(INTERVAL '$TumblingWindow', ts), '%Y-%m-%d %H:%M:%S') AS hour,
       |event_type, count(*) AS n, round(sum(value),2) AS total_value
       |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin
 
   private val sessionsSql: String =
-    """WITH flagged AS (SELECT user_id, ts, value,
+    s"""WITH flagged AS (SELECT user_id, ts, value,
       |  CASE WHEN lag(ts) OVER w IS NULL
-      |       OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_s
+      |       OR ts - lag(ts) OVER w > INTERVAL $SessionGapMinutes MINUTE THEN 1 ELSE 0 END AS new_s
       |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
       |sess AS (SELECT user_id, ts, value,
       |  sum(new_s) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
@@ -4186,9 +4187,9 @@ object SparkEntry {
     // too), so the oracle sums per-event rounded cents — round-of-sum
     // would be a DIFFERENT number, not just a different column name.
     "q_stream_sessions" -> graded(graft.streaming.EventStreams.streamedSessions _,
-      """WITH flagged AS (SELECT user_id, ts, value,
+      s"""WITH flagged AS (SELECT user_id, ts, value,
         |  CASE WHEN lag(ts) OVER w IS NULL
-        |       OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_s
+        |       OR ts - lag(ts) OVER w > INTERVAL $SessionGapMinutes MINUTE THEN 1 ELSE 0 END AS new_s
         |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
         |sess AS (SELECT user_id, ts, value,
         |  sum(new_s) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
@@ -4197,11 +4198,11 @@ object SparkEntry {
         |  CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS total_cents
         |  FROM sess GROUP BY user_id, sid),
         |agg2 AS (SELECT *, max(sess_last) OVER (PARTITION BY user_id) AS user_last FROM agg),
-        |wm AS (SELECT max(ts) - INTERVAL 30 MINUTE AS w FROM events)
+        |wm AS (SELECT max(ts) - INTERVAL $WatermarkDelayMinutes MINUTE AS w FROM events)
         |SELECT user_id, CAST(n_events AS BIGINT) AS n_events, total_cents,
         |  strftime(sess_last, '%Y-%m-%d %H:%M:%S') AS last_ts
         |FROM agg2, wm
-        |WHERE sess_last < user_last OR sess_last + INTERVAL 30 MINUTE < w
+        |WHERE sess_last < user_last OR sess_last + INTERVAL $SessionGapMinutes MINUTE < w
         |ORDER BY user_id, last_ts""".stripMargin),
 
     // the same sessionizer under the replay clock (no timeout, whole

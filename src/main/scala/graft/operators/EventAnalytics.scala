@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.streaming.EventStreams.{SessionGap, TumblingWindow}
 import graft.tables.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,10 +12,10 @@ import org.apache.spark.sql.functions._
   */
 object EventAnalytics {
 
-  /** Tumbling 1-hour windows per event type. */
+  /** Tumbling windows of [[TumblingWindow]] per event type. */
   def tumbling(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .groupBy(window(col("ts"), TumblingWindow), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"), col("n"), col("total_value"))
@@ -31,7 +32,7 @@ object EventAnalytics {
         col("n"))
       .orderBy(col("win_start"))
 
-  /** Session windows: per-user sessions closed by a 30-minute
+  /** Session windows: per-user sessions closed by a [[SessionGap]]
     * inactivity gap — `session_window` in Spark; the oracle reproduces
     * it with the classic lag + cumulative-flag gaps-and-islands SQL.
     * Timestamps are truncated to seconds on OUTPUT only (ns parquet →
@@ -39,7 +40,7 @@ object EventAnalytics {
     */
   def sessions(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+      .groupBy(col("user_id"), session_window(col("ts"), SessionGap))
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("session_value"))
       .select(col("user_id"),
         date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),

@@ -99,10 +99,18 @@ object EventStreams {
       .withColumn("ts", graft.tables.Tables.normalizedTs(spark, fileSchema))
   }
 
-  /** Watermark delay, tumbling window, session gap, attribution window. */
-  val WatermarkDelay = "30 minutes"
+  /** Watermark delay, tumbling window, session gap, attribution window.
+    * The delay, window and gap are also read by the batch twins
+    * ([[graft.operators.EventAnalytics]]) and written into their oracle
+    * SQL, so a stream and its gate cannot drift apart. The strings are
+    * Spark interval strings; DuckDB reads [[TumblingWindow]] quoted and
+    * the gap and delay as a count of `MINUTE`s.
+    */
+  val WatermarkDelayMinutes = 30
+  val WatermarkDelay = s"$WatermarkDelayMinutes minutes"
   val TumblingWindow = "1 hour"
   val SessionGapMinutes = 30
+  val SessionGap = s"$SessionGapMinutes minutes"
   val AttributionWindow = "1 hour"
   private val SessionGapMs = SessionGapMinutes * 60 * 1000L
 
@@ -129,7 +137,7 @@ object EventStreams {
     */
   def sessionCounts(events: DataFrame): DataFrame =
     events.withWatermark("ts", WatermarkDelay)
-      .groupBy(session_window(col("ts"), s"$SessionGapMinutes minutes"), col("user_id"))
+      .groupBy(session_window(col("ts"), SessionGap), col("user_id"))
       .agg(count(lit(1)).as("n_events"), sum(col("value")).as("session_value"))
       .select(col("user_id"), col("session_window.start").as("session_start"),
         col("n_events"), col("session_value"))

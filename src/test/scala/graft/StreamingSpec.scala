@@ -2,9 +2,14 @@ package graft
 
 import java.sql.Timestamp
 
+import java.nio.file.Files
+import java.util.jar.JarOutputStream
+
 import graft.streaming.{EventStreams, Replay}
 import graft.streaming.EventStreams.{ClosedSession, Event}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.ArtifactProbe
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,8 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * use, asserting stream results equal the batch computation and that
   * watermark-driven state (flatMapGroupsWithState + event-time timeout)
   * closes sessions exactly once. The graded stream queries run through
-  * [[Replay]], which leaves no sink registered and guards the
-  * single-batch replay the stateful per-user queries rely on.
+  * [[Replay]], which leaves no sink registered, guards the
+  * single-batch replay the stateful per-user queries rely on, reuses
+  * the classes earlier replays compiled, and leaves its session's own
+  * artifact isolation as it found it.
   */
 class StreamingSpec extends AnyFunSuite with SparkSessionTestWrapper {
   import spark.implicits._
@@ -227,5 +234,45 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val e = intercept[IllegalArgumentException](replay(s"$dir/two"))
     assert(e.getMessage.contains("2 micro-batches"), e.getMessage)
     assert(tempViews(spark) === before)
+  }
+
+  test("a warm replay compiles no code: the second replay reuses the first's classes") {
+    def replay() = SparkEntry.queries("q_stream_tumbling")(spark, sfDir)
+    replay()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    replay()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before === 0L)
+  }
+
+  test("a replay leaves its session isolated, whether or not it ran SQL first") {
+    val dir = Files.createTempDirectory("graft-isolation")
+    spark.range(0, 10).coalesce(1).write.parquet(s"$dir/rows")
+    // the drive runs SQL on the replay's own session inside the replay's
+    // conf window: for a fresh session, that is its first SQL execution
+    def replay(s: SparkSession) = Replay.run(
+        s.readStream.schema("id BIGINT").parquet(s"$dir/rows"), OutputMode.Append()) { q =>
+      q.awaitTermination()
+      s.range(1).collect()
+      ()
+    }
+    val replayFirst = spark.newSession()
+    replay(replayFirst)
+    val batchFirst = spark.newSession()
+    SparkEntry.queries("q_tumbling")(batchFirst, sfDir).collect()
+    replay(batchFirst)
+    assert(ArtifactProbe.isolatedAsItself(replayFirst))
+    assert(ArtifactProbe.isolatedAsItself(batchFirst))
+  }
+
+  test("Replay.run refuses a session holding an artifact of its own") {
+    val dir = Files.createTempDirectory("graft-artifact")
+    spark.range(0, 10).coalesce(1).write.parquet(s"$dir/rows")
+    val jar = dir.resolve("probe.jar")
+    new JarOutputStream(Files.newOutputStream(jar)).close()
+    val s = spark.newSession()
+    s.addArtifact(jar.toString)
+    val e = intercept[IllegalArgumentException](Replay.run(
+      s.readStream.schema("id BIGINT").parquet(s"$dir/rows"), OutputMode.Append())())
+    assert(e.getMessage.contains("artifacts of its own"), e.getMessage)
   }
 }

@@ -19,7 +19,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * every query is named once, in the one registry that pairs its
   * builder with its oracle ([[SparkEntry]]), every streaming query
   * runs through the one finite-replay runner
-  * ([[graft.streaming.Replay]]), session conf changes only inside the
+  * ([[graft.streaming.Replay]]), which alone picks the checkpoint file
+  * manager and the stream's artifact isolation, session conf changes only inside the
   * one conf window ([[LocalSession.withConf]]), and an operator value
   * with one setting in use is a named constant, not a parameter.
   */
@@ -73,6 +74,11 @@ class StructureSpec extends AnyFunSuite {
     assert(sites.isEmpty, sites)
     val window = sitesOf("""StreamConf|withStatePartitions""")
     assert(window.isEmpty, window)
+    // the checkpoint file manager and the clone's artifact isolation
+    // are the runner's choices, made in its conf window
+    val replayConf = sitesOf("""checkpointFileManagerClass|artifact\.isolation""")
+    assert(replayConf.nonEmpty &&
+      replayConf.forall(_.contains("streaming/Replay.scala")), replayConf)
   }
 
   test("no state keyed by an identity hash") {
